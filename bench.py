@@ -15,6 +15,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from neurondb_spark.registry.fixtures import prebuild  # noqa: E402
 from neurondb_spark.session import get_spark  # noqa: E402
 
 
@@ -76,60 +77,14 @@ def main() -> None:
         )
     except Exception as e:  # warmup must never sink the bench
         print(f"# engine warmup skipped: {e}", file=sys.stderr)
-    # index build is a build-time operation (CREATE INDEX analog), not
-    # query latency — prebuild so probe queries measure the probe
+    # fixture builds (indexes, trained models, stream sources) are the
+    # build-time half of a query (CREATE INDEX analog), not query latency
+    # — prebuild so probe queries measure the probe
     try:
-        from neurondb_spark.registry.index_queries import (
-            _consistent_index_for,
-            _hnsw_dml_index_for,
-            _hnsw_index_for,
-            _ivf_dml_index_for,
-            _ivf_lloyd_index_for,
-            _ivf_rebalanced_for,
-            _hybrid_index_for,
-            _index_for,
-            _ivfpq_index_for,
-            _lsh_clustered_index_for,
-            _lsh_dml_index_for,
-            _lsh_index_for,
-            _rerank_index_for,
-            _temporal_index_for,
-            _tenant_index_for,
-        )
-
-        _lsh_index_for(spark, sf_dir)
-        _lsh_dml_index_for(spark, sf_dir)
-        _lsh_clustered_index_for(spark, sf_dir)
-        _ivf_lloyd_index_for(spark, sf_dir)
-        _ivf_rebalanced_for(spark, sf_dir)
-        _ivfpq_index_for(spark, sf_dir)
-        _hnsw_index_for(spark, sf_dir)
-        _hnsw_dml_index_for(spark, sf_dir)
-        _ivf_dml_index_for(spark, sf_dir)
-        _index_for(spark, sf_dir)
-        _tenant_index_for(spark, sf_dir)
-        _temporal_index_for(spark, sf_dir)
-        _hybrid_index_for(spark, sf_dir)
-        _consistent_index_for(spark, sf_dir)
-        _rerank_index_for(spark, sf_dir)
-        # PQ codebook training = CREATE INDEX analog; prebuild so
-        # pq_adc_topk measures the ADC scan, not 8 KMeans fits
-        from neurondb_spark.registry.index_queries import _pq_cache
-        from neurondb_spark.index.pq import PQCodebook
-        from neurondb_spark.registry.common import EMB_DIM, t as _t
-
-        key = sf_dir.rstrip("/")
-        if key not in _pq_cache:
-            _pq_cache[key] = (PQCodebook.train(
-                _t(spark, sf_dir, "embeddings"), "embedding",
-                dim=EMB_DIM, m=8, k=16, seed=42,
-            ),)
-        # ratings-matrix build is shared by both recommender queries
-        from neurondb_spark.registry.quality_queries import _user_item
-
-        _user_item(spark, sf_dir)
+        entrymod.queries()  # imports every registry module's fixtures
+        prebuild(spark, sf_dir)
     except Exception as e:
-        print(f"# index prebuild skipped: {e}", file=sys.stderr)
+        print(f"# fixture prebuild skipped: {e}", file=sys.stderr)
 
     # Previous self-recorded timings: a run that lands far above its prior
     # number is almost always C2-JIT / contention noise, not a plan change
@@ -212,6 +167,12 @@ def main() -> None:
                     continue
     except Exception:
         pass
+    # an empty reference set silently disables the contention retry for
+    # every row (no prior run at this sf, or an sf dir that doesn't parse)
+    for label, ref in (("previous", prev_timings), ("floor", floor_timings)):
+        if not ref:
+            print(f"# no {label} timings recorded for sf={sf_now!r}: "
+                  "contention retry off for that reference", file=sys.stderr)
 
     timings: dict[str, float] = {}
     for name, q in entrymod.queries().items():

@@ -397,6 +397,16 @@ FORCE_RECHECK = frozenset({
     "kmeans_silhouette", "ml_kmeans_clusters", "ivf_knn_probe",
     "ivf_knn_full_probe", "ivf_rebalance_probe", "bpe_hybrid_merges",
     "bpe_hybrid_train_k2000", "automl_deploy_ab",
+    #
+    # Fixture-layer rewrite (registry/fixtures.py): rows whose artifact
+    # now round-trips through disk on every call (PQ codebook json, GBT
+    # model json, ratings matrix and classifier scores as parquet), the
+    # CDC drain that moved into its fixture build, and the rebalance
+    # scenario restructured as one build.
+    "pq_adc_topk", "gbt_fixed_stumps", "gbt_shap_attributions",
+    "recommend_content_based", "recommend_hybrid",
+    "quality_classifier_scores", "stream_ivf_cdc_knn",
+    "merge_rebalance_rows",
 })
 
 

@@ -10,6 +10,7 @@ batch semantics)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.errors import StreamingQueryException
@@ -20,6 +21,7 @@ from pyspark.sql import Window as W
 from neurondb_spark import oracle as O
 from neurondb_spark.functions.aggregates import davg, dsum
 from neurondb_spark.registry.common import events as load_events
+from neurondb_spark.registry.fixtures import fixture
 
 NOW = "2026-01-01 00:00:00"
 DECAY = 0.05
@@ -121,6 +123,11 @@ SELECT user_id, CAST(MAX(session_seq) AS BIGINT) AS n_sessions,
 FROM c GROUP BY user_id"""
 
 
+@fixture("feature_store")
+def _feature_store_root(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The catalog root `feature_store_pit` registers into; starts empty."""
+
+
 def _q_feature_store_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-store point-in-time retrieval (ml_feature_store.c:46-578):
     feature group = hourly max view value per user; observations =
@@ -129,8 +136,6 @@ def _q_feature_store_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the real FeatureStore (catalog registration + parquet group + the
     windowed as-of join); the oracle rebuilds the same greatest-n-per-
     group in SQL — proving the PIT join leaks nothing and drops nothing."""
-    import tempfile
-
     from neurondb_spark.catalog import Catalog
     from neurondb_spark.ml.feature_store import FeatureStore
 
@@ -144,12 +149,7 @@ def _q_feature_store_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where(F.col("event_type") == "purchase")
         .select("user_id", F.col("ts").alias("obs_ts"))
     )
-    import os
-
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    fs = FeatureStore(
-        spark, Catalog(os.path.join(tempfile.gettempdir(), f"neurondb_fs{tag}"))
-    )
+    fs = FeatureStore(spark, Catalog(_feature_store_root(spark, sf_dir)))
     fs.register_features("user_view_stats", feats, ["user_id"], ts_col="fts")
     out = fs.join_features(obs, "user_view_stats", observation_ts="obs_ts")
     return out.select("user_id", "obs_ts", "fval")
@@ -220,6 +220,15 @@ SELECT bucket AS day, {O.bsum(term)} AS js_divergence
 FROM allrows GROUP BY bucket"""
 
 
+def _session_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_events(spark, sf_dir).select("user_id", "event_id", "ts")
+
+
+@fixture("sessionize_src")
+def _sessionize_src(spark: SparkSession, sf_dir: str, path: str) -> None:
+    _session_events(spark, sf_dir).coalesce(1).write.parquet(path)
+
+
 def _q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming sessionization (applyInPandasWithState, 30-min
     gap): the per-user GroupState fold must emit EXACTLY what the batch
@@ -227,28 +236,19 @@ def _q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_sessionize ORACLE. Streams a normalized copy of events
     (AvailableNow, memory sink); falls back to the identical batch twin
     if streaming infra wobbles under gate load."""
-    import os
-    import tempfile
-
     from neurondb_spark.streaming.sessionize import (
         sessionize_batch,
         sessionize_stream,
     )
 
-    ev = load_events(spark, sf_dir).select("user_id", "event_id", "ts")
-    # Sanitize fully: "sf0.001" left a dot in the memory-sink view name,
-    # which is an invalid identifier — the old bare except silently ate
-    # that AnalysisException and the gate only ever ran the batch twin.
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    src = os.path.join(tempfile.gettempdir(), f"neurondb_sess_src{tag}")
-    # _SUCCESS, not bare isdir: a crashed first write leaves a partial
-    # dir that would silently feed every later run a truncated corpus
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        ev.coalesce(1).write.mode("overwrite").parquet(src)
+    ev = _session_events(spark, sf_dir)
+    src = _sessionize_src(spark, sf_dir)
     out = None
     try:
         sdf = spark.readStream.schema(ev.schema).parquet(src)
-        qname = f"neurondb_sessionize{tag}"
+        # the key dir's hex digest keeps the memory-sink view name a
+        # valid identifier and distinct per input set
+        qname = f"neurondb_sessionize_{os.path.basename(src)[:16]}"
         q = (
             sessionize_stream(sdf).writeStream.format("memory")
             .queryName(qname).outputMode("update")

@@ -11,35 +11,35 @@ behavior is additionally asserted in tests/test_index.py."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from neurondb_spark import oracle as O
+from neurondb_spark.index import specialized as S
+from neurondb_spark.index.hnsw import HNSWIndex
 from neurondb_spark.index.ivf import IVFIndex
+from neurondb_spark.index.ivfpq import IVFPQIndex
+from neurondb_spark.index.lsh import LSHIndex
+from neurondb_spark.index.pq import PQCodebook
 from neurondb_spark.registry.common import COMPILE_DIM, EMB_DIM, QVEC_CTE, qvec, t
+from neurondb_spark.registry.fixtures import fixture
 
 NLISTS = 16
-_cache: dict[str, IVFIndex] = {}
 
 
-def _index_for(spark: SparkSession, sf_dir: str) -> IVFIndex:
-    key = sf_dir.rstrip("/")
-    if key in _cache:
-        return _cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_ivf{tag}")
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = IVFIndex.load(path)
-    else:
-        emb = t(spark, sf_dir, "embeddings")
-        idx = IVFIndex.build(
-            emb, "embedding", path, nlists=NLISTS, metric="l2", dim=COMPILE_DIM
-        )
-    _cache[key] = idx
-    return idx
+def _opens(cls):
+    """Fixture loader for an index class whose ``load`` takes the path."""
+    return lambda spark, sf_dir, path: cls.load(path)
+
+
+def _opens_hnsw(spark: SparkSession, sf_dir: str, path: str) -> HNSWIndex:
+    return HNSWIndex.load(path, spark)
+
+
+@fixture("ivf", load=_opens(IVFIndex))
+def _index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
+    IVFIndex.build(t(spark, sf_dir, "embeddings"), "embedding", path,
+                   nlists=NLISTS, metric="l2", dim=COMPILE_DIM)
 
 
 def _q_ivf_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,32 +58,20 @@ FROM embeddings e CROSS JOIN q
 ORDER BY distance ASC, e.vec_id ASC LIMIT 10"""
 
 
-_ivf_dml_cache: dict[str, "object"] = {}
-
-
-def _ivf_dml_index_for(spark: SparkSession, sf_dir: str) -> IVFIndex:
+@fixture("ivf_dml", load=_opens(IVFIndex))
+def _ivf_dml_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Build on the even half, aminsert the odd half, tombstone
     vec_id % 41 == 0 — IVF's DML lifecycle (append-only list inserts)."""
-    key = sf_dir.rstrip("/")
-    if key in _ivf_dml_cache:
-        return _ivf_dml_cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_ivfdml{tag}")
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = IVFIndex.load(path)
-    else:
-        emb = t(spark, sf_dir, "embeddings")
-        idx = IVFIndex.build(
-            emb.where(F.col("vec_id") % 2 == 0), "embedding", path,
-            nlists=NLISTS, metric="l2", dim=COMPILE_DIM,
-        )
-        idx.insert(emb.where(F.col("vec_id") % 2 == 1))
-        # DataFrame delete: the ids flow to the tombstone write without
-        # a driver round-trip (the r10 bulk-delete path, exercised here
-        # so the gate covers it end to end)
-        idx.delete(spark, emb.where(F.col("vec_id") % 41 == 0).select("vec_id"))
-    _ivf_dml_cache[key] = idx
-    return idx
+    emb = t(spark, sf_dir, "embeddings")
+    idx = IVFIndex.build(
+        emb.where(F.col("vec_id") % 2 == 0), "embedding", path,
+        nlists=NLISTS, metric="l2", dim=COMPILE_DIM,
+    )
+    idx.insert(emb.where(F.col("vec_id") % 2 == 1))
+    # DataFrame delete: the ids flow to the tombstone write without
+    # a driver round-trip (the r10 bulk-delete path, exercised here
+    # so the gate covers it end to end)
+    idx.delete(spark, emb.where(F.col("vec_id") % 41 == 0).select("vec_id"))
 
 
 def _q_ivf_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,10 +97,10 @@ ORDER BY distance ASC, e.vec_id ASC LIMIT 10"""
 
 
 _LLOYD_K, _LLOYD_NPROBE = 8, 3
-_ivf_lloyd_cache: dict[str, IVFIndex] = {}
 
 
-def _ivf_lloyd_index_for(spark: SparkSession, sf_dir: str) -> IVFIndex:
+@fixture("ivf_lloyd", load=_opens(IVFIndex))
+def _ivf_lloyd_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
     """IVF with an oracle-exact layout: centroids + assignment from the
     fixed-Lloyd trainer (k=8, 2 rounds — the same machinery
     `kmeans_fixed_lloyd` proved hash-exact), written through the normal
@@ -121,35 +109,19 @@ def _ivf_lloyd_index_for(spark: SparkSession, sf_dir: str) -> IVFIndex:
     deterministic and oracle-checkable."""
     from neurondb_spark.ml.stats import kmeans_lloyd_exact
 
-    key = sf_dir.rstrip("/")
-    if key in _ivf_lloyd_cache:
-        return _ivf_lloyd_cache[key]
-    tag = key.replace("/", "_")
-    # params in the cache path: a stale layout from an older parameterization
-    # must never satisfy a newer oracle
-    path = os.path.join(
-        tempfile.gettempdir(), f"neurondb_ivflloyd_k{_LLOYD_K}_{tag}"
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    assign, cent = kmeans_lloyd_exact(
+        emb, "embedding", "vec_id", k=_LLOYD_K, iters=2,
+        return_centroids=True,
     )
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = IVFIndex.load(path)
-    else:
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        assign, cent = kmeans_lloyd_exact(
-            emb, "embedding", "vec_id", k=_LLOYD_K, iters=2,
-            return_centroids=True,
-        )
-        centroids = [[0.0] * EMB_DIM for _ in range(_LLOYD_K)]
-        for r in cent.collect():
-            centroids[r["cluster"]][r["pos"] - 1] = float(r["cval"])
-        layout = emb.join(assign, "vec_id").select(
-            "vec_id", "embedding", F.col("cluster").alias("cluster_id")
-        )
-        idx = IVFIndex.from_assignment(
-            layout, "embedding", path, centroids, metric="l2",
-            dim=COMPILE_DIM,
-        )
-    _ivf_lloyd_cache[key] = idx
-    return idx
+    centroids = [[0.0] * EMB_DIM for _ in range(_LLOYD_K)]
+    for r in cent.collect():
+        centroids[r["cluster"]][r["pos"] - 1] = float(r["cval"])
+    layout = emb.join(assign, "vec_id").select(
+        "vec_id", "embedding", F.col("cluster").alias("cluster_id")
+    )
+    IVFIndex.from_assignment(layout, "embedding", path, centroids,
+                             metric="l2", dim=COMPILE_DIM)
 
 
 def _probe_clusters_fixed(
@@ -217,36 +189,18 @@ def _q_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "distance")
 
 
-_ivf_reb_cache: dict[str, IVFIndex] = {}
-
-
-def _ivf_rebalanced_for(spark: SparkSession, sf_dir: str) -> IVFIndex:
+@fixture("ivf_rebalanced", load=_opens(IVFIndex))
+def _ivf_rebalanced_for(spark: SparkSession, sf_dir: str, path: str) -> None:
     """A deliberately skewed 2-list layout (cluster = vec_id % 2, so both
     lists hold half the corpus), then REBALANCED: every oversized list is
     split by the fixed-Lloyd trainer, sub-centroids replace/extend the
     routing list, and the new layout + centroids commit in one swap."""
-    key = sf_dir.rstrip("/")
-    if key in _ivf_reb_cache:
-        return _ivf_reb_cache[key]
-    tag = key.replace("/", "_")
-    # v2: partition-scoped journaled rebalance (r7) — new tag so a stale
-    # full-rewrite-era layout never satisfies this round's checks.
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_ivfreb2_m150_{tag}")
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = IVFIndex.load(path)
-    else:
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        layout = emb.withColumn(
-            "cluster_id", (F.col("vec_id") % 2).cast("int")
-        )
-        centroids = [qvec(spark, sf_dir, 1), qvec(spark, sf_dir, 2)]
-        idx = IVFIndex.from_assignment(
-            layout, "embedding", path, centroids, metric="l2",
-            dim=COMPILE_DIM,
-        )
-        idx.rebalance(spark, max_list_size=150)
-    _ivf_reb_cache[key] = idx
-    return idx
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    layout = emb.withColumn("cluster_id", (F.col("vec_id") % 2).cast("int"))
+    centroids = [qvec(spark, sf_dir, 1), qvec(spark, sf_dir, 2)]
+    IVFIndex.from_assignment(
+        layout, "embedding", path, centroids, metric="l2", dim=COMPILE_DIM,
+    ).rebalance(spark, max_list_size=150)
 
 
 def _q_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -426,24 +380,10 @@ SELECT qid, vec_id, distance, CAST(rn AS INTEGER) AS rn FROM (
 WHERE rn <= {_BATCH_KNN_K}"""
 
 
-_tenant_cache: dict[str, "object"] = {}
-
-
-def _tenant_index_for(spark: SparkSession, sf_dir: str):
-    from neurondb_spark.index.specialized import TenantIndex
-
-    key = sf_dir.rstrip("/")
-    if key in _tenant_cache:
-        return _tenant_cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_tenant{tag}")
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = TenantIndex.load(path)
-    else:
-        emb = t(spark, sf_dir, "embeddings")
-        idx = TenantIndex.build(emb, "embedding", "label", path, dim=COMPILE_DIM)
-    _tenant_cache[key] = idx
-    return idx
+@fixture("tenant", load=_opens(S.TenantIndex))
+def _tenant_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
+    S.TenantIndex.build(t(spark, sf_dir, "embeddings"), "embedding", "label",
+                        path, dim=COMPILE_DIM)
 
 
 def _q_tenant(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -466,31 +406,19 @@ WHERE e.label = 3
 ORDER BY distance ASC, e.vec_id ASC LIMIT 10"""
 
 
-_temporal_cache: dict[str, "object"] = {}
 _DAY_US = 86_400_000_000
 
 
-def _temporal_index_for(spark: SparkSession, sf_dir: str):
-    from neurondb_spark.index.specialized import TemporalIndex
-
-    key = sf_dir.rstrip("/")
-    if key in _temporal_cache:
-        return _temporal_cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_temporal_m{tag}")
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = TemporalIndex.load(path)
-    else:
-        emb = t(spark, sf_dir, "embeddings").withColumn(
-            "insert_ts", F.timestamp_micros(F.col("vec_id") * F.lit(_DAY_US))
-        )
-        # month buckets: the synthetic ts is one row per day, so day
-        # buckets would mean one file per row — bucket granularity must
-        # track row density, here ~30 rows/partition
-        idx = TemporalIndex.build(emb, "embedding", "insert_ts", path,
-                                  bucket="month", dim=COMPILE_DIM)
-    _temporal_cache[key] = idx
-    return idx
+@fixture("temporal", load=_opens(S.TemporalIndex))
+def _temporal_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
+    emb = t(spark, sf_dir, "embeddings").withColumn(
+        "insert_ts", F.timestamp_micros(F.col("vec_id") * F.lit(_DAY_US))
+    )
+    # month buckets: the synthetic ts is one row per day, so day
+    # buckets would mean one file per row — bucket granularity must
+    # track row density, here ~30 rows/partition
+    S.TemporalIndex.build(emb, "embedding", "insert_ts", path,
+                          bucket="month", dim=COMPILE_DIM)
 
 
 def _q_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -528,35 +456,20 @@ WHERE e.vec_id <= 100
 ORDER BY (-({d})) * exp(-0.1 * ({age})) DESC, e.vec_id ASC LIMIT 10"""
 
 
-_consistent_cache: dict[str, "object"] = {}
-
-
-def _consistent_index_for(spark: SparkSession, sf_dir: str):
+@fixture("consistent", load=lambda spark, sf_dir, path: S.ConsistentIndex(
+    path, S._read_meta(path), pinned=1))
+def _consistent_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Build snapshot v1 from embeddings, then append 5 exact copies of
-    the query vector (ids 100000+) → v2. The returned handle is pinned to
-    v1 — the replica that opened before the append."""
-    from neurondb_spark.index.specialized import ConsistentIndex, _read_meta
-
-    key = sf_dir.rstrip("/")
-    if key in _consistent_cache:
-        return _consistent_cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_consistent{tag}")
-    if not os.path.exists(os.path.join(path, "meta.json")):
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        idx = ConsistentIndex.build(emb, "embedding", "vec_id", path,
-                                    dim=COMPILE_DIM)
-        q = qvec(spark, sf_dir)
-        shadow = spark.createDataFrame(
-            [(100000 + i, [float(x) for x in q]) for i in range(5)],
-            schema=emb.schema,
-        )
-        idx.append(shadow)
-    from neurondb_spark.index.specialized import ConsistentIndex as CI
-
-    idx = CI(path, _read_meta(path), pinned=1)
-    _consistent_cache[key] = idx
-    return idx
+    the query vector (ids 100000+) → v2. The handle is pinned to v1 —
+    the replica that opened before the append."""
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    idx = S.ConsistentIndex.build(emb, "embedding", "vec_id", path,
+                                  dim=COMPILE_DIM)
+    q = qvec(spark, sf_dir)
+    idx.append(spark.createDataFrame(
+        [(100000 + i, [float(x) for x in q]) for i in range(5)],
+        schema=emb.schema,
+    ))
 
 
 def _q_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -580,32 +493,19 @@ FROM embeddings e CROSS JOIN q
 ORDER BY distance ASC, e.vec_id ASC LIMIT 10"""
 
 
-_rerank_cache: dict[str, "object"] = {}
 _RERANK_WARM_K = 30
 
 
-def _rerank_index_for(spark: SparkSession, sf_dir: str):
+@fixture("rerank", load=lambda spark, sf_dir, path: S.RerankIndex(
+    path, _index_for(spark, sf_dir), S._read_meta(path)))
+def _rerank_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
     """RerankIndex over the IVF base at full probe (exact base → the
     candidate set is oracle-expressible); warmed once with the gate query
     itself so the cache covers exactly the top _RERANK_WARM_K."""
-    from neurondb_spark.index.specialized import RerankIndex, _read_meta
-
-    key = sf_dir.rstrip("/")
-    if key in _rerank_cache:
-        return _rerank_cache[key]
     spark.conf.set("spark.neurondb.ivf.nprobe", str(NLISTS))  # exact base
-    base = _index_for(spark, sf_dir)
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_rerank{tag}")
-    q = qvec(spark, sf_dir)
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = RerankIndex(path, base, _read_meta(path))
-    else:
-        idx = RerankIndex.create(base, path, "vec_id")
-    if not os.path.isdir(os.path.join(path, "cache")):
-        idx.warm(spark, [q], top_k=_RERANK_WARM_K)
-    _rerank_cache[key] = idx
-    return idx
+    S.RerankIndex.create(_index_for(spark, sf_dir), path, "vec_id").warm(
+        spark, [qvec(spark, sf_dir)], top_k=_RERANK_WARM_K
+    )
 
 
 def _q_rerank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -634,7 +534,12 @@ SELECT vec_id, distance,
 FROM ranked WHERE rnk <= 50"""
 
 
-_pq_cache: dict[str, tuple] = {}
+@fixture("pq_codebook", load=_opens(PQCodebook))
+def _pq_codebook_for(spark: SparkSession, sf_dir: str, path: str) -> None:
+    PQCodebook.train_lloyd_exact(
+        t(spark, sf_dir, "embeddings"), "embedding", "vec_id", dim=EMB_DIM,
+        m=_PQ_M, k=_PQ_K, iters=2,
+    ).save(path)
 
 
 def _q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -646,18 +551,10 @@ def _q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic and the oracle replays every step. The seeded-MLlib
     trainer (``PQCodebook.train``) remains the production path,
     recall-tested in tests/test_pq.py."""
-    from neurondb_spark.index.pq import PQCodebook, pq_search
+    from neurondb_spark.index.pq import pq_search
 
-    key = sf_dir.rstrip("/")
+    cb = _pq_codebook_for(spark, sf_dir)
     emb = t(spark, sf_dir, "embeddings")
-    if key in _pq_cache:
-        cb = _pq_cache[key][0]
-    else:
-        cb = PQCodebook.train_lloyd_exact(
-            emb, "embedding", "vec_id", dim=EMB_DIM, m=_PQ_M, k=_PQ_K,
-            iters=2,
-        )
-        _pq_cache[key] = (cb,)
     codes = emb.select(
         "vec_id", cb.encode_udf_exact()(F.col("embedding")).alias("codes")
     )
@@ -683,7 +580,7 @@ def _q_pq_adc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     order. Complements `pq_adc_topk`, which keeps the trained-KMeans
     codebook (approximate → rows-only) and the numpy batch encoder as the
     corpus-scale path."""
-    from neurondb_spark.index.pq import PQCodebook, pq_search
+    from neurondb_spark.index.pq import pq_search
 
     emb = t(spark, sf_dir, "embeddings")
     rows = (
@@ -812,25 +709,11 @@ def _sql_pq_adc() -> str:
     )
 
 
-_hnsw_cache: dict[str, "object"] = {}
-
-
-def _hnsw_index_for(spark: SparkSession, sf_dir: str):
-    from neurondb_spark.index.hnsw import HNSWIndex
-
-    key = sf_dir.rstrip("/")
-    if key in _hnsw_cache:
-        return _hnsw_cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_hnsw{tag}")
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = HNSWIndex.load(path, spark)
-    else:
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        idx = HNSWIndex.build(emb, "embedding", "vec_id", path, dim=EMB_DIM,
-                              num_shards=4, m=8, ef_construction=48, seed=7)
-    _hnsw_cache[key] = idx
-    return idx
+@fixture("hnsw", load=_opens_hnsw)
+def _hnsw_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    HNSWIndex.build(emb, "embedding", "vec_id", path, dim=EMB_DIM,
+                    num_shards=4, m=8, ef_construction=48, seed=7)
 
 
 def _q_hnsw_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -922,34 +805,20 @@ SELECT qid, vec_id, distance, CAST(rn AS INTEGER) AS rn FROM (
 WHERE rn <= {_BATCH_KNN_K}"""
 
 
-_hnsw_dml_cache: dict[str, "object"] = {}
-
-
-def _hnsw_dml_index_for(spark: SparkSession, sf_dir: str):
+@fixture("hnsw_dml", load=_opens_hnsw)
+def _hnsw_dml_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Build on the even half, ml_hnsw_insert the odd half, tombstone
     vec_id % 37 == 0 — the full index DML lifecycle in one cached index."""
-    from neurondb_spark.index.hnsw import HNSWIndex
-
-    key = sf_dir.rstrip("/")
-    if key in _hnsw_dml_cache:
-        return _hnsw_dml_cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_hnswdml{tag}")
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = HNSWIndex.load(path, spark)
-    else:
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        idx = HNSWIndex.build(
-            emb.where(F.col("vec_id") % 2 == 0), "embedding", "vec_id", path,
-            dim=EMB_DIM, num_shards=4, m=8, ef_construction=48, seed=7,
-        )
-        idx.insert(emb.where(F.col("vec_id") % 2 == 1))
-        # DataFrame delete: the ids flow to the tombstone write without
-        # a driver round-trip (the r10 bulk-delete path, exercised here
-        # so the gate covers it end to end)
-        idx.delete(spark, emb.where(F.col("vec_id") % 37 == 0).select("vec_id"))
-    _hnsw_dml_cache[key] = idx
-    return idx
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    idx = HNSWIndex.build(
+        emb.where(F.col("vec_id") % 2 == 0), "embedding", "vec_id", path,
+        dim=EMB_DIM, num_shards=4, m=8, ef_construction=48, seed=7,
+    )
+    idx.insert(emb.where(F.col("vec_id") % 2 == 1))
+    # DataFrame delete: the ids flow to the tombstone write without
+    # a driver round-trip (the r10 bulk-delete path, exercised here
+    # so the gate covers it end to end)
+    idx.delete(spark, emb.where(F.col("vec_id") % 37 == 0).select("vec_id"))
 
 
 def _q_hnsw_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -988,25 +857,11 @@ WHERE e.vec_id % 37 <> 0
 ORDER BY distance ASC, e.vec_id ASC LIMIT 10"""
 
 
-_ivfpq_cache: dict[str, "object"] = {}
-
-
-def _ivfpq_index_for(spark: SparkSession, sf_dir: str):
-    from neurondb_spark.index.ivfpq import IVFPQIndex
-
-    key = sf_dir.rstrip("/")
-    if key in _ivfpq_cache:
-        return _ivfpq_cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_ivfpq{tag}")
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = IVFPQIndex.load(path)
-    else:
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        idx = IVFPQIndex.build(emb, "embedding", "vec_id", path, dim=EMB_DIM,
-                               nlists=8, m=8, k=16, seed=42)
-    _ivfpq_cache[key] = idx
-    return idx
+@fixture("ivfpq", load=_opens(IVFPQIndex))
+def _ivfpq_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    IVFPQIndex.build(emb, "embedding", "vec_id", path, dim=EMB_DIM,
+                     nlists=8, m=8, k=16, seed=42)
 
 
 def _q_ivfpq_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1030,29 +885,15 @@ FROM embeddings e CROSS JOIN q
 ORDER BY distance ASC, e.vec_id ASC LIMIT 10"""
 
 
-_hybrid_cache: dict[str, "object"] = {}
-
-
-def _hybrid_index_for(spark: SparkSession, sf_dir: str):
-    from neurondb_spark.index.specialized import HybridIndex
-
-    key = sf_dir.rstrip("/")
-    if key in _hybrid_cache:
-        return _hybrid_cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_hybrid{tag}")
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = HybridIndex.load(path)
-    else:
-        docs = t(spark, sf_dir, "documents")
-        emb = t(spark, sf_dir, "embeddings")
-        df = docs.join(emb, docs.doc_id == emb.vec_id).select(
-            "doc_id", "embedding", "text"
-        )
-        idx = HybridIndex.build(df, "embedding", "text", "doc_id", path,
-                                dim=COMPILE_DIM)
-    _hybrid_cache[key] = idx
-    return idx
+@fixture("hybrid", load=_opens(S.HybridIndex))
+def _hybrid_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
+    docs = t(spark, sf_dir, "documents")
+    emb = t(spark, sf_dir, "embeddings")
+    df = docs.join(emb, docs.doc_id == emb.vec_id).select(
+        "doc_id", "embedding", "text"
+    )
+    S.HybridIndex.build(df, "embedding", "text", "doc_id", path,
+                        dim=COMPILE_DIM)
 
 
 _HYBRID_QTEXT = "hash join merge sort"
@@ -1087,27 +928,13 @@ ORDER BY score DESC, doc.doc_id ASC LIMIT 12"""
 
 _LSH_NBITS = 8
 _LSH_BATCH_Q, _LSH_BATCH_K = 8, 5
-_lsh_cache: dict[str, "object"] = {}
 
 
-def _lsh_index_for(spark: SparkSession, sf_dir: str):
-    from neurondb_spark.index.lsh import LSHIndex
-
-    key = sf_dir.rstrip("/")
-    if key in _lsh_cache:
-        return _lsh_cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"neurondb_lsh{tag}")
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = LSHIndex.load(path)
-    else:
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        idx = LSHIndex.build(
-            emb, "embedding", path, dim=EMB_DIM, nbits=_LSH_NBITS,
-            seed=42, metric="cosine",
-        )
-    _lsh_cache[key] = idx
-    return idx
+@fixture("lsh", load=_opens(LSHIndex))
+def _lsh_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    LSHIndex.build(emb, "embedding", path, dim=EMB_DIM, nbits=_LSH_NBITS,
+                   seed=42, metric="cosine")
 
 
 def _q_lsh_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1133,34 +960,18 @@ FROM embeddings e CROSS JOIN q
 ORDER BY distance ASC, e.vec_id ASC LIMIT 10"""
 
 
-_lsh_dml_cache: dict[str, "object"] = {}
-
-
-def _lsh_dml_index_for(spark: SparkSession, sf_dir: str):
+@fixture("lsh_dml", load=_opens(LSHIndex))
+def _lsh_dml_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Build on the even half, append-insert the odd half, tombstone
     vec_id % 37 == 0 — the LSH DML lifecycle in one cached index."""
-    from neurondb_spark.index.lsh import LSHIndex
-
-    key = sf_dir.rstrip("/")
-    if key in _lsh_dml_cache:
-        return _lsh_dml_cache[key]
-    tag = key.replace("/", "_")
-    path = os.path.join(
-        tempfile.gettempdir(), f"neurondb_lshdml_b{_LSH_NBITS}_m37_{tag}"
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    idx = LSHIndex.build(
+        emb.where(F.col("vec_id") % 2 == 0), "embedding", path,
+        dim=EMB_DIM, nbits=_LSH_NBITS, seed=42, metric="cosine",
     )
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = LSHIndex.load(path)
-    else:
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        idx = LSHIndex.build(
-            emb.where(F.col("vec_id") % 2 == 0), "embedding", path,
-            dim=EMB_DIM, nbits=_LSH_NBITS, seed=42, metric="cosine",
-        )
-        idx.insert(emb.where(F.col("vec_id") % 2 == 1))
-        # DataFrame delete (r10 bulk-delete path; no driver round-trip)
-        idx.delete(spark, emb.where(F.col("vec_id") % 37 == 0).select("vec_id"))
-    _lsh_dml_cache[key] = idx
-    return idx
+    idx.insert(emb.where(F.col("vec_id") % 2 == 1))
+    # DataFrame delete (r10 bulk-delete path; no driver round-trip)
+    idx.delete(spark, emb.where(F.col("vec_id") % 37 == 0).select("vec_id"))
 
 
 def _q_lsh_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1449,7 +1260,6 @@ _LSH_CL_SEED = 1234      # center directions
 _LSH_CL_CAP = 10_000     # corpus bound (cluster sizes stay >> k)
 _LSH_CL_NOISE = 0.5      # per-dim jitter amplitude around a norm-10 center
 _LSH_CL_FLOOR = 0.8      # recall@10 at probe_hamming=2
-_lsh_cl_cache: dict[str, "object"] = {}
 
 
 def planted_cluster_frame(
@@ -1501,33 +1311,11 @@ def planted_cluster_frame(
     )
 
 
-def _lsh_clustered_index_for(spark: SparkSession, sf_dir: str):
-    from neurondb_spark.index.lsh import LSHIndex
-
-    key = sf_dir.rstrip("/")
-    if key in _lsh_cl_cache:
-        return _lsh_cl_cache[key]
-    tag = key.replace("/", "_")
-    # EVERY constant the planted geometry depends on is in the cache-dir
-    # name (r10 ADVICE #5: seed/noise/cap changes must never silently
-    # reuse a stale on-disk corpus — self-consistent but measuring the
-    # old geometry).
-    geo = (
-        f"c{_LSH_CL_C}_b{_LSH_NBITS}_s{_LSH_CL_SEED}_k{_LSH_CL_CAP}_"
-        f"n{str(_LSH_CL_NOISE).replace('.', 'p')}"
-    )
-    path = os.path.join(
-        tempfile.gettempdir(), f"neurondb_lshcl_{geo}_{tag}",
-    )
-    if os.path.exists(os.path.join(path, "meta.json")):
-        idx = LSHIndex.load(path)
-    else:
-        idx = LSHIndex.build(
-            planted_cluster_frame(spark, sf_dir), "embedding", path,
-            dim=EMB_DIM, nbits=_LSH_NBITS, seed=42, metric="cosine",
-        )
-    _lsh_cl_cache[key] = idx
-    return idx
+@fixture("lsh_clustered", load=_opens(LSHIndex))
+def _lsh_clustered_index_for(spark: SparkSession, sf_dir: str,
+                             path: str) -> None:
+    LSHIndex.build(planted_cluster_frame(spark, sf_dir), "embedding", path,
+                   dim=EMB_DIM, nbits=_LSH_NBITS, seed=42, metric="cosine")
 
 
 def _q_lsh_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,8 +22,10 @@ from neurondb_spark.functions.text import (
     sql_tokenize,
     tokenize,
 )
+from neurondb_spark.index.ivf import IVFIndex
 from neurondb_spark.operators.knn import vec_route
 from neurondb_spark.registry.common import COMPILE_DIM, EMB_DIM, qvec, t
+from neurondb_spark.registry.fixtures import fixture
 
 N_ROUTE_CENTROIDS = 4
 N_BATCH_QUERIES = 5
@@ -170,20 +172,6 @@ FROM p4 GROUP BY vec_id HAVING MAX(abs(x - rt)) < 1.0"""
 
 _CDC_DEAD_MOD = 43
 _CDC_NLISTS = 4
-_ivf_cdc_drained: set[str] = set()
-
-
-def _ivf_cdc_paths(sf_dir: str) -> tuple[str, str, str]:
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"neurondb_ivfcdc_m{_CDC_DEAD_MOD}_nl{_CDC_NLISTS}{tag}",
-    )
-    return (
-        os.path.join(base, "idx"),
-        os.path.join(base, "ops"),
-        os.path.join(base, "work"),
-    )
 
 
 def _cdc_ops_schema(emb: DataFrame):
@@ -195,6 +183,66 @@ def _cdc_ops_schema(emb: DataFrame):
         T.StructField("embedding", emb_type),
         T.StructField("op", T.StringType()),
     ])
+
+
+@fixture("ivf_cdc", load=lambda spark, sf_dir, path: IVFIndex.load(
+    os.path.join(path, "idx")))
+def _ivf_cdc_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Write the CDC ops under ``ops/``, build the index on the even
+    vec_ids under ``idx/`` and drain the ops into it (see
+    `_q_stream_ivf_cdc`)."""
+    import glob
+    import shutil
+
+    from neurondb_spark.streaming import strict_stream
+    from neurondb_spark.streaming.index_ingest import (
+        index_cdc_batch,
+        index_cdc_drain,
+    )
+
+    idx_path, src, work = (os.path.join(path, d) for d in ("idx", "ops", "work"))
+    emb = t(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("long").alias("vec_id"), "embedding"
+    )
+    schema = _cdc_ops_schema(emb)
+    emb_type = {f.name: f.dataType for f in emb.schema.fields}["embedding"]
+    ins = emb.where(F.col("vec_id") % 2 == 1).withColumn("op", F.lit("i"))
+    dels = emb.where(F.col("vec_id") % _CDC_DEAD_MOD == 0).select(
+        "vec_id",
+        F.lit(None).cast(emb_type).alias("embedding"),
+        F.lit("d").alias("op"),
+    )
+    ins.select("vec_id", "embedding", "op").unionByName(dels).repartition(
+        3
+    ).write.parquet(src)
+
+    def _build() -> IVFIndex:
+        return IVFIndex.build(
+            emb.where(F.col("vec_id") % 2 == 0), "embedding", idx_path,
+            nlists=_CDC_NLISTS, metric="l2", dim=COMPILE_DIM,
+        )
+
+    idx = _build()
+    ok = False
+    try:
+        index_cdc_drain(spark, src, schema, idx, work)
+        ok = bool(glob.glob(
+            os.path.join(idx_path, "ingest_journal", "batch_*.json")
+        ))
+    except StreamingQueryException as e:
+        if strict_stream():
+            raise  # sims verify the STREAMING path; no silent twin
+        print(f"neurondb: stream_ivf_cdc streaming drain failed, "
+              f"using rebuild + batch twin: {e}", file=sys.stderr)
+    if not ok:
+        if strict_stream():
+            raise RuntimeError(
+                "neurondb: stream_ivf_cdc drain committed no batches "
+                "under NEURONDB_STRICT_STREAM=1 (wedged stream?)"
+            )
+        for p in (idx_path, work):
+            shutil.rmtree(p, ignore_errors=True)
+        index_cdc_batch(spark, src, schema, _build())
 
 
 def _q_stream_ivf_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,69 +260,10 @@ def _q_stream_ivf_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a 'd' arriving before its 'i' still wins. Same infra-only batch
     fallback contract as the other stream rows (strict mode raises);
     the twin REBUILDS from scratch first — batch-applying ops over a
-    partially drained append-only index would duplicate rows."""
-    import glob
-    import shutil
-
-    from neurondb_spark.index.ivf import IVFIndex
-    from neurondb_spark.streaming import strict_stream
-    from neurondb_spark.streaming.index_ingest import (
-        index_cdc_batch,
-        index_cdc_drain,
-    )
-
-    idx_path, src, work = _ivf_cdc_paths(sf_dir)
-    emb = t(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("long").alias("vec_id"), "embedding"
-    )
-    schema = _cdc_ops_schema(emb)
-    if not os.path.isdir(src):
-        emb_type = {f.name: f.dataType for f in emb.schema.fields}["embedding"]
-        ins = emb.where(F.col("vec_id") % 2 == 1).withColumn("op", F.lit("i"))
-        dels = emb.where(F.col("vec_id") % _CDC_DEAD_MOD == 0).select(
-            "vec_id",
-            F.lit(None).cast(emb_type).alias("embedding"),
-            F.lit("d").alias("op"),
-        )
-        ins.select("vec_id", "embedding", "op").unionByName(dels).repartition(
-            3
-        ).write.mode("overwrite").parquet(src)
-
-    def _build() -> IVFIndex:
-        return IVFIndex.build(
-            emb.where(F.col("vec_id") % 2 == 0), "embedding", idx_path,
-            nlists=_CDC_NLISTS, metric="l2", dim=COMPILE_DIM,
-        )
-
-    idx = (
-        IVFIndex.load(idx_path)
-        if os.path.exists(os.path.join(idx_path, "meta.json"))
-        else _build()
-    )
-    key = sf_dir.rstrip("/")
-    if key not in _ivf_cdc_drained:
-        ok = False
-        try:
-            index_cdc_drain(spark, src, schema, idx, work)
-            ok = bool(glob.glob(
-                os.path.join(idx_path, "ingest_journal", "batch_*.json")
-            ))
-        except StreamingQueryException as e:
-            if strict_stream():
-                raise  # sims verify the STREAMING path; no silent twin
-            print(f"neurondb: stream_ivf_cdc streaming drain failed, "
-                  f"using rebuild + batch twin: {e}", file=sys.stderr)
-        if not ok:
-            if strict_stream():
-                raise RuntimeError(
-                    "neurondb: stream_ivf_cdc drain committed no batches "
-                    "under NEURONDB_STRICT_STREAM=1 (wedged stream?)"
-                )
-            for p in (idx_path, work):
-                shutil.rmtree(p, ignore_errors=True)
-            idx = _build()
-            index_cdc_batch(spark, src, schema, idx)
-        _ivf_cdc_drained.add(key)
+    partially drained append-only index would duplicate rows. The drain
+    is the fixture's build, so it runs once per input set and a crash
+    mid-drain leaves no ``.complete`` marker to load."""
+    idx = _ivf_cdc_index_for(spark, sf_dir)
     q = qvec(spark, sf_dir)
     return idx.search(
         spark, q, k=10, nprobe=_CDC_NLISTS, tiebreak=["vec_id"]
@@ -290,6 +279,20 @@ SELECT e.vec_id, {d} AS distance
 FROM embeddings e CROSS JOIN q
 WHERE e.vec_id % {_CDC_DEAD_MOD} <> 0
 ORDER BY distance ASC, e.vec_id ASC LIMIT 10"""
+
+
+@fixture("stream_dedup_src")
+def _sdedup_src(spark: SparkSession, sf_dir: str, path: str) -> None:
+    base = t(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("long").alias("doc_id"), "text"
+    )
+    # Plant REAL duplicates (the raw corpus has none): re-inject the
+    # doc_id<=50 texts under shifted ids — min(id) must pick the
+    # original and dup_count must say 2 for exactly those fingerprints.
+    base.unionAll(
+        base.where(F.col("doc_id") <= 50)
+        .select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+    ).coalesce(2).write.parquet(path)
 
 
 def _q_stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,24 +311,11 @@ def _q_stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
     ])
-    base = t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    # Plant REAL duplicates (the raw corpus has none): re-inject the
-    # doc_id<=50 texts under shifted ids — min(id) must pick the
-    # original and dup_count must say 2 for exactly those fingerprints.
-    docs = base.unionAll(
-        base.where(F.col("doc_id") <= 50)
-        .select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
-    )
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    src = os.path.join(tempfile.gettempdir(), f"neurondb_sdedup_src{tag}")
-    if not os.path.isdir(src):
-        docs.coalesce(2).write.mode("overwrite").parquet(src)
+    src = _sdedup_src(spark, sf_dir)
     out = None
     try:
         stream = dedup_stream(spark, src, schema, "text", "doc_id")
-        qname = f"neurondb_sdedup_gate{tag}"
+        qname = f"neurondb_sdedup_gate_{os.path.basename(src)[:16]}"
         q = (
             stream.writeStream.format("memory").queryName(qname)
             .outputMode("complete").trigger(availableNow=True).start()
@@ -369,6 +359,16 @@ SELECT {fp} AS fingerprint, MIN(doc_id) AS doc_id, COUNT(*) AS dup_count
 FROM corpus GROUP BY 1"""
 
 
+@fixture("stream_lsh_root")
+def _slsh_root(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The drain's source docs under ``src/``; its membership and pair
+    tables accumulate under ``work/``."""
+    # 3 files → several micro-batch arrival orders across runs
+    t(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("long").alias("doc_id"), "text"
+    ).repartition(3).write.parquet(os.path.join(path, "src"))
+
+
 def _q_stream_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MinHash-LSH near-dup via the foreachBatch drain
     (streaming/dedup.lsh_pairs_drain): each micro-batch's band rows JVM-
@@ -389,21 +389,13 @@ def _q_stream_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("doc_id", T.LongType()),
         T.StructField("text", T.StringType()),
     ])
-    docs = t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    src = os.path.join(tempfile.gettempdir(), f"neurondb_slsh_src{tag}")
-    if not os.path.isdir(src):
-        # 3 files → several micro-batch arrival orders across runs
-        docs.repartition(3).write.mode("overwrite").parquet(src)
+    root = _slsh_root(spark, sf_dir)
+    src = os.path.join(root, "src")
     out = None
     try:
         out = lsh_pairs_drain(
             spark, src, schema, "text", "doc_id",
-            work_dir=os.path.join(
-                tempfile.gettempdir(), f"neurondb_slsh_work{tag}"
-            ),
+            work_dir=os.path.join(root, "work"),
         )
         if not out.head(1):
             out = None
@@ -641,25 +633,28 @@ def _q_stream_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("win_start", "event_type")
 
 
+@fixture("time_travel")
+def _time_travel_root(spark: SparkSession, sf_dir: str, path: str) -> None:
+    from neurondb_spark.data_management import snapshot
+
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+    v0 = emb.where(F.col("vec_id") <= 300)
+    snapshot(spark, v0, path)
+    shadow = v0.limit(5).select(
+        (F.col("vec_id") + 100000).alias("vec_id"), "label", "embedding"
+    )
+    snapshot(spark, v0.unionByName(shadow), path)
+
+
 def _q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot + time-travel (data_management.py; the reference's WAL/
     crash-safety → immutable-version reads, SURVEY §2.11): v0 = the first
     300 embeddings, v1 = v0 plus 5 planted shadow rows. Reading v0 after
     v1 exists must see NONE of the v1 rows — the oracle aggregates the
     original table, so any leak flips counts/max ids."""
-    from neurondb_spark.data_management import snapshot, time_travel
+    from neurondb_spark.data_management import time_travel
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    base_dir = os.path.join(tempfile.gettempdir(), f"neurondb_tt{tag}")
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    if not os.path.isdir(os.path.join(base_dir, "v=1")):
-        v0 = emb.where(F.col("vec_id") <= 300)
-        snapshot(spark, v0, base_dir)
-        shadow = v0.limit(5).select(
-            (F.col("vec_id") + 100000).alias("vec_id"), "label", "embedding"
-        )
-        snapshot(spark, v0.unionByName(shadow), base_dir)
-    old = time_travel(spark, base_dir, 0)
+    old = time_travel(spark, _time_travel_root(spark, sf_dir), 0)
     return (
         old.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n"), F.max("vec_id").alias("max_id"))
@@ -823,19 +818,23 @@ def _stream_merge_frames(spark: SparkSession, sf_dir: str):
     return base, c1, c2
 
 
-def _write_staged_changes(src: str, c1: DataFrame, c2: DataFrame) -> None:
-    """Stage both change files, then one atomic rename: a crash between
-    the f1 and f2 writes must not leave a half-populated src that every
-    later run's isdir() skip treats as complete."""
-    import shutil
+def _merge_root(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The CDC merge scenario's inputs: both change batches as one file
+    each under ``changes/`` (f1 before f2 — the drain takes one file per
+    trigger, oldest first) and the base seeded as an 8-bucket table under
+    ``table/``, which the drains then advance."""
+    from neurondb_spark.streaming.table_merge import init_merge_table
 
-    staging = src + ".staging"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    os.makedirs(staging)
-    c1.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "f1"))
-    c2.coalesce(1).write.mode("overwrite").parquet(os.path.join(staging, "f2"))
-    os.rename(staging, src)
+    base, c1, c2 = _stream_merge_frames(spark, sf_dir)
+    for name, c in (("f1", c1), ("f2", c2)):
+        c.coalesce(1).write.parquet(os.path.join(path, "changes", name))
+    init_merge_table(spark, base, os.path.join(path, "table"),
+                     ["o_orderkey"], n_buckets=8)
+
+
+# copy-on-write and merge-on-read drains must not share a table
+_merge_cow_root = fixture("merge_cow")(_merge_root)
+_merge_mor_root = fixture("merge_mor")(_merge_root)
 
 
 def _q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,7 +850,8 @@ def _q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout all at once. Same infra-only batch fallback contract as the
     other stream rows."""
     return _run_merge_scenario(spark, sf_dir, "stream_merge_upsert",
-                               "neurondb_smerge_v2", merge_on_read=False)
+                               _merge_cow_root(spark, sf_dir),
+                               merge_on_read=False)
 
 
 def _q_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -865,8 +865,8 @@ def _q_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     form as the copy-on-write drain — read semantics are the same, only
     the physical write/read trade differs."""
     return _run_merge_scenario(spark, sf_dir, "merge_on_read_rows",
-                               "neurondb_mor_v2", merge_on_read=True,
-                               compact_every=2)
+                               _merge_mor_root(spark, sf_dir),
+                               merge_on_read=True, compact_every=2)
 
 
 def _q_merge_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -889,12 +889,10 @@ def _q_merge_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ensure the MOR scenario table exists and is fully drained
     # (idempotent — shares the merge_on_read_rows table + checkpoint)
-    state = _run_merge_scenario(spark, sf_dir, "merge_point_lookup",
-                                "neurondb_mor_v2", merge_on_read=True,
-                                compact_every=2)
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    table = os.path.join(tempfile.gettempdir(), f"neurondb_mor_v2_{tag}",
-                         "table")
+    root = _merge_mor_root(spark, sf_dir)
+    state = _run_merge_scenario(spark, sf_dir, "merge_point_lookup", root,
+                                merge_on_read=True, compact_every=2)
+    table = os.path.join(root, "table")
     if os.path.isdir(table):
         out = lookup_merge_table(spark, table, {"o_orderkey": key})
     else:  # batch-twin fallback (non-strict infra failure only)
@@ -920,12 +918,10 @@ def _q_merge_multi_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when((k % 5 == 0) & (k % 10 != 0), k)).alias("ki"),
     ).head()
     keys = [int(r["k1"]), int(r["k3"]), int(r["ki"])]
-    state = _run_merge_scenario(spark, sf_dir, "merge_multi_lookup",
-                                "neurondb_mor_v2", merge_on_read=True,
-                                compact_every=2)
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    table = os.path.join(tempfile.gettempdir(), f"neurondb_mor_v2_{tag}",
-                         "table")
+    root = _merge_mor_root(spark, sf_dir)
+    state = _run_merge_scenario(spark, sf_dir, "merge_multi_lookup", root,
+                                merge_on_read=True, compact_every=2)
+    table = os.path.join(root, "table")
     if os.path.isdir(table):
         out = lookup_merge_table_many(
             spark, table, [{"o_orderkey": key} for key in keys]
@@ -958,12 +954,11 @@ def _q_merge_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base, c1, _c2 = _stream_merge_frames(spark, sf_dir)
-    _run_merge_scenario(spark, sf_dir, "merge_time_travel",
-                        "neurondb_mor_v2", merge_on_read=True,
+    root = _merge_mor_root(spark, sf_dir)
+    _run_merge_scenario(spark, sf_dir, "merge_time_travel", root,
+                        merge_on_read=True,
                         compact_every=2)  # ensure table drained (idempotent)
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    table = os.path.join(tempfile.gettempdir(), f"neurondb_mor_v2_{tag}",
-                         "table")
+    table = os.path.join(root, "table")
     if os.path.isdir(table):
         # table present but history missing its post-batch-1 commit is a
         # PRODUCT bug (broken manifest history), never infra flake — raise
@@ -1007,12 +1002,10 @@ def _q_merge_vacuum_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_merge_table,
     )
 
-    state = _run_merge_scenario(spark, sf_dir, "merge_vacuum_rows",
-                                "neurondb_mor_v2", merge_on_read=True,
-                                compact_every=2)
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    table = os.path.join(tempfile.gettempdir(), f"neurondb_mor_v2_{tag}",
-                         "table")
+    root = _merge_mor_root(spark, sf_dir)
+    state = _run_merge_scenario(spark, sf_dir, "merge_vacuum_rows", root,
+                                merge_on_read=True, compact_every=2)
+    table = os.path.join(root, "table")
     if not os.path.isdir(table):
         return state  # batch twin (strict mode raised in the scenario)
     orphan = os.path.join(table, "bucket=0", "__nbv=999")
@@ -1028,6 +1021,28 @@ def _q_merge_vacuum_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@fixture("merge_rebalance")
+def _merge_rebalance_root(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The scenario drained with its log UNFOLDED (compact_every=0), then
+    re-bucketed 8→5; raises if the recorded layout did not take."""
+    from neurondb_spark.streaming.table_merge import (
+        _load_table_meta,
+        rebalance_merge_table,
+    )
+
+    _merge_root(spark, sf_dir, path)
+    _run_merge_scenario(spark, sf_dir, "merge_rebalance_rows", path,
+                        merge_on_read=True, compact_every=0)
+    table = os.path.join(path, "table")
+    rebalance_merge_table(spark, table, 5)
+    meta = _load_table_meta(table)
+    if meta is None or meta["n_buckets"] != 5:
+        raise RuntimeError(
+            "neurondb: merge_rebalance_rows rebalanced to 5 buckets "
+            f"but the recorded layout is {meta} — rebalance did not take"
+        )
+
+
 def _q_merge_rebalance_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rebalance under the hash gate (round-15; previously pytest-only):
     build the CDC scenario on a DEDICATED merge-on-read table (rebalance
@@ -1035,41 +1050,13 @@ def _q_merge_rebalance_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     their drains), leave the log UNFOLDED (compact_every=0), then
     re-bucket 8→5 — the offline job must fold the log first, rewrite the
     whole table under the new layout, swap, and the post-rebalance read
-    must STILL hash-equal the closed form. Idempotent like the other
-    scenario rows: a table already recorded at 5 buckets skips the
-    rebuild (the hash then verifies the rebalanced state's DATA; a
-    half-done or wrong-layout leftover is torn down and rebuilt, and the
-    row raises if a fresh rebalance doesn't take). Table-absent infra
-    fallback only (non-strict), same contract as the other merge rows.
+    must STILL hash-equal the closed form. The drain and rebalance are
+    the row's fixture build, which raises if the rebalance doesn't take.
     Reference analog: rebalance_index (NeuronDB/src/index/ivf_am.c
     maintenance surface)."""
-    import shutil
+    from neurondb_spark.streaming.table_merge import read_merge_table
 
-    from neurondb_spark.streaming.table_merge import (
-        _load_table_meta,
-        read_merge_table,
-        rebalance_merge_table,
-    )
-
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    root = os.path.join(tempfile.gettempdir(), f"neurondb_reb_v1_{tag}")
-    table = os.path.join(root, "table")
-    meta = _load_table_meta(table) if os.path.isdir(table) else None
-    if meta is None or meta["n_buckets"] != 5:
-        shutil.rmtree(root, ignore_errors=True)
-        state = _run_merge_scenario(spark, sf_dir, "merge_rebalance_rows",
-                                    "neurondb_reb_v1", merge_on_read=True,
-                                    compact_every=0)
-        if not os.path.isdir(table):
-            return state  # batch twin (strict mode raised in the scenario)
-        rebalance_merge_table(spark, table, 5)
-        meta = _load_table_meta(table)
-        if meta is None or meta["n_buckets"] != 5:
-            raise RuntimeError(
-                "neurondb: merge_rebalance_rows rebalanced to 5 buckets "
-                f"but the recorded layout is {meta} — rebalance did not "
-                "take"
-            )
+    table = os.path.join(_merge_rebalance_root(spark, sf_dir), "table")
     return read_merge_table(spark, table).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1086,29 +1073,24 @@ FROM orders WHERE o_orderkey % 5 = 0"""
 
 
 def _run_merge_scenario(
-    spark: SparkSession, sf_dir: str, row_name: str, tag_prefix: str,
+    spark: SparkSession, sf_dir: str, row_name: str, root: str,
     merge_on_read: bool, compact_every: int = 0,
 ) -> DataFrame:
+    """Drain ``root``'s staged changes into its table (idempotent: the
+    checkpoint skips drained files) and read the table back."""
     from neurondb_spark.data_management import apply_changes
 
     base, c1, c2 = _stream_merge_frames(spark, sf_dir)
     schema = c1.schema
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    root = os.path.join(tempfile.gettempdir(), f"{tag_prefix}_{tag}")
     src = os.path.join(root, "changes")
     table = os.path.join(root, "table")
     out = None
     try:
         from neurondb_spark.streaming.table_merge import (
-            init_merge_table,
             merge_stream_drain,
             read_merge_table,
         )
 
-        if not os.path.isdir(src):
-            _write_staged_changes(src, c1, c2)
-        if not os.path.isdir(table):
-            init_merge_table(spark, base, table, ["o_orderkey"], n_buckets=8)
         merge_stream_drain(
             spark, src + "/*/", schema, table, ["o_orderkey"],
             n_buckets=8, max_files_per_trigger=1,

@@ -5,6 +5,9 @@ reference's self-checking metric tests, tests/sql/basic/001_linreg_basic.sql:41-
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,6 +21,7 @@ from neurondb_spark.ml.stats import (
     zscore_outliers,
 )
 from neurondb_spark.registry.common import COMPILE_DIM, EMB_DIM, QVEC_CTE, qvec, t
+from neurondb_spark.registry.fixtures import fixture
 
 
 def _q_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -419,9 +423,6 @@ FROM pr"""
 
 
 # ------------------------------------------------- MLlib (rows-only checks)
-
-_ml_cache: dict[str, object] = {}
-
 
 def _q_logreg_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary logistic regression: label<5 on embeddings; returns per-class
@@ -939,19 +940,26 @@ _GBT_GRID = {
 _GBT_ROUNDS, _GBT_LR = 3, 0.5
 
 
-_gbt_cache: dict[str, tuple] = {}
+def _gbt_load(spark: SparkSession, sf_dir: str, path: str):
+    """``(model, pred_col)``, as ``gbt_fixed_stumps`` returns them."""
+    from neurondb_spark.ml.boosting import gbt_pred_from_model
+
+    with open(os.path.join(path, "model.json")) as f:
+        model = json.load(f)
+    return model, gbt_pred_from_model(model)
 
 
-def _gbt_model_for(spark: SparkSession, sf_dir: str):
+@fixture("gbt_model", load=_gbt_load)
+def _gbt_model_for(spark: SparkSession, sf_dir: str, path: str) -> None:
     from neurondb_spark.ml.boosting import gbt_fixed_stumps
 
-    key = sf_dir.rstrip("/")
-    if key not in _gbt_cache:
-        li = t(spark, sf_dir, "lineitem")
-        _gbt_cache[key] = gbt_fixed_stumps(
-            li, _GBT_GRID, "l_extendedprice", rounds=_GBT_ROUNDS, lr=_GBT_LR
-        )
-    return _gbt_cache[key]
+    model, _pred = gbt_fixed_stumps(
+        t(spark, sf_dir, "lineitem"), _GBT_GRID, "l_extendedprice",
+        rounds=_GBT_ROUNDS, lr=_GBT_LR,
+    )
+    os.makedirs(path)
+    with open(os.path.join(path, "model.json"), "w") as f:
+        json.dump(model, f)
 
 
 def _q_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from neurondb_spark import oracle as O
 from neurondb_spark.ml.cluster_quality import davies_bouldin, similarity_histogram
 from neurondb_spark.registry.common import COMPILE_DIM, EMB_DIM, QVEC_CTE, qvec, t
+from neurondb_spark.registry.fixtures import fixture
 
 
 def _q_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,28 +169,22 @@ SELECT community_size, COUNT(*) AS n_communities FROM sizes GROUP BY 1"""
 
 
 _TARGET_USER = 7
-_ui_cache: dict[str, DataFrame] = {}
 
 
-def _user_item(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ratings matrix, localCheckpointed once per sf_dir: the
-    600k-row lineitem⋈orders build would otherwise re-run for every one
-    of the 3+ aggregations each recommender query derives from it."""
+@fixture("user_item", load=lambda spark, sf_dir, path: spark.read.parquet(path))
+def _user_item(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Ratings matrix, materialized once per input set: the 600k-row
+    lineitem⋈orders build would otherwise re-run for every one of the
+    3+ aggregations each recommender query derives from it."""
     from neurondb_spark.ml.recommender import user_item
 
-    key = sf_dir.rstrip("/")
-    cached = _ui_cache.get(key)
-    if cached is not None:
-        return cached
     li = t(spark, sf_dir, "lineitem")
     o = t(spark, sf_dir, "orders")
     df = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"),
         F.col("l_quantity").cast("double").alias("q"),
     )
-    ui = user_item(df, "u", "i", "q").localCheckpoint()
-    _ui_cache[key] = ui
-    return ui
+    user_item(df, "u", "i", "q").write.parquet(path)
 
 
 _SQL_UI = f"""ui AS (

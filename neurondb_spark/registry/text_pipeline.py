@@ -31,6 +31,7 @@ from neurondb_spark.operators.dedup import (
     substring_dup_stats,
 )
 from neurondb_spark.registry.common import COMPILE_DIM, EMB_DIM, t, tp
+from neurondb_spark.registry.fixtures import fixture
 
 NUM_MINHASHES = 8
 
@@ -1100,13 +1101,6 @@ FROM tot t LEFT JOIN dup d ON t.doc_id = d.doc_id"""
 
 _SSP_MAX_DF = 20
 
-# Trained-model cache (the CREATE INDEX / train-once discipline the
-# index caches follow): the classifier's scored frame per sf_dir, so
-# the curation pipeline's classifier stage reuses the training run
-# instead of re-fitting. localCheckpointed — survives catalog
-# clearCache; per-process sessions (sims/bench/pytest) make it safe.
-_qc_cache: dict[str, DataFrame] = {}
-
 
 def _q_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring duplicate PAIRS (operators/dedup.
@@ -1136,7 +1130,9 @@ WHERE a.fp_hash IN (SELECT fp_hash FROM kept)
 GROUP BY a.doc_id, b.doc_id"""
 
 
-def _q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
+@fixture("quality_classifier",
+         load=lambda spark, sf_dir, path: spark.read.parquet(path))
+def _q_quality_classifier(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Trainable quality classifier (r6 verdict "Next round #5"): the
     curated-vs-crawl filter of training-data practice, trained with the
     oracle-exact fixed-GD logistic trainer (ml/stats.logreg_gd_exact —
@@ -1152,14 +1148,13 @@ def _q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash gate; pytest asserts it actually separates the classes.
     100 TB: feature build is pure expressions + the bounded trigram
     model broadcast; each GD iteration is one map-side-combined
-    gradient reduction over 7 positions."""
+    gradient reduction over 7 positions. A fixture: trained once per
+    input set, so the curation pipeline's classifier stage reads the
+    same scores instead of re-fitting."""
     from neurondb_spark.functions.repetition import repetition_filters
     from neurondb_spark.ml.stats import logreg_gd_exact
     from neurondb_spark.operators.corpus import trigram_lm_scores
 
-    key = sf_dir.rstrip("/")
-    if key in _qc_cache:
-        return _qc_cache[key]
     docs = tp(spark, sf_dir, "documents").select(
         "doc_id",
         F.when(
@@ -1229,13 +1224,11 @@ def _q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(F.lit(1.0), *[_std(c) for c in names]).alias("f"),
         F.col("y"),
     ).localCheckpoint(eager=False)  # same: one slim row per doc
-    out = logreg_gd_exact(
+    logreg_gd_exact(
         feats, "f", "y", "doc_id", iters=2, lr=1.0, return_score=True
     ).select(
         "doc_id", F.col("score").alias("quality_prob"), "prediction"
-    ).localCheckpoint(eager=False)
-    _qc_cache[key] = out
-    return out
+    ).write.parquet(path)
 
 
 def _sql_qc_ctes() -> str:
@@ -1428,6 +1421,23 @@ FROM packed
 GROUP BY shard"""
 
 
+def _pack_counts(docs: DataFrame) -> DataFrame:
+    return docs.select(
+        F.col("lang").alias("shard"),
+        F.col("doc_id").alias("id"),
+        token_count("text").cast("long").alias("n"),
+    ).where(F.col("n") > 0)
+
+
+@fixture("pack_src")
+def _pack_src(spark: SparkSession, sf_dir: str, path: str) -> None:
+    # ONE sorted file = one id-ordered micro-batch: streaming output
+    # is then bit-identical to the batch operator (and the oracle)
+    _pack_counts(t(spark, sf_dir, "documents")).orderBy(
+        "shard", "id"
+    ).coalesce(1).write.parquet(path)
+
+
 def _q_stream_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming sequence packing (applyInPandasWithState,
     per-shard next-offset carry): for id-ordered arrival the emitted
@@ -1439,32 +1449,17 @@ def _q_stream_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAMING path)."""
     import os
     import sys as _sys
-    import tempfile
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from neurondb_spark.streaming.packing import pack_stream
 
     docs = t(spark, sf_dir, "documents")
-    counted = docs.select(
-        F.col("lang").alias("shard"),
-        F.col("doc_id").alias("id"),
-        token_count("text").cast("long").alias("n"),
-    ).where(F.col("n") > 0)
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    src = os.path.join(tempfile.gettempdir(), f"neurondb_pack_src{tag}")
-    # _SUCCESS, not bare isdir: a crashed first write leaves a partial
-    # dir that would silently feed every later run a truncated corpus
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        # ONE sorted file = one id-ordered micro-batch: streaming output
-        # is then bit-identical to the batch operator (and the oracle)
-        counted.orderBy("shard", "id").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(src)
+    src = _pack_src(spark, sf_dir)
     out = None
     try:
-        sdf = spark.readStream.schema(counted.schema).parquet(src)
-        qname = f"neurondb_pack{tag}"
+        sdf = spark.readStream.schema(_pack_counts(docs).schema).parquet(src)
+        qname = f"neurondb_pack_{os.path.basename(src)[:16]}"
         q = (
             pack_stream(sdf, _PACK_SEQ_LEN).writeStream.format("memory")
             .queryName(qname).outputMode("append")

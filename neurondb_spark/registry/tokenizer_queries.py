@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from neurondb_spark.functions.text import sql_tokenize
 from neurondb_spark.registry.common import t
+from neurondb_spark.registry.fixtures import fixture
 
 _BPE_MERGES = 10
 _BPE_TOP = 50
@@ -211,6 +212,18 @@ FROM documents"""
     return f"{one(0)}\nUNION ALL\n{one(1)}"
 
 
+@fixture("tokenizer_catalog")
+def _tokenizer_catalog(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """An engine catalog holding the ``gate_bpe`` tokenizer (K=10, trained
+    through the engine facade on the documents scan)."""
+    from neurondb_spark.engine import NeuronSparkEngine
+
+    NeuronSparkEngine(spark, path).train_tokenizer(
+        "gate_bpe", t(spark, sf_dir, "documents"), "text",
+        num_merges=_BPE_MERGES,
+    )
+
+
 def _q_bpe_saved_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer PERSISTENCE round-trip under the hash gate: train K=10
     through the engine facade (hybrid loop), save the artifact to the
@@ -222,21 +235,13 @@ def _q_bpe_saved_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-equal the same chained-CTE replay as bpe_tokenize_counts: a
     drifted save/load — a dropped merge, reordered table, lossy
     roundtrip — breaks the hash."""
-    import os
-    import tempfile
-
     from neurondb_spark.engine import NeuronSparkEngine
     from neurondb_spark.operators.bpe import bpe_token_counts, bpe_word_table
     from neurondb_spark.operators.bpe_local import word_symbols_udf
     from neurondb_spark.operators.tokenizer_io import load_tokenizer
 
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    cat = os.path.join(tempfile.gettempdir(), f"neurondb_tok_v1_{tag}")
-    eng = NeuronSparkEngine(spark, cat)
+    eng = NeuronSparkEngine(spark, _tokenizer_catalog(spark, sf_dir))
     docs = t(spark, sf_dir, "documents")
-    if eng.catalog.get("tokenizers", "gate_bpe") is None:
-        eng.train_tokenizer("gate_bpe", docs, "text",
-                            num_merges=_BPE_MERGES)
     merges, _meta = load_tokenizer(
         eng.catalog.get("tokenizers", "gate_bpe")["path"]
     )
@@ -263,7 +268,6 @@ def _q_bpe_hf_import_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash. Reference analog: the pretrained-file loading surface
     (NeuronDB/src/onnx/neurondb_tokenizer.c reads merges from disk)."""
     import os
-    import tempfile
 
     from neurondb_spark.engine import NeuronSparkEngine
     from neurondb_spark.operators.bpe import bpe_token_counts, bpe_word_table
@@ -274,13 +278,9 @@ def _q_bpe_hf_import_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_tokenizer,
     )
 
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    cat = os.path.join(tempfile.gettempdir(), f"neurondb_tok_v1_{tag}")
+    cat = _tokenizer_catalog(spark, sf_dir)
     eng = NeuronSparkEngine(spark, cat)
     docs = t(spark, sf_dir, "documents")
-    if eng.catalog.get("tokenizers", "gate_bpe") is None:
-        eng.train_tokenizer("gate_bpe", docs, "text",
-                            num_merges=_BPE_MERGES)
     merges, _meta = load_tokenizer(
         eng.catalog.get("tokenizers", "gate_bpe")["path"]
     )
@@ -311,20 +311,12 @@ def _q_bpe_facade_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     token arrays to corpus counts. Must hash-equal the same chained-CTE
     replay as bpe_tokenize_counts: a wrong/unstable row id would scramble
     token-to-document reassembly and break the hash."""
-    import os
-    import tempfile
-
     from neurondb_spark.engine import NeuronSparkEngine
 
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    cat = os.path.join(tempfile.gettempdir(), f"neurondb_tok_v1_{tag}")
-    eng = NeuronSparkEngine(spark, cat)
+    eng = NeuronSparkEngine(spark, _tokenizer_catalog(spark, sf_dir))
     docs = t(spark, sf_dir, "documents")  # plain scan — NOT tp(); the
     # row exists to drive the metadata-id route, which needs one
     # file-source leaf under row-identity nodes
-    if eng.catalog.get("tokenizers", "gate_bpe") is None:
-        eng.train_tokenizer("gate_bpe", docs, "text",
-                            num_merges=_BPE_MERGES)
     toks = eng.tokenize_with("gate_bpe", docs, "text", out_col="toks")
     return (
         toks.select(F.explode("toks").alias("token"))

@@ -15,6 +15,9 @@ cd "$(dirname "$0")/.."
 NEURONDB_STRICT_STREAM=1
 export NEURONDB_STRICT_STREAM
 SF=${SPARK_GRAFT_SF_DIR_SMALL:-/root/testdata/sf0.01}
+# Seconds, no Spark: a broken fixture key or completion marker fails here
+# instead of minutes into a sim.
+python -m pytest tests/test_fixtures.py -q
 if [ -n "$1" ]; then
   python scripts/driver_sim.py "$SF" "$1"
   python scripts/vanilla_sim.py "$SF" "$1"

@@ -804,14 +804,13 @@ def test_time_travel_row_refuses_broken_history(spark):
     never silently hash-green via the twin."""
     import pytest
 
+    from neurondb_spark.registry.fixtures import fixture_dir
     from neurondb_spark.registry.misc_queries import _q_merge_time_travel
 
     sf_dir = "/root/testdata/sf0.001"
     # intact scenario: the row returns the post-batch-1 state
     assert _q_merge_time_travel(spark, sf_dir).limit(1).count() == 1
-    tag = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/"))
-    table = os.path.join(tempfile.gettempdir(), f"neurondb_mor_v2_{tag}",
-                         "table")
+    table = os.path.join(fixture_dir("merge_mor", sf_dir), "table")
     hist = os.path.join(table, "_manifests")
     # doctor: remove every history copy whose unfolded log is [0]
     import json
