@@ -6,7 +6,8 @@ Spark-first, no MLlib native:
    machinery — block key required at scale; cluster-prune blocks from a
    coarse KMeans routing, or LSH buckets + neighbor probing).
 2. core points = points with ≥ min_samples neighbors (incl. self).
-3. clusters = connected components over the core-core edge graph.
+3. clusters = connected components over the core-core edge graph
+   (self-pairs included, so an isolated core is a cluster of its own).
 4. border points attach to any core neighbor's cluster; the rest = noise
    (cluster −1).
 
@@ -64,19 +65,17 @@ def dbscan(
     # neighbor counts include self-pair (distance 0)
     degrees = pairs.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     core = degrees.where(F.col("deg") >= min_samples).select(F.col("a").alias("id"))
-    # core is consumed 4x (both ends of core_edges, isolated_core, border)
+    # core is consumed 3x (both ends of core_edges, border)
     core = core.localCheckpoint(eager=False)
+    # every point's eps-pairs include its self-pair, so every core point
+    # is an endpoint of the core-core edges and connected_components
+    # (which adds a self-loop per endpoint) labels isolated cores too
     core_edges = (
         pairs.join(core.withColumnRenamed("id", "a"), "a")
         .join(core.withColumnRenamed("id", "b"), "b")
-        .where(F.col("a") != F.col("b"))
         .select(F.col("a").alias("src"), F.col("b").alias("dst"))
     )
-    comp = connected_components(core_edges)  # (node, comp) for connected cores
-    isolated_core = core.join(
-        comp.select(F.col("node").alias("id")), "id", "left_anti"
-    ).select(F.col("id").alias("node"), F.col("id").alias("comp"))
-    core_labels = comp.unionByName(isolated_core)
+    core_labels = connected_components(core_edges)  # (node, comp) per core
     # border: non-core with a core neighbor → min core neighbor's cluster
     border = (
         pairs.join(core.withColumnRenamed("id", "b"), "b")

@@ -111,6 +111,20 @@ def vgraph_edges_df(spark, literal: str, src: str = "src", dst: str = "dst") -> 
     )
 
 
+def _both_ways(
+    edges: DataFrame, src: str, dst: str, self_loops: bool = False,
+) -> DataFrame:
+    """(src, dst) in both directions — plus, with ``self_loops``, a
+    self-loop on each endpoint — in one scan of ``edges`` (one generator
+    over each row, where a ``union`` of two projections scans it twice)."""
+    ends = [(src, dst), (dst, src)]
+    if self_loops:
+        ends += [(src, src), (dst, dst)]
+    return edges.select(F.inline(F.array(*[
+        F.struct(F.col(a).alias(src), F.col(b).alias(dst)) for a, b in ends
+    ])))
+
+
 def bfs(
     edges: DataFrame, start, max_depth: int = 3,
     src: str = "src", dst: str = "dst", directed: bool = False,
@@ -151,9 +165,7 @@ def bfs(
     False for unbounded frontiers or deep traversals of large components
     (dense expander graphs), where the partitioned join's spill-safety
     is the right trade."""
-    e = edges.select(src, dst)
-    if not directed:
-        e = e.union(edges.select(F.col(dst).alias(src), F.col(src).alias(dst)))
+    e = edges.select(src, dst) if directed else _both_ways(edges, src, dst)
     if dedup_edges:
         # duplicate edges only inflate the frontier join; pass
         # dedup_edges=False when the input is already distinct AND no
@@ -192,9 +204,7 @@ def dfs(
     single (small) graph literals, so DFS — inherently sequential — runs on
     a collected adjacency list, bounded by ``max_nodes``. For corpus-scale
     traversal use :func:`bfs` (level-parallel)."""
-    e = edges.select(src, dst)
-    if not directed:
-        e = e.union(edges.select(F.col(dst).alias(src), F.col(src).alias(dst)))
+    e = edges.select(src, dst) if directed else _both_ways(edges, src, dst)
     rows = e.distinct().limit(max_nodes).collect()
     adj: dict = {}
     for r in rows:
@@ -317,86 +327,76 @@ def pagerank(
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 20,
 ) -> DataFrame:
-    """Min-label propagation to fixpoint → (node, component) where
-    component = min node id reachable (vgraph_community analog; exact CC).
-    Converges in O(diameter) iterations; each is one join+groupBy.
+    """Min-label propagation to fixpoint → (node, comp) where comp = min
+    node id reachable (vgraph_community analog; exact CC). Converges in
+    O(diameter) steps.
 
-    Per-round checkpoint truncates the lineage, and convergence is
-    detected by the label-sum invariant: min-label propagation only ever
-    DECREASES labels, so Σcomp is strictly decreasing until the fixpoint —
-    one cheap scalar aggregate per round replaces the old
-    join-both-generations + head(1) change probe.
+    Self-loops: the edge frame gets both directions of every edge plus a
+    self-loop on every endpoint, all from ONE scan of the input. With the
+    closed neighbourhood in the edge frame, one step is one
+    ``labels ⋈ e → groupBy(dst).min(comp)`` that already covers the node's
+    own label, so the step reads its input once and two steps chain
+    lazily without recompute. The initial labels are that same aggregate
+    over the ids themselves, ``e.groupBy(src).min(dst)`` — the first step
+    comes free, with no node-list pass.
 
-    Round structure (optimization round 15, guide §1.2 "fewer sequential
-    actions"): each ROUND applies TWO propagation steps before the
-    convergence check, so a graph of diameter D converges in ⌈D/2⌉+1
-    rounds of 3 jobs (half-step checkpoint, round checkpoint, sum) versus
-    the former D+1 iterations of 2 jobs — fewer sequential round-trips
-    and half the convergence probes. NOTE: ``max_iter`` therefore counts
-    DOUBLE-STEP rounds — the effective propagation-step budget is
-    2·max_iter, so a caller that wants at most N single steps as a work
-    bound should pass max_iter=⌈N/2⌉ (on graphs that converge within the
-    budget, as every in-repo caller does, the fixpoint is identical
-    either way). The result is the same fixpoint (the
-    label-sum is non-increasing under each step, so an unchanged sum
-    across a double step still implies the fixpoint), and plan depth per
-    round stays bounded at one join+agg layer per checkpoint."""
-    e = edges.select(src, dst)
-    # pinned co-partitioned on the per-step join key (r16, guide §2):
-    # a checkpointed edge frame has UnknownPartitioning, so EVERY
-    # propagation step re-Exchanges + re-Sorts the full edge frame for
-    # its SortMergeJoin; the cached InMemoryRelation preserves
-    # hashpartitioning(src) + src ordering, so each step consumes the
-    # edges with no Exchange and no Sort — one edge shuffle at build
-    # instead of one per step. Released in the finally: the returned
-    # labels frame is an EAGER checkpoint, so nothing downstream
-    # re-reads the cache.
+    Rounds: each round applies TWO steps and ends in one eager
+    ``localCheckpoint`` — one Spark action per round (lazy checkpoints
+    were measured worse here, OPTIMIZATION_r15.md). ``max_iter`` counts
+    these double-step rounds, so at most 1 + 2·max_iter steps run; every
+    in-repo caller converges well inside that. Convergence is folded into
+    the second step's aggregate: each node's label before the step comes
+    off its self-loop (``was``), and an ``observe`` on the checkpointed
+    frame counts the nodes whose label changed, read off the checkpoint
+    job's own query execution with no extra action. Labels only ever
+    decrease, so a count of 0 means the first step already reached the
+    fixpoint, and the loop stops there. An empty edge frame counts 0
+    and stops after one round. (A ``pyspark.sql.Observation`` would
+    carry the same count, but registering one gives the session an
+    ObservationManager that is not serializable, and MLlib models that
+    capture the session then fail to ship their UDFs.)
+
+    The edge frame is pinned co-partitioned on the join key:
+    ``repartition(src).distinct().sortWithinPartitions(src).persist()``
+    (hashpartitioning(src) already clusters each (src, dst) pair, so the
+    dedup needs no shuffle of its own). The cached relation keeps
+    hashpartitioning(src) + src ordering, and the step join is hinted
+    ``merge`` so it reads the edges in place, with no Exchange and no
+    Sort. Unhinted, the planner broadcasts the small cached frame
+    instead, rebuilding a hash table of the unchanged edges at every step
+    (one job each under AQE). The returned labels are an eager
+    checkpoint, so the pin is released before returning."""
     e = (
-        e.union(edges.select(F.col(dst).alias(src), F.col(src).alias(dst)))
-        .distinct()
+        _both_ways(edges, src, dst, self_loops=True)
         .repartition(F.col(src))
+        .distinct()
         .sortWithinPartitions(src)
         .persist()
     )
+
     def _step(lab):
-        nb_min = (
-            lab.join(e, lab.node == e[src])
+        return (
+            lab.join(e.hint("merge"), lab.node == e[src])
             .groupBy(F.col(dst).alias("node"))
-            .agg(F.min("comp").alias("nb"))
-        )
-        return lab.join(nb_min, "node", "left").select(
-            "node",
-            F.least(
-                F.col("comp"), F.coalesce(F.col("nb"), F.col("comp"))
-            ).alias("comp"),
+            .agg(
+                F.min("comp").alias("comp"),
+                # the node's label before this step, off its self-loop
+                F.min(F.when(F.col(src) == F.col(dst), F.col("comp"))).alias("was"),
+            )
         )
 
-    prev_sum = None
     try:
-        labels = (
-            e.select(F.col(src).alias("node"))
-            .union(e.select(F.col(dst).alias("node")))
-            .distinct()
-            .withColumn("comp", F.col("node"))
-            .localCheckpoint()
-        )
+        labels = e.groupBy(F.col(src).alias("node")).agg(F.min(dst).alias("comp"))
         for _ in range(max_iter):
-            # the intermediate step is checkpointed as well: _step
-            # references its input twice (join side + nb_min side), and
-            # the eager checkpoint makes the half-round compute once —
-            # lazy checkpoints were measured WORSE here (concurrent
-            # consumer stages race to materialize the same blocks and the
-            # loop's dead plans spam accumulator errors; see
-            # OPTIMIZATION_r15.md)
-            labels = _step(
-                _step(labels).localCheckpoint()
-            ).localCheckpoint()
-            cur_sum = labels.agg(
-                F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-            ).head()[0]
-            if prev_sum is not None and cur_sum == prev_sum:
+            rnd = (
+                _step(_step(labels))
+                .observe("changed", F.count_if(F.col("comp") != F.col("was")))
+                .select("node", "comp")
+            )
+            labels = rnd.localCheckpoint()
+            metrics = rnd._jdf.queryExecution().observedMetrics()
+            if metrics.get("changed").get().getLong(0) == 0:
                 break
-            prev_sum = cur_sum
     finally:
         e.unpersist()
     return labels

@@ -407,6 +407,13 @@ FORCE_RECHECK = frozenset({
     "recommend_content_based", "recommend_hybrid",
     "quality_classifier_scores", "stream_ivf_cdc_knn",
     "merge_rebalance_rows",
+    #
+    # connected_components rewritten again (one input scan with
+    # self-loops, merge-hinted step join, changed-label count observed on
+    # the round's checkpoint job) and DBSCAN's isolated-core path folded
+    # into it: graph_connected_components, dbscan_clusters,
+    # neardup_resolve_survivors, neardup_resolve_quality — all already
+    # listed above.
 })
 
 

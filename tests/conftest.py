@@ -79,3 +79,37 @@ def compare_frames(spark_df, duck_rel, float_tol=0.0):
                     assert x == y, f"col {c} row {i}: {x!r} != {y!r} (diff={x - y!r})"
             else:
                 assert str(x) == str(y), f"col {c} row {i}: {x!r} != {y!r}"
+
+
+def union_find_components(edges):
+    """Reference connected components: {node: min node id of its
+    component} for an undirected edge list, via union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

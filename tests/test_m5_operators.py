@@ -11,7 +11,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from tests.conftest import SF_DIR  # noqa: E402
+from tests.conftest import SF_DIR, jobs_run, union_find_components  # noqa: E402
 
 
 def test_job_queue_worker_drains_pending(spark):
@@ -192,6 +192,7 @@ def test_multimodal_decode_and_features(spark):
         decode_media(df, decode="strict")
 
 
+@pytest.mark.prodconf
 def test_graph_connected_components(spark):
     from neurondb_spark.operators.graph import connected_components
 
@@ -204,6 +205,7 @@ def test_graph_connected_components(spark):
     assert cc[12] == 12
 
 
+@pytest.mark.prodconf
 def test_graph_copartition_cache_released(spark):
     """r16 co-partitioning: pagerank/connected_components pin their edge
     frame with repartition+persist for the iterated join; the pin must
@@ -229,6 +231,91 @@ def test_graph_copartition_cache_released(spark):
     assert cc1[1] == cc1[2] == cc1[3] == cc1[4] == 1 and cc1[10] == 10
 
 
+def _cc(spark, edges, **kw):
+    from neurondb_spark.operators.graph import connected_components
+
+    df = spark.createDataFrame(edges, "src long, dst long")
+    rows = connected_components(df, **kw).collect()
+    out = {r["node"]: r["comp"] for r in rows}
+    assert len(out) == len(rows), "a node labelled twice"
+    return out
+
+
+@pytest.mark.prodconf
+def test_cc_long_path_counts_double_step_rounds(spark):
+    """A 40-node path with shuffled ids, its minimum at one end: the
+    minimum needs 39 steps to reach the far end, so convergence takes
+    more than 10 rounds. ``max_iter`` counts double-step rounds after one
+    free initial step, so max_iter=k leaves each node the minimum over
+    the 1+2k nearest path positions on either side."""
+    import random
+
+    rng = random.Random(7)
+    ids = rng.sample(range(1000), 40)
+    i_min = ids.index(min(ids))
+    ids[0], ids[i_min] = ids[i_min], ids[0]
+    edges = [
+        (a, b) if rng.random() < 0.5 else (b, a) for a, b in zip(ids, ids[1:])
+    ]
+    rng.shuffle(edges)
+    assert _cc(spark, edges) == union_find_components(edges)
+    k = 5
+    reach = 1 + 2 * k
+    want = {
+        x: min(ids[max(0, i - reach):i + reach + 1]) for i, x in enumerate(ids)
+    }
+    got = _cc(spark, edges, max_iter=k)
+    assert got == want and len(set(got.values())) > 1
+
+
+@pytest.mark.prodconf
+def test_cc_duplicate_reversed_and_self_loop_edges(spark):
+    edges = [
+        (5, 3), (3, 5), (5, 3), (3, 7), (7, 7),  # dup, reversed, self-loop
+        (9, 9),                                   # node with only a self-loop
+        (20, 8), (8, 20), (8, 8),
+    ]
+    got = _cc(spark, edges)
+    assert got == union_find_components(edges)
+    assert got == {3: 3, 5: 3, 7: 3, 9: 9, 8: 8, 20: 8}
+
+
+# Spark jobs one connected_components call may run, collect included,
+# counted through a job group; keyed by spark.sql.adaptive.enabled (the
+# default lane runs AQE off, the prodconf lane on, where every shuffle is
+# a job of its own). The operator runs one action per double-step round:
+# another action, or a per-step shuffle or broadcast of the edge frame,
+# goes over budget.
+CC_JOB_BUDGET = {"false": 3, "true": 12}  # two components, 2 rounds
+CC_EMPTY_JOB_BUDGET = {"false": 2, "true": 3}  # 1 round
+
+
+@pytest.mark.prodconf
+def test_cc_empty_edges_stop_after_one_round(spark):
+    from neurondb_spark.operators.graph import connected_components
+
+    empty = spark.createDataFrame([], "src long, dst long")
+
+    def run():
+        out = connected_components(empty)
+        return out.columns, out.collect()
+
+    (cols, rows), jobs = jobs_run(spark, run)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    assert cols == ["node", "comp"] and rows == []
+    assert jobs <= CC_EMPTY_JOB_BUDGET[aqe], jobs
+
+
+@pytest.mark.prodconf
+def test_cc_job_budget(spark):
+    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)]
+    got, jobs = jobs_run(spark, lambda: _cc(spark, edges))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    assert got == union_find_components(edges)
+    assert jobs <= CC_JOB_BUDGET[aqe], jobs
+
+
+@pytest.mark.prodconf
 def test_graph_bfs_depths(spark):
     from neurondb_spark.operators.graph import bfs
 
@@ -266,6 +353,7 @@ def test_quantization_roundtrips(spark):
     assert r[0]["f16"] == [0.5, -1.0, 0.25, 0.0]  # exactly representable
 
 
+@pytest.mark.prodconf
 def test_graph_dfs_preorder(spark):
     from neurondb_spark.operators.graph import dfs
 

@@ -10,12 +10,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from tests.conftest import SF_DIR  # noqa: E402
+from tests.conftest import SF_DIR, jobs_run, union_find_components  # noqa: E402
 
 
-def test_dbscan_finds_planted_clusters(spark):
-    from neurondb_spark.ml.dbscan import dbscan
-
+def _planted_points():
     # two tight planted clusters + isolated noise points
     rows = []
     for i in range(20):
@@ -23,13 +21,80 @@ def test_dbscan_finds_planted_clusters(spark):
     for i in range(20, 40):
         rows.append((i, [10.0 + (i - 20) * 0.01, 10.0]))
     rows += [(100, [50.0, 50.0]), (101, [-50.0, 30.0])]
+    return rows
+
+
+def _dbscan_reference(rows, eps, min_samples):
+    """Brute-force DBSCAN with the operator's labelling: a cluster is
+    named by its min core id, a border point takes the min cluster of its
+    core neighbours, noise is -1."""
+    import math
+
+    nbrs = {
+        i: [j for j, w in rows if math.dist(v, w) <= eps] for i, v in rows
+    }
+    core = {i for i, ns in nbrs.items() if len(ns) >= min_samples}
+    comp = union_find_components(
+        [(i, j) for i in core for j in nbrs[i] if j in core]
+    )
+    return {
+        i: comp[i] if i in core
+        else min((comp[j] for j in ns if j in core), default=-1)
+        for i, ns in nbrs.items()
+    }
+
+
+def _dbscan(spark, rows, eps, min_samples):
+    from neurondb_spark.ml.dbscan import dbscan
+
     df = spark.createDataFrame(rows, "id int, v array<double>")
-    out = dbscan(df, "v", "id", eps=0.5, min_samples=3, allow_cross=True)
-    got = {r["id"]: r["cluster"] for r in out.collect()}
+    out = dbscan(df, "v", "id", eps=eps, min_samples=min_samples,
+                 allow_cross=True)
+    return {r["id"]: r["cluster"] for r in out.collect()}
+
+
+@pytest.mark.prodconf
+def test_dbscan_finds_planted_clusters(spark):
+    rows = _planted_points()
+    got = _dbscan(spark, rows, eps=0.5, min_samples=3)
     c0 = {got[i] for i in range(20)}
     c1 = {got[i] for i in range(20, 40)}
     assert len(c0) == 1 and len(c1) == 1 and c0 != c1
     assert got[100] == -1 and got[101] == -1
+    assert got == _dbscan_reference(rows, eps=0.5, min_samples=3)
+
+
+@pytest.mark.prodconf
+def test_dbscan_isolated_core_labels_itself_and_its_borders(spark):
+    # 0 is core (itself + two neighbours at 0.4); 1 and 2 are 0.8 apart,
+    # so each has degree 2: border points of a core with no core neighbour
+    rows = [(0, [0.0, 0.0]), (1, [-0.4, 0.0]), (2, [0.4, 0.0])]
+    rows += [(10 + k, [5.0 + 0.1 * k, 5.0]) for k in range(5)]
+    rows += [(99, [50.0, 50.0])]
+    got = _dbscan(spark, rows, eps=0.5, min_samples=3)
+    assert got == _dbscan_reference(rows, eps=0.5, min_samples=3)
+    assert got[0] == got[1] == got[2] == 0 and got[99] == -1
+
+
+# Spark jobs an all-noise dbscan call may run (collect included), keyed by
+# spark.sql.adaptive.enabled. With no core point the core-core edge frame
+# is empty, and connected_components must stop after one round instead of
+# running all max_iter rounds (over 130 jobs). Under AQE it measured 9;
+# which stage first materializes dbscan's lazy checkpoints varies from run
+# to run and can add one job.
+DBSCAN_ALL_NOISE_JOB_BUDGET = {"false": 2, "true": 10}
+
+
+@pytest.mark.prodconf
+def test_dbscan_all_noise(spark):
+    rows = _planted_points()
+    got, jobs = jobs_run(
+        spark, lambda: _dbscan(spark, rows, eps=0.5, min_samples=50)
+    )
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    assert got == {i: -1 for i, _v in rows}
+    assert got == _dbscan_reference(rows, eps=0.5, min_samples=50)
+    assert jobs <= DBSCAN_ALL_NOISE_JOB_BUDGET[aqe], jobs
 
 
 def test_auto_train_leaderboard(spark):
