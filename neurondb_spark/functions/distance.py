@@ -1,4 +1,4 @@
-"""Distance & similarity kernels (SURVEY §2.3) as pure Column expressions.
+"""Distance & similarity kernels (SURVEY §2.3), each ONE Spark SQL expression.
 
 Reference semantics: NeuronDB/src/vector/vector_distance.c:124-545 (primary
 impls), src/core/distance.c:73-290 (duplicates), SIMD variants
@@ -7,36 +7,39 @@ vector_distance_simd.c. Operators: <-> l2, <#> negative inner product,
 Dimension mismatch is an error (sql/03_distance_metrics.sql:178-186); cosine
 of a zero vector is an error (sql/03_distance_metrics.sql:63-71).
 
-Two compilation strategies, both double-precision with identical
-left-associative accumulation order so results are bit-identical to the
-DuckDB oracle (neurondb_spark/oracle.py generates the matching SQL):
+An operand is a column name (``a.v`` allowed) or a Python vector, whose
+elements become exact double literals (``repr`` round-trips, nan and inf
+too); project a computed Column into a named column first. Each kernel is
+rendered once in Python as SQL text and wrapped in one ``F.expr``. Built
+from PySpark ``Column`` calls, every call costs py4j round trips and a
+call-site capture: a dim-64 cosine against a literal query took about 7,000
+calls (0.7-2.5 s to build, 4 cores) and copied its 64-literal query array
+into each of about 192 ``element_at`` sites (0.3-1.1 s more to analyze).
 
-- ``dim`` known → **unrolled** chain of element_at terms: participates in
-  whole-stage codegen (a tight JVM loop — the Tungsten analog of the
-  reference's AVX2 kernels, neurondb_simd_impl.c:21-71).
-- ``dim`` unknown → ``F.aggregate(zip_with(...))`` fold (HigherOrderFunction,
-  still JVM-side, one pass, no explode).
+One renderer, ``_sum``, takes a kernel's per-element term, an SQL template,
+and emits one of two forms with the same left-associative double
+accumulation, so results are bit-identical to each other and to the DuckDB
+oracle (neurondb_spark/oracle.py generates the matching SQL):
 
-At 100 TB these are narrow per-row expressions: no shuffle, pushed past the
-scan, columnar parquet reads only the two array columns.
+- ``dim`` known and ≤ ``UNROLL_DIM_MAX`` → the **unrolled** chain
+  ``t1 + t2 + …`` over ``element_at`` terms, a tight whole-stage-codegen
+  loop (the Tungsten analog of the reference's AVX2 kernels,
+  neurondb_simd_impl.c:21-71); a vector contributes each element once;
+- otherwise the **fold** ``aggregate(zip_with(…), 0.0D, (s, t) -> s + t)``
+  (one HigherOrderFunction node, JVM-side, no explode).
+
+A norm over a vector alone (cosine's ‖q‖) is computed in Python in the same
+order. At 100 TB these are narrow per-row expressions: no
+shuffle, pushed past the scan, parquet reads only the array columns.
 """
 
 from __future__ import annotations
 
+import functools
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from neurondb_spark.functions.vector import vec
-
-
-def _dim_check(a: Column, b: Column, expr: Column, checked: bool) -> Column:
-    if not checked:
-        return expr
-    return F.when(
-        F.size(a) != F.size(b),
-        F.raise_error("neurondb: vector dimension mismatch"),
-    ).otherwise(expr)
-
 
 # The unrolled chain is a left-deep expression tree of depth `dim`; JVM
 # analysis/optimization recurse per level and overflow the default driver
@@ -48,223 +51,251 @@ def _dim_check(a: Column, b: Column, expr: Column, checked: bool) -> Column:
 UNROLL_DIM_MAX = 192
 
 
-def _fold_sum(a: Column, b: Column, term, dim: int | None) -> Column:
-    """Sum of term(a_i, b_i) over elements, left-associative."""
-    if dim is not None and dim <= UNROLL_DIM_MAX:
-        s = term(F.element_at(a, 1), F.element_at(b, 1))
-        for i in range(2, dim + 1):
-            s = s + term(F.element_at(a, i), F.element_at(b, i))
-        return s
-    return F.aggregate(F.zip_with(a, b, term), F.lit(0.0), lambda s, x: s + x)
+def double_sql(x: float) -> str:
+    """Exact Spark SQL double literal (``repr`` round-trips)."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
 
 
-def _fold_sum_one(a: Column, term, dim: int | None) -> Column:
-    if dim is not None and dim <= UNROLL_DIM_MAX:
-        s = term(F.element_at(a, 1))
-        for i in range(2, dim + 1):
-            s = s + term(F.element_at(a, i))
-        return s
-    return F.aggregate(F.transform(a, term), F.lit(0.0), lambda s, x: s + x)
+def _is_vec(op) -> bool:
+    if isinstance(op, Column):
+        raise TypeError(
+            "neurondb: a distance operand is a column name or a Python "
+            "vector; project a computed Column into a named column first"
+        )
+    return not isinstance(op, str)
 
 
-def squared_l2_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+def array_sql(op) -> str:
+    """An operand as SQL text of type ARRAY<DOUBLE>."""
+    if _is_vec(op):
+        return f"CAST(array({', '.join(double_sql(x) for x in op)}) AS ARRAY<DOUBLE>)"
+    name = op if "`" in op else ".".join(f"`{p}`" for p in op.split("."))
+    return f"CAST({name} AS ARRAY<DOUBLE>)"
+
+
+def _unrolled(dim: int | None) -> bool:
+    return dim is not None and dim <= UNROLL_DIM_MAX
+
+
+def _fold(seq: str) -> str:
+    return f"aggregate({seq}, 0.0D, (s, t) -> s + t)"
+
+
+def _sum(term: str, ops: list, dim: int | None) -> str:
+    """Σ term over positions, left-associative: the unrolled chain when
+    ``_unrolled(dim)``, else the fold (one or two operands)."""
+    if not _unrolled(dim):
+        arrays = ", ".join(array_sql(op) for op in ops)
+        hof, params = ("transform", "x") if len(ops) == 1 else ("zip_with", "(x, y)")
+        return _fold(f"{hof}({arrays}, {params} -> {term.format(x='x', y='y')})")
+    for op in ops:
+        if _is_vec(op) and len(op) != dim:
+            raise ValueError(f"neurondb: vector dimension mismatch ({len(op)} elements, dim={dim})")
+
+    def elem(op, i: int) -> str:
+        return double_sql(op[i]) if _is_vec(op) else f"element_at({array_sql(op)}, {i + 1})"
+
+    terms = (term.format(**dict(zip("xyw", (elem(op, i) for op in ops)))) for i in range(dim))
+    return "(" + " + ".join(terms) + ")"
+
+
+def _dim_check(a, b, expr: str, checked: bool) -> str:
+    if not checked:
+        return expr
+    na, nb = (str(len(op)) if _is_vec(op) else f"size({array_sql(op)})" for op in (a, b))
+    return (f"CASE WHEN {na} != {nb} THEN "
+            f"raise_error('neurondb: vector dimension mismatch') ELSE {expr} END")
+
+
+def _kernel(render):
+    """The public kernel wraps ``render(...)``'s SQL text in one ``F.expr``;
+    ``kernel.sql`` is the text, for callers that inline it (``vec_route``)."""
+
+    @functools.wraps(render)
+    def kernel(*args, **kw) -> Column:
+        return F.expr(render(*args, **kw))
+
+    kernel.sql = render
+    return kernel
+
+
+# per-element terms as SQL templates over {x}, {y} (and {w})
+_SQ = "(({x} - {y}) * ({x} - {y}))"
+_MUL = "({x} * {y})"
+_ABSDIFF = "abs({x} - {y})"
+_BOTH = "(CASE WHEN ({x} != 0.0D) AND ({y} != 0.0D) THEN 1.0D ELSE 0.0D END)"
+_EITHER = "(CASE WHEN ({x} != 0.0D) OR ({y} != 0.0D) THEN 1.0D ELSE 0.0D END)"
+_DIFFER = "(CASE WHEN ({x} != 0.0D) != ({y} != 0.0D) THEN 1.0D ELSE 0.0D END)"
+_NONZERO = "(CASE WHEN {x} != 0.0D THEN 1.0D ELSE 0.0D END)"
+
+
+@_kernel
+def squared_l2_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """vector_squared_l2_distance (vector_distance.c:417)."""
-    a, b = vec(a), vec(b)
-    return _dim_check(a, b, _fold_sum(a, b, lambda x, y: (x - y) * (x - y), dim), checked)
+    return _dim_check(a, b, _sum(_SQ, [a, b], dim), checked)
 
 
-def l2_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def l2_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """<-> vector_l2_distance (vector_distance.c:124)."""
-    a, b = vec(a), vec(b)
-    return _dim_check(
-        a, b, F.sqrt(_fold_sum(a, b, lambda x, y: (x - y) * (x - y), dim)), checked
-    )
+    return _dim_check(a, b, f"sqrt({_sum(_SQ, [a, b], dim)})", checked)
 
 
-def inner_product(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def inner_product(a, b, dim: int | None = None, checked: bool = True) -> str:
     """vector_inner_product (vector_distance.c:159)."""
-    a, b = vec(a), vec(b)
-    return _dim_check(a, b, _fold_sum(a, b, lambda x, y: x * y, dim), checked)
+    return _dim_check(a, b, _sum(_MUL, [a, b], dim), checked)
 
 
-def negative_inner_product(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def negative_inner_product(a, b, dim: int | None = None, checked: bool = True) -> str:
     """<#> returns the NEGATIVE inner product for index ordering
     (neurondb--1.0.sql:2747-2755)."""
-    return -inner_product(a, b, dim=dim, checked=checked)
+    return f"(- {inner_product.sql(a, b, dim=dim, checked=checked)})"
 
 
-def cosine_similarity(a, b, dim: int | None = None, checked: bool = True) -> Column:
+def _norm(op, dim: int | None) -> str:
+    """‖op‖; over a vector in Python, left to right from 0.0 (x*x is
+    never -0.0, so the unrolled chain agrees)."""
+    if not _is_vec(op):
+        return f"sqrt({_sum('({x} * {x})', [op], dim)})"
+    s = 0.0
+    for x in op:
+        s = s + float(x) * float(x)
+    return double_sql(math.sqrt(s))
+
+
+@_kernel
+def cosine_similarity(a, b, dim: int | None = None, checked: bool = True) -> str:
     """vector_cosine_sim (operators.c:177-235); zero vector → error
     (sql/03_distance_metrics.sql:63-71)."""
-    a, b = vec(a), vec(b)
-    ip = _fold_sum(a, b, lambda x, y: x * y, dim)
-    na = F.sqrt(_fold_sum_one(a, lambda x: x * x, dim))
-    nb = F.sqrt(_fold_sum_one(b, lambda x: x * x, dim))
-    expr = F.when(
-        (na == 0.0) | (nb == 0.0),
-        F.raise_error("neurondb: cosine distance of zero vector is undefined"),
-    ).otherwise(ip / (na * nb))
+    ip, na, nb = _sum(_MUL, [a, b], dim), _norm(a, dim), _norm(b, dim)
+    expr = (
+        f"CASE WHEN ({na} = 0.0D) OR ({nb} = 0.0D) THEN raise_error("
+        f"'neurondb: cosine distance of zero vector is undefined') "
+        f"ELSE {ip} / ({na} * {nb}) END"
+    )
     return _dim_check(a, b, expr, checked)
 
 
-def cosine_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def cosine_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """<=> 1 - cosine similarity (vector_distance.c:215)."""
-    return 1.0 - cosine_similarity(a, b, dim=dim, checked=checked)
+    return f"(1.0D - {cosine_similarity.sql(a, b, dim=dim, checked=checked)})"
 
 
-def l1_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def l1_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """<+> vector_l1_distance / cityblock (vector_distance.c:250)."""
-    a, b = vec(a), vec(b)
-    return _dim_check(a, b, _fold_sum(a, b, lambda x, y: F.abs(x - y), dim), checked)
+    return _dim_check(a, b, _sum(_ABSDIFF, [a, b], dim), checked)
 
 
-def hamming_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def hamming_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """<~> count of unequal elements (vector_distance.c:271)."""
-    a, b = vec(a), vec(b)
-    term = lambda x, y: F.when(x != y, F.lit(1.0)).otherwise(F.lit(0.0))  # noqa: E731
-    return _dim_check(a, b, _fold_sum(a, b, term, dim), checked)
+    term = "(CASE WHEN {x} != {y} THEN 1.0D ELSE 0.0D END)"
+    return _dim_check(a, b, _sum(term, [a, b], dim), checked)
 
 
-def chebyshev_distance(a, b, checked: bool = True) -> Column:
+@_kernel
+def chebyshev_distance(a, b, checked: bool = True) -> str:
     """max |a_i - b_i| (vector_distance.c:302)."""
-    a, b = vec(a), vec(b)
-    expr = F.array_max(F.zip_with(a, b, lambda x, y: F.abs(x - y)))
+    expr = f"array_max(zip_with({array_sql(a)}, {array_sql(b)}, (x, y) -> abs(x - y)))"
     return _dim_check(a, b, expr, checked)
 
 
-def minkowski_distance(a, b, p: float, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def minkowski_distance(a, b, p: float, dim: int | None = None, checked: bool = True) -> str:
     """(sum |a_i-b_i|^p)^(1/p), p>0 (vector_distance.c:335)."""
     if p <= 0:
         raise ValueError("neurondb: minkowski p must be > 0")
-    a, b = vec(a), vec(b)
-    pl = F.lit(float(p))
-    s = _fold_sum(a, b, lambda x, y: F.pow(F.abs(x - y), pl), dim)
-    return _dim_check(a, b, F.pow(s, 1.0 / float(p)), checked)
+    term, root = f"pow(abs({{x}} - {{y}}), {double_sql(p)})", double_sql(1.0 / float(p))
+    return _dim_check(a, b, f"pow({_sum(term, [a, b], dim)}, {root})", checked)
 
 
-def jaccard_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def jaccard_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """Treats elements as set membership (non-zero = present):
     1 - |intersection| / |union| (vector_distance.c:453)."""
-    a, b = vec(a), vec(b)
-    inter = _fold_sum(
-        a, b,
-        lambda x, y: F.when((x != 0.0) & (y != 0.0), F.lit(1.0)).otherwise(F.lit(0.0)),
-        dim,
-    )
-    union = _fold_sum(
-        a, b,
-        lambda x, y: F.when((x != 0.0) | (y != 0.0), F.lit(1.0)).otherwise(F.lit(0.0)),
-        dim,
-    )
-    return _dim_check(a, b, F.when(union == 0.0, F.lit(0.0)).otherwise(1.0 - inter / union), checked)
+    inter, union = _sum(_BOTH, [a, b], dim), _sum(_EITHER, [a, b], dim)
+    expr = f"CASE WHEN {union} = 0.0D THEN 0.0D ELSE 1.0D - {inter} / {union} END"
+    return _dim_check(a, b, expr, checked)
 
 
-def dice_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def dice_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """1 - 2|A∩B| / (|A|+|B|) over non-zero membership (vector_distance.c:497)."""
-    a, b = vec(a), vec(b)
-    inter = _fold_sum(
-        a, b,
-        lambda x, y: F.when((x != 0.0) & (y != 0.0), F.lit(1.0)).otherwise(F.lit(0.0)),
-        dim,
-    )
-    ca = _fold_sum_one(a, lambda x: F.when(x != 0.0, F.lit(1.0)).otherwise(F.lit(0.0)), dim)
-    cb = _fold_sum_one(b, lambda x: F.when(x != 0.0, F.lit(1.0)).otherwise(F.lit(0.0)), dim)
-    return _dim_check(
-        a, b,
-        F.when(ca + cb == 0.0, F.lit(0.0)).otherwise(1.0 - (2.0 * inter) / (ca + cb)),
-        checked,
-    )
+    inter = _sum(_BOTH, [a, b], dim)
+    n = f"({_sum(_NONZERO, [a], dim)} + {_sum(_NONZERO, [b], dim)})"
+    expr = f"CASE WHEN {n} = 0.0D THEN 0.0D ELSE 1.0D - (2.0D * {inter}) / {n} END"
+    return _dim_check(a, b, expr, checked)
 
 
-def _binary_n(a: Column, dim: int | None) -> Column:
-    return F.lit(float(dim)) if dim is not None else F.size(a).cast("double")
+def _binary_n(a, dim: int | None) -> str:
+    return double_sql(dim) if dim is not None else f"CAST(size({array_sql(a)}) AS DOUBLE)"
 
 
-def _binary_diff(a: Column, b: Column, dim: int | None) -> Column:
-    """Count of positions whose non-zero membership disagrees (b+c)."""
-    return _fold_sum(
-        a, b,
-        lambda x, y: F.when((x != 0.0) != (y != 0.0), F.lit(1.0)).otherwise(F.lit(0.0)),
-        dim,
-    )
-
-
-def _binary_inter(a: Column, b: Column, dim: int | None) -> Column:
-    """Count of positions non-zero in both (a11)."""
-    return _fold_sum(
-        a, b,
-        lambda x, y: F.when((x != 0.0) & (y != 0.0), F.lit(1.0)).otherwise(F.lit(0.0)),
-        dim,
-    )
-
-
-def sokal_michener_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def sokal_michener_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """(b+c)/n — 1 − simple-matching similarity over non-zero membership
     (tests-only metric, sql/03_distance_metrics.sql:179)."""
-    a, b = vec(a), vec(b)
-    return _dim_check(a, b, _binary_diff(a, b, dim) / _binary_n(a, dim), checked)
+    return _dim_check(a, b, f"({_sum(_DIFFER, [a, b], dim)} / {_binary_n(a, dim)})", checked)
 
 
-def rogers_tanimoto_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def rogers_tanimoto_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """2(b+c) / ((a+d) + 2(b+c)) over non-zero membership
     (sql/03_distance_metrics.sql:182)."""
-    a, b = vec(a), vec(b)
-    n = _binary_n(a, dim)
-    diff = _binary_diff(a, b, dim)
-    return _dim_check(a, b, (2.0 * diff) / ((n - diff) + 2.0 * diff), checked)
+    diff, n = _sum(_DIFFER, [a, b], dim), _binary_n(a, dim)
+    return _dim_check(a, b, f"((2.0D * {diff}) / (({n} - {diff}) + 2.0D * {diff}))", checked)
 
 
-def russell_rao_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def russell_rao_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """(n − a11)/n over non-zero membership
     (sql/03_distance_metrics.sql:188)."""
-    a, b = vec(a), vec(b)
     n = _binary_n(a, dim)
-    return _dim_check(a, b, (n - _binary_inter(a, b, dim)) / n, checked)
+    return _dim_check(a, b, f"(({n} - {_sum(_BOTH, [a, b], dim)}) / {n})", checked)
 
 
-def matching_coefficient(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def matching_coefficient(a, b, dim: int | None = None, checked: bool = True) -> str:
     """SIMILARITY (a+d)/n — simple matching coefficient
     (sql/03_distance_metrics.sql:192)."""
-    a, b = vec(a), vec(b)
     n = _binary_n(a, dim)
-    return _dim_check(a, b, (n - _binary_diff(a, b, dim)) / n, checked)
+    return _dim_check(a, b, f"(({n} - {_sum(_DIFFER, [a, b], dim)}) / {n})", checked)
 
 
-def mahalanobis_distance(a, b, inv_diag, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def mahalanobis_distance(a, b, inv_diag, dim: int | None = None, checked: bool = True) -> str:
     """Diagonal-covariance Mahalanobis: sqrt(sum w_i (a_i-b_i)^2)
     (vector_distance.c:545)."""
-    a, b, w = vec(a), vec(b), vec(inv_diag)
-    if dim is not None and dim <= UNROLL_DIM_MAX:
-        s = None
-        for i in range(1, dim + 1):
-            d = F.element_at(a, i) - F.element_at(b, i)
-            t = d * d * F.element_at(w, i)
-            s = t if s is None else s + t
+    if _unrolled(dim):
+        s = _sum(f"({_SQ} * {{w}})", [a, b, inv_diag], dim)
     else:
-        diffs = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-        s = F.aggregate(
-            F.zip_with(diffs, w, lambda d, wi: d * wi), F.lit(0.0), lambda s_, x: s_ + x
-        )
-    return _dim_check(a, b, F.sqrt(s), checked)
+        diffs = f"zip_with({array_sql(a)}, {array_sql(b)}, (x, y) -> {_SQ.format(x='x', y='y')})"
+        s = _fold(f"zip_with({diffs}, {array_sql(inv_diag)}, (d, w) -> (d * w))")
+    return _dim_check(a, b, f"sqrt({s})", checked)
 
 
-def bray_curtis_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def bray_curtis_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """sum|a-b| / sum|a+b| — tested-but-absent metric
     (sql/03_distance_metrics.sql:128-175); optional surface."""
-    a, b = vec(a), vec(b)
-    num = _fold_sum(a, b, lambda x, y: F.abs(x - y), dim)
-    den = _fold_sum(a, b, lambda x, y: F.abs(x + y), dim)
-    return _dim_check(a, b, num / den, checked)
+    den = _sum("abs({x} + {y})", [a, b], dim)
+    return _dim_check(a, b, f"({_sum(_ABSDIFF, [a, b], dim)} / {den})", checked)
 
 
-def canberra_distance(a, b, dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def canberra_distance(a, b, dim: int | None = None, checked: bool = True) -> str:
     """sum |a-b| / (|a|+|b|), 0-denominator terms skipped
     (sql/03_distance_metrics.sql:128-175)."""
-    a, b = vec(a), vec(b)
-    term = lambda x, y: F.when(  # noqa: E731
-        F.abs(x) + F.abs(y) == 0.0, F.lit(0.0)
-    ).otherwise(F.abs(x - y) / (F.abs(x) + F.abs(y)))
-    return _dim_check(a, b, _fold_sum(a, b, term, dim), checked)
+    term = (
+        "(CASE WHEN abs({x}) + abs({y}) = 0.0D THEN 0.0D "
+        "ELSE abs({x} - {y}) / (abs({x}) + abs({y})) END)"
+    )
+    return _dim_check(a, b, _sum(term, [a, b], dim), checked)
 
 
 _METRICS = {
@@ -288,27 +319,29 @@ _METRICS = {
 }
 
 
-def distance(a, b, metric: str = "l2", dim: int | None = None, checked: bool = True, **kw) -> Column:
+@_kernel
+def distance(a, b, metric: str = "l2", dim: int | None = None, checked: bool = True, **kw) -> str:
     """String-dispatch wrapper — neurondb.distance(a,b,metric)
     (neurondb--1.0.sql:5843-5893)."""
     m = metric.lower()
     if m == "chebyshev":
-        return chebyshev_distance(a, b, checked=checked)
+        return chebyshev_distance.sql(a, b, checked=checked)
     if m == "minkowski":
-        return minkowski_distance(a, b, kw.get("p", 2.0), dim=dim, checked=checked)
+        return minkowski_distance.sql(a, b, kw.get("p", 2.0), dim=dim, checked=checked)
     if m not in _METRICS:
         raise ValueError(f"neurondb: unknown metric {metric!r}")
-    return _METRICS[m](a, b, dim=dim, checked=checked)
+    return _METRICS[m].sql(a, b, dim=dim, checked=checked)
 
 
-def similarity(a, b, metric: str = "cosine", dim: int | None = None, checked: bool = True) -> Column:
+@_kernel
+def similarity(a, b, metric: str = "cosine", dim: int | None = None, checked: bool = True) -> str:
     """neurondb.similarity (neurondb--1.0.sql:5843-5893): higher = closer."""
     m = metric.lower()
     if m == "cosine":
-        return cosine_similarity(a, b, dim=dim, checked=checked)
+        return cosine_similarity.sql(a, b, dim=dim, checked=checked)
     if m in ("ip", "inner_product", "dot"):
-        return inner_product(a, b, dim=dim, checked=checked)
+        return inner_product.sql(a, b, dim=dim, checked=checked)
     if m in ("matching", "matching_coefficient"):
-        return matching_coefficient(a, b, dim=dim, checked=checked)
+        return matching_coefficient.sql(a, b, dim=dim, checked=checked)
     # similarity = 1 / (1 + distance) for metric distances (reference wrapper)
-    return 1.0 / (1.0 + distance(a, b, m, dim=dim, checked=checked))
+    return f"(1.0D / (1.0D + {distance.sql(a, b, m, dim=dim, checked=checked)}))"

@@ -103,13 +103,24 @@ def preprocess(v, method: str = "standardize") -> Column:
 
 def text_similarity_semantic(a, b, dim: int = 32) -> Column:
     """text_similarity_semantic (ml_nlp_production.c): cosine of the
-    deterministic hash embeddings of the two texts."""
-    from neurondb_spark.functions.distance import cosine_similarity
+    deterministic hash embeddings of the two texts. The embeddings are
+    computed Columns, which the SQL-rendered distance kernels do not take
+    as operands, so the cosine is folded here in the kernels' fold order
+    (left-assoc from 0.0; zero vector → error)."""
     from neurondb_spark.functions.embed import hash_embed_expr
 
-    return cosine_similarity(
-        hash_embed_expr(a, dim), hash_embed_expr(b, dim), checked=False
-    )
+    ea, eb = hash_embed_expr(a, dim), hash_embed_expr(b, dim)
+
+    def fold(arr: Column) -> Column:
+        return F.aggregate(arr, F.lit(0.0), lambda s, t: s + t)
+
+    ip = fold(F.zip_with(ea, eb, lambda x, y: x * y))
+    na = F.sqrt(fold(F.transform(ea, lambda x: x * x)))
+    nb = F.sqrt(fold(F.transform(eb, lambda x: x * x)))
+    return F.when(
+        (na == 0.0) | (nb == 0.0),
+        F.raise_error("neurondb: cosine distance of zero vector is undefined"),
+    ).otherwise(ip / (na * nb))
 
 
 def zero_shot_classify(text, labels: list[str]) -> Column:

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from neurondb_spark.data_management import atomic_write_json
 from neurondb_spark.functions.distance import distance
-from neurondb_spark.operators.knn import _query_lit
 
 
 class IVFIndex:
@@ -256,7 +255,7 @@ class IVFIndex:
                 )
             pruned = pruned.join(tomb, tomb_col, "left_anti")
         d = distance(
-            self.meta["vec_col"], _query_lit(query), self.meta["metric"],
+            self.meta["vec_col"], query, self.meta["metric"],
             dim=self.meta.get("dim"), checked=False,
         )
         out = pruned.withColumn(dist_col, d)
@@ -321,7 +320,7 @@ class IVFIndex:
                 )
             cands = cands.join(tomb, tomb_col, "left_anti")
         d = distance(
-            self.meta["vec_col"], F.col("_qvec"), self.meta["metric"],
+            self.meta["vec_col"], "_qvec", self.meta["metric"],
             dim=self.meta.get("dim"), checked=False,
         )
         w = Window.partitionBy("qid").orderBy(

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from neurondb_spark.functions.distance import distance
 from neurondb_spark.index.ivf import IVFIndex
 from neurondb_spark.index.pq import PQCodebook, pq_search
-from neurondb_spark.operators.knn import _query_lit, vec_route
+from neurondb_spark.operators.knn import vec_route
 
 
 class IVFPQIndex:
@@ -126,7 +126,7 @@ class IVFPQIndex:
             pruned, self.codebook, "pq_codes", [float(x) for x in query],
             k=int(refine) * int(topk), id_col=m["id_col"],
         )
-        d = distance(m["vec_col"], _query_lit(query), m["metric"],
+        d = distance(m["vec_col"], query, m["metric"],
                      dim=m.get("dim"), checked=False)
         return (
             cands.withColumn(dist_col, d)

@@ -22,8 +22,7 @@ import time
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neurondb_spark.functions.distance import distance
-from neurondb_spark.operators.knn import _query_lit
+from neurondb_spark.functions.distance import distance, double_sql, inner_product
 
 
 def _bucket_manifest(data_path: str) -> dict:
@@ -54,44 +53,20 @@ def _hyperplanes(dim: int, nbits: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(nbits)]
 
 
-def signature_expr(
-    vec_col: str, planes: list[list[float]], unroll: bool = False
-) -> Column:
-    """Bucket signature: bit b = sign(<v, plane_b>).
-
-    Two compilation strategies with bit-identical results (same left-assoc
-    double accumulation; a fold seeded with 0.0 equals an unrolled chain):
-
-    - ``unroll=False`` (default): one fold over a plane-matrix array
-      literal — tiny analysis/codegen cost, right for interactive queries
-      and small scans.
-    - ``unroll=True``: fully unrolled element_at chains — large generated
-      code (seconds of janino compile) but maximal whole-stage-codegen
-      throughput, right for huge scans where compile time amortizes.
-    """
-    v = F.col(vec_col).cast("array<double>")
-    if unroll:
-        sig = None
-        for b, plane in enumerate(planes):
-            dot = None
-            for i, w in enumerate(plane):
-                term = F.element_at(v, i + 1) * F.lit(w)
-                dot = term if dot is None else dot + term
-            bit = F.when(dot >= 0, F.lit(2 ** b)).otherwise(F.lit(0))
-            sig = bit if sig is None else sig + bit
-        return sig.cast("long")
-    mat = F.array(*[F.array(*[F.lit(float(w)) for w in p]) for p in planes])
-    powers = F.array(*[F.lit(2 ** b) for b in range(len(planes))])
-    dots = F.transform(
-        mat,
-        lambda p: F.aggregate(
-            F.zip_with(v, p, lambda x, w: x * w), F.lit(0.0), lambda a, x: a + x
-        ),
+def signature_expr(vec_col: str, planes: list[list[float]]) -> Column:
+    """Bucket signature: bit b = sign(<v, plane_b>), rendered as one SQL
+    expression: a fold over a plane-matrix array literal, so each weight
+    appears once and analysis and codegen stay small. Each dot is the
+    inner-product kernel's fold (left-assoc from 0.0), the order
+    ``LSHIndex._query_buckets`` uses in Python, so the two agree."""
+    mat = ", ".join(f"array({', '.join(double_sql(w) for w in p)})" for p in planes)
+    powers = ", ".join(str(2 ** b) for b in range(len(planes)))
+    dot = inner_product.sql(vec_col, "plane", checked=False)
+    bits = (
+        f"zip_with(transform(array({mat}), plane -> {dot}), array({powers}), "
+        "(d, pw) -> CASE WHEN d >= 0 THEN pw ELSE 0 END)"
     )
-    bits = F.zip_with(
-        dots, powers, lambda d, pw: F.when(d >= 0, pw).otherwise(F.lit(0))
-    )
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda a, x: a + x)
+    return F.expr(f"aggregate({bits}, CAST(0 AS BIGINT), (a, x) -> a + x)")
 
 
 class LSHIndex:
@@ -241,7 +216,7 @@ class LSHIndex:
         pruned = df.where(F.col("bucket").isin(buckets))
         pruned = self._apply_tombstones(spark, pruned)
         d = distance(
-            self.meta["vec_col"], _query_lit(query), self.meta["metric"],
+            self.meta["vec_col"], query, self.meta["metric"],
             dim=self.meta["dim"], checked=False,
         )
         out = pruned.withColumn(dist_col, d)
@@ -295,7 +270,7 @@ class LSHIndex:
             F.broadcast(qdf), "qid"
         )
         d = distance(
-            self.meta["vec_col"], F.col("_qvec"), self.meta["metric"],
+            self.meta["vec_col"], "_qvec", self.meta["metric"],
             dim=self.meta["dim"], checked=False,
         )
         w = Window.partitionBy("qid").orderBy(

@@ -43,7 +43,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from neurondb_spark.functions.distance import distance
-from neurondb_spark.operators.knn import _query_lit
 
 USECS_PER_DAY = 86400.0 * 1e6
 
@@ -123,7 +122,7 @@ class TenantIndex:
         m = self.meta
         df = spark.read.parquet(os.path.join(self.path, "data"))
         pruned = df.where(F.col(m["tenant_col"]) == F.lit(tenant))
-        d = distance(m["vec_col"], _query_lit(query), m["metric"],
+        d = distance(m["vec_col"], query, m["metric"],
                      dim=m.get("dim"), checked=False)
         out = pruned.withColumn(dist_col, d)
         order = [F.col(dist_col).asc()] + [F.col(c).asc() for c in (tiebreak or [])]
@@ -248,7 +247,7 @@ class TemporalIndex:
             if hi is not None:
                 df = df.where(F.col("_bucket") <= F.lit(bounds["hi"]))
                 df = df.where(ts <= F.lit(hi))
-        d = distance(m["vec_col"], _query_lit(query), m["metric"],
+        d = distance(m["vec_col"], query, m["metric"],
                      dim=m.get("dim"), checked=False)
         now_c = F.lit(now) if now is not None else F.current_timestamp()
         score = temporal_score(
@@ -345,7 +344,7 @@ class ConsistentIndex:
         )
         m = self.meta
         df = spark.read.parquet(os.path.join(self.path, f"v{version:06d}"))
-        d = distance(m["vec_col"], _query_lit(query), m["metric"],
+        d = distance(m["vec_col"], query, m["metric"],
                      dim=m.get("dim"), checked=False)
         return (
             df.withColumn(dist_col, d)
@@ -423,7 +422,7 @@ class HybridIndex:
             .groupBy(iid)
             .agg(F.sum("tf").cast("double").alias("_tscore"))
         )
-        d = distance(m["vec_col"], _query_lit(query_vec), m["metric"],
+        d = distance(m["vec_col"], query_vec, m["metric"],
                      dim=m.get("dim"), checked=False)
         a = float(alpha)
         scored = (

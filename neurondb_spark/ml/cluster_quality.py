@@ -37,7 +37,7 @@ def davies_bouldin(df: DataFrame, vec_col: str, label_col: str, dim: int) -> Dat
     S_i = mean distance to centroid, M_ij = centroid distance."""
     cents = cluster_centroids(df, vec_col, label_col).cache()
     joined = df.join(cents, label_col)
-    d = l2_distance(F.col(vec_col), F.col("centroid"), checked=False)
+    d = l2_distance(vec_col, "centroid", checked=False)
     scatter = joined.select(F.col(label_col), d.alias("_d")).groupBy(label_col).agg(
         (bsum(F.col("_d")) / F.count(F.lit(1))).alias("s")
     )
@@ -49,7 +49,7 @@ def davies_bouldin(df: DataFrame, vec_col: str, label_col: str, dim: int) -> Dat
         F.col(label_col).alias("lb"), F.col("centroid").alias("cb"), F.col("s").alias("sb")
     )
     pairs = a.join(b, F.col("la") != F.col("lb"))
-    m = l2_distance(F.col("ca"), F.col("cb"), checked=False)
+    m = l2_distance("ca", "cb", checked=False)
     r = pairs.select("la", ((F.col("sa") + F.col("sb")) / m).alias("r"))
     worst = r.groupBy("la").agg(F.max("r").alias("worst"))
     return worst.agg((bsum(F.col("worst")) / F.count(F.lit(1))).alias("davies_bouldin"))
@@ -62,9 +62,8 @@ def similarity_histogram(
     """Histogram of cosine similarities to a query over [lo, hi):
     (bin, count) with bin = floor((sim−lo)/width) clamped to [0, bins−1]."""
     from neurondb_spark.functions.distance import cosine_similarity
-    from neurondb_spark.operators.knn import _query_lit
 
-    sim = cosine_similarity(vec_col, _query_lit(query), dim=dim, checked=False)
+    sim = cosine_similarity(vec_col, query, dim=dim, checked=False)
     width = (hi - lo) / bins
     bin_ = F.least(
         F.greatest(F.floor((sim - lo) / width), F.lit(0)), F.lit(bins - 1)

@@ -86,7 +86,6 @@ def recommend_hybrid(
     ml_recommender.c). ``item_vectors`` carries (item_id_col, vec_col)."""
     from neurondb_spark.functions.aggregates import repack, vector_agg_exploded
     from neurondb_spark.functions.distance import cosine_similarity
-    from neurondb_spark.operators.knn import _query_lit
 
     sims = user_similarity(ui, target_user, k=None)
     cf = (
@@ -113,7 +112,7 @@ def recommend_hybrid(
     profile = [float(x) for x in prof_row["p"]]
     content = item_vectors.select(
         F.col(item_id_col).alias("item"),
-        cosine_similarity(vec_col, _query_lit(profile), dim=dim,
+        cosine_similarity(vec_col, profile, dim=dim,
                           checked=False).alias("content_score"),
     )
     scored = (

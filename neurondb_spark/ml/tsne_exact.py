@@ -60,9 +60,7 @@ def tsne_fixed_grad(
         F.col(id_col).alias("id"), vec(vec_col).alias("v")
     )
     a, b = sub.alias("a"), sub.alias("b")
-    d2 = squared_l2_distance(
-        F.col("a.v"), F.col("b.v"), dim=dim, checked=False
-    )
+    d2 = squared_l2_distance("a.v", "b.v", dim=dim, checked=False)
     pairs = (
         a.crossJoin(b)
         .where(F.col("a.id") != F.col("b.id"))

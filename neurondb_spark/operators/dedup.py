@@ -522,9 +522,7 @@ def embedding_neardup_pairs(
     # pushes the generated method past janino's 64KB limit — whole-stage
     # codegen then fails and the stage runs interpreted (~2-5x slower).
     # The fold is bit-identical (same left-assoc accumulation).
-    sim = cosine_similarity(
-        F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"), dim=None, checked=False
-    )
+    sim = cosine_similarity(f"a.{vec_col}", f"b.{vec_col}", dim=None, checked=False)
     return (
         a.join(
             b,

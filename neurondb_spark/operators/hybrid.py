@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from neurondb_spark.functions.distance import distance
 from neurondb_spark.functions.text import bm25_score
-from neurondb_spark.operators.knn import _query_lit
 
 
 def hybrid_search(
@@ -45,7 +44,7 @@ def hybrid_search(
     """
     for col, val in (filters or {}).items():
         df = df.where(F.col(col) == F.lit(val))
-    vscore = 1.0 - distance(vec_col, _query_lit(query_vec), metric, dim=dim, checked=False)
+    vscore = 1.0 - distance(vec_col, query_vec, metric, dim=dim, checked=False)
     tscore = bm25_score(query_text, text_col)
     w = float(vector_weight)
     out = df.withColumn(score_col, F.lit(w) * vscore + F.lit(1.0 - w) * tscore)
@@ -137,7 +136,7 @@ def hybrid_dense_sparse_search(
     independently, fuse 1/(k0+rank)."""
     dense = rank_list(
         df, id_col, None,
-        score=distance(dense_col, _query_lit(query_vec), "l2", dim=dim, checked=False),
+        score=distance(dense_col, query_vec, "l2", dim=dim, checked=False),
         ascending=True,
     )
     sparse = rank_list(

@@ -12,18 +12,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from neurondb_spark.functions.distance import distance
-
-
-def _query_lit(query) -> Column:
-    """Materialize a Python sequence (or Column) as an array<double> literal."""
-    if isinstance(query, Column):
-        return query.cast("array<double>")
-    return F.array(*[F.lit(float(x)) for x in query]).cast("array<double>")
 
 
 def knn(
@@ -43,7 +36,7 @@ def knn(
     correctness definition both test against. ``tiebreak`` columns make the
     result deterministic under distance ties.
     """
-    d = distance(vec_col, _query_lit(query), metric, dim=dim, checked=False)
+    d = distance(vec_col, query, metric, dim=dim, checked=False)
     out = df.withColumn(dist_col, d)
     order = [F.col(dist_col).asc(), *[F.col(c).asc() for c in tiebreak]]
     return out.orderBy(*order).limit(k)
@@ -107,7 +100,7 @@ def multi_vector_search(
     with min/max/avg, then top-k. Computed as N narrow per-row expressions —
     no join, no shuffle."""
     dists = [
-        distance(vec_col, _query_lit(q), metric, dim=dim, checked=False)
+        distance(vec_col, q, metric, dim=dim, checked=False)
         for q in queries
     ]
     if agg == "min":
@@ -139,7 +132,7 @@ def faceted_vector_search(
 ) -> DataFrame:
     """Top-k per facet (hybrid_search.c:878): window rank inside facet
     partitions — one shuffle on the facet key, skew-safe under AQE."""
-    d = distance(vec_col, _query_lit(query), metric, dim=dim, checked=False)
+    d = distance(vec_col, query, metric, dim=dim, checked=False)
     w = W.partitionBy(facet_col).orderBy(
         F.col(dist_col).asc(), *[F.col(c).asc() for c in tiebreak]
     )
@@ -168,7 +161,7 @@ def temporal_vector_search(
     ``now`` is an explicit timestamp literal (string) so results are
     deterministic/oracle-checkable — the reference uses now().
     """
-    d = distance(vec_col, _query_lit(query), metric, dim=dim, checked=False)
+    d = distance(vec_col, query, metric, dim=dim, checked=False)
     age_days = (
         F.lit(now).cast("timestamp").cast("double") - F.col(ts_col).cast("double")
     ) / F.lit(86400.0)
@@ -190,7 +183,7 @@ def vec_window_rank(
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Rank by distance within partitions (operators.c:1112-1154)."""
-    d = distance(vec_col, _query_lit(query), metric, dim=dim, checked=False)
+    d = distance(vec_col, query, metric, dim=dim, checked=False)
     w = W.partitionBy(partition_col).orderBy(
         F.col(dist_col).asc(), *[F.col(c).asc() for c in tiebreak]
     )
@@ -210,17 +203,13 @@ def vec_route(
     join, no shuffle). Implemented as array_min over (distance, idx)
     structs — struct ordering gives the argmin with a deterministic
     lowest-index tie-break, and each distance subtree appears exactly once
-    (a nested when-chain would duplicate subtrees exponentially)."""
-    pairs = F.array(
-        *[
-            F.struct(
-                distance(vec_col, _query_lit(c), metric, dim=dim, checked=False).alias("d"),
-                F.lit(i).alias("i"),
-            )
-            for i, c in enumerate(centroids)
-        ]
+    (a nested when-chain would duplicate subtrees exponentially); one SQL
+    expression."""
+    pairs = ", ".join(
+        f"named_struct('d', {distance.sql(vec_col, c, metric, dim=dim, checked=False)}, 'i', {i})"
+        for i, c in enumerate(centroids)
     )
-    return df.withColumn(out_col, F.array_min(pairs)["i"])
+    return df.withColumn(out_col, F.expr(f"array_min(array({pairs})).i"))
 
 
 def knn_batch(
@@ -256,7 +245,7 @@ def knn_batch(
     qdf = spark.createDataFrame(
         [(qid, [float(x) for x in v]) for qid, v in qrows], schema=qschema
     )
-    d = distance(vec_col, F.col("_qvec"), metric, dim=dim, checked=False)
+    d = distance(vec_col, "_qvec", metric, dim=dim, checked=False)
     w = Window.partitionBy("qid").orderBy(
         F.col(dist_col).asc(), *[F.col(c).asc() for c in (tiebreak or [])]
     )

@@ -26,8 +26,9 @@ Match conditions (all must hold, else the DataFrame is returned unchanged):
    reference's index path).
 2. The sort key is bit-identical to this package's distance expression for
    the index's (vec_col, metric) over a LITERAL query vector — verified by
-   re-compiling the candidate distance with the extracted vector and
-   comparing canonical expression SQL, not by heuristic string sniffing.
+   re-rendering the candidate distance with the extracted vector and
+   comparing canonical expression SQL; the extraction itself is only a
+   candidate.
 3. The scan's file set equals the file set the index was built over
    (recorded at ``create_index``). Files added/removed since the build
    mean the index is a stale snapshot → no match, exact path keeps
@@ -57,11 +58,16 @@ from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from neurondb_spark.functions.distance import distance
 
-# array literal of double constants as Expression.sql() prints it:
-# array(0.5D, 1.5D, ...) — no nested parens possible inside a literal array
+# a double constant as Expression.sql() prints it (0.5D, -1.0E-300D)
+_DOUBLE = r"-?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?D"
+# fold compile: the query is one array literal — array(0.5D, 1.5D, ...),
+# no nested parens possible inside a literal array
 _ARRAY_LIT_RE = re.compile(r"array\(([^()]*)\)")
-_DOUBLE_TOK_RE = re.compile(
-    r"^-?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?D$"
+_DOUBLE_TOK_RE = re.compile(f"^{_DOUBLE}$")
+# unrolled compile: one `element_at(v, i) - q_i` (l2) or `* q_i` (ip,
+# cosine) term per position i, the query element a scalar literal
+_ELEM_TERM_RE = re.compile(
+    rf"element_at\((?:[^()]|\([^()]*\))*, (\d+)\) [-*] ({_DOUBLE})"
 )
 
 
@@ -88,18 +94,26 @@ def _jiter(jseq):
 
 
 def _extract_query_vector(expr_sql: str) -> list[float] | None:
-    """All literal double-array occurrences in the sort expression must be
-    one and the same vector (the unrolled compile repeats it per element;
-    the fold compile mentions it once)."""
+    """The literal query vector of the sort expression, in either compile
+    form: every array literal (fold) must be one and the same vector, or
+    else every position's element literal (unrolled) must agree across
+    its terms and the positions must run 1..n. A candidate only: the
+    caller re-renders the distance with it and compares SQL exactly."""
     seen: list[tuple[float, ...]] = []
     for m in _ARRAY_LIT_RE.finditer(expr_sql):
         toks = [t.strip() for t in m.group(1).split(",")]
         if not toks or not all(_DOUBLE_TOK_RE.match(t) for t in toks):
             return None  # an array of non-literals → not a literal query
         seen.append(tuple(float(t[:-1]) for t in toks))
-    if not seen or any(v != seen[0] for v in seen[1:]):
+    if seen:
+        return list(seen[0]) if all(v == seen[0] for v in seen) else None
+    by_pos: dict[int, str] = {}
+    for m in _ELEM_TERM_RE.finditer(expr_sql):
+        if by_pos.setdefault(int(m.group(1)), m.group(2)) != m.group(2):
+            return None
+    if not by_pos or sorted(by_pos) != list(range(1, len(by_pos) + 1)):
         return None
-    return list(seen[0])
+    return [float(by_pos[i][:-1]) for i in range(1, len(by_pos) + 1)]
 
 
 def _expected_dist_sqls(
@@ -113,12 +127,11 @@ def _expected_dist_sqls(
     dummy = spark.createDataFrame(
         [], StructType([StructField(vec_col, ArrayType(DoubleType()))])
     )
-    qlit = F.array(*[F.lit(float(x)) for x in qvec]).cast("array<double>")
     out: set[str] = set()
     for d in {dim, len(qvec), None}:
         for checked in (False, True):
             try:
-                col = distance(vec_col, qlit, metric, dim=d, checked=checked)
+                col = distance(vec_col, qvec, metric, dim=d, checked=checked)
                 proj = dummy.select(col.alias("_d"))
                 jplan = proj._jdf.queryExecution().analyzed()
                 out.add(jplan.projectList().apply(0).child().sql())

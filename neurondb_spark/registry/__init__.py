@@ -414,6 +414,18 @@ FORCE_RECHECK = frozenset({
     # into it: graph_connected_components, dbscan_clusters,
     # neardup_resolve_survivors, neardup_resolve_quality — all already
     # listed above.
+    #
+    # Distance kernels, centroid routes and LSH signatures rendered as one
+    # SQL expression each; rows whose own distance call site changed (a
+    # Python vector or a projected column name in place of a Column
+    # operand). lsh_recall_report, recommend_content_based and
+    # recommend_hybrid are already listed above.
+    "knn_canberra", "knn_braycurtis", "knn_minkowski3", "knn_jaccard_sign",
+    "knn_dice_sign", "binary_metrics4", "quantize_compare_distances",
+    "graph_knn", "rerank_ensemble_weighted", "rerank_ensemble_borda",
+    "knn_mahalanobis", "hnsw_knn_full_ef", "hnsw_insert_delete_knn",
+    "davies_bouldin", "similarity_histogram", "rrf_fusion",
+    "vec_route_counts", "text_similarity_semantic",
 })
 
 

@@ -45,7 +45,7 @@ def _q_graph_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").alias("vec_id")
     )
     cand = emb.join(reach, "vec_id")
-    d = l2_distance("embedding", F.array(*[F.lit(float(x)) for x in q]),
+    d = l2_distance("embedding", q,
                     dim=COMPILE_DIM, checked=False)
     return (
         cand.withColumn("distance", d)
@@ -90,7 +90,7 @@ def _ranked_lists(spark: SparkSession, sf_dir: str):
     emb = t(spark, sf_dir, "embeddings")
     j = docs.join(emb, docs.doc_id == emb.vec_id)
     q = qvec(spark, sf_dir)
-    d = l2_distance("embedding", F.array(*[F.lit(float(x)) for x in q]),
+    d = l2_distance("embedding", q,
                     dim=COMPILE_DIM, checked=False)
     vec_scores = j.select("doc_id", (1.0 / (1.0 + d)).alias("vscore"))
     text_scores = j.select(
@@ -179,9 +179,7 @@ FROM embeddings WHERE vec_id <= 100"""
 def _q_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     q = qvec(spark, sf_dir)
-    qlit = F.array(*[F.lit(float(x)) for x in q])
-    wlit = F.array(*[F.lit(w) for w in MAHAL_W])
-    d = mahalanobis_distance("embedding", qlit, wlit, dim=EMB_DIM, checked=False)
+    d = mahalanobis_distance("embedding", q, MAHAL_W, dim=EMB_DIM, checked=False)
     return (
         emb.select("vec_id", d.alias("distance"))
         .orderBy(F.col("distance").asc(), F.col("vec_id").asc())

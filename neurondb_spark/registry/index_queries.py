@@ -723,7 +723,6 @@ def _q_hnsw_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing (same contract as ivf_knn_full_probe). Realistic-ef recall is
     asserted in tests/test_hnsw.py."""
     from neurondb_spark.functions.distance import l2_distance
-    from neurondb_spark.operators.knn import _query_lit
 
     idx = _hnsw_index_for(spark, sf_dir)
     q = qvec(spark, sf_dir)
@@ -737,7 +736,7 @@ def _q_hnsw_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         emb.join(hits, "vec_id")
         .select("vec_id",
-                l2_distance("embedding", _query_lit(q), dim=COMPILE_DIM,
+                l2_distance("embedding", q, dim=COMPILE_DIM,
                             checked=False).alias("distance"))
         .orderBy(F.col("distance").asc(), F.col("vec_id").asc())
     )
@@ -832,7 +831,6 @@ def _q_hnsw_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold (candidate SET is what the graph determines — the
     hnsw_knn_full_ef parity pattern)."""
     from neurondb_spark.functions.distance import l2_distance
-    from neurondb_spark.operators.knn import _query_lit
 
     idx = _hnsw_dml_index_for(spark, sf_dir)
     q = qvec(spark, sf_dir)
@@ -842,7 +840,7 @@ def _q_hnsw_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         emb.join(hits, "vec_id")
         .select("vec_id",
-                l2_distance("embedding", _query_lit(q), dim=COMPILE_DIM,
+                l2_distance("embedding", q, dim=COMPILE_DIM,
                             checked=False).alias("distance"))
         .orderBy(F.col("distance").asc(), F.col("vec_id").asc())
     )
@@ -1172,7 +1170,7 @@ def _q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     pdf_probe = spark.createDataFrame(probes, schema=pschema)
     qdf = spark.createDataFrame(qrows, schema=qschema)
-    d = distance("embedding", F.col("_qvec"), "cosine", dim=EMB_DIM,
+    d = distance("embedding", "_qvec", "cosine", dim=EMB_DIM,
                  checked=False)
     # (r16, reverting the r15 single-window rewrite) per-radius
     # filter + row_number()<=K legs: the rank filter qualifies for

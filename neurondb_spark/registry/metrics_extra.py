@@ -11,9 +11,11 @@ from pyspark.sql import functions as F
 
 from neurondb_spark import oracle as O
 from neurondb_spark.functions.distance import (
+    array_sql,
     bray_curtis_distance,
     canberra_distance,
     dice_distance,
+    double_sql,
     jaccard_distance,
     matching_coefficient,
     rogers_tanimoto_distance,
@@ -21,12 +23,7 @@ from neurondb_spark.functions.distance import (
     sokal_michener_distance,
 )
 from neurondb_spark.functions.quantization import binary_signature_bits
-from neurondb_spark.functions.vector import vec
 from neurondb_spark.registry.common import EMB_DIM, QVEC_CTE, qvec, t
-
-
-def _qlit(q: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in q])
 
 
 def _topk(emb: DataFrame, d: Column, k: int = 12) -> DataFrame:
@@ -40,7 +37,7 @@ def _topk(emb: DataFrame, d: Column, k: int = 12) -> DataFrame:
 def _q_canberra(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     q = qvec(spark, sf_dir)
-    return _topk(emb, canberra_distance("embedding", _qlit(q), checked=False))
+    return _topk(emb, canberra_distance("embedding", q, checked=False))
 
 
 def _sql_canberra() -> str:
@@ -53,7 +50,7 @@ ORDER BY distance ASC, e.vec_id ASC LIMIT 12"""
 def _q_braycurtis(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     q = qvec(spark, sf_dir)
-    return _topk(emb, bray_curtis_distance("embedding", _qlit(q), checked=False))
+    return _topk(emb, bray_curtis_distance("embedding", q, checked=False))
 
 
 def _sql_braycurtis() -> str:
@@ -68,11 +65,12 @@ def _q_minkowski3(spark: SparkSession, sf_dir: str) -> DataFrame:
     final 1/3 root via pow() is rounded to 6 digits on both sides."""
     emb = t(spark, sf_dir, "embeddings")
     q = qvec(spark, sf_dir)
-    a, b = vec("embedding"), _qlit(q)
-    cubes = F.zip_with(a, b, lambda x, y: F.abs(x - y) * F.abs(x - y) * F.abs(x - y))
-    s = F.aggregate(cubes, F.lit(0.0), lambda acc, x: acc + x)
-    d = F.round(F.pow(s, F.lit(1.0 / 3.0)), 6)
-    return _topk(emb, d)
+    cubes = (
+        f"zip_with({array_sql('embedding')}, {array_sql(q)}, "
+        "(x, y) -> abs(x - y) * abs(x - y) * abs(x - y))"
+    )
+    s = f"aggregate({cubes}, 0.0D, (s, t) -> s + t)"
+    return _topk(emb, F.expr(f"round(pow({s}, {double_sql(1.0 / 3.0)}), 6)"))
 
 
 def _sql_minkowski3() -> str:
@@ -86,20 +84,23 @@ def _sign_member_sql(col: str, i: int) -> str:
     return f"(CASE WHEN {O.elem(col, i)} >= 0.0 THEN 1 ELSE 0 END)"
 
 
+def _signed(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[float]]:
+    """Embeddings with their sign-bit vector projected as ``_sig``, and the
+    query's sign bits by the same rule (binary_signature_bits: x >= 0.0)."""
+    emb = t(spark, sf_dir, "embeddings").withColumn(
+        "_sig", binary_signature_bits("embedding")
+    )
+    return emb, [1.0 if x >= 0.0 else 0.0 for x in qvec(spark, sf_dir)]
+
+
 def _q_jaccard_sign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    q = qvec(spark, sf_dir)
-    sig_a = binary_signature_bits("embedding")
-    sig_q = binary_signature_bits(_qlit(q))
-    return _topk(emb, jaccard_distance(sig_a, sig_q, checked=False))
+    emb, sig_q = _signed(spark, sf_dir)
+    return _topk(emb, jaccard_distance("_sig", sig_q, checked=False))
 
 
 def _q_dice_sign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    q = qvec(spark, sf_dir)
-    sig_a = binary_signature_bits("embedding")
-    sig_q = binary_signature_bits(_qlit(q))
-    return _topk(emb, dice_distance(sig_a, sig_q, checked=False))
+    emb, sig_q = _signed(spark, sf_dir)
+    return _topk(emb, dice_distance("_sig", sig_q, checked=False))
 
 
 def _sql_set_distance(kind: str) -> str:
@@ -126,16 +127,14 @@ def _q_binary_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All four tests-only binary metrics (sokal-michener, rogers-tanimoto,
     russell-rao, matching coefficient) over sign membership vs the query
     vector — completes SURVEY §2.3."""
-    emb = t(spark, sf_dir, "embeddings").where(F.col("vec_id") <= 100)
-    q = qvec(spark, sf_dir)
-    sig_a = binary_signature_bits("embedding")
-    sig_q = binary_signature_bits(_qlit(q))
+    emb, sig_q = _signed(spark, sf_dir)
+    emb = emb.where(F.col("vec_id") <= 100)
     return emb.select(
         "vec_id",
-        sokal_michener_distance(sig_a, sig_q, checked=False).alias("sokal_michener"),
-        rogers_tanimoto_distance(sig_a, sig_q, checked=False).alias("rogers_tanimoto"),
-        russell_rao_distance(sig_a, sig_q, checked=False).alias("russell_rao"),
-        matching_coefficient(sig_a, sig_q, checked=False).alias("matching_coef"),
+        sokal_michener_distance("_sig", sig_q, checked=False).alias("sokal_michener"),
+        rogers_tanimoto_distance("_sig", sig_q, checked=False).alias("rogers_tanimoto"),
+        russell_rao_distance("_sig", sig_q, checked=False).alias("russell_rao"),
+        matching_coefficient("_sig", sig_q, checked=False).alias("matching_coef"),
     )
 
 

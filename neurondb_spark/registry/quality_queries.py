@@ -75,9 +75,8 @@ def _q_recommend_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     q = qvec(spark, sf_dir, 7)
     from neurondb_spark.functions.distance import cosine_similarity
-    from neurondb_spark.operators.knn import _query_lit
 
-    sim = cosine_similarity("embedding", _query_lit(q), dim=COMPILE_DIM, checked=False)
+    sim = cosine_similarity("embedding", q, dim=COMPILE_DIM, checked=False)
     return (
         emb.where(F.col("vec_id") != 7)
         .select("vec_id", sim.alias("similarity"))

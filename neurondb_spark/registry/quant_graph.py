@@ -364,16 +364,15 @@ def _q_quant_compare_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         int8_dequantize,
         vector_to_int8,
     )
-    from neurondb_spark.operators.knn import _query_lit
     from neurondb_spark.registry.common import COMPILE_DIM
 
-    emb = t(spark, sf_dir, "embeddings")
     q = qvec(spark, sf_dir)
     s = int8_scale("embedding")
-    rq = int8_dequantize(vector_to_int8("embedding"), s)
-    d_raw = l2_distance("embedding", _query_lit(q), dim=COMPILE_DIM,
-                        checked=False)
-    d_q = l2_distance(rq, _query_lit(q), dim=COMPILE_DIM, checked=False)
+    emb = t(spark, sf_dir, "embeddings").withColumn(
+        "_rq", int8_dequantize(vector_to_int8("embedding"), s)
+    )
+    d_raw = l2_distance("embedding", q, dim=COMPILE_DIM, checked=False)
+    d_q = l2_distance("_rq", q, dim=COMPILE_DIM, checked=False)
     return emb.select(
         "vec_id",
         d_raw.alias("d_raw"),

@@ -74,11 +74,10 @@ def _q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _docs_with_emb(spark, sf_dir)
     q = qvec(spark, sf_dir)
     from neurondb_spark.functions.distance import l2_distance
-    from neurondb_spark.operators.knn import _query_lit
 
     dense = rank_list(
         df, "doc_id", None,
-        score=l2_distance("embedding", _query_lit(q), dim=COMPILE_DIM, checked=False),
+        score=l2_distance("embedding", q, dim=COMPILE_DIM, checked=False),
         ascending=True,
     )
     sparse = rank_list(

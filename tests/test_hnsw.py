@@ -34,10 +34,9 @@ def hnsw(spark, emb):
 
 def _brute_topk(spark, emb, q, k):
     from neurondb_spark.functions.distance import l2_distance
-    from neurondb_spark.operators.knn import _query_lit
 
     return (
-        emb.select("vec_id", l2_distance("embedding", _query_lit(q)).alias("d"))
+        emb.select("vec_id", l2_distance("embedding", q).alias("d"))
         .orderBy(F.col("d").asc(), F.col("vec_id").asc())
         .limit(k)
         .collect()

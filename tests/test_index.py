@@ -26,6 +26,7 @@ def _query(spark):
     return [float(x) for x in row[0]]
 
 
+@pytest.mark.prodconf
 def test_ivf_full_probe_is_exact(spark):
     emb = _emb(spark)
     q = _query(spark)
@@ -38,6 +39,7 @@ def test_ivf_full_probe_is_exact(spark):
         assert got_ids == want_ids
 
 
+@pytest.mark.prodconf
 def test_ivf_partial_probe_recall_and_pruning(spark):
     emb = _emb(spark)
     q = _query(spark)
@@ -56,6 +58,7 @@ def test_ivf_partial_probe_recall_and_pruning(spark):
         assert stats["populated_lists"] <= 8
 
 
+@pytest.mark.prodconf
 def test_lsh_full_probe_is_exact(spark):
     emb = _emb(spark)
     q = _query(spark)
@@ -68,6 +71,7 @@ def test_lsh_full_probe_is_exact(spark):
         assert got_ids == want_ids
 
 
+@pytest.mark.prodconf
 def test_lsh_partial_probe_recall(spark):
     emb = _emb(spark)
     q = _query(spark)
@@ -80,6 +84,7 @@ def test_lsh_partial_probe_recall(spark):
         assert len(got_ids & want_ids) / 10 >= 0.3
 
 
+@pytest.mark.prodconf
 def test_ivf_batch_knn_matches_per_query_probe(spark):
     """The batch query-routed cluster join must return, for every qid,
     exactly what the single-query fixed-point probe path returns."""
@@ -134,12 +139,11 @@ def test_ann_recall_floor_gate(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = qvec(spark, SF_DIR, 1)
     from neurondb_spark.functions.distance import l2_distance
-    from neurondb_spark.operators.knn import _query_lit
 
     want = [
         r["vec_id"] for r in emb.select(
             "vec_id",
-            l2_distance("embedding", _query_lit(q), checked=False).alias("d"),
+            l2_distance("embedding", q, checked=False).alias("d"),
         ).orderBy(F.col("d").asc(), F.col("vec_id").asc()).limit(10).collect()
     ]
     got_h = [r["vec_id"] for r in _hnsw_index_for(spark, SF_DIR)
@@ -150,13 +154,13 @@ def test_ann_recall_floor_gate(spark):
     assert assert_recall(got_i, want, 0.9) >= 0.9
 
 
+@pytest.mark.prodconf
 def test_lsh_full_radius_is_exact_and_batch_agrees(spark):
     """Full-radius multi-probe LSH equals brute-force cosine top-k, and
     search_batch agrees with per-query search at a PARTIAL radius (same
     probe buckets, shared pruned scan)."""
     emb = _emb(spark)
     from neurondb_spark.functions.distance import cosine_distance
-    from neurondb_spark.operators.knn import _query_lit
     from neurondb_spark.registry.common import qvec
     from neurondb_spark.registry.index_queries import _LSH_NBITS, _lsh_index_for
 
@@ -166,7 +170,7 @@ def test_lsh_full_radius_is_exact_and_batch_agrees(spark):
         spark, q, k=10, probe_hamming=_LSH_NBITS, tiebreak=["vec_id"]
     ).collect()]
     want = [r["vec_id"] for r in emb.select(
-        "vec_id", cosine_distance("embedding", _query_lit(q)).alias("d")
+        "vec_id", cosine_distance("embedding", q).alias("d")
     ).orderBy(F.col("d").asc(), F.col("vec_id").asc()).limit(10).collect()]
     assert got == want
 
@@ -185,6 +189,7 @@ def test_lsh_full_radius_is_exact_and_batch_agrees(spark):
         assert batch[qid] == single, qid
 
 
+@pytest.mark.prodconf
 def test_lsh_search_construction_runs_no_spark_job(spark):
     """With the layout schema cached in meta, constructing an LSH search
     launches zero Spark jobs (parity with the IVF/HNSW discipline).
@@ -210,6 +215,7 @@ def test_lsh_search_construction_runs_no_spark_job(spark):
     assert df.count() >= 1
 
 
+@pytest.mark.prodconf
 def test_lsh_dml_lifecycle(spark):
     """LSH insert appends to the correct hyperplane bucket; delete
     tombstones; vacuum rewrites without them; batch search agrees with
@@ -218,7 +224,6 @@ def test_lsh_dml_lifecycle(spark):
 
     from neurondb_spark.functions.distance import cosine_distance
     from neurondb_spark.index import LSHIndex as LSH
-    from neurondb_spark.operators.knn import _query_lit
     from neurondb_spark.registry.common import qvec
 
     emb = _emb(spark).select("vec_id", "embedding")
@@ -235,7 +240,7 @@ def test_lsh_dml_lifecycle(spark):
         if exclude:
             df = df.where(~F.col("vec_id").isin(list(exclude)))
         return [r["vec_id"] for r in df.select(
-            "vec_id", cosine_distance("embedding", _query_lit(q)).alias("d")
+            "vec_id", cosine_distance("embedding", q).alias("d")
         ).orderBy(F.col("d").asc(), F.col("vec_id").asc()).limit(5).collect()]
 
     got = [r["vec_id"] for r in idx.search(
@@ -269,6 +274,7 @@ def test_lsh_dml_lifecycle(spark):
     assert got == brute(exclude=dead)
 
 
+@pytest.mark.prodconf
 @pytest.mark.parametrize("seed", [1234, 271828, 31415])
 def test_lsh_clustered_recall_gate_has_teeth(spark, seed):
     """r9 verdict #4: the planted-cluster recall floor (0.8 at
@@ -358,17 +364,21 @@ def test_probe_clusters_fixed_matches_spark_bsum(spark):
         assert got == want, f"trial {trial}: {got} != {want}"
 
 
-def test_lsh_signature_unroll_matches_fold(spark):
-    """signature_expr's two compilation strategies (fold over a plane-
-    matrix literal vs fully-unrolled element_at chains) must be
-    bit-identical on real vectors — same left-assoc double accumulation,
-    as the docstring contract states."""
-    from neurondb_spark.index.lsh import _hyperplanes, signature_expr
+@pytest.mark.prodconf
+def test_lsh_signature_matches_query_buckets(spark):
+    """Every stored vector sits in the bucket the Python twin
+    ``LSHIndex._query_buckets(v, 0)`` computes for it: the rendered SQL
+    signature fold and the driver-side probe agree bit for bit, on the
+    build path and on the insert path (they share signature_expr)."""
+    from neurondb_spark.index import LSHIndex as LSH
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(500)
-    planes = _hyperplanes(64, 8, seed=123)
-    both = emb.select(
-        signature_expr("embedding", planes).alias("fold"),
-        signature_expr("embedding", planes, unroll=True).alias("unrolled"),
-    )
-    assert both.where(F.col("fold") != F.col("unrolled")).count() == 0
+    emb = _emb(spark).select("vec_id", "embedding").limit(500)
+    path = os.path.join(tempfile.mkdtemp(prefix="lsh_sig_"), "idx")
+    idx = LSH.build(emb.where(F.col("vec_id") % 2 == 0), "embedding", path,
+                    dim=64, nbits=8, seed=123)
+    idx.insert(emb.where(F.col("vec_id") % 2 == 1))
+    rows = idx._read_data(spark).collect()
+    assert len(rows) == 500
+    for r in rows:
+        v = [float(x) for x in r["embedding"]]
+        assert idx._query_buckets(v, 0) == [r["bucket"]], r["vec_id"]

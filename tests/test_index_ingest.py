@@ -16,7 +16,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
 from neurondb_spark.functions.distance import l2_distance  # noqa: E402
-from neurondb_spark.operators.knn import _query_lit  # noqa: E402
 from neurondb_spark.index import IVFIndex, LSHIndex  # noqa: E402
 from neurondb_spark.index.hnsw import HNSWIndex  # noqa: E402
 from neurondb_spark.streaming.index_ingest import (  # noqa: E402
@@ -72,7 +71,7 @@ def _brute_ids(spark, emb, q, dead_mod=37, k=10):
     return [
         r["vec_id"]
         for r in live.select(
-            "vec_id", l2_distance("embedding", _query_lit(q)).alias("d")
+            "vec_id", l2_distance("embedding", q).alias("d")
         )
         .orderBy(F.col("d").asc(), F.col("vec_id").asc())
         .limit(k)

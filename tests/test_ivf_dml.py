@@ -31,13 +31,12 @@ def qv(emb):
 
 def _brute_ids(emb, qv, k, exclude=()):
     from neurondb_spark.functions.distance import l2_distance
-    from neurondb_spark.operators.knn import _query_lit
 
     df = emb
     if exclude:
         df = df.where(~F.col("vec_id").isin(list(exclude)))
     rows = (
-        df.select("vec_id", l2_distance("embedding", _query_lit(qv), checked=False).alias("d"))
+        df.select("vec_id", l2_distance("embedding", qv, checked=False).alias("d"))
         .orderBy(F.col("d").asc(), F.col("vec_id").asc())
         .limit(k)
         .collect()

@@ -26,11 +26,10 @@ def idx(spark):
 
 def _brute(spark, q, k):
     from neurondb_spark.functions.distance import l2_distance
-    from neurondb_spark.operators.knn import _query_lit
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     return (
-        emb.select("vec_id", l2_distance("embedding", _query_lit(q)).alias("d"))
+        emb.select("vec_id", l2_distance("embedding", q).alias("d"))
         .orderBy(F.col("d").asc(), F.col("vec_id").asc()).limit(k).collect()
     )
 

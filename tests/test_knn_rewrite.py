@@ -28,12 +28,12 @@ def rw(spark):
 
 def _candidate(emb, q, k=5, dist_col="distance"):
     from neurondb_spark.functions.distance import distance
-    from neurondb_spark.operators.knn import _query_lit
 
-    d = distance("embedding", _query_lit(q), "l2", dim=64, checked=False)
+    d = distance("embedding", q, "l2", dim=64, checked=False)
     return emb.withColumn(dist_col, d).orderBy(dist_col).limit(k)
 
 
+@pytest.mark.prodconf
 def test_rewrite_fires_on_indexed_scan(rw, spark):
     eng, emb, q = rw
     cand = _candidate(emb, q)
@@ -63,23 +63,29 @@ def test_rewrite_fires_on_indexed_scan(rw, spark):
     assert top["vec_id"] == 3 and top["distance"] == 0.0
 
 
+@pytest.mark.prodconf
 def test_rewrite_direct_expression_shape(rw):
     """orderBy(distance_expr) with no projected alias also matches; the
     output keeps the base schema (no distance column)."""
     from neurondb_spark.functions.distance import distance
-    from neurondb_spark.operators.knn import _query_lit
 
     eng, emb, q = rw
     eng.set_config("route.mode", "index")
-    d = distance("embedding", _query_lit(q), "l2", dim=64, checked=False)
+    d = distance("embedding", q, "l2", dim=64, checked=False)
     cand = emb.orderBy(d.asc()).limit(4)
     dec = eng.explain_rewrite(cand)
     assert dec["rewrite"] is True and dec["alias_name"] is None
     out = eng.optimize(cand)
     assert out.columns == emb.columns
     assert out.collect()[0]["vec_id"] == 3
+    # the fold compile (dim unknown) carries the query as one array
+    # literal; the unrolled one above as one scalar per position
+    fold = emb.orderBy(distance("embedding", q, "l2", checked=False).asc()).limit(4)
+    dec = eng.explain_rewrite(fold)
+    assert dec["rewrite"] is True and dec["query"] == [float(x) for x in q]
 
 
+@pytest.mark.prodconf
 def test_rewrite_fallbacks(rw, spark):
     """Every non-matching shape must come back unchanged."""
     eng, emb, q = rw
@@ -91,16 +97,15 @@ def test_rewrite_fallbacks(rw, spark):
 
     # descending order is not a kNN
     from neurondb_spark.functions.distance import distance
-    from neurondb_spark.operators.knn import _query_lit
 
-    d = distance("embedding", _query_lit(q), "l2", dim=64, checked=False)
+    d = distance("embedding", q, "l2", dim=64, checked=False)
     desc = emb.withColumn("distance", d).orderBy(F.col("distance").desc()).limit(5)
     assert eng.optimize(desc) is desc
 
     # per-row (non-literal) query vector → no literal to probe with
     perrow = (
         emb.withColumn("distance",
-                       distance("embedding", F.col("embedding"), "l2",
+                       distance("embedding", "embedding", "l2",
                                 dim=64, checked=False))
         .orderBy("distance").limit(5)
     )
@@ -119,7 +124,7 @@ def test_rewrite_fallbacks(rw, spark):
     assert eng.optimize(swp) is swp
 
     # wrong metric: cosine sort key can't be served by an l2 index
-    dcos = distance("embedding", _query_lit(q), "cosine", dim=64, checked=False)
+    dcos = distance("embedding", q, "cosine", dim=64, checked=False)
     cosq = emb.withColumn("distance", dcos).orderBy("distance").limit(5)
     assert eng.optimize(cosq) is cosq
 
@@ -301,6 +306,7 @@ def test_learned_params_end_to_end_loop(spark):
     assert esc["observed_recall"] == best_r
 
 
+@pytest.mark.prodconf
 def test_rewrite_fires_on_hnsw_index(spark):
     """HNSW arm of the plan rewrite: fires on an HNSW-indexed scan,
     reconstructs table rows via the id join-back, and with shard-sized
@@ -335,9 +341,8 @@ def test_rewrite_fires_on_hnsw_index(spark):
             assert abs(dp - de) <= 1e-9 * max(1.0, abs(de))
         # direct-expression shape: output keeps the base schema
         from neurondb_spark.functions.distance import distance
-        from neurondb_spark.operators.knn import _query_lit
 
-        dexpr = distance("embedding", _query_lit(q), "l2", dim=64,
+        dexpr = distance("embedding", q, "l2", dim=64,
                          checked=False)
         cand2 = emb.orderBy(dexpr.asc()).limit(4)
         out2 = eng.optimize(cand2)
@@ -375,6 +380,7 @@ def test_escalation_filters_foreign_tunables(spark):
     assert esc2["params"] == {"nprobe": 8, "ef_search": 64}
 
 
+@pytest.mark.prodconf
 def test_snapshot_guard_and_rewrite_survive_caching(spark):
     """df.inputFiles() reports NOTHING for a cached frame (the optimized
     plan serves from InMemoryRelation) — the full pytest suite caught

@@ -19,6 +19,7 @@ def _collect_err(df):
     return str(ei.value)
 
 
+@pytest.mark.prodconf
 def test_dim_mismatch_raises(spark):
     from neurondb_spark.functions.distance import distance
 
@@ -26,13 +27,22 @@ def test_dim_mismatch_raises(spark):
     for metric in ("l2", "cosine", "ip", "l1", "hamming"):
         msg = _collect_err(df.select(distance("a", "b", metric)))
         assert "dimension mismatch" in msg, metric
+        # a Python-vector operand, fold and unrolled forms
+        for dim in (None, 3):
+            msg = _collect_err(df.select(distance("a", [1.0, 2.0, 3.0], metric, dim=dim)))
+            assert "dimension mismatch" in msg, (metric, dim)
 
 
+@pytest.mark.prodconf
 def test_zero_vector_cosine_raises(spark):
     from neurondb_spark.functions.distance import cosine_distance
 
     df = spark.createDataFrame([([0.0, 0.0], [1.0, 2.0])], "a array<double>, b array<double>")
     assert "zero vector" in _collect_err(df.select(cosine_distance("a", "b")))
+    for dim in (None, 2):
+        # zero row against a vector, and a row against the zero vector
+        assert "zero vector" in _collect_err(df.select(cosine_distance("a", [1.0, 2.0], dim=dim)))
+        assert "zero vector" in _collect_err(df.select(cosine_distance("b", [0.0, -0.0], dim=dim)))
 
 
 def test_normalize_zero_vector_raises(spark):

@@ -163,3 +163,197 @@ def test_knn_large_dim_compiles_via_fold(spark):
     out = knn(df, "v", rows[0][1], k=3, metric="l2", dim=384,
               tiebreak=["id"]).collect()
     assert out[0]["id"] == 0 and out[0]["distance"] == 0.0
+
+
+# --- distance kernels rendered as one SQL expression: bit-identity with a
+# plain-Python left-associative reference, in both compile forms
+
+_KDIM = 4
+_KQ = [-0.0, 5e-324, 1e308, 0.1]
+_KROWS = [
+    [1.0, -2.0, 0.5, 3.0],
+    [0.0, 0.25, -1e308, -0.1],
+    [2.5, -0.0, 1e-300, 0.1],
+    [-0.0, 5e-324, 1e308, 0.1],
+]
+_KW = [1.0, 0.5, 1.0, 0.5]
+
+
+def _acc(terms, fold):
+    """Left-assoc sum: the fold starts from 0.0, the unrolled chain from
+    its first term (they differ only in the sign of an all -0.0 sum)."""
+    s = 0.0 if fold else terms[0]
+    for t in terms if fold else terms[1:]:
+        s = s + t
+    return s
+
+
+def _ref(metric, a, b, fold):
+    """Python twin of each kernel's SQL, term by term."""
+    z = list(zip(a, b))
+    acc = lambda f: _acc([f(x, y) for x, y in z], fold)  # noqa: E731
+    ind = lambda c: 1.0 if c else 0.0  # noqa: E731
+    n = float(len(a))
+    sq = acc(lambda x, y: (x - y) * (x - y))
+    if metric in ("l2", "euclidean"):
+        return math.sqrt(sq)
+    if metric == "squared_l2":
+        return sq
+    if metric in ("ip", "inner_product"):
+        return -acc(lambda x, y: x * y)
+    if metric == "cosine":
+        na = math.sqrt(_acc([x * x for x in a], fold))
+        nb = math.sqrt(_acc([y * y for y in b], fold))
+        return 1.0 - acc(lambda x, y: x * y) / (na * nb)
+    if metric in ("l1", "cityblock", "manhattan"):
+        return acc(lambda x, y: abs(x - y))
+    if metric == "hamming":
+        return acc(lambda x, y: ind(x != y))
+    inter = acc(lambda x, y: ind(x != 0.0 and y != 0.0))
+    diff = acc(lambda x, y: ind((x != 0.0) != (y != 0.0)))
+    if metric == "jaccard":
+        union = acc(lambda x, y: ind(x != 0.0 or y != 0.0))
+        return 0.0 if union == 0.0 else 1.0 - inter / union
+    if metric == "dice":
+        cnt = _acc([ind(x != 0.0) for x in a], fold) + _acc([ind(y != 0.0) for y in b], fold)
+        return 0.0 if cnt == 0.0 else 1.0 - (2.0 * inter) / cnt
+    if metric == "braycurtis":
+        return acc(lambda x, y: abs(x - y)) / acc(lambda x, y: abs(x + y))
+    if metric == "canberra":
+        return acc(lambda x, y: 0.0 if abs(x) + abs(y) == 0.0
+                   else abs(x - y) / (abs(x) + abs(y)))
+    if metric == "sokal_michener":
+        return diff / n
+    if metric == "rogers_tanimoto":
+        return (2.0 * diff) / ((n - diff) + 2.0 * diff)
+    if metric == "russell_rao":
+        return (n - inter) / n
+    if metric == "chebyshev":
+        return max(abs(x - y) for x, y in z)
+    if metric == "minkowski":  # p=1: pow(x, 1.0) is exact on both sides
+        return acc(lambda x, y: abs(x - y))
+    if metric == "mahalanobis":
+        return math.sqrt(_acc([((x - y) * (x - y)) * w for (x, y), w in zip(z, _KW)], fold))
+    raise AssertionError(metric)
+
+
+@pytest.mark.prodconf
+def test_distance_kernels_bit_identical_to_python_reference(spark):
+    """Every metric in _METRICS plus chebyshev, minkowski and mahalanobis,
+    unrolled (dim set) and fold (dim None), name-vector and name-name
+    operands, against a query of -0.0, 5e-324, 1e308 and 0.1: each result
+    equals the Python left-assoc reference bit for bit (repr, so -0.0 and
+    nan count)."""
+    from neurondb_spark.functions.distance import (
+        _METRICS,
+        distance,
+        mahalanobis_distance,
+    )
+
+    metrics = sorted(_METRICS) + ["chebyshev", "minkowski", "mahalanobis"]
+    df = spark.createDataFrame(
+        [(i, r, _KROWS[(i + 1) % len(_KROWS)]) for i, r in enumerate(_KROWS)],
+        "id int, a array<double>, b array<double>",
+    )
+    for dim in (_KDIM, None):
+        for b_op in ("b", _KQ):
+            cols = [F.col("id"), F.col("b")]
+            for m in metrics:
+                if m == "mahalanobis":
+                    c = mahalanobis_distance("a", b_op, _KW, dim=dim, checked=False)
+                else:
+                    c = distance("a", b_op, m, dim=dim, checked=False, p=1.0)
+                cols.append(c.alias(m))
+            for row in df.select("a", *cols).collect():
+                b_vec = row["b"] if b_op == "b" else _KQ
+                for m in metrics:
+                    want = _ref(m, row["a"], b_vec, fold=dim is None)
+                    assert repr(row[m]) == repr(want), (m, dim, b_op == "b", row["id"])
+
+
+@pytest.mark.prodconf
+def test_vec_route_breaks_ties_at_lowest_index(spark):
+    from neurondb_spark.operators.knn import vec_route
+
+    cents = [[0.0, 0.0], [1.0, 1.0], [0.0, 0.0], [5.0, 5.0]]
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [0.5, 0.5]), (2, [1.0, 1.0]), (3, [4.0, 4.0])],
+        "id int, v array<double>",
+    )
+    for dim in (2, None):
+        got = {r["id"]: r["route"] for r in vec_route(df, "v", cents, dim=dim).collect()}
+        # [0,0] is nearest to centroids 0 and 2; [0.5,0.5] is equidistant
+        # from 0, 1 and 2: the lowest index wins both ties
+        assert got == {0: 0, 1: 0, 2: 1, 3: 3}, dim
+
+
+def _double_literals(jexpr, cap):
+    """Double-typed Literal leaves of an analyzed expression (stops
+    counting past ``cap``)."""
+    leaves = jexpr.collectLeaves()
+    n = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "Literal" and leaf.dataType().typeName() == "double":
+            n += 1
+            if n > cap:
+                break
+    return n
+
+
+@pytest.mark.prodconf
+def test_unrolled_cosine_search_literal_budget(spark):
+    """The analyzed distance of a dim-64 unrolled cosine search holds at
+    most 3·dim double literals: the query appears once per position as a
+    scalar, not as a 64-literal array copied into every element_at site
+    (about 20,000 literals when built from Column calls)."""
+    import random
+
+    from neurondb_spark.operators.knn import knn
+
+    dim = 64
+    rng = random.Random(3)
+    df = spark.createDataFrame(
+        [(i, [rng.random() for _ in range(dim)]) for i in range(4)],
+        "id int, v array<float>",
+    )
+    q = [rng.gauss(0.0, 1.0) for _ in range(dim)]
+    out = knn(df, "v", q, k=2, metric="cosine", dim=dim)
+    node = out._jdf.queryExecution().analyzed()
+    while node.getClass().getSimpleName() != "Project":
+        node = node.children().apply(0)
+    dist = [ne for ne in (node.projectList().apply(i) for i in range(node.projectList().size()))
+            if ne.name() == "distance"][0]
+    assert _double_literals(dist.child(), 3 * dim) <= 3 * dim
+    assert [r["id"] for r in out.collect()] == [
+        r["id"] for r in knn(df, "v", q, k=2, metric="cosine").collect()
+    ]
+
+
+@pytest.mark.prodconf
+def test_unrolled_kernels_compile_under_whole_stage_codegen(spark):
+    """Rendered dim-64 unrolled l2 and cosine kernels compile under
+    whole-stage codegen. With codegen fallback off, a janino failure (a
+    generated method past 64 KB) raises instead of quietly running the
+    stage interpreted."""
+    import random
+
+    from neurondb_spark.operators.knn import knn
+
+    dim = 64
+    rng = random.Random(5)
+    df = spark.createDataFrame(
+        [(i, [rng.random() for _ in range(dim)]) for i in range(8)],
+        "id int, v array<float>",
+    )
+    q = [rng.gauss(0.0, 1.0) for _ in range(dim)]
+    confs = {"spark.sql.codegen.wholeStage": "true", "spark.sql.codegen.fallback": "false"}
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        for metric in ("l2", "cosine"):
+            assert len(knn(df, "v", q, k=3, metric=metric, dim=dim, tiebreak=["id"]).collect()) == 3
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
