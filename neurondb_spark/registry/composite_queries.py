@@ -6,12 +6,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from neurondb_spark import oracle as O
 from neurondb_spark.functions.distance import l2_distance, mahalanobis_distance
 from neurondb_spark.functions.vector import (
-    vec,
     vector_cast_dimension,
     vector_concat,
     vector_slice,

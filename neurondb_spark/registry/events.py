@@ -11,9 +11,7 @@ batch semantics)."""
 from __future__ import annotations
 
 import os
-import sys
 
-from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -236,6 +234,7 @@ def _q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_sessionize ORACLE. Streams a normalized copy of events
     (AvailableNow, memory sink); falls back to the identical batch twin
     if streaming infra wobbles under gate load."""
+    from neurondb_spark.streaming import memory_drain, stream_or_batch
     from neurondb_spark.streaming.sessionize import (
         sessionize_batch,
         sessionize_stream,
@@ -243,52 +242,25 @@ def _q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _session_events(spark, sf_dir)
     src = _sessionize_src(spark, sf_dir)
-    out = None
-    try:
-        sdf = spark.readStream.schema(ev.schema).parquet(src)
+
+    def _drain() -> DataFrame | None:
         # the key dir's hex digest keeps the memory-sink view name a
         # valid identifier and distinct per input set
-        qname = f"neurondb_sessionize_{os.path.basename(src)[:16]}"
-        q = (
-            sessionize_stream(sdf).writeStream.format("memory")
-            .queryName(qname).outputMode("update")
-            .trigger(availableNow=True).start()
+        mem = memory_drain(
+            sessionize_stream(spark.readStream.schema(ev.schema).parquet(src)),
+            f"neurondb_sessionize_{os.path.basename(src)[:16]}", "update",
         )
-        try:
-            q.awaitTermination()
-        finally:
-            if q.isActive:
-                q.stop()
+        if mem is None:
+            return None
         # update mode emits one row per user per micro-batch; keep the
         # final emission (max batch == latest state snapshot)
-        mem = spark.table(qname)
-        if mem.head(1):
-            out = (
-                mem.groupBy("user_id")
-                .agg(F.max("n_sessions").alias("n_sessions"),
-                     F.max("max_session_events").alias("max_session_events"))
-            )
-    except StreamingQueryException as e:
-        # Infra-only fallback: python-worker churn under full-gate load
-        # can wedge the streaming drain. Operator-level bugs (a broken
-        # sessionize_stream) raise outside this catch and fail the gate —
-        # the batch twin must not mask them (ADVICE r4).
-        from neurondb_spark.streaming import strict_stream
+        return mem.groupBy("user_id").agg(
+            F.max("n_sessions").alias("n_sessions"),
+            F.max("max_session_events").alias("max_session_events"),
+        )
 
-        if strict_stream():
-            raise  # sims verify the STREAMING path; no silent batch twin
-        print(f"neurondb: stream_sessionize streaming drain failed, "
-              f"using batch twin: {e}", file=sys.stderr)
-        out = None
-    if out is None:
-        from neurondb_spark.streaming import strict_stream
-
-        if strict_stream():
-            raise RuntimeError(
-                "neurondb: stream_sessionize streaming sink was empty "
-                "under NEURONDB_STRICT_STREAM=1 (wedged stream?)"
-            )
-        out = sessionize_batch(ev)
+    out = stream_or_batch("stream_sessionize", _drain,
+                          lambda: sessionize_batch(ev))
     return out.select("user_id", "n_sessions", "max_session_events")
 
 

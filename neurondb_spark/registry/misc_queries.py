@@ -7,10 +7,7 @@ in rounds 5-6)."""
 from __future__ import annotations
 
 import os
-import sys
 import tempfile
-
-from pyspark.errors import StreamingQueryException
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -194,7 +191,7 @@ def _ivf_cdc_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
     import glob
     import shutil
 
-    from neurondb_spark.streaming import strict_stream
+    from neurondb_spark.streaming import stream_or_batch
     from neurondb_spark.streaming.index_ingest import (
         index_cdc_batch,
         index_cdc_drain,
@@ -222,27 +219,18 @@ def _ivf_cdc_index_for(spark: SparkSession, sf_dir: str, path: str) -> None:
             nlists=_CDC_NLISTS, metric="l2", dim=COMPILE_DIM,
         )
 
-    idx = _build()
-    ok = False
-    try:
-        index_cdc_drain(spark, src, schema, idx, work)
-        ok = bool(glob.glob(
+    def _drain() -> bool:
+        index_cdc_drain(spark, src, schema, _build(), work)
+        return bool(glob.glob(
             os.path.join(idx_path, "ingest_journal", "batch_*.json")
         ))
-    except StreamingQueryException as e:
-        if strict_stream():
-            raise  # sims verify the STREAMING path; no silent twin
-        print(f"neurondb: stream_ivf_cdc streaming drain failed, "
-              f"using rebuild + batch twin: {e}", file=sys.stderr)
-    if not ok:
-        if strict_stream():
-            raise RuntimeError(
-                "neurondb: stream_ivf_cdc drain committed no batches "
-                "under NEURONDB_STRICT_STREAM=1 (wedged stream?)"
-            )
+
+    def _rebuild_batch() -> None:
         for p in (idx_path, work):
             shutil.rmtree(p, ignore_errors=True)
         index_cdc_batch(spark, src, schema, _build())
+
+    stream_or_batch("stream_ivf_cdc_knn", _drain, _rebuild_batch)
 
 
 def _q_stream_ivf_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -302,9 +290,10 @@ def _q_stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink) — min(id)/count are order-independent, so the drained
     state table must hash-equal the batch/oracle dedup no matter how the
     micro-batches arrive. Same infra-only batch fallback contract as the
-    other stream rows (narrow catch, logged to stderr)."""
+    other stream rows (streaming.stream_or_batch)."""
     from pyspark.sql import types as T
 
+    from neurondb_spark.streaming import memory_drain, stream_or_batch
     from neurondb_spark.streaming.dedup import dedup_batch, dedup_stream
 
     schema = T.StructType([
@@ -312,39 +301,16 @@ def _q_stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("text", T.StringType()),
     ])
     src = _sdedup_src(spark, sf_dir)
-    out = None
-    try:
-        stream = dedup_stream(spark, src, schema, "text", "doc_id")
-        qname = f"neurondb_sdedup_gate_{os.path.basename(src)[:16]}"
-        q = (
-            stream.writeStream.format("memory").queryName(qname)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            if q.isActive:
-                q.stop()
-        out = spark.table(qname)
-        if not out.head(1):
-            out = None
-    except StreamingQueryException as e:
-        from neurondb_spark.streaming import strict_stream
-
-        if strict_stream():
-            raise  # sims verify the STREAMING path; no silent batch twin
-        print(f"neurondb: stream_exact_dedup streaming drain failed, "
-              f"using batch twin: {e}", file=sys.stderr)
-        out = None
-    if out is None:
-        from neurondb_spark.streaming import strict_stream
-
-        if strict_stream():
-            raise RuntimeError(
-                "neurondb: stream_exact_dedup streaming sink was empty "
-                "under NEURONDB_STRICT_STREAM=1 (wedged stream?)"
-            )
-        out = dedup_batch(spark.read.schema(schema).parquet(src), "text", "doc_id")
+    out = stream_or_batch(
+        "stream_exact_dedup",
+        lambda: memory_drain(
+            dedup_stream(spark, src, schema, "text", "doc_id"),
+            f"neurondb_sdedup_gate_{os.path.basename(src)[:16]}", "complete",
+        ),
+        lambda: dedup_batch(
+            spark.read.schema(schema).parquet(src), "text", "doc_id"
+        ),
+    )
     return out.select("fingerprint", "doc_id", "dup_count")
 
 
@@ -383,6 +349,7 @@ def _q_stream_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     infra-only batch fallback contract as the other stream rows."""
     from pyspark.sql import types as T
 
+    from neurondb_spark.streaming import stream_or_batch
     from neurondb_spark.streaming.dedup import lsh_pairs_batch, lsh_pairs_drain
 
     schema = T.StructType([
@@ -391,33 +358,20 @@ def _q_stream_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     root = _slsh_root(spark, sf_dir)
     src = os.path.join(root, "src")
-    out = None
-    try:
+
+    def _drain() -> DataFrame | None:
         out = lsh_pairs_drain(
             spark, src, schema, "text", "doc_id",
             work_dir=os.path.join(root, "work"),
         )
-        if not out.head(1):
-            out = None
-    except StreamingQueryException as e:
-        from neurondb_spark.streaming import strict_stream
+        return out if out.head(1) else None
 
-        if strict_stream():
-            raise  # sims verify the STREAMING path; no silent batch twin
-        print(f"neurondb: stream_lsh_neardup streaming drain failed, "
-              f"using batch twin: {e}", file=sys.stderr)
-        out = None
-    if out is None:
-        from neurondb_spark.streaming import strict_stream
-
-        if strict_stream():
-            raise RuntimeError(
-                "neurondb: stream_lsh_neardup streaming drain was empty "
-                "under NEURONDB_STRICT_STREAM=1 (wedged stream?)"
-            )
-        out = lsh_pairs_batch(
+    out = stream_or_batch(
+        "stream_lsh_neardup", _drain,
+        lambda: lsh_pairs_batch(
             spark.read.schema(schema).parquet(src), "text", "doc_id"
-        )
+        ),
+    )
     return out.select("id_a", "id_b")
 
 
@@ -568,6 +522,7 @@ def _q_stream_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
+    from neurondb_spark.streaming import memory_drain, stream_or_batch
     from neurondb_spark.streaming.queue import monitor_stream
 
     schema = T.StructType([
@@ -585,48 +540,19 @@ def _q_stream_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     spark.createDataFrame(pd.DataFrame(rows, columns=["ts", "event_type", "value"]),
                           schema=schema).coalesce(1).write.mode("overwrite").parquet(evdir)
-    agg = None
-    try:
-        stream = monitor_stream(spark, evdir, schema, window="1 hour",
-                                watermark="2 hours")
-        qname = "neurondb_monitor_gate"
-        q = (
-            stream.writeStream.format("memory").queryName(qname)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            if q.isActive:
-                q.stop()
-        agg = spark.table(qname)
-        if not agg.head(1):  # empty sink = wedged stream; use batch path
-            agg = None
-    except StreamingQueryException as e:
-        # Infra-only fallback (see _q_stream_sessionize): operator bugs in
-        # monitor_stream raise outside this catch and fail the gate.
-        from neurondb_spark.streaming import strict_stream
-
-        if strict_stream():
-            raise  # sims verify the STREAMING path; no silent batch twin
-        print(f"neurondb: stream_monitor streaming drain failed, "
-              f"using batch twin: {e}", file=sys.stderr)
-        agg = None
-    if agg is None:
-        from neurondb_spark.streaming import strict_stream
-
-        if strict_stream():
-            raise RuntimeError(
-                "neurondb: stream_monitor streaming sink was empty "
-                "under NEURONDB_STRICT_STREAM=1 (wedged stream?)"
-            )
-        df = spark.read.schema(schema).parquet(evdir)
-        agg = (
-            df.groupBy(F.window(F.col("ts"), "1 hour"), F.col("event_type"))
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.avg("value").alias("avg_value"),
-                 F.max("value").alias("max_value"))
-        )
+    agg = stream_or_batch(
+        "stream_monitor_window",
+        lambda: memory_drain(
+            monitor_stream(spark, evdir, schema, window="1 hour",
+                           watermark="2 hours"),
+            "neurondb_monitor_gate", "complete",
+        ),
+        lambda: spark.read.schema(schema).parquet(evdir)
+        .groupBy(F.window(F.col("ts"), "1 hour"), F.col("event_type"))
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.avg("value").alias("avg_value"),
+             F.max("value").alias("max_value")),
+    )
     return agg.select(
         F.col("window.start").alias("win_start"), "event_type",
         "n", "avg_value", "max_value",
@@ -1079,46 +1005,31 @@ def _run_merge_scenario(
     """Drain ``root``'s staged changes into its table (idempotent: the
     checkpoint skips drained files) and read the table back."""
     from neurondb_spark.data_management import apply_changes
+    from neurondb_spark.streaming import stream_or_batch
+    from neurondb_spark.streaming.table_merge import (
+        merge_stream_drain,
+        read_merge_table,
+    )
 
     base, c1, c2 = _stream_merge_frames(spark, sf_dir)
-    schema = c1.schema
-    src = os.path.join(root, "changes")
     table = os.path.join(root, "table")
-    out = None
-    try:
-        from neurondb_spark.streaming.table_merge import (
-            merge_stream_drain,
-            read_merge_table,
-        )
 
+    def _drain() -> DataFrame | None:
         merge_stream_drain(
-            spark, src + "/*/", schema, table, ["o_orderkey"],
-            n_buckets=8, max_files_per_trigger=1,
+            spark, os.path.join(root, "changes") + "/*/", c1.schema, table,
+            ["o_orderkey"], n_buckets=8, max_files_per_trigger=1,
             merge_on_read=merge_on_read, compact_every=compact_every,
         )
         out = read_merge_table(spark, table)
-        if not out.head(1):
-            out = None
-    except StreamingQueryException as e:
-        from neurondb_spark.streaming import strict_stream
+        return out if out.head(1) else None
 
-        if strict_stream():
-            raise  # sims verify the STREAMING path; no silent batch twin
-        print(f"neurondb: {row_name} streaming drain failed, "
-              f"using batch twin: {e}", file=sys.stderr)
-        out = None
-    if out is None:
-        from neurondb_spark.streaming import strict_stream
-
-        if strict_stream():
-            raise RuntimeError(
-                f"neurondb: {row_name} table was empty under "
-                "NEURONDB_STRICT_STREAM=1 (wedged stream?)"
-            )
-        out = apply_changes(
+    out = stream_or_batch(
+        row_name, _drain,
+        lambda: apply_changes(
             apply_changes(base, c1, ["o_orderkey"], seq_col="seq"),
             c2, ["o_orderkey"], seq_col="seq",
-        )
+        ),
+    )
     return out.select("o_orderkey", "o_orderstatus", "o_totalprice")
 
 

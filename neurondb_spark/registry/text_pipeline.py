@@ -1448,52 +1448,26 @@ def _q_stream_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate load (strict mode re-raises instead — sims verify the
     STREAMING path)."""
     import os
-    import sys as _sys
 
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
+    from neurondb_spark.operators.corpus import pack_sequences
+    from neurondb_spark.streaming import memory_drain, stream_or_batch
     from neurondb_spark.streaming.packing import pack_stream
 
     docs = t(spark, sf_dir, "documents")
     src = _pack_src(spark, sf_dir)
-    out = None
-    try:
-        sdf = spark.readStream.schema(_pack_counts(docs).schema).parquet(src)
-        qname = f"neurondb_pack_{os.path.basename(src)[:16]}"
-        q = (
-            pack_stream(sdf, _PACK_SEQ_LEN).writeStream.format("memory")
-            .queryName(qname).outputMode("append")
-            .trigger(availableNow=True).start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            if q.isActive:
-                q.stop()
-        mem = spark.table(qname)
-        if mem.head(1):
-            out = mem
-    except StreamingQueryException as e:
-        from neurondb_spark.streaming import strict_stream
-
-        if strict_stream():
-            raise
-        print(f"neurondb: stream_pack streaming drain failed, using "
-              f"batch twin: {e}", file=_sys.stderr)
-        out = None
-    if out is None:
-        from neurondb_spark.streaming import strict_stream
-
-        if strict_stream():
-            raise RuntimeError(
-                "neurondb: stream_pack streaming sink was empty under "
-                "NEURONDB_STRICT_STREAM=1 (wedged stream?)"
-            )
-        from neurondb_spark.operators.corpus import pack_sequences
-
-        out = pack_sequences(
+    out = stream_or_batch(
+        "stream_pack_spans",
+        lambda: memory_drain(
+            pack_stream(
+                spark.readStream.schema(_pack_counts(docs).schema).parquet(src),
+                _PACK_SEQ_LEN,
+            ),
+            f"neurondb_pack_{os.path.basename(src)[:16]}", "append",
+        ),
+        lambda: pack_sequences(
             docs, token_count("text"), "lang", "doc_id", _PACK_SEQ_LEN
-        )
+        ),
+    )
     return out.select(
         "shard", "bin_id", "id", "doc_offset", "bin_offset", "take_tokens"
     )

@@ -1,14 +1,26 @@
 """Structured Streaming workers (SURVEY §2.13): the reference's background
 workers (job queue, monitor) re-expressed as streams."""
 
+from __future__ import annotations
+
+import logging
 import os
+from collections.abc import Callable
+from typing import TypeVar
+
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import DataFrame
 
 from neurondb_spark.streaming.queue import JobQueueWorker, monitor_stream  # noqa: F401
 from neurondb_spark.streaming.table_merge import ConcurrentWriterError  # noqa: F401
 
+_T = TypeVar("_T")
+
+_log = logging.getLogger("neurondb_spark")
+
 
 def strict_stream() -> bool:
-    """Gate-integrity switch (round-6 verdict "What's wrong #1"): the four
+    """Gate-integrity switch (round-6 verdict "What's wrong #1"): the
     streaming gate rows fall back to their batch twins when the streaming
     drain throws — an infra-only contract, but a drain-side OPERATOR bug
     that happens to surface as a StreamingQueryException would be masked
@@ -18,3 +30,46 @@ def strict_stream() -> bool:
     pre-commit verification proves the STREAMING path itself produced the
     green — streaming flakiness in the sims is signal, not noise."""
     return os.environ.get("NEURONDB_STRICT_STREAM") == "1"
+
+
+def stream_or_batch(row: str, drain: Callable[[], _T | None],
+                    batch: Callable[[], _T]) -> _T:
+    """Run gate row ``row``'s streaming ``drain``; on a
+    StreamingQueryException, or a falsy result (an empty sink: a wedged
+    stream), answer with its ``batch`` twin instead and log one warning
+    on the ``neurondb_spark`` logger. Under strict_stream() both cases
+    raise. Only the drain's own streaming failures are caught, so an
+    operator bug that raises anything else fails the row."""
+    try:
+        out = drain()
+    except StreamingQueryException as e:
+        if strict_stream():
+            raise  # sims verify the STREAMING path; no silent batch twin
+        _log.warning("%s: streaming drain failed, using batch twin: %s", row, e)
+        return batch()
+    if out:
+        return out
+    if strict_stream():
+        raise RuntimeError(
+            f"neurondb: {row} streaming drain produced nothing under "
+            "NEURONDB_STRICT_STREAM=1 (wedged stream?)"
+        )
+    _log.warning("%s: streaming drain produced nothing, using batch twin", row)
+    return batch()
+
+
+def memory_drain(sdf: DataFrame, qname: str, mode: str) -> DataFrame | None:
+    """Drain streaming frame ``sdf`` to the end of its input
+    (AvailableNow) into memory sink ``qname`` with output ``mode``; the
+    sink's table, or None when it is empty."""
+    q = (
+        sdf.writeStream.format("memory").queryName(qname).outputMode(mode)
+        .trigger(availableNow=True).start()
+    )
+    try:
+        q.awaitTermination()
+    finally:
+        if q.isActive:
+            q.stop()
+    out = sdf.sparkSession.table(qname)
+    return out if out.head(1) else None

@@ -18,6 +18,7 @@ def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet")
 
 
+@pytest.mark.prodconf
 def test_kmeans_partitions_all_rows(spark, emb):
     out = kmeans_lloyd_exact(emb, "embedding", "vec_id", k=4, iters=2)
     rows = out.collect()
@@ -27,6 +28,7 @@ def test_kmeans_partitions_all_rows(spark, emb):
     assert clusters <= {0, 1, 2, 3} and len(clusters) >= 2
 
 
+@pytest.mark.prodconf
 def test_kmeans_iteration_improves_wcss(spark, emb):
     """2-iteration assignments must not have higher within-cluster scatter
     than the init assignment (Lloyd monotonicity)."""
