@@ -41,6 +41,68 @@ def atomic_write_json(path: str, obj) -> None:
     os.replace(tmp, path)
 
 
+def parquet_files(path: str) -> list[str]:
+    """The parquet data files under ``path``, partition dirs included,
+    sorted. Names starting with ``_`` or ``.`` are skipped at every level
+    (``_SUCCESS``, ``.crc``, staging dirs), the rule Spark's own file
+    index applies. A missing ``path`` holds no files."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out += [os.path.join(root, f) for f in files
+                if not f.startswith(("_", "."))]
+    return sorted(out)
+
+
+def _footer(f: str):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.read_metadata(f)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"neurondb: unreadable parquet footer {f!r}: {e}") from e
+
+
+def footer_rows(*paths: str) -> int:
+    """Row count of the parquet data under ``paths`` (0 when they hold no
+    data file), summed from the file footers on the driver: no Spark job,
+    one small read per file. A footer that does not parse raises
+    ValueError."""
+    return sum(_footer(f).num_rows for p in paths for f in parquet_files(p))
+
+
+def footer_columns(path: str) -> list[str] | None:
+    """Column names in the footer of the first data file under ``path``
+    (partition columns are not in files), or None when it holds none. One
+    footer, the same file Spark would infer a schema from, without the
+    job inference runs."""
+    files = parquet_files(path)
+    return _footer(files[0]).schema.to_arrow_schema().names if files else None
+
+
+def read_tombstones(spark: SparkSession, path: str, key_col: str,
+                    am: str) -> DataFrame | None:
+    """An index's distinct tombstone keys, or None when ``path`` does not
+    exist. Read with a known single-column schema (tombstones are always
+    written as long keys, :func:`as_tombstone_frame`), so no
+    schema-inference job runs. Files that lack ``key_col`` raise: read
+    with the known schema they would yield nulls, and the anti-join would
+    silently return soft-deleted rows."""
+    from pyspark.sql import types as T
+
+    if not os.path.isdir(path):
+        return None
+    cols = footer_columns(path)
+    if cols is not None and key_col not in cols:
+        raise ValueError(
+            f"neurondb: {am} tombstone files at {path!r} lack the "
+            f"recorded key column {key_col!r} (have {cols})"
+        )
+    schema = T.StructType([T.StructField(key_col, T.LongType())])
+    return spark.read.schema(schema).parquet(path).distinct()
+
+
 def as_tombstone_frame(spark: SparkSession, ids, id_col: str) -> DataFrame:
     """Normalize a ``delete()`` ids argument into a single-column long
     DataFrame named ``id_col``, ready to append to a tombstones dir.

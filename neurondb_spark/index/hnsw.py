@@ -325,6 +325,19 @@ def _search_shard(pdf: pd.DataFrame, query: np.ndarray, k: int,
     })
 
 
+def _shard_tomb_counts(graph: DataFrame, tomb: DataFrame) -> dict[str, int]:
+    """{shard (str, as meta stores it): tombstoned graph rows}, counted by
+    a column-pruned semi-join: a tombstone for an id not in the graph can
+    never surface as a candidate, so it must not widen any beam."""
+    return {
+        str(r["shard"]): int(r["n"])
+        for r in graph.select("shard", "vec_id")
+        .join(tomb, "vec_id", "left_semi")
+        .groupBy("shard").agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+
+
 class HNSWIndex:
     def __init__(self, path: str, meta: dict):
         self.path = path
@@ -349,18 +362,18 @@ class HNSWIndex:
         graph = HNSWIndex._graph_frame(
             df, vec_col, id_col, num_shards, m, ef_construction, metric, seed
         )
+        from neurondb_spark.data_management import atomic_write_json, footer_rows
+
         graph.write.mode("overwrite").partitionBy("shard").parquet(
             os.path.join(path, "data")
         )
-        total = df.sparkSession.read.parquet(os.path.join(path, "data")).count()
+        total = footer_rows(os.path.join(path, "data"))
         meta = {
             "version": 1, "method": "hnsw", "vec_col": vec_col,
             "id_col": id_col, "metric": metric, "dim": dim, "m": m,
             "ef_construction": ef_construction, "num_shards": num_shards,
             "seed": seed, "total_rows": total, "built_at": time.time(),
         }
-        from neurondb_spark.data_management import atomic_write_json
-
         os.makedirs(path, exist_ok=True)
         atomic_write_json(os.path.join(path, "meta.json"), meta)
         return HNSWIndex(path, meta)
@@ -595,10 +608,10 @@ class HNSWIndex:
         rows hash to their shard, and each shard's task reconstructs its
         graph and runs the build-identical insert routine for its new
         vectors (id order — deterministic). One applyInPandas pass over
-        old+new rows; the rewritten graph replaces the old one via a
-        verified backup-keeping swap. At scale the per-task cost is one
-        shard's graph + its new rows — the same executor-RAM contract as
-        the build.
+        the touched shards' old rows plus the new ones; the rewritten
+        shards replace the old ones through the journaled commit. At
+        scale the per-task cost is one shard's graph + its new rows — the
+        same executor-RAM contract as the build.
 
         UPSERT semantics (r6 ADVICE): an id already present in the graph
         — live OR tombstoned — is REPLACED, not duplicated. A shard that
@@ -616,56 +629,37 @@ class HNSWIndex:
         partition-scoped journal commit, data_management.write_dml_journal
         ``partitions=``); untouched shard directories are never opened,
         rewritten, or even listed — pytest asserts byte-identity across
-        an insert. The pre-r10 code rewrote the ENTIRE graph for any
-        batch: at 100 TB, a 100-row insert paid a full-layout rewrite.
-        With hash-sharding a batch of ≳ num_shards ids still touches
-        every shard (by design — inserts spread), but small CDC
-        micro-batches and single-id upserts now cost one shard."""
+        an insert. With hash-sharding a batch of ≳ num_shards ids still
+        touches every shard (by design — inserts spread), but small CDC
+        micro-batches and single-id upserts cost one shard.
+
+        JOB PLAN. One planning collect joins the batch's (shard, vec_id)
+        to the distinct tombstones and returns, per touched shard, how
+        many inserted ids are tombstoned. One graph write stages the
+        touched shards. Everything else is driver-side: row counts come
+        from the parquet footers of the files just written, and every
+        index read uses a known schema, so no inference job runs.
+        Tombstones are rewritten only on overlap. When no inserted id is
+        tombstoned, the tombstone set and every shard's tombstone count
+        are unchanged: the commit keeps ``tombstones/`` as it is and
+        reuses the validated cached counts. Otherwise (an upsert of
+        tombstoned ids) the surviving set is written once and only the
+        touched shards are recounted against the staged graph; the
+        tombstones this insert clears are exactly the re-inserted ids,
+        which hash to touched shards, so untouched shards' counts
+        carry over."""
+        from neurondb_spark.data_management import (
+            footer_columns,
+            footer_rows,
+            read_tombstones,
+        )
+
         spark = df_new.sparkSession
         meta = self.meta
         msh = int(meta["num_shards"])
         met, mm = meta["metric"], int(meta["m"])
         efc, sd = int(meta["ef_construction"]), int(meta["seed"])
         data_path = os.path.join(self.path, "data")
-
-        touched = sorted(
-            int(r["shard"])
-            for r in df_new.select(
-                F.pmod(F.hash(F.col(meta["id_col"])), F.lit(msh))
-                .cast("int").alias("shard")
-            ).distinct().collect()
-        )  # bounded by num_shards
-        if not touched:
-            # Empty batch: nothing to stage. Without this, the scoped
-            # write below stages a zero-row partitionBy dir (only
-            # _SUCCESS) and the pre-commit schema read fails with
-            # UNABLE_TO_INFER_SCHEMA (r10 ADVICE — the pre-r10
-            # full-rewrite path handled empty batches implicitly).
-            return self
-
-        old_all = spark.read.parquet(data_path)
-        legacy = "node" not in old_all.columns
-        if legacy:  # legacy layout: build order = id order — migrate by
-            # rewriting EVERY shard (a scoped write would leave the
-            # untouched shards on the old schema: mixed-schema parquet)
-            from pyspark.sql.window import Window
-
-            touched = list(range(msh))
-            old = old_all.withColumn(
-                "node",
-                F.row_number().over(
-                    Window.partitionBy("shard").orderBy("vec_id")
-                ) - 1,
-            )
-        else:
-            old = old_all.where(
-                F.col("shard").isin(touched)  # partition-pruned scan
-            )
-        scoped = len(touched) < msh
-        old = old.select(
-            "shard", "node", "vec_id", "vector", "level", "is_entry", "adj",
-            F.lit(False).alias("_new"),
-        )
         new = df_new.select(
             F.pmod(F.hash(F.col(meta["id_col"])), F.lit(msh)).cast("int").alias("shard"),
             F.lit(-1).alias("node"),
@@ -675,6 +669,48 @@ class HNSWIndex:
             F.lit(False).alias("is_entry"),
             F.lit(None).cast("string").alias("adj"),
             F.lit(True).alias("_new"),
+        )
+
+        tomb = self._tombstones(spark)
+        keys = new.select("shard", "vec_id")
+        if tomb is not None:
+            keys = keys.join(
+                tomb.withColumn("_dead", F.lit(1)), "vec_id", "left"
+            )
+        else:
+            keys = keys.withColumn("_dead", F.lit(None).cast("int"))
+        overlap = {
+            int(r["shard"]): int(r["n"])
+            for r in keys.groupBy("shard")
+            .agg(F.count("_dead").alias("n")).collect()
+        }  # bounded by num_shards
+        touched = sorted(overlap)
+        if not touched:
+            # Empty batch: nothing to stage (a zero-row partitionBy
+            # write holds no data file, and the commit refuses it).
+            return self
+
+        cols = footer_columns(data_path)
+        if cols is not None and "node" not in cols:  # legacy layout: build order = id order — migrate by
+            # rewriting EVERY shard (a scoped write would leave the
+            # untouched shards on the old schema: mixed-schema parquet)
+            from pyspark.sql.window import Window
+
+            touched = list(range(msh))
+            old = spark.read.parquet(data_path).withColumn(
+                "node",
+                F.row_number().over(
+                    Window.partitionBy("shard").orderBy("vec_id")
+                ) - 1,
+            )
+        else:
+            old = spark.read.schema(_GRAPH_SCHEMA).parquet(data_path).where(
+                F.col("shard").isin(touched)  # partition-pruned scan
+            )
+        scoped = len(touched) < msh
+        old = old.select(
+            "shard", "node", "vec_id", "vector", "level", "is_entry", "adj",
+            F.lit(False).alias("_new"),
         )
 
         def _ins(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -710,128 +746,69 @@ class HNSWIndex:
                     g.extend(nvecs, nids)
             return g.rows(shard)
 
-        merged = old.unionByName(new)
         tmp = os.path.join(self.path, "data_tmp")
         (
-            merged.groupBy("shard")
+            old.unionByName(new).groupBy("shard")
             .applyInPandas(_ins, _GRAPH_SCHEMA)
             .write.mode("overwrite").partitionBy("shard").parquet(tmp)
         )
-        # Stage the post-insert tombstone set: tombstones matching
-        # just-inserted ids are cleared, so delete-then-reinsert
-        # resurrects the row instead of the surviving tombstone hiding
-        # the new node (and the next vacuum erasing it for good).
-        tomb_action = "keep"
-        tomb_path = os.path.join(self.path, "tombstones")
-        inserted_ids = df_new.select(
-            F.col(meta["id_col"]).cast("long").alias("vec_id")
-        )
-        surviving = None
-        if os.path.isdir(tomb_path):
-            surviving = (
-                spark.read.parquet(tomb_path)
-                .select("vec_id").distinct()
-                .join(inserted_ids, "vec_id", "left_anti")
-            )
-            if surviving.isEmpty():
-                tomb_action, surviving = "clear", None
-            else:
-                tomb_action = "replace"
-                surviving.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(self.path, "tombstones_tmp")
-                )
         # Everything Spark runs is done BEFORE the commit point: the
-        # staged meta (row count + per-shard counts over the STAGED
-        # graph) rides in the journal, so the roll-forward is pure
-        # renames + one small file write — re-runnable from any crash.
-        # Scoped inserts count only the touched shards (old pruned scan
-        # + staged tmp); untouched shards contribute their prior total.
+        # staged meta (row count + per-shard tombstone counts) rides in
+        # the journal, so the roll-forward is pure renames + one small
+        # file write — re-runnable from any crash.
         staged = dict(self.meta)
-        tmp_count = spark.read.parquet(tmp).count()
-        prior_total = self.meta.get("total_rows")
-        if scoped and prior_total is not None:
-            old_touched = old.count()  # partition-pruned, column-pruned
-            staged["total_rows"] = int(prior_total) - old_touched + tmp_count
-        elif scoped:
-            staged["total_rows"] = tmp_count + old_all.where(
-                ~F.col("shard").isin(touched)
-            ).count()
-        else:
-            staged["total_rows"] = tmp_count
-        if tomb_action == "replace" and scoped:
-            # Untouched shards' tombstone counts are INVARIANT under a
-            # scoped insert: their graph rows are unchanged, and the
-            # tombstones this insert clears are exactly the re-inserted
-            # ids — which hash to touched shards by definition. So keep
-            # the validated prior counts for untouched shards and
-            # recount only the touched shards against the staged graph;
-            # no job ever reads the untouched partitions.
-            prior_counts = self._tomb_counts(spark)  # sig-validated
-            surv = spark.read.parquet(
-                os.path.join(self.path, "tombstones_tmp")
-            ).select("vec_id").distinct()
-            touched_counts = {
-                int(r["shard"]): int(r["n"])
-                for r in spark.read.parquet(tmp).select("shard", "vec_id")
-                .join(surv, "vec_id", "left_semi")
-                .groupBy("shard").agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            counts = {
-                s: n for s, n in prior_counts.items() if s not in set(touched)
-            }
-            counts.update(touched_counts)
+        tomb_action = "keep"
+        if sum(overlap.values()):
+            # Tombstones matching just-inserted ids are cleared, so
+            # delete-then-reinsert resurrects the row instead of the
+            # surviving tombstone hiding the new node (and the next
+            # vacuum erasing it for good).
+            tomb_tmp = os.path.join(self.path, "tombstones_tmp")
+            tomb.join(new.select("vec_id"), "vec_id", "left_anti").coalesce(
+                1
+            ).write.mode("overwrite").parquet(tomb_tmp)
+            if footer_rows(tomb_tmp):
+                tomb_action = "replace"
+                counts = {
+                    str(s): n for s, n in
+                    (self._tomb_counts(spark) if scoped else {}).items()
+                    if s not in touched
+                }
+                counts.update(_shard_tomb_counts(
+                    spark.read.schema(_GRAPH_SCHEMA).parquet(tmp),
+                    read_tombstones(spark, tomb_tmp, "vec_id", "hnsw"),
+                ))
+                staged["tomb_by_shard"] = counts
+                staged["n_tombstones"] = sum(counts.values())
+            else:  # the fixup drops the counts with the directory
+                tomb_action = "clear"
+        elif tomb is not None:
+            counts = self._tomb_counts(spark)  # sig-validated, unchanged
             staged["tomb_by_shard"] = {str(s): n for s, n in counts.items()}
             staged["n_tombstones"] = sum(counts.values())
-        else:
-            if scoped:
-                post_data = (
-                    spark.read.parquet(tmp).select("shard", "vec_id")
-                    .unionByName(
-                        old_all.where(~F.col("shard").isin(touched))
-                        .select("shard", "vec_id")
-                    )
-                )
+        # Rows the commit keeps outside the staged shards. A scoped
+        # insert subtracts the touched shards' old footer counts from the
+        # prior total, so no untouched shard file is opened.
+        kept = 0
+        if scoped:
+            prior_total = self.meta.get("total_rows")
+            if prior_total is not None:
+                kept = int(prior_total) - footer_rows(*(
+                    os.path.join(data_path, f"shard={s}") for s in touched
+                ))
             else:
-                post_data = spark.read.parquet(tmp)
-            self._stage_tomb_counts(
-                spark, staged,
-                spark.read.parquet(
-                    os.path.join(self.path, "tombstones_tmp")
-                ).select("vec_id").distinct()
-                if tomb_action == "replace" else None,
-                data=post_data,
-            )
+                kept = footer_rows(*(
+                    os.path.join(data_path, f"shard={s}")
+                    for s in range(msh) if s not in touched
+                ))
         self._commit_dml(
-            spark, "insert", staged, tomb_action,
+            staged, tomb_action, kept_rows=kept,
             partitions=("shard", touched) if scoped else None,
         )
         return self
 
-    def _stage_tomb_counts(self, spark: SparkSession, staged: dict,
-                           tomb: DataFrame | None, data: DataFrame) -> None:
-        """Fill staged meta's tomb_by_shard / n_tombstones from the
-        post-commit tombstone set counted against the post-commit graph
-        rows (column-pruned semi-join — a tombstone for an id not in the
-        graph can never surface as a candidate). ``tomb`` None means the
-        committed state has no tombstones."""
-        if tomb is None:
-            staged.pop("tomb_by_shard", None)
-            staged.pop("tomb_sig", None)
-            staged["n_tombstones"] = 0
-            return
-        counts = {
-            str(r["shard"]): int(r["n"])
-            for r in data.select("shard", "vec_id")
-            .join(tomb, "vec_id", "left_semi")
-            .groupBy("shard").agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        staged["tomb_by_shard"] = counts
-        staged["n_tombstones"] = sum(counts.values())
-
-    def _commit_dml(self, spark: SparkSession, op: str, staged_meta: dict,
-                    tomb_action: str, partitions: tuple | None = None) -> None:
+    def _commit_dml(self, staged_meta: dict, tomb_action: str,
+                    kept_rows: int = 0, partitions: tuple | None = None) -> None:
         """COMMIT POINT for insert/vacuum — delegates to the SHARED
         journal-rename protocol all three AMs now use
         (data_management.dml_commit, r9 verdict #6; originally the r8
@@ -843,10 +820,22 @@ class HNSWIndex:
         finishes the swap through the registered ``hnsw_tomb_sig`` fixup
         (tomb_sig recomputed from the FINAL tombstones dir), and a crash
         anywhere after the journal is repaired by ``load()``. A crash
-        BEFORE it leaves the live index byte-identical."""
-        from neurondb_spark.data_management import write_dml_journal
+        BEFORE it leaves the live index byte-identical.
 
-        spark.read.parquet(os.path.join(self.path, "data_tmp")).schema
+        ``total_rows`` is ``kept_rows`` (live rows the commit leaves in
+        place) plus the staged rows, read from ``data_tmp``'s footers.
+        That read is also the staging check: a ``data_tmp`` with no data
+        file or an unreadable footer raises before the journal exists."""
+        from neurondb_spark.data_management import (
+            footer_rows,
+            parquet_files,
+            write_dml_journal,
+        )
+
+        tmp = os.path.join(self.path, "data_tmp")
+        if not parquet_files(tmp):
+            raise ValueError(f"neurondb: no parquet data file under {tmp!r}")
+        staged_meta["total_rows"] = kept_rows + footer_rows(tmp)
         write_dml_journal(
             self.path, staged_meta, tombstones=tomb_action,
             swap_data=True, meta_fixup="hnsw_tomb_sig",
@@ -970,26 +959,23 @@ class HNSWIndex:
             self.meta.pop("tomb_sig", None)
             self.meta["n_tombstones"] = 0
         else:
-            tomb = spark.read.parquet(tomb_path).select("vec_id").distinct()
-            data = spark.read.parquet(os.path.join(self.path, "data"))
-            counts = {
-                str(r["shard"]): int(r["n"])
-                for r in data.select("shard", "vec_id")
-                .join(tomb, "vec_id", "left_semi")
-                .groupBy("shard").agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            counts = _shard_tomb_counts(
+                spark.read.schema(_GRAPH_SCHEMA).parquet(
+                    os.path.join(self.path, "data")
+                ),
+                self._tombstones(spark),
+            )
             self.meta["tomb_by_shard"] = counts
             self.meta["n_tombstones"] = sum(counts.values())
             self.meta["tomb_sig"] = sig
         atomic_write_json(os.path.join(self.path, "meta.json"), self.meta)
 
     def _tombstones(self, spark: SparkSession) -> DataFrame | None:
-        p = os.path.join(self.path, "tombstones")
-        if not os.path.isdir(p):
-            return None
-        schema = T.StructType([T.StructField("vec_id", T.LongType())])
-        return spark.read.schema(schema).parquet(p).select("vec_id").distinct()
+        from neurondb_spark.data_management import read_tombstones
+
+        return read_tombstones(
+            spark, os.path.join(self.path, "tombstones"), "vec_id", "hnsw"
+        )
 
     def vacuum(self, spark: SparkSession) -> "HNSWIndex":
         """VACUUM analog: rebuild every shard's graph from its live rows
@@ -1005,7 +991,7 @@ class HNSWIndex:
         m = self.meta
         data_path = os.path.join(self.path, "data")
         live = (
-            spark.read.parquet(data_path)
+            spark.read.schema(_GRAPH_SCHEMA).parquet(data_path)
             .join(tomb, "vec_id", "left_anti")
             .select(
                 F.col("vec_id").alias(m["id_col"]),
@@ -1018,9 +1004,7 @@ class HNSWIndex:
         )
         tmp = os.path.join(self.path, "data_tmp")
         graph.write.mode("overwrite").partitionBy("shard").parquet(tmp)
-        staged = dict(self.meta)
-        staged["total_rows"] = spark.read.parquet(tmp).count()
-        self._stage_tomb_counts(spark, staged, None,
-                                data=spark.read.parquet(tmp))
-        self._commit_dml(spark, "vacuum", staged, "clear")
+        # the hnsw_tomb_sig fixup drops the tombstone counts once the
+        # cleared directory is gone
+        self._commit_dml(dict(self.meta), "clear")
         return self

@@ -33,7 +33,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from neurondb_spark.data_management import atomic_write_json
+from neurondb_spark.data_management import (
+    atomic_write_json,
+    footer_rows,
+    read_tombstones,
+)
 from neurondb_spark.functions.distance import distance
 
 
@@ -127,7 +131,7 @@ class IVFIndex:
         df.write.mode("overwrite").partitionBy("cluster_id").parquet(
             os.path.join(path, "data")
         )
-        total = df.sparkSession.read.parquet(os.path.join(path, "data")).count()
+        total = footer_rows(os.path.join(path, "data"))
         meta = {
             "version": 1,
             "method": "ivf",
@@ -397,9 +401,7 @@ class IVFIndex:
         )
         prior = self.meta.get("total_rows")
         if prior is None:  # legacy meta without the counter: seed it once
-            self.meta["total_rows"] = spark.read.parquet(
-                os.path.join(self.path, "data")
-            ).count()
+            self.meta["total_rows"] = footer_rows(os.path.join(self.path, "data"))
         else:
             self.meta["total_rows"] = int(prior) + int(n_new)
         atomic_write_json(
@@ -442,17 +444,10 @@ class IVFIndex:
     def _tombstones(self, spark: SparkSession) -> DataFrame | None:
         """Tombstone set keyed by the column recorded at delete time
         (meta['tombstone_id_col']; 'vec_id' for pre-recording indexes)."""
-        p = os.path.join(self.path, "tombstones")
-        if not os.path.isdir(p):
-            return None
-        id_col = self.meta.get("tombstone_id_col", "vec_id")
-        tomb = spark.read.parquet(p)
-        if id_col not in tomb.columns:
-            raise ValueError(
-                f"neurondb: ivf tombstone files at {p!r} lack the "
-                f"recorded key column {id_col!r} (have {tomb.columns})"
-            )
-        return tomb.select(id_col).distinct()
+        return read_tombstones(
+            spark, os.path.join(self.path, "tombstones"),
+            self.meta.get("tombstone_id_col", "vec_id"), "ivf",
+        )
 
     def vacuum(self, spark: SparkSession, id_col: str | None = None) -> "IVFIndex":
         """VACUUM analog: rewrite the lists without tombstoned rows (the
@@ -478,13 +473,12 @@ class IVFIndex:
                 f"tombstone key recorded at delete time ({recorded!r})"
             )
         id_col = recorded
-        data = os.path.join(self.path, "data")
-        live = spark.read.parquet(data).join(tomb, id_col, "left_anti")
+        live = self._read_data(spark).join(tomb, id_col, "left_anti")
         tmp = os.path.join(self.path, "data_tmp")
         live.write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
         staged = dict(self.meta)
         staged.pop("tombstone_id_col", None)  # set fully applied
-        staged["total_rows"] = spark.read.parquet(tmp).count()
+        staged["total_rows"] = footer_rows(tmp)
         dml_commit(
             self.path, {"meta": staged, "centroids": self.centroids},
             tombstones="clear", swap_data=True,
@@ -506,9 +500,7 @@ class IVFIndex:
         compact_partitioned(
             spark, os.path.join(self.path, "data"), "cluster_id"
         )
-        self.meta["total_rows"] = spark.read.parquet(
-            os.path.join(self.path, "data")
-        ).count()
+        self.meta["total_rows"] = footer_rows(os.path.join(self.path, "data"))
         atomic_write_json(
             os.path.join(self.path, "meta.json"),
             {"meta": self.meta, "centroids": self.centroids},

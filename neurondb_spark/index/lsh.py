@@ -84,15 +84,15 @@ class LSHIndex:
         seed: int = 42,
         metric: str = "cosine",
     ) -> "LSHIndex":
-        from neurondb_spark.data_management import atomic_write_json
+        from neurondb_spark.data_management import atomic_write_json, footer_rows
 
         planes = _hyperplanes(dim, nbits, seed)
         sig = signature_expr(vec_col, planes)
         df.withColumn("bucket", sig).write.mode("overwrite").partitionBy(
             "bucket"
         ).parquet(os.path.join(path, "data"))
-        # row count recorded at build time (one metadata-only scan of the
-        # just-written parquet) so query-time routing never runs a count job
+        # row count recorded at build time (read from the just-written
+        # footers) so query-time routing never runs a count job
         written = df.sparkSession.read.parquet(os.path.join(path, "data"))
         meta = {
             "version": 1,
@@ -103,7 +103,7 @@ class LSHIndex:
             "nbits": nbits,
             "seed": seed,
             "planes": planes,
-            "total_rows": written.count(),
+            "total_rows": footer_rows(os.path.join(path, "data")),
             "built_at": time.time(),
             # cached layout schema: search reads with an explicit schema,
             # skipping the per-query footer/inference job (IVF discipline)
@@ -307,7 +307,7 @@ class LSHIndex:
         serialization — see IVFIndex.insert.)"""
         from pyspark.sql import types as T
 
-        from neurondb_spark.data_management import atomic_write_json
+        from neurondb_spark.data_management import atomic_write_json, footer_rows
 
         spark = df_new.sparkSession
         sj = self.meta.get("data_schema")
@@ -332,9 +332,7 @@ class LSHIndex:
         ).parquet(os.path.join(self.path, "data"))
         prior = self.meta.get("total_rows")
         if prior is None:  # legacy meta without the counter: seed it once
-            self.meta["total_rows"] = spark.read.parquet(
-                os.path.join(self.path, "data")
-            ).count()
+            self.meta["total_rows"] = footer_rows(os.path.join(self.path, "data"))
         else:
             self.meta["total_rows"] = int(prior) + int(n_new)
         self._refresh_manifest()  # append added files to some buckets
@@ -370,17 +368,12 @@ class LSHIndex:
             atomic_write_json(os.path.join(self.path, "meta.json"), self.meta)
 
     def _tombstones(self, spark: SparkSession) -> DataFrame | None:
-        p = os.path.join(self.path, "tombstones")
-        if not os.path.isdir(p):
-            return None
-        id_col = self.meta.get("tombstone_id_col", "vec_id")
-        tomb = spark.read.parquet(p)
-        if id_col not in tomb.columns:
-            raise ValueError(
-                f"neurondb: lsh tombstone files at {p!r} lack the "
-                f"recorded key column {id_col!r} (have {tomb.columns})"
-            )
-        return tomb.select(id_col).distinct()
+        from neurondb_spark.data_management import read_tombstones
+
+        return read_tombstones(
+            spark, os.path.join(self.path, "tombstones"),
+            self.meta.get("tombstone_id_col", "vec_id"), "lsh",
+        )
 
     def _apply_tombstones(self, spark: SparkSession, df: DataFrame) -> DataFrame:
         tomb = self._tombstones(spark)
@@ -405,12 +398,11 @@ class LSHIndex:
         from neurondb_spark.data_management import (
             atomic_write_json,
             compact_partitioned,
+            footer_rows,
         )
 
         compact_partitioned(spark, os.path.join(self.path, "data"), "bucket")
-        self.meta["total_rows"] = spark.read.parquet(
-            os.path.join(self.path, "data")
-        ).count()
+        self.meta["total_rows"] = footer_rows(os.path.join(self.path, "data"))
         self._refresh_manifest()  # the compacted layout's file set
         atomic_write_json(os.path.join(self.path, "meta.json"), self.meta)
         return self
@@ -426,20 +418,19 @@ class LSHIndex:
         reconcile) are staged, then ONE atomic journal rename swaps them
         in and clears tombstones; a crash at any point is repaired by
         ``load()``."""
-        from neurondb_spark.data_management import dml_commit
+        from neurondb_spark.data_management import dml_commit, footer_rows
 
         tomb = self._tombstones(spark)
         if tomb is None:
             return self
-        data = os.path.join(self.path, "data")
-        live = spark.read.parquet(data).join(
+        live = self._read_data(spark).join(
             tomb, self.meta.get("tombstone_id_col", "vec_id"), "left_anti"
         )
         tmp = os.path.join(self.path, "data_tmp")
         live.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
         staged = dict(self.meta)
         staged.pop("tombstone_id_col", None)
-        staged["total_rows"] = spark.read.parquet(tmp).count()
+        staged["total_rows"] = footer_rows(tmp)
         # relative file names survive the data_tmp -> data swap rename
         staged["bucket_files"] = _bucket_manifest(tmp)
         dml_commit(self.path, staged, tombstones="clear", swap_data=True)

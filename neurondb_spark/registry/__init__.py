@@ -68,6 +68,11 @@ REWRITTEN: dict[str, int] = {
     "merge_on_read_rows": 17, "merge_point_lookup": 17,
     "merge_multi_lookup": 17, "merge_time_travel": 17,
     "merge_vacuum_rows": 17,
+    # Index tombstones read with a known schema, HNSW insert planned by one
+    # collect with the tombstone rewrite only on overlap, row counts read
+    # from parquet footers (hnsw_insert_delete_knn and stream_ivf_cdc_knn
+    # are listed above for the same round).
+    "ivf_insert_delete_probe": 17, "lsh_insert_delete_knn": 17,
 }
 
 

@@ -10,10 +10,8 @@ from pyspark.sql import functions as F
 
 from neurondb_spark import oracle as O
 from neurondb_spark.functions.text import (
-    TOKEN_SPLIT_RE,
     chunk_text,
     detect_language,
-    doc_fingerprint,
     quality_score,
     sql_doc_fingerprint,
     sql_tokenize,
@@ -30,7 +28,7 @@ from neurondb_spark.operators.dedup import (
     simhash_neardup_pairs,
     substring_dup_stats,
 )
-from neurondb_spark.registry.common import COMPILE_DIM, EMB_DIM, t, tp
+from neurondb_spark.registry.common import EMB_DIM, t, tp
 from neurondb_spark.registry.fixtures import fixture
 
 NUM_MINHASHES = 8

@@ -23,6 +23,18 @@ DEFAULTS = {
 }
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 24g. A fixed 24g heap on a
+    smaller host lets the JVM grow past what the machine has, and the
+    kernel's OOM killer ends it. ``NEURONDB_SPARK_DRIVER_MEM`` overrides
+    this."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf: old default
+        return "24g"
+    return f"{max(1, min(24, ram // 2 // 2**30))}g"
+
+
 def get_spark(
     app: str = "neurondb-spark",
     shuffle_partitions: int | None = None,
@@ -45,7 +57,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("NEURONDB_SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("NEURONDB_SPARK_DRIVER_MEM")
+                or _default_driver_mem())
         .config("spark.ui.enabled", "false")
     )
     for k, v in DEFAULTS.items():

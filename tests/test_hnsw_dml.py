@@ -10,7 +10,21 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.conftest import SF_DIR  # noqa: E402
+from tests.conftest import SF_DIR, jobs_run  # noqa: E402
+
+# Every test here also runs under production session configs (AQE and
+# whole-stage codegen on) in scripts/precommit.sh.
+pytestmark = pytest.mark.prodconf
+
+# Jobs of one HNSW insert of fresh ids over an existing tombstone set,
+# touching every shard: one planning collect plus one graph write; and of
+# one delete: the tombstone append plus the per-shard recount. Keyed by
+# spark.sql.adaptive.enabled: under AQE every shuffle is a job of its own.
+# Measured: insert 3 / 5 (6 in perfbench's index_churn), delete 3 / 5.
+# Before footer counts and known-schema reads, index_churn's insert ran
+# 24 jobs and its delete 7, under AQE.
+HNSW_INSERT_JOB_BUDGET = {"false": 3, "true": 6}
+HNSW_DELETE_JOB_BUDGET = {"false": 3, "true": 5}
 
 
 @pytest.fixture(scope="module")
@@ -582,3 +596,98 @@ def test_insert_empty_batch_is_noop(spark, emb, qv):
     )
     assert after == before  # no file touched, no journal left behind
     assert not os.path.exists(os.path.join(path, "dml_commit.json"))
+
+
+def _dir_digest(d):
+    """sha256 over the names and bytes of the files in ``d`` (not nested)."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for name in sorted(os.listdir(d)):
+        p = os.path.join(d, name)
+        if os.path.isfile(p):
+            h.update(name.encode())
+            with open(p, "rb") as fh:
+                h.update(fh.read())
+    return h.hexdigest()
+
+
+def test_insert_and_delete_fit_job_budgets(spark, emb, qv):
+    """A delete is the tombstone append plus one recount; an insert of
+    fresh ids over tombstones, touching every shard, is one planning
+    collect plus one graph write: no schema-inference job, no count job
+    and no tombstone rewrite."""
+    from neurondb_spark.index.hnsw import HNSWIndex
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    sub = emb.where(F.col("vec_id") < 240)
+    path = os.path.join(tempfile.mkdtemp(prefix="hnsw_budget_"), "idx")
+    idx = HNSWIndex.build(
+        sub.where(F.col("vec_id") % 2 == 0), "embedding", "vec_id", path,
+        num_shards=4, m=8, ef_construction=32, seed=7,
+    )
+    _, jobs = jobs_run(spark, lambda: idx.delete(spark, [0, 2, 4, 6, 8, 10]))
+    print(f"hnsw delete jobs (aqe={aqe}): {jobs}")
+    assert jobs <= HNSW_DELETE_JOB_BUDGET[aqe], jobs
+    fresh = sub.where(F.col("vec_id") % 2 == 1)
+    _, jobs = jobs_run(spark, lambda: idx.insert(fresh))
+    print(f"hnsw insert jobs (aqe={aqe}): {jobs}")
+    assert jobs <= HNSW_INSERT_JOB_BUDGET[aqe], jobs
+    assert idx.meta["total_rows"] == sub.count() == 240
+    live = sub.where(~F.col("vec_id").isin(0, 2, 4, 6, 8, 10))
+    got = [r["vec_id"] for r in idx.search(spark, qv, k=5, ef_search=240).collect()]
+    assert got == _brute_ids(live, qv, 5)
+
+
+def test_fresh_insert_keeps_tombstones_byte_identical(spark, emb, qv):
+    """An insert none of whose ids is tombstoned leaves the tombstone set
+    as it is: ``tombstones/`` is byte-identical afterwards, the cached
+    per-shard counts are unchanged, and they still equal a recount."""
+    from neurondb_spark.index.hnsw import HNSWIndex
+
+    sub = emb.where(F.col("vec_id") < 200)
+    path = os.path.join(tempfile.mkdtemp(prefix="hnsw_keeptomb_"), "idx")
+    idx = HNSWIndex.build(
+        sub.where(F.col("vec_id") % 2 == 0), "embedding", "vec_id", path,
+        num_shards=4, m=8, ef_construction=32, seed=7,
+    )
+    dead = [v for v in _brute_ids(sub, qv, 30) if v % 2 == 0][:8]
+    idx.delete(spark, dead)
+    tomb_dir = os.path.join(path, "tombstones")
+    before = _dir_digest(tomb_dir)
+    counts = dict(idx.meta["tomb_by_shard"])
+    assert sum(counts.values()) == len(dead)
+    idx.insert(sub.where(F.col("vec_id") % 2 == 1))
+    assert _dir_digest(tomb_dir) == before
+    assert idx.meta["tomb_by_shard"] == counts
+    assert idx.meta["n_tombstones"] == len(dead)
+    fresh = HNSWIndex.load(path)
+    fresh._refresh_tomb_meta(spark)
+    assert fresh.meta["tomb_by_shard"] == counts
+    got = [r["vec_id"] for r in idx.search(spark, qv, k=5, ef_search=200).collect()]
+    assert got == _brute_ids(sub, qv, 5, exclude=dead)
+
+
+def test_commit_refuses_staging_without_readable_data(spark, emb):
+    """The commit reads the staged row count from data_tmp's footers; a
+    data_tmp holding no parquet file, or one whose footer does not parse,
+    raises before the journal is written and leaves the index as it was."""
+    from neurondb_spark.index.hnsw import HNSWIndex
+
+    path = os.path.join(tempfile.mkdtemp(prefix="hnsw_nostage_"), "idx")
+    idx = HNSWIndex.build(
+        emb.where(F.col("vec_id") < 60), "embedding", "vec_id", path,
+        num_shards=2, m=8, ef_construction=32, seed=7,
+    )
+    meta = dict(idx.meta)
+    tmp = os.path.join(path, "data_tmp")
+    os.makedirs(os.path.join(tmp, "shard=0"))
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+    with pytest.raises(ValueError, match="no parquet data file"):
+        idx._commit_dml(dict(meta), "keep")
+    with open(os.path.join(tmp, "shard=0", "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(ValueError, match="unreadable parquet footer"):
+        idx._commit_dml(dict(meta), "keep")
+    assert not os.path.exists(os.path.join(path, "dml_commit.json"))
+    assert HNSWIndex.load(path).meta == meta

@@ -275,6 +275,29 @@ def test_lsh_dml_lifecycle(spark):
 
 
 @pytest.mark.prodconf
+@pytest.mark.parametrize("kind", ["ivf", "lsh"])
+def test_tombstones_lacking_recorded_key_raise(spark, kind):
+    """Tombstones are read with the known single-column schema, under which
+    a file without the recorded key column would read as nulls and the
+    anti-join would silently keep soft-deleted rows; such a directory
+    still raises, on every search route."""
+    emb = _emb(spark).select("vec_id", "embedding").where(F.col("vec_id") < 120)
+    path = os.path.join(tempfile.mkdtemp(prefix=f"{kind}_tombkey_"), "idx")
+    if kind == "ivf":
+        idx = IVFIndex.build(emb, "embedding", path, nlists=4)
+    else:
+        idx = LSHIndex.build(emb, "embedding", path, dim=DIM, nbits=4)
+    spark.createDataFrame([(1,)], "other_id long").coalesce(1).write.parquet(
+        os.path.join(path, "tombstones")
+    )
+    q = _query(spark)
+    with pytest.raises(ValueError, match="lack the recorded key column 'vec_id'"):
+        idx.search(spark, q, k=5)
+    with pytest.raises(ValueError, match="lack the recorded key column 'vec_id'"):
+        idx.search_batch(spark, [(1, q)], k=5)
+
+
+@pytest.mark.prodconf
 @pytest.mark.parametrize("seed", [1234, 271828, 31415])
 def test_lsh_clustered_recall_gate_has_teeth(spark, seed):
     """r9 verdict #4: the planted-cluster recall floor (0.8 at
