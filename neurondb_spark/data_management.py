@@ -81,6 +81,68 @@ def footer_columns(path: str) -> list[str] | None:
     return _footer(files[0]).schema.to_arrow_schema().names if files else None
 
 
+def _as_nullable(t):
+    """Spark's ``DataType.asNullable`` on a schema JSON node: every field
+    nullable, every array and map value nullable, at every depth."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {**t, "fields": [{**f, "nullable": True, "type": _as_nullable(f["type"])}
+                                for f in t["fields"]]}
+    if t["type"] == "array":
+        return {**t, "containsNull": True,
+                "elementType": _as_nullable(t["elementType"])}
+    if t["type"] == "map":
+        return {**t, "valueContainsNull": True,
+                "keyType": _as_nullable(t["keyType"]),
+                "valueType": _as_nullable(t["valueType"])}
+    return t
+
+
+def layout_schema(path: str, part_col: str) -> str:
+    """The schema JSON that ``spark.read.parquet(path)`` infers for a layout
+    written with ``partitionBy(part_col)``, without the job inference
+    runs. The data columns come from the Spark schema in the first data
+    file's footer, made nullable as a file read makes them; ``part_col``
+    is appended with the type Spark's partition inference gives integer
+    directory values: int when every value fits in 32 bits, else bigint;
+    null partitions do not count, and only null ones give void. A layout
+    with no data file, a footer Spark did not write, or a non-integer
+    partition value raises ValueError."""
+    import json
+
+    from pyspark.sql import types as T
+
+    files = parquet_files(path)
+    if not files:
+        raise ValueError(f"neurondb: no parquet data file under {path!r}")
+    raw = (_footer(files[0]).metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    if raw is None:
+        raise ValueError(f"neurondb: {files[0]!r} holds no Spark schema")
+    prefix = part_col + "="
+    try:
+        values = {
+            int(d[len(prefix):])
+            for f in files
+            for d in os.path.relpath(f, path).split(os.sep)[:-1]
+            if d.startswith(prefix) and d != prefix + "__HIVE_DEFAULT_PARTITION__"
+        }
+    except ValueError as e:
+        raise ValueError(
+            f"neurondb: non-integer {part_col!r} partition under {path!r}: {e}"
+        ) from e
+    if not values:
+        ptype = T.NullType()
+    elif all(-(2 ** 31) <= v < 2 ** 31 for v in values):
+        ptype = T.IntegerType()
+    else:
+        ptype = T.LongType()
+    schema = T.StructType.fromJson(_as_nullable(json.loads(raw)))
+    return schema.add(part_col, ptype).json()
+
+
 def read_tombstones(spark: SparkSession, path: str, key_col: str,
                     am: str) -> DataFrame | None:
     """An index's distinct tombstone keys, or None when ``path`` does not

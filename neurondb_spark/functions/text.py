@@ -32,6 +32,15 @@ def tokenize(text) -> Column:
     return F.filter(toks, lambda t: t != "")
 
 
+def let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row. A lambda body
+    re-evaluates every expression it inlines once per element (Catalyst's
+    common-subexpression elimination does not reach into lambdas), while
+    a lambda variable is bound once: pass a per-row array through here
+    before reading it inside a ``transform``."""
+    return F.transform(F.array(value), body)[0]
+
+
 def token_count(text) -> Column:
     """Whitespace/punct token count — pipeline op (north star)."""
     return F.size(tokenize(text))

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from neurondb_spark.data_management import (
     atomic_write_json,
     footer_rows,
+    layout_schema,
     read_tombstones,
 )
 from neurondb_spark.functions.distance import distance
@@ -100,10 +101,9 @@ class IVFIndex:
             "total_rows": total,
             "built_at": time.time(),
             # cached layout schema: search reads with an explicit schema,
-            # skipping the per-query parquet footer/inference job
-            "data_schema": df.sparkSession.read.parquet(
-                os.path.join(path, "data")
-            ).schema.json(),
+            # skipping the per-query parquet footer/inference job; taken
+            # from a written footer, so the build runs no inference job
+            "data_schema": layout_schema(os.path.join(path, "data"), "cluster_id"),
         }
         atomic_write_json(
             os.path.join(path, "meta.json"),
@@ -141,9 +141,7 @@ class IVFIndex:
             "dim": dim,
             "total_rows": total,
             "built_at": time.time(),
-            "data_schema": df.sparkSession.read.parquet(
-                os.path.join(path, "data")
-            ).schema.json(),
+            "data_schema": layout_schema(os.path.join(path, "data"), "cluster_id"),
         }
         atomic_write_json(
             os.path.join(path, "meta.json"),

@@ -30,6 +30,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from neurondb_spark.data_management import layout_schema
 from neurondb_spark.functions.distance import distance
 from neurondb_spark.index.ivf import IVFIndex
 from neurondb_spark.index.pq import PQCodebook, pq_search
@@ -91,9 +92,7 @@ class IVFPQIndex:
             "total_rows": total, "built_at": time.time(),
             # cached layout schema — search reads with it (no per-query
             # footer/inference job), same discipline as IVF/HNSW
-            "data_schema": df.sparkSession.read.parquet(
-                os.path.join(path, "data")
-            ).schema.json(),
+            "data_schema": layout_schema(os.path.join(path, "data"), "cluster_id"),
         }
         os.makedirs(path, exist_ok=True)
         cb.save(path)

@@ -84,16 +84,17 @@ class LSHIndex:
         seed: int = 42,
         metric: str = "cosine",
     ) -> "LSHIndex":
-        from neurondb_spark.data_management import atomic_write_json, footer_rows
+        from neurondb_spark.data_management import (
+            atomic_write_json,
+            footer_rows,
+            layout_schema,
+        )
 
         planes = _hyperplanes(dim, nbits, seed)
         sig = signature_expr(vec_col, planes)
         df.withColumn("bucket", sig).write.mode("overwrite").partitionBy(
             "bucket"
         ).parquet(os.path.join(path, "data"))
-        # row count recorded at build time (read from the just-written
-        # footers) so query-time routing never runs a count job
-        written = df.sparkSession.read.parquet(os.path.join(path, "data"))
         meta = {
             "version": 1,
             "method": "lsh",
@@ -103,11 +104,12 @@ class LSHIndex:
             "nbits": nbits,
             "seed": seed,
             "planes": planes,
+            # row count and layout schema read from the just-written
+            # footers: the build runs no count or inference job, and
+            # search reads with an explicit schema (IVF discipline)
             "total_rows": footer_rows(os.path.join(path, "data")),
             "built_at": time.time(),
-            # cached layout schema: search reads with an explicit schema,
-            # skipping the per-query footer/inference job (IVF discipline)
-            "data_schema": written.schema.json(),
+            "data_schema": layout_schema(os.path.join(path, "data"), "bucket"),
             # bucket -> data-file manifest: probes read only the named
             # files of their probed buckets (no per-query listing)
             "bucket_files": _bucket_manifest(os.path.join(path, "data")),

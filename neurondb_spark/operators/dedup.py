@@ -11,9 +11,9 @@ All hashing is md5-derived so Spark and a SQL oracle agree bit-for-bit
   inside a band bucket (shuffle key = (band, band_hash)) — never O(n²).
 - ngram_jaccard_pairs: blocked self-join + exact Jaccard on token n-gram
   sets.
-- simhash: 16-bit signature per doc via per-token md5 bit votes; pair
-  search blocks on max_hamming+1 disjoint signature segments (pigeonhole →
-  full recall).
+- simhash: signature of up to 60 bits (16 by default) per doc via
+  per-token md5 bit votes; pair search blocks on max_hamming+1 disjoint
+  signature segments (pigeonhole → full recall).
 - embedding_neardup_pairs: exact cosine threshold inside banded
   random-hyperplane LSH buckets (bands × band_bits, index/lsh.py planes).
 """
@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from neurondb_spark.functions.distance import cosine_similarity
-from neurondb_spark.functions.text import doc_fingerprint, tokenize
+from neurondb_spark.functions.text import doc_fingerprint, let, tokenize
 
 
 def _md5_long(c: Column) -> Column:
@@ -48,18 +48,22 @@ def exact_dedup(
 
 def shingles(text, n: int = 3) -> Column:
     """Word n-gram shingles as strings (dedup primitive). Documents shorter
-    than n tokens yield their full token join."""
-    toks = tokenize(text)
-    nt = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(nt - (n - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
+    than n tokens yield their full token join. The document is tokenized
+    once: the token array is bound (``let``), so each shingle's ``slice``
+    reads it instead of re-splitting the text."""
+
+    def _grams(toks: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
+        return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
+
+    return let(tokenize(text), _grams)
 
 
 def minhash_signature(text, num_hashes: int = 8, shingle_n: int = 3) -> Column:
     """MinHash signature: per hash i, min over shingles of
     md5_long(concat(shingle, '#', i)). Seeded by suffixing — identical in
-    SQL. Returns array<bigint> of length num_hashes."""
-    sh = shingles(text, shingle_n)
+    SQL. Returns array<bigint> of length num_hashes. The shingle array is
+    bound once (``let``) and read by all num_hashes transforms."""
 
     def _seeded(i: int):
         # closure, not default arg: pyspark passes (element, index) to
@@ -67,10 +71,12 @@ def minhash_signature(text, num_hashes: int = 8, shingle_n: int = 3) -> Column:
         suffix = F.lit(f"#{i}")
         return lambda s: _md5_long(F.concat(s, suffix))
 
-    sig = []
-    for i in range(num_hashes):
-        sig.append(F.array_min(F.transform(sh, _seeded(i))))
-    return F.array(*sig)
+    return let(
+        shingles(text, shingle_n),
+        lambda sh: F.array(
+            *[F.array_min(F.transform(sh, _seeded(i))) for i in range(num_hashes)]
+        ),
+    )
 
 
 def banded_signature_rows(

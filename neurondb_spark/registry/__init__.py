@@ -73,6 +73,12 @@ REWRITTEN: dict[str, int] = {
     # from parquet footers (hnsw_insert_delete_knn and stream_ivf_cdc_knn
     # are listed above for the same round).
     "ivf_insert_delete_probe": 17, "lsh_insert_delete_knn": 17,
+    # Token and shingle arrays bound once per document in shingles and
+    # minhash_signature (stream_lsh_neardup and the neardup_resolve rows
+    # are listed above for the same round).
+    "minhash_signatures": 17, "minhash_lsh_pairs": 17,
+    "ngram_jaccard_pairs": 17, "ngram_containment_pairs": 17,
+    "benchmark_decontaminate": 17,
 }
 
 

@@ -7,14 +7,18 @@ tests compare each operator against a brute-force all-pairs computation.
 
 from __future__ import annotations
 
+import hashlib
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from neurondb_spark.functions.text import _py_tokenize
 from neurondb_spark.operators.dedup import (
     embedding_neardup_pairs,
+    minhash_signature,
     ngram_jaccard_pairs,
+    shingles,
     simhash,
     simhash_neardup_pairs,
 )
@@ -220,3 +224,56 @@ def test_ngram_pairs_rejects_unknown_measure(spark):
         ngram_jaccard_pairs(
             docs, "text", "doc_id", threshold=0.5, measure="dice"
         )
+
+
+# null, empty, punctuation-only, fewer than n, exactly n and repeated tokens
+EDGE_TEXTS = [
+    None, "", "!!! ,,, ...", "one", "One two", "one, two; THREE",
+    "x x x x x", "  a b a b a b  ", " ".join(WORDS),
+]
+
+
+def _py_shingles(text, n):
+    if text is None:
+        return [None]
+    toks = _py_tokenize(text)
+    return [" ".join(toks[i:i + n]) for i in range(max(len(toks) - n + 1, 1))]
+
+
+def _py_minhash(text, num_hashes, n):
+    def md5_long(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    sh = _py_shingles(text, n)
+    if sh == [None]:
+        return [None] * num_hashes
+    return [min(md5_long(f"{s}#{i}") for s in sh) for i in range(num_hashes)]
+
+
+@pytest.mark.prodconf
+def test_shingles_and_minhash_match_python_reference(spark):
+    docs = spark.createDataFrame(
+        list(enumerate(EDGE_TEXTS)), "doc_id int, text string"
+    )
+    for n in (1, 2, 3, 8):
+        got = dict(docs.select("doc_id", shingles("text", n)).collect())
+        assert got == {i: _py_shingles(t, n) for i, t in enumerate(EDGE_TEXTS)}, n
+    for num_hashes, n in ((8, 3), (4, 2)):
+        got = dict(
+            docs.select("doc_id", minhash_signature("text", num_hashes, n)).collect()
+        )
+        want = {i: _py_minhash(t, num_hashes, n) for i, t in enumerate(EDGE_TEXTS)}
+        assert got == want, (num_hashes, n)
+
+
+@pytest.mark.prodconf
+def test_minhash_signature_tokenizes_once(spark):
+    """The token and shingle arrays are bound once per row: an inlined
+    tokenizer inside a lambda would be re-run per shingle and per hash,
+    and would show up as one ``split(`` per reference in the plan."""
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id int, text string")
+    plan = (
+        docs.select(minhash_signature("text").alias("sig"))
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("split(") == 1, plan

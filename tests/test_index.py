@@ -1,6 +1,7 @@
 """IVF / LSH index tests: exactness at full probe, recall at partial probe,
 partition pruning in the physical plan."""
 
+import json
 import os
 import sys
 import tempfile
@@ -9,10 +10,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pytest  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import types as T  # noqa: E402
 
+from neurondb_spark.data_management import layout_schema  # noqa: E402
 from neurondb_spark.index import IVFIndex, LSHIndex  # noqa: E402
-from neurondb_spark.operators.knn import knn  # noqa: E402
-from tests.conftest import SF_DIR  # noqa: E402
+from neurondb_spark.operators.knn import knn, vec_route  # noqa: E402
+from tests.conftest import SF_DIR, jobs_run  # noqa: E402
 
 DIM = 64
 
@@ -272,6 +275,34 @@ def test_lsh_dml_lifecycle(spark):
     got = [r["vec_id"] for r in idx.search(
         spark, q, k=5, probe_hamming=5, tiebreak=["vec_id"]).collect()]
     assert got == brute(exclude=dead)
+
+
+@pytest.mark.prodconf
+@pytest.mark.parametrize("kind", ["ivf", "ivf_assigned", "lsh"])
+def test_build_data_schema_equals_inferred(spark, kind):
+    """The ``data_schema`` a build stores is read from a written footer
+    plus the partition directories, with no Spark job, and equals the
+    schema Spark infers for the layout: every field nullable and the
+    partition column typed by partition inference."""
+    emb = _emb(spark).select("vec_id", "embedding").where(F.col("vec_id") < 120)
+    path = os.path.join(tempfile.mkdtemp(prefix=f"{kind}_schema_"), "idx")
+    if kind == "ivf":
+        idx = IVFIndex.build(emb, "embedding", path, nlists=4, dim=DIM)
+        part = "cluster_id"
+    elif kind == "ivf_assigned":
+        cents = [[float(i)] * DIM for i in range(3)]
+        assigned = vec_route(emb, "embedding", cents, dim=DIM, out_col="cluster_id")
+        idx = IVFIndex.from_assignment(assigned, "embedding", path, cents, dim=DIM)
+        part = "cluster_id"
+    else:
+        idx = LSHIndex.build(emb, "embedding", path, dim=DIM, nbits=4)
+        part = "bucket"
+    data = os.path.join(path, "data")
+    stored = T.StructType.fromJson(json.loads(idx.meta["data_schema"]))
+    assert stored == spark.read.parquet(data).schema
+    assert stored.fields[-1] == T.StructField(part, T.IntegerType(), True)
+    got, jobs = jobs_run(spark, lambda: layout_schema(data, part))
+    assert (got, jobs) == (idx.meta["data_schema"], 0)
 
 
 @pytest.mark.prodconf
