@@ -28,9 +28,8 @@ def atomic_write_json(path: str, obj) -> None:
     then ``os.replace`` — a reader never observes a truncated or
     interleaved file, and a crash mid-write leaves the old content intact
     (the reference gets this from WAL-logged page writes; on a local FS
-    the rename is the commit point, same protocol as the rebalance
-    journal, index/ivf.py). Every index meta.json write goes through
-    here."""
+    the rename is the commit point, as in :func:`dml_commit`). Every
+    index meta.json write goes through here."""
     import json
 
     tmp = path + ".tmp"
@@ -194,61 +193,33 @@ def as_tombstone_frame(spark: SparkSession, ids, id_col: str) -> DataFrame:
     return spark.createDataFrame(pdf, schema=schema).coalesce(1)
 
 
-# Post-roll-forward meta fixups, keyed by the name recorded in the DML
-# journal (an AM registers its fixup at module import; roll-forward runs
-# from that AM's load(), so the registration is always in place). A fixup
-# takes (staged_meta, index_path) and returns the meta to install —
-# recomputing any field that must reflect the FINAL on-disk state rather
-# than the pre-commit staging (e.g. HNSW's tombstone-dir signature).
-DML_META_FIXUPS: dict = {}
-
-
 def dml_commit(path: str, staged_meta, *, tombstones: str = "keep",
-               swap_data: bool = True, meta_fixup: str | None = None) -> None:
-    """COMMIT POINT for index DML (insert/vacuum) — the ONE journal
-    protocol shared by the HNSW / IVF / LSH AMs (r9 verdict #6; the
-    reference gets this from WAL-logged page writes, every AM the same
-    way). The caller has fully staged ``path/data_tmp`` (when
-    ``swap_data``) and, for ``tombstones='replace'``,
-    ``path/tombstones_tmp``, plus the complete new meta object (written
-    VERBATIM as meta.json — flat for HNSW/LSH, ``{"meta","centroids"}``
-    for IVF). One atomic journal rename is the commit; the idempotent
-    roll-forward (:func:`apply_dml_commit` — pure directory renames + one
-    atomic meta write, no Spark) finishes the swap, and a crash anywhere
-    after the journal is repaired by the AM's ``load()``. A crash BEFORE
-    it leaves the live index byte-identical (staging dirs are overwritten
-    by the next DML)."""
-    write_dml_journal(
-        path, staged_meta, tombstones=tombstones, swap_data=swap_data,
-        meta_fixup=meta_fixup,
-    )
-    apply_dml_commit(path)
-
-
-def write_dml_journal(path: str, staged_meta, *, tombstones: str = "keep",
-                      swap_data: bool = True,
-                      meta_fixup: str | None = None,
-                      partitions: tuple | None = None) -> None:
-    """Write the DML commit journal — the atomic rename IS the commit
-    point. Split from :func:`dml_commit` so an AM can interpose its own
-    roll-forward entry between journal and apply (HNSW routes through
-    ``HNSWIndex._apply_dml_commit`` for legacy-journal migration, and
-    crash-sim tests inject there).
+               partitions: tuple | None = None) -> None:
+    """COMMIT POINT for every index mutation: insert, vacuum, compact and
+    IVF rebalance, in the HNSW, IVF and LSH AMs alike (the reference gets
+    this from WAL-logged page writes, every AM the same way). The caller
+    has fully staged ``path/data_tmp`` and, for ``tombstones='replace'``,
+    ``path/tombstones_tmp``, plus the complete new meta object, written
+    VERBATIM as meta.json (flat for HNSW/LSH,
+    ``{"meta","centroids"}`` for IVF): every field that must describe the
+    final on-disk state (row count, bucket manifest, tombstone signature)
+    is computed before this call. The atomic rename of the journal
+    ``dml_commit.json`` is the commit; the idempotent roll-forward
+    (:func:`apply_dml_commit`: directory renames plus one atomic meta
+    write, no Spark) finishes it, and a crash anywhere after the journal
+    is finished by the AM's ``load()``. A crash BEFORE it leaves the live
+    index byte-identical (staging dirs are overwritten by the next
+    mutation).
 
     ``partitions=(part_col, [values...])`` selects the PARTITION-SCOPED
     swap: only the listed ``part_col=value`` directories are replaced
     from staging; every other partition of the live layout is never
-    opened, rewritten, or even listed (the IVF-rebalance commit shape,
-    generalized) — the mode that keeps a small insert's commit cost
-    proportional to the partitions it touched, not the layout size."""
+    opened, rewritten, or even listed. IVF rebalance (the split lists)
+    and HNSW insert (the touched shards) commit this way, so the cost
+    follows the partitions touched, not the layout size."""
     import json
 
-    journal = {
-        "meta": staged_meta,
-        "tombstones": tombstones,
-        "swap_data": "partitions" if partitions is not None else bool(swap_data),
-        "fixup": meta_fixup,
-    }
+    journal = {"meta": staged_meta, "tombstones": tombstones}
     if partitions is not None:
         part_col, values = partitions
         journal["part_col"] = str(part_col)
@@ -259,23 +230,25 @@ def write_dml_journal(path: str, staged_meta, *, tombstones: str = "keep",
         f.flush()
         os.fsync(f.fileno())
     os.replace(jtmp, os.path.join(path, "dml_commit.json"))
+    apply_dml_commit(path)
 
 
-def apply_dml_commit(path: str) -> None:
-    """Idempotent roll-forward of a journaled DML commit: swap the staged
-    graph/layout in (keeping the old data in ``dml_trash`` until done),
-    apply the tombstone action ('keep' | 'clear' | 'replace'), install
-    the staged meta (through the registered fixup, if any), then clean
-    staging and drop the journal LAST — the journal outlives every step,
-    so a crash at any point is finished by the next load()/dml_commit
-    (same ordering discipline as IVFIndex._apply_rebalance_commit).
-    Every AM's ``load()`` calls this before reading meta."""
+def apply_dml_commit(path: str) -> bool:
+    """Idempotent roll-forward of a journaled commit: swap the staged
+    layout in (whole ``data`` dir, or only the journaled partitions,
+    keeping the replaced data in ``dml_trash`` until done), apply the
+    tombstone action ('keep' | 'clear' | 'replace'), write the staged
+    meta verbatim, then clean staging and drop the journal LAST. The
+    journal outlives every step and every rename is guarded by an
+    existence check, so a crash at any point is finished by the next
+    run. Every AM's ``load()`` calls this before reading meta. Returns
+    True when a journal was rolled forward."""
     import json
     import shutil
 
     jpath = os.path.join(path, "dml_commit.json")
     if not os.path.exists(jpath):
-        return
+        return False
     with open(jpath) as f:
         journal = json.load(f)
     data = os.path.join(path, "data")
@@ -283,12 +256,9 @@ def apply_dml_commit(path: str) -> None:
     trash = os.path.join(path, "dml_trash")
     tomb = os.path.join(path, "tombstones")
     tomb_tmp = os.path.join(path, "tombstones_tmp")
-    sd = journal.get("swap_data", True)
-    if sd == "partitions":
+    if "partitions" in journal:
         # Partition-scoped swap: replace ONLY the listed part_col=value
-        # dirs; untouched partitions are never opened or listed. Each
-        # move is guarded by existence checks, so a re-run from any
-        # crash point falls through already-done steps.
+        # dirs; untouched partitions are never opened or listed.
         part_col = journal["part_col"]
         for v in journal["partitions"]:
             tmp_p = os.path.join(tmp, f"{part_col}={v}")
@@ -301,13 +271,13 @@ def apply_dml_commit(path: str) -> None:
                         shutil.rmtree(tr)
                     os.rename(dst_p, tr)
                 os.rename(tmp_p, dst_p)
-    elif sd and os.path.isdir(tmp):
+    elif os.path.isdir(tmp):
         if os.path.isdir(data):
             if os.path.isdir(trash):  # torn retry: re-stage the trash
                 shutil.rmtree(trash)
             os.rename(data, trash)
         os.rename(tmp, data)
-    action = journal.get("tombstones", "keep")
+    action = journal["tombstones"]
     if action == "replace":
         if os.path.isdir(tomb_tmp):
             if os.path.isdir(tomb):
@@ -315,18 +285,7 @@ def apply_dml_commit(path: str) -> None:
             os.rename(tomb_tmp, tomb)
     elif action == "clear":
         shutil.rmtree(tomb, ignore_errors=True)
-    meta = journal["meta"]
-    fixup = journal.get("fixup")
-    if fixup is not None:
-        try:
-            meta = DML_META_FIXUPS[fixup](meta, path)
-        except KeyError:
-            raise RuntimeError(
-                f"neurondb: DML journal at {path!r} names meta fixup "
-                f"{fixup!r} but it is not registered — import the owning "
-                f"index module before rolling forward"
-            ) from None
-    atomic_write_json(os.path.join(path, "meta.json"), meta)
+    atomic_write_json(os.path.join(path, "meta.json"), journal["meta"])
     shutil.rmtree(trash, ignore_errors=True)
     shutil.rmtree(tomb_tmp, ignore_errors=True)  # stale pre-commit stage
     # partition-scoped swaps leave the staging skeleton (_SUCCESS etc.);
@@ -334,6 +293,7 @@ def apply_dml_commit(path: str) -> None:
     # the journal is only ever written AFTER staging completed
     shutil.rmtree(tmp, ignore_errors=True)
     os.remove(jpath)
+    return True
 
 
 def _swap_in(spark: SparkSession, path: str, tmp: str) -> str:
@@ -380,30 +340,6 @@ def compact(spark: SparkSession, path: str, target_partitions: int = 8) -> str:
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + ".compact_tmp"
     df.coalesce(target_partitions).write.mode("overwrite").parquet(tmp)
-    return _swap_in(spark, path, tmp)
-
-
-def compact_partitioned(spark: SparkSession, path: str, part_col: str) -> str:
-    """Small-file compaction for a partitioned layout (IVF cluster dirs /
-    LSH bucket dirs after many streaming-CDC appends — one file lands per
-    micro-batch per touched partition, so a long-running ingest degrades
-    the scan into a file-listing problem): read → repartition BY THE
-    partition column (each partition's rows land in one task) → rewrite
-    partitioned → verified backup-keeping swap. Row content, partition
-    values and schema are unchanged — only file counts drop (hash
-    collisions putting two partitions in one task still emit one file per
-    partition dir under partitionBy). The reference's VACUUM FULL /
-    am-level compaction analog for the ingest path."""
-    df = spark.read.parquet(path)
-    if part_col not in df.columns:
-        raise ValueError(
-            f"neurondb: compact_partitioned: {part_col!r} not in "
-            f"{df.columns} at {path!r}"
-        )
-    tmp = path.rstrip("/") + ".compact_tmp"
-    df.repartition(F.col(part_col)).write.mode("overwrite").partitionBy(
-        part_col
-    ).parquet(tmp)
     return _swap_in(spark, path, tmp)
 
 

@@ -691,8 +691,8 @@ class NeuronSparkEngine:
         the corpus-scale vocabulary-join path — each DISTINCT word folds
         once, broadcast back (bpe_local.bpe_tokenize_via_vocab). Without:
         small merge tables (K <= bpe.MAX_EXPR_MERGES) compile to the pure
-        Column expression (bpe.bpe_tokenize — shuffle-free, but the K
-        folds run per word OCCURRENCE and the expression tree is O(4^K));
+        Column expression (bpe.bpe_tokenize — shuffle-free and linear in
+        K, but the K folds run per word OCCURRENCE);
         trained-size tables auto-route through the vocabulary-join path.
         The auto-route's row id: frames that are ONE file scan under
         row-identity nodes get a deterministic ``file_path#row_index``

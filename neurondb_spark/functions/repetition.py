@@ -5,51 +5,18 @@ the north star; the reference's nearest surface is its text-quality
 scoring (NeuronDB/src/ml/ml_nlp_production.c quality paths).
 
 All metrics are exact integer-count ratios (IEEE division of exact
-ints), so a SQL oracle matches bit-for-bit. Everything is per-row
-expression work — no shuffle, no UDF: at 100 TB this is a pure
-map-stage filter that codegens into the scan.
+ints), so a SQL oracle matches bit-for-bit. No UDF: built-in
+expressions plus (doc, gram) and (doc, token) aggregations with
+map-side combine.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from neurondb_spark.functions.text import sql_tokenize, tokenize
-
-
-def word_ngrams(text, n: int) -> Column:
-    """Word n-grams as joined strings; documents shorter than n tokens
-    yield one gram (their full token join)."""
-    toks = tokenize(text)
-    nt = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(nt - (n - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
-
-
-def top_ngram_frac(text, n: int) -> Column:
-    """Fraction of the document's n-grams occupied by its single most
-    frequent n-gram (the Gopher top-n-gram rule). Empty documents → 1.0
-    (degenerate = maximally repetitive, always filtered)."""
-    grams = word_ngrams(text, n)
-    counts = F.transform(
-        F.array_distinct(grams),
-        lambda g: F.size(F.filter(grams, lambda x: x == g)),
-    )
-    nt = F.size(tokenize(text))
-    return F.when(nt == 0, F.lit(1.0)).otherwise(
-        F.array_max(counts).cast("double") / F.size(grams).cast("double")
-    )
-
-
-def dup_token_frac(text) -> Column:
-    """Fraction of tokens that are repeats of an earlier token:
-    1 − distinct/total. Empty documents → 1.0."""
-    toks = tokenize(text)
-    nt = F.size(toks)
-    return F.when(nt == 0, F.lit(1.0)).otherwise(
-        1.0 - F.size(F.array_distinct(toks)).cast("double") / nt.cast("double")
-    )
+from neurondb_spark.operators.dedup import shingles
 
 
 def repetition_filters(
@@ -64,22 +31,22 @@ def repetition_filters(
     fraction, top-trigram fraction, duplicate-token fraction, and the
     keep decision (ALL thresholds strictly respected).
 
-    Shape (r7 rework): explode + groupBy aggregations, NOT the per-row
-    higher-order-function primitives above. The HOF form is
-    O(grams x distinct_grams) per document and materializes a filtered
-    array per distinct gram — 25s at sf0.1 (and unbounded for a long
-    document), hidden until round 7 because bench's count() let Catalyst
-    prune the frac columns. The aggregation form is linear in total
-    grams (the same order as tokenization), shuffles on (doc, gram) with
-    map-side combine, and produces BIT-IDENTICAL values: max(count) /
-    sum(count) is the same exact-integer division, and the degenerate
-    empty-doc cases coalesce to the same 1.0. The Column primitives
-    remain for per-row composition on short fields."""
+    Shape: explode + groupBy aggregations, not a per-row
+    higher-order-function form. Counting each distinct gram with a
+    ``filter`` over the gram array is O(grams x distinct_grams) per
+    document and materializes a filtered array per distinct gram (25s
+    at sf0.1, unbounded for a long document). The aggregation form is
+    linear in total grams (the same order as tokenization), shuffles on
+    (doc, gram) with map-side combine, and produces the values the SQL
+    oracle's list form does, bit for bit: max(count) / sum(count) is the
+    same exact-integer division, and the degenerate empty-doc cases
+    coalesce to the same 1.0. Grams come from ``dedup.shingles``, which
+    tokenizes each document once."""
     base = df.select(F.col(id_col).alias("_rid"), F.col(text_col).alias("_t"))
 
     def _top(n: int, out: str) -> DataFrame:
         g = base.select(
-            "_rid", F.explode(word_ngrams(F.col("_t"), n)).alias("_g")
+            "_rid", F.explode(shingles(F.col("_t"), n)).alias("_g")
         )
         c = g.groupBy("_rid", "_g").agg(F.count(F.lit(1)).alias("_c"))
         return c.groupBy("_rid").agg(
@@ -107,7 +74,7 @@ def repetition_filters(
             F.coalesce("top2_frac", F.lit(1.0)).alias("top2_frac"),
             F.coalesce("top3_frac", F.lit(1.0)).alias("top3_frac"),
             # empty docs have zero token rows -> 1.0 (maximally
-            # repetitive), matching dup_token_frac's WHEN nt==0 branch
+            # repetitive), matching the oracle's WHEN len(toks) = 0 branch
             F.coalesce("dup_tok_frac", F.lit(1.0)).alias("dup_tok_frac"),
         )
     )

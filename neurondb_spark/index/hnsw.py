@@ -65,25 +65,16 @@ def _tomb_dir_sig(tomb_path: str) -> str | None:
     return f"{len(entries)}:{crc:08x}"
 
 
-def _hnsw_meta_fixup(meta: dict, path: str) -> dict:
-    """DML-commit meta fixup (registered with the shared journal
-    protocol, data_management.DML_META_FIXUPS): recompute the cached
-    tombstone fields from the FINAL post-roll-forward tombstones dir so
-    the installed meta can never be stale against the directory it
-    signs — the property the pre-journal multi-step commit lacked."""
-    sig = _tomb_dir_sig(os.path.join(path, "tombstones"))
+def _set_tomb_sig(meta: dict, sig: str | None) -> None:
+    """Sign ``meta``'s cached tombstone counts with the signature of the
+    tombstones directory they describe; ``None`` (no directory) drops
+    the counts instead."""
     if sig is None:
         meta.pop("tomb_by_shard", None)
         meta.pop("tomb_sig", None)
         meta["n_tombstones"] = 0
     else:
         meta["tomb_sig"] = sig
-    return meta
-
-
-from neurondb_spark.data_management import DML_META_FIXUPS  # noqa: E402
-
-DML_META_FIXUPS["hnsw_tomb_sig"] = _hnsw_meta_fixup
 
 
 def _level_for(vec_id: int, seed: int, m_l: float) -> int:
@@ -410,14 +401,16 @@ class HNSWIndex:
     def load(path: str, spark: SparkSession | None = None) -> "HNSWIndex":
         """Open an existing index. A journaled insert/vacuum that died
         mid-commit is rolled forward first (idempotent renames, no
-        Spark — the same protocol as IVF's rebalance journal). When
+        Spark — data_management.apply_dml_commit, shared by every AM). When
         ``spark`` is passed, indexes built before the per-shard
         tombstone-count cache existed are migrated HERE (one counting
         job + persisted meta) instead of lazily on the first search —
         the read path then never writes (r8 verdict: a migration rewrite
         triggered from search() put a crash-truncation window on every
         legacy read)."""
-        HNSWIndex._apply_dml_commit(path)
+        from neurondb_spark.data_management import apply_dml_commit
+
+        apply_dml_commit(path)
         with open(os.path.join(path, "meta.json")) as f:
             idx = HNSWIndex(path, json.load(f))
         if spark is not None:
@@ -626,7 +619,7 @@ class HNSWIndex:
 
         TOUCHED-SHARD SCOPED (r10): only shards that actually receive
         new ids are read, rebuilt/extended and swapped (the
-        partition-scoped journal commit, data_management.write_dml_journal
+        partition-scoped journal commit, data_management.dml_commit
         ``partitions=``); untouched shard directories are never opened,
         rewritten, or even listed — pytest asserts byte-identity across
         an insert. With hash-sharding a batch of ≳ num_shards ids still
@@ -753,11 +746,13 @@ class HNSWIndex:
             .write.mode("overwrite").partitionBy("shard").parquet(tmp)
         )
         # Everything Spark runs is done BEFORE the commit point: the
-        # staged meta (row count + per-shard tombstone counts) rides in
-        # the journal, so the roll-forward is pure renames + one small
-        # file write — re-runnable from any crash.
+        # staged meta (row count, per-shard tombstone counts and the
+        # signature of the tombstones dir the commit leaves) rides in the
+        # journal, so the roll-forward is pure renames + one small file
+        # write — re-runnable from any crash.
         staged = dict(self.meta)
         tomb_action = "keep"
+        tomb_sig = _tomb_dir_sig(os.path.join(self.path, "tombstones"))
         if sum(overlap.values()):
             # Tombstones matching just-inserted ids are cleared, so
             # delete-then-reinsert resurrects the row instead of the
@@ -780,12 +775,15 @@ class HNSWIndex:
                 ))
                 staged["tomb_by_shard"] = counts
                 staged["n_tombstones"] = sum(counts.values())
-            else:  # the fixup drops the counts with the directory
-                tomb_action = "clear"
+                # file names and sizes survive the rename into tombstones/
+                tomb_sig = _tomb_dir_sig(tomb_tmp)
+            else:
+                tomb_action, tomb_sig = "clear", None
         elif tomb is not None:
             counts = self._tomb_counts(spark)  # sig-validated, unchanged
             staged["tomb_by_shard"] = {str(s): n for s, n in counts.items()}
             staged["n_tombstones"] = sum(counts.values())
+        _set_tomb_sig(staged, tomb_sig)
         # Rows the commit keeps outside the staged shards. A scoped
         # insert subtracts the touched shards' old footer counts from the
         # prior total, so no untouched shard file is opened.
@@ -809,62 +807,35 @@ class HNSWIndex:
 
     def _commit_dml(self, staged_meta: dict, tomb_action: str,
                     kept_rows: int = 0, partitions: tuple | None = None) -> None:
-        """COMMIT POINT for insert/vacuum — delegates to the SHARED
-        journal-rename protocol all three AMs now use
-        (data_management.dml_commit, r9 verdict #6; originally the r8
-        stretch-#8 HNSW-local journal, same shape as the IVF rebalance
-        journal, index/ivf.py:525-536): the staged ``data_tmp`` (and
+        """COMMIT POINT for insert/vacuum through the journal every AM
+        shares (data_management.dml_commit): the staged ``data_tmp`` (and
         ``tombstones_tmp`` when replacing) plus the fully-computed new
-        meta are committed by ONE atomic journal rename; the idempotent
-        roll-forward (pure directory renames + one meta write, no Spark)
-        finishes the swap through the registered ``hnsw_tomb_sig`` fixup
-        (tomb_sig recomputed from the FINAL tombstones dir), and a crash
-        anywhere after the journal is repaired by ``load()``. A crash
-        BEFORE it leaves the live index byte-identical.
+        meta, its tombstone signature included, are committed by ONE
+        atomic journal rename; the idempotent roll-forward (pure
+        directory renames + one verbatim meta write, no Spark) finishes
+        the swap, and a crash anywhere after the journal is repaired by
+        ``load()``. A crash BEFORE it leaves the live index
+        byte-identical.
 
         ``total_rows`` is ``kept_rows`` (live rows the commit leaves in
         place) plus the staged rows, read from ``data_tmp``'s footers.
         That read is also the staging check: a ``data_tmp`` with no data
         file or an unreadable footer raises before the journal exists."""
         from neurondb_spark.data_management import (
+            dml_commit,
             footer_rows,
             parquet_files,
-            write_dml_journal,
         )
 
         tmp = os.path.join(self.path, "data_tmp")
         if not parquet_files(tmp):
             raise ValueError(f"neurondb: no parquet data file under {tmp!r}")
         staged_meta["total_rows"] = kept_rows + footer_rows(tmp)
-        write_dml_journal(
+        dml_commit(
             self.path, staged_meta, tombstones=tomb_action,
-            swap_data=True, meta_fixup="hnsw_tomb_sig",
             partitions=partitions,
         )
-        HNSWIndex._apply_dml_commit(self.path)
-        with open(os.path.join(self.path, "meta.json")) as f:
-            self.meta = json.load(f)
-
-    @staticmethod
-    def _apply_dml_commit(path: str) -> None:
-        """Roll forward a crashed DML commit (called from ``load()``).
-        A journal written by a pre-r10 build lacks the ``fixup`` field —
-        rewrite it in place first (atomic replace) so the shared
-        roll-forward still applies the HNSW tomb_sig recompute."""
-        from neurondb_spark.data_management import (
-            apply_dml_commit,
-            atomic_write_json,
-        )
-
-        jpath = os.path.join(path, "dml_commit.json")
-        if os.path.exists(jpath):
-            with open(jpath) as f:
-                journal = json.load(f)
-            if "fixup" not in journal:
-                journal["fixup"] = "hnsw_tomb_sig"
-                journal.setdefault("swap_data", True)
-                atomic_write_json(jpath, journal)
-        apply_dml_commit(path)
+        self.meta = staged_meta
 
     def delete(self, spark: SparkSession, ids, id_col: str = "vec_id") -> None:
         """Soft delete: append tombstones; the graph keeps the nodes for
@@ -952,13 +923,8 @@ class HNSWIndex:
         truncated file."""
         from neurondb_spark.data_management import atomic_write_json
 
-        tomb_path = os.path.join(self.path, "tombstones")
-        sig = _tomb_dir_sig(tomb_path)
-        if sig is None:
-            self.meta.pop("tomb_by_shard", None)
-            self.meta.pop("tomb_sig", None)
-            self.meta["n_tombstones"] = 0
-        else:
+        sig = _tomb_dir_sig(os.path.join(self.path, "tombstones"))
+        if sig is not None:
             counts = _shard_tomb_counts(
                 spark.read.schema(_GRAPH_SCHEMA).parquet(
                     os.path.join(self.path, "data")
@@ -967,7 +933,7 @@ class HNSWIndex:
             )
             self.meta["tomb_by_shard"] = counts
             self.meta["n_tombstones"] = sum(counts.values())
-            self.meta["tomb_sig"] = sig
+        _set_tomb_sig(self.meta, sig)
         atomic_write_json(os.path.join(self.path, "meta.json"), self.meta)
 
     def _tombstones(self, spark: SparkSession) -> DataFrame | None:
@@ -1004,7 +970,7 @@ class HNSWIndex:
         )
         tmp = os.path.join(self.path, "data_tmp")
         graph.write.mode("overwrite").partitionBy("shard").parquet(tmp)
-        # the hnsw_tomb_sig fixup drops the tombstone counts once the
-        # cleared directory is gone
-        self._commit_dml(dict(self.meta), "clear")
+        staged = dict(self.meta)
+        _set_tomb_sig(staged, None)  # the commit clears the directory
+        self._commit_dml(staged, "clear")
         return self

@@ -34,7 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from neurondb_spark.data_management import (
+    apply_dml_commit,
     atomic_write_json,
+    dml_commit,
     footer_rows,
     layout_schema,
     read_tombstones,
@@ -151,42 +153,13 @@ class IVFIndex:
 
     @staticmethod
     def load(path: str) -> "IVFIndex":
-        # Crash recovery: a journaled rebalance or DML commit (vacuum)
+        # Crash recovery: a journaled commit (vacuum, compact, rebalance)
         # that died mid-commit is rolled forward here (idempotent
         # directory renames, no Spark).
-        IVFIndex._apply_rebalance_commit(path)
-        from neurondb_spark.data_management import apply_dml_commit, recover
-
         apply_dml_commit(path)
-        # A compact() that died between the two renames of its verified
-        # swap leaves data at data.old; restore it (no-op otherwise).
-        recover(os.path.join(path, "data"))
-        # Sweep stale rebalance_trash left by the pre-r9 cleanup ordering
-        # (journal removed before the rmtrees). Trash is only ever
-        # created under a live journal, so journal-absent trash is
-        # provably garbage. data_tmp is deliberately NOT swept here: it
-        # doubles as vacuum()'s staging dir and a concurrent writer may
-        # legitimately be filling it — the next staging write overwrites
-        # a crashed one (mode("overwrite")), so it self-heals.
-        trash = os.path.join(path, "rebalance_trash")
-        if os.path.isdir(trash) and not os.path.exists(
-            os.path.join(path, "rebalance_commit.json")
-        ):
-            import shutil
-
-            shutil.rmtree(trash, ignore_errors=True)
         with open(os.path.join(path, "meta.json")) as f:
             d = json.load(f)
-        meta, centroids = d["meta"], d["centroids"]
-        # A rebalance commits its centroid list INSIDE the data directory
-        # (installed by the journal roll-forward together with the split
-        # partition dirs); when present it supersedes the meta.json copy.
-        cfile = os.path.join(path, "data", "_centroids.json")
-        if os.path.exists(cfile):
-            with open(cfile) as f:
-                centroids = json.load(f)
-            meta["nlists"] = len(centroids)
-        return IVFIndex(path, meta, centroids)
+        return IVFIndex(path, d["meta"], d["centroids"])
 
     # ------------------------------------------------------------ search
 
@@ -459,8 +432,6 @@ class IVFIndex:
         this is where incremental insert bookkeeping squares up) are
         staged, then ONE atomic journal rename swaps them in and clears
         tombstones; a crash at any point is repaired by ``load()``."""
-        from neurondb_spark.data_management import dml_commit
-
         tomb = self._tombstones(spark)
         if tomb is None:
             return self
@@ -479,7 +450,7 @@ class IVFIndex:
         staged["total_rows"] = footer_rows(tmp)
         dml_commit(
             self.path, {"meta": staged, "centroids": self.centroids},
-            tombstones="clear", swap_data=True,
+            tombstones="clear",
         )
         self.meta = staged
         return self
@@ -489,20 +460,25 @@ class IVFIndex:
         appends one file per micro-batch per touched list — a
         long-running drain degrades the probe scan into file listing).
         Rows, partition values, tombstones and centroids are unchanged;
-        only file counts drop. Verified backup-keeping swap underneath.
-        ``total_rows`` is reconciled exactly here (footer-metadata count
-        of the freshly-compacted layout — the maintenance-path square-up
-        for incremental insert bookkeeping)."""
-        from neurondb_spark.data_management import compact_partitioned
-
-        compact_partitioned(
-            spark, os.path.join(self.path, "data"), "cluster_id"
+        only file counts drop. The layout is rewritten repartitioned by
+        ``cluster_id`` (each list's rows land in one task, so one file
+        per list dir) into ``data_tmp`` and committed through
+        :func:`~neurondb_spark.data_management.dml_commit` with the
+        staged meta, whose ``total_rows`` is the exact footer count of
+        the compacted layout (the maintenance-path square-up for
+        incremental insert bookkeeping); a crash mid-commit is finished
+        by ``load()``."""
+        tmp = os.path.join(self.path, "data_tmp")
+        self._read_data(spark).repartition(F.col("cluster_id")).write.mode(
+            "overwrite"
+        ).partitionBy("cluster_id").parquet(tmp)
+        staged = dict(self.meta)
+        staged["total_rows"] = footer_rows(tmp)
+        dml_commit(
+            self.path, {"meta": staged, "centroids": self.centroids},
+            tombstones="keep",
         )
-        self.meta["total_rows"] = footer_rows(os.path.join(self.path, "data"))
-        atomic_write_json(
-            os.path.join(self.path, "meta.json"),
-            {"meta": self.meta, "centroids": self.centroids},
-        )
+        self.meta = staged
         return self
 
     def rebalance(
@@ -522,28 +498,21 @@ class IVFIndex:
         (same rows, finer partitions) and IMPROVES per-probe-cost for
         partial probes (smaller lists ≈ tighter regions).
 
-        PARTITION-SCOPED commit (r6 verdict "What's wrong #2" — the old
-        code rewrote the ENTIRE data dir to split a few lists, a
-        full-table rewrite at 100 TB): only the split lists' rows are
-        written, into ``data_tmp/cluster_id={parent,new}`` plus the full
-        new centroid list as ``data_tmp/_centroids.json``. The commit
-        point is ONE atomic rename of a small journal
-        (``rebalance_commit.json``); after it, roll-forward
-        (:meth:`_apply_rebalance_commit` — pure directory renames, no
-        Spark) replaces the parent dir, adds the new dir, and installs
-        the centroid file. A crash BEFORE the journal leaves the index
-        byte-identical; a crash anywhere AFTER it is repaired by
-        ``load()``, which re-runs the idempotent roll-forward. Untouched
-        ``cluster_id=`` directories are never opened, rewritten, or even
-        listed (pytest asserts byte-identity across a rebalance). On
-        object storage, back the renames with a table format's commit
-        protocol (Delta/Iceberg — see README)."""
+        PARTITION-SCOPED commit: only the split lists' rows are written,
+        into ``data_tmp/cluster_id={parent,new}``, and committed through
+        :func:`~neurondb_spark.data_management.dml_commit` with
+        ``partitions=("cluster_id", parents + new ids)`` and the new meta
+        (centroid list and ``nlists``). The roll-forward replaces the
+        parent dirs, adds the new ones and writes meta; a crash BEFORE
+        the journal leaves the index byte-identical, a crash AFTER it is
+        finished by ``load()``. Untouched ``cluster_id=`` directories
+        are never opened, rewritten, or even listed (pytest asserts
+        byte-identity across a rebalance). On object storage, back the
+        renames with a table format's commit protocol (Delta/Iceberg —
+        see README)."""
         from neurondb_spark.ml.stats import kmeans_lloyd_exact
 
-        # Finish any crashed prior rebalance before reading the layout.
-        IVFIndex._apply_rebalance_commit(self.path)
-        data = os.path.join(self.path, "data")
-        df = spark.read.parquet(data)
+        df = self._read_data(spark)
         if id_col not in df.columns:
             raise ValueError(
                 f"neurondb: rebalance needs id column {id_col!r} in the "
@@ -561,8 +530,7 @@ class IVFIndex:
             return self
         new_centroids = [list(c) for c in self.centroids]
         relabeled = []
-        split_ids: list[int] = []
-        split_pairs: list[tuple[int, int]] = []
+        moved: list[int] = []
         vec_col = self.meta["vec_col"]
         for cid in oversized:
             sub = df.where(F.col("cluster_id") == cid)
@@ -579,8 +547,7 @@ class IVFIndex:
             if seen != {0, 1}:  # degenerate list (all rows identical):
                 continue        # splitting can't help — leave it alone
             new_id = len(new_centroids)
-            split_ids.append(int(cid))
-            split_pairs.append((int(cid), int(new_id)))
+            moved += [int(cid), int(new_id)]
             new_centroids[cid] = cents[0]
             new_centroids.append(cents[1])
             relabeled.append(
@@ -590,7 +557,7 @@ class IVFIndex:
                     .otherwise(F.lit(int(new_id))),
                 ).drop("cluster")
             )
-        if not split_ids:
+        if not moved:
             return self
         # Stage ONLY the split lists' rows — the write's partition dirs
         # are exactly {parent, new} per split; no other list is touched.
@@ -600,76 +567,15 @@ class IVFIndex:
             out = out.unionByName(part.select(*cols))
         tmp = os.path.join(self.path, "data_tmp")
         out.write.mode("overwrite").partitionBy("cluster_id").parquet(tmp)
-        with open(os.path.join(tmp, "_centroids.json"), "w") as f:
-            json.dump(new_centroids, f)
-        # COMMIT POINT: one atomic rename of the journal. Before it the
-        # index is untouched; from here the roll-forward (idempotent,
-        # pure renames) finishes the swap — on crash, load() re-runs it.
-        journal = {
-            "splits": [[cid, new_id] for cid, new_id in split_pairs],
-            "nlists": len(new_centroids),
-        }
-        jtmp = os.path.join(self.path, "rebalance_commit.json.tmp")
-        with open(jtmp, "w") as f:
-            json.dump(journal, f)
-        os.replace(jtmp, os.path.join(self.path, "rebalance_commit.json"))
-        IVFIndex._apply_rebalance_commit(self.path)
-        self.centroids = new_centroids
-        self.meta["nlists"] = len(new_centroids)
         # total_rows is invariant under a split — no recount scan.
-        atomic_write_json(
-            os.path.join(self.path, "meta.json"),
-            {"meta": self.meta, "centroids": self.centroids},
+        staged = dict(self.meta)
+        staged["nlists"] = len(new_centroids)
+        dml_commit(
+            self.path, {"meta": staged, "centroids": new_centroids},
+            tombstones="keep", partitions=("cluster_id", moved),
         )
+        self.meta, self.centroids = staged, new_centroids
         return self
-
-    @staticmethod
-    def _apply_rebalance_commit(path: str) -> None:
-        """Idempotent roll-forward of a journaled rebalance: for each
-        (parent, new) split, stage the old parent dir to trash, rename
-        the staged dirs in, install ``_centroids.json``, then drop the
-        journal + staging. Every step is an ``os.rename``/``os.replace``
-        of a whole directory or small file — untouched ``cluster_id=``
-        dirs are never listed or rewritten. Safe to re-run from any
-        crash point after the journal exists (each move is guarded by
-        existence checks that encode which phase completed)."""
-        import shutil
-
-        jpath = os.path.join(path, "rebalance_commit.json")
-        if not os.path.exists(jpath):
-            return
-        with open(jpath) as f:
-            journal = json.load(f)
-        data = os.path.join(path, "data")
-        tmp = os.path.join(path, "data_tmp")
-        trash = os.path.join(path, "rebalance_trash")
-        os.makedirs(trash, exist_ok=True)
-        for cid, new_id in journal["splits"]:
-            tmp_par = os.path.join(tmp, f"cluster_id={cid}")
-            dst_par = os.path.join(data, f"cluster_id={cid}")
-            if os.path.isdir(tmp_par):
-                if os.path.isdir(dst_par):  # old parent still in place
-                    os.rename(dst_par, os.path.join(trash, f"cluster_id={cid}"))
-                os.rename(tmp_par, dst_par)
-            tmp_new = os.path.join(tmp, f"cluster_id={new_id}")
-            dst_new = os.path.join(data, f"cluster_id={new_id}")
-            if os.path.isdir(tmp_new):
-                if os.path.isdir(dst_new):  # torn retry: staged copy wins
-                    shutil.rmtree(dst_new)
-                os.rename(tmp_new, dst_new)
-        cent_tmp = os.path.join(tmp, "_centroids.json")
-        if os.path.exists(cent_tmp):
-            os.replace(cent_tmp, os.path.join(data, "_centroids.json"))
-        # Cleanup BEFORE dropping the journal (r8 verdict "What's wrong
-        # #4"): the journal is what makes this roll-forward re-runnable,
-        # so it must outlive every step — a crash after os.remove(jpath)
-        # but before the rmtrees would leak trash/tmp forever (the old
-        # ordering). Deleting staging first is safe: every rename above
-        # is guarded by existence checks, so a re-run with the dirs gone
-        # just falls through to this cleanup.
-        shutil.rmtree(trash, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.remove(jpath)
 
     def statistics(self, spark: SparkSession) -> dict:
         """index_statistics analog (neurondb--1.0.sql:2611-2693): rows per

@@ -119,20 +119,17 @@ class LSHIndex:
 
     @staticmethod
     def load(path: str) -> "LSHIndex":
-        # Crash recovery: a journaled DML commit (vacuum) that died
+        # Crash recovery: a journaled commit (vacuum, compact) that died
         # mid-commit is rolled forward here (idempotent renames, no
         # Spark — the shared protocol, data_management.apply_dml_commit).
-        from neurondb_spark.data_management import apply_dml_commit, recover
+        from neurondb_spark.data_management import apply_dml_commit
 
         apply_dml_commit(path)
-        # A compact() that died between the two renames of its verified
-        # swap leaves data at data.old; restore it (no-op otherwise).
-        recover(os.path.join(path, "data"))
         with open(os.path.join(path, "meta.json")) as f:
             idx = LSHIndex(path, json.load(f))
         if "bucket_files" not in idx.meta:
-            # meta predates the manifest (or recovery replayed a commit):
-            # one walk seeds it and persists for later processes
+            # meta predates the manifest: one walk seeds it and persists
+            # for later processes
             from neurondb_spark.data_management import atomic_write_json
 
             idx._refresh_manifest()
@@ -160,9 +157,10 @@ class LSHIndex:
         exactly the named files of their probed buckets — no directory
         listing of the other 2^nbits buckets per query (the Iceberg-style
         manifest argument, guide §6: table formats with manifest metadata
-        avoid directory listing altogether). Called by every path that
-        changes the file set (build/insert/compact/vacuum/load-recovery);
-        on a remote FS swap os.walk for the FileSystem listing API."""
+        avoid directory listing altogether). Called by insert and by
+        load() for a meta without a manifest; build, compact and vacuum
+        stage the manifest of the layout they write. On a remote FS swap
+        os.walk for the FileSystem listing API."""
         self.meta["bucket_files"] = _bucket_manifest(
             os.path.join(self.path, "data")
         )
@@ -393,30 +391,31 @@ class LSHIndex:
 
     def compact(self, spark: SparkSession) -> "LSHIndex":
         """Merge each bucket's small files into one (the IVF compact
-        analog for the hyperplane layout — see IVFIndex.compact).
-        ``total_rows`` is reconciled exactly here (footer-metadata count
-        of the freshly-compacted layout — the maintenance-path square-up
-        for incremental insert bookkeeping)."""
-        from neurondb_spark.data_management import (
-            atomic_write_json,
-            compact_partitioned,
-            footer_rows,
-        )
+        analog for the hyperplane layout — see IVFIndex.compact): the
+        layout is rewritten repartitioned by ``bucket`` into ``data_tmp``
+        and committed through the shared journal with the staged meta,
+        which carries the compacted layout's exact footer ``total_rows``
+        and its bucket manifest, so a crash mid-commit can never leave
+        meta naming files the swap deleted."""
+        from neurondb_spark.data_management import dml_commit, footer_rows
 
-        compact_partitioned(spark, os.path.join(self.path, "data"), "bucket")
-        self.meta["total_rows"] = footer_rows(os.path.join(self.path, "data"))
-        self._refresh_manifest()  # the compacted layout's file set
-        atomic_write_json(os.path.join(self.path, "meta.json"), self.meta)
+        tmp = os.path.join(self.path, "data_tmp")
+        self._read_data(spark).repartition(F.col("bucket")).write.mode(
+            "overwrite"
+        ).partitionBy("bucket").parquet(tmp)
+        staged = dict(self.meta)
+        staged["total_rows"] = footer_rows(tmp)
+        # relative file names survive the data_tmp -> data swap rename
+        staged["bucket_files"] = _bucket_manifest(tmp)
+        dml_commit(self.path, staged, tombstones="keep")
+        self.meta = staged
         return self
 
     def vacuum(self, spark: SparkSession) -> "LSHIndex":
         """VACUUM analog: rewrite the bucket partitions without
         tombstoned rows (layout and hyperplanes unchanged); then clear
         tombstones. Committed through the SHARED journaled protocol
-        (data_management.dml_commit, r9 verdict #6 — replaces the bare
-        _swap_in + post-swap meta writes, whose crash window left
-        total_rows / tombstone_id_col stale against the swapped data):
-        the live rows and fully-computed meta (exact ``total_rows``
+        (data_management.dml_commit): the live rows and fully-computed meta (exact ``total_rows``
         reconcile) are staged, then ONE atomic journal rename swaps them
         in and clears tombstones; a crash at any point is repaired by
         ``load()``."""
@@ -435,6 +434,6 @@ class LSHIndex:
         staged["total_rows"] = footer_rows(tmp)
         # relative file names survive the data_tmp -> data swap rename
         staged["bucket_files"] = _bucket_manifest(tmp)
-        dml_commit(self.path, staged, tombstones="clear", swap_data=True)
+        dml_commit(self.path, staged, tombstones="clear")
         self.meta = staged
         return self

@@ -276,9 +276,13 @@ def kmeans_lloyd_exact(
 
     Lineage (optimization round 16, guide §5): the exploded vector frame
     feeds every round's distance join AND every round's centroid rebuild
-    (2·iters+1 references); the lazy localCheckpoint computes it once
-    inside the caller's action instead of re-deriving the parquet scan +
-    posexplode per reference. The centroid join carries an explicit
+    (2·iters+1 references); the localCheckpoint computes it once instead
+    of re-deriving the parquet scan + posexplode per reference. It is
+    EAGER, as ``bpe_train``'s are: a lazy checkpoint materialized inside
+    the caller's action can be computed by a broadcast-exchange thread
+    while the DAG scheduler computes the same RDD's partitions, and
+    that pair was seen to deadlock on the RDD and the checkpoint lock
+    (IVF rebalance, which runs this per split list). The centroid join carries an explicit
     broadcast hint — cent is k·d rows (model-sized at ANY data scale),
     but behind the checkpoint boundary its size estimate is unknown, so
     without the hint the initial plan falls back to SortMergeJoin over
@@ -289,7 +293,7 @@ def kmeans_lloyd_exact(
     from neurondb_spark.functions.aggregates import davg
     from pyspark.sql import Window as W
 
-    ex = _explode_vec(df, vec_col, [id_col]).localCheckpoint(eager=False)
+    ex = _explode_vec(df, vec_col, [id_col]).localCheckpoint(eager=True)
     init = (
         df.select(id_col).orderBy(id_col).limit(k)
         .select(

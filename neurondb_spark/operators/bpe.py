@@ -169,9 +169,11 @@ def bpe_train(
     return merges, cur
 
 
-# Largest merge table the pure-expression tokenizer will compile: each
-# nested fold references its child ~4×, so the expression TREE is O(4^K)
-# and plan analysis hangs around K≈10 (measured; see PLANS.md).
+# Largest merge table the pure-expression tokenizer compiles. The limit
+# was set when each nested fold inlined its input ~3 times and the
+# expression grew exponentially in K (plan analysis hung around K≈10,
+# see PLANS.md); apply_merges now binds each fold's input once, so the
+# expression is linear in K and the limit awaits a re-measurement.
 MAX_EXPR_MERGES = 8
 
 
@@ -179,14 +181,22 @@ def apply_merges(symbols: Column, merges: list[tuple[str, str, int]]) -> Column:
     """Apply a learned merge table (in training order) to a symbol
     array — the tokenizer's encode step as one Column expression.
 
-    Expression-size warning: each nested fold references its child
-    ~4×, so the expression TREE is O(4^K) in the number of merges —
-    plan analysis hangs around K≈10. For larger K use
-    ``bpe_local.word_symbols_udf`` (one Arrow-batched linear fold,
-    bit-equal) or ``bpe_local.bpe_tokenize_via_vocab`` corpus-wide."""
+    Each fold's input is bound once (``functions.text.let``):
+    :func:`merge_pair_expr` reads its input three times, so inlining
+    the previous fold would triple the expression per merge. Bound, the
+    expression grows linearly in K. The folds still run per word
+    OCCURRENCE; corpus-wide, ``bpe_local.bpe_tokenize_via_vocab`` folds
+    each distinct word once (``bpe_local.word_symbols_udf`` is the
+    bit-equal Arrow-batched fold)."""
+    from neurondb_spark.functions.text import let
+
+    def _fold(left: str, right: str):
+        # one-argument closure: pyspark reads the lambda's arity
+        return lambda s: merge_pair_expr(s, left, right)
+
     out = symbols
     for left, right, _ in merges:
-        out = merge_pair_expr(out, left, right)
+        out = let(out, _fold(left, right))
     return out
 
 
@@ -195,21 +205,21 @@ def bpe_tokenize(
 ) -> Column:
     """Tokenize text with a learned BPE table: alnum-run word split, each
     word char-split then merged, flattened to one subword-token array.
-    Expression-only — usable in any pipeline stage, no UDF — but
-    O(4^K) in expression size (see :func:`apply_merges`), so merge
-    tables longer than :data:`MAX_EXPR_MERGES` are REFUSED: past that
-    the nested expression tree hangs plan analysis (measured — the
-    exact failure a production tokenizer would hit), which is strictly
-    worse than an error. Larger K routes through
+    Expression-only — usable in any pipeline stage, no UDF. Merge
+    tables longer than :data:`MAX_EXPR_MERGES` are REFUSED: the limit
+    dates from an expression that grew exponentially in K and hung
+    plan analysis past it (the expression is linear in K now, see
+    :func:`apply_merges`; the limit has not been re-measured). Larger K
+    routes through
     ``bpe_local.bpe_tokenize_via_vocab`` (each DISTINCT word folds once
     in an Arrow UDF; ``engine.tokenize_with`` does this automatically)."""
     from neurondb_spark.functions.text import tokenize
 
     if len(merges) > MAX_EXPR_MERGES:
         raise ValueError(
-            f"neurondb: bpe_tokenize compiles one nested fold per merge — "
-            f"an O(4^K) expression tree that hangs plan analysis past "
-            f"K={MAX_EXPR_MERGES} (got {len(merges)} merges). Use "
+            f"neurondb: bpe_tokenize compiles one nested fold per merge "
+            f"and accepts at most K={MAX_EXPR_MERGES} "
+            f"(got {len(merges)} merges). Use "
             "bpe_local.bpe_tokenize_via_vocab (or "
             "engine.tokenize_with, which routes there) for trained-size "
             "merge tables."

@@ -49,11 +49,11 @@ from pyspark.sql import DataFrame
 def word_symbols_udf(word_col, merges: list[tuple[str, str, int]]):
     """All K merges applied to a word column in ONE Arrow-batched pandas
     UDF (the verbatim greedy fold, so output is bit-equal to
-    ``bpe.apply_merges``). This is a genuine built-ins-can't-express
-    case: nesting ``merge_pair_expr`` K deep duplicates its child
-    expression ~4× per level — an O(4^K) expression TREE that hangs
-    analysis around K≈10 (the reason bpe_train localCheckpoints every
-    round). The UDF is linear: O(K · word length) per word."""
+    ``bpe.apply_merges``). The expression form is linear in K but runs
+    its K folds per word occurrence, and ``bpe.bpe_tokenize`` refuses
+    K > ``bpe.MAX_EXPR_MERGES``; the UDF folds each word it is given in
+    O(K · word length), which the vocabulary join below applies once
+    per distinct word."""
     from pyspark.sql import functions as F
 
     pairs = [(l, r) for l, r, _ in merges]
@@ -80,9 +80,9 @@ def bpe_tokenize_via_vocab(
     Arrow-batched :func:`word_symbols_udf`) and broadcast the
     word→subwords mapping back, instead of replaying the K merge folds
     per word OCCURRENCE (``bpe.bpe_tokenize`` — a pure Column
-    expression, correct for small K, but exponential in expression size
-    and measured unusable corpus-wide at sf0.1). Zipf does the work:
-    the fold runs |vocabulary| times total.
+    expression, correct for small K; measured unusable corpus-wide at
+    sf0.1 while its expression still grew exponentially in K). Zipf
+    does the work: the fold runs |vocabulary| times total.
 
     Cost: one corpus explode, one broadcast join (vocabulary is
     Heaps-bounded; swap to a shuffle join past broadcast size), one

@@ -269,14 +269,17 @@ def index_cdc_drain(
     # which only shifts the cadence phase, never its O(1) cost.
     committed_n = 0
 
-    # The compaction hook runs OUTSIDE the batch journal: a crash between
-    # compact's two swap renames leaves data at data.old. A drain retry
-    # re-entering here (same or fresh index handle) must restore it
-    # BEFORE touching the layout — replayed batches are marker-skipped,
-    # so nothing else on the retry path would (r10 ADVICE #3).
-    from neurondb_spark.data_management import recover
+    # The compaction hook runs OUTSIDE the batch journal: a crash inside
+    # compact's commit leaves its journal (dml_commit.json) behind. A
+    # drain retry re-entering here (same or fresh index handle) must roll
+    # it forward BEFORE touching the layout — replayed batches are
+    # marker-skipped, so nothing else on the retry path would.
+    from neurondb_spark.data_management import apply_dml_commit
 
-    recover(os.path.join(index.path, "data"))
+    if apply_dml_commit(index.path):
+        # the handle's meta predates the commit just finished (an LSH
+        # bucket manifest would name the files the swap replaced)
+        vars(index).update(vars(type(index).load(index.path)))
     # Retention must not REQUIRE compaction to be enabled: with
     # compact_every=0 (the default) the in-batch hook below never fires,
     # and a long-lived drain would accumulate batch markers without

@@ -113,3 +113,20 @@ def jobs_run(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def crash_at_commit(monkeypatch):
+    """Make the shared index roll-forward raise while a journal is
+    present: the state a crash right after the commit point leaves.
+    Returns the real roll-forward, to restore before recovery."""
+    from neurondb_spark import data_management as dm
+
+    real = dm.apply_dml_commit
+
+    def crash(p):
+        if os.path.exists(os.path.join(p, "dml_commit.json")):
+            raise RuntimeError("simulated crash at commit point")
+        return real(p)
+
+    monkeypatch.setattr(dm, "apply_dml_commit", crash)
+    return real

@@ -141,3 +141,38 @@ def test_epoch_shuffle_replayable_and_epoch_distinct(spark):
         by_shard.setdefault(r["shard"], []).append(r["position"])
     for shard, pos in by_shard.items():
         assert sorted(pos) == list(range(1, len(pos) + 1)), shard
+
+
+@pytest.mark.prodconf
+def test_apply_merges_plan_grows_linearly(spark):
+    """apply_merges binds each fold's input once, so its expression grows
+    linearly in the number of merges K. Inlining the previous fold (which
+    merge_pair_expr reads three times) tripled the analyzed plan per
+    merge: 845 → 760,922 characters for K = 1…7. Plan-only: no job; the
+    values are checked against the Python fold."""
+    from neurondb_spark.operators.bpe import apply_merges, char_symbols
+    from neurondb_spark.operators.bpe_local import _merge_word
+
+    merges = [("a", "b", 0), ("ab", "c", 0), ("c", "d", 0), ("abc", "cd", 0),
+              ("e", "e", 0), ("ee", "e", 0), ("x", "y", 0)]
+    df = spark.createDataFrame(
+        [("abcdabcd",), ("eeeee",), ("xyxyab",), ("q",)], "text string"
+    )
+    sizes = []
+    for k in range(1, len(merges) + 1):
+        out = df.select(
+            apply_merges(char_symbols("text"), merges[:k]).alias("s")
+        )
+        sizes.append(len(out._jdf.queryExecution().analyzed().toString()))
+    steps = [b - a for a, b in zip(sizes, sizes[1:])]
+    assert max(steps) <= 2 * min(steps), sizes
+
+    got = [r["s"] for r in out.collect()]
+    want = []
+    for (text,) in df.collect():
+        syms = list(text)
+        for left, right, _ in merges:
+            if len(syms) > 1:
+                syms = _merge_word(syms, left, right)
+        want.append(syms)
+    assert got == want

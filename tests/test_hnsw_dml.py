@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.conftest import SF_DIR, jobs_run  # noqa: E402
+from tests.conftest import SF_DIR, crash_at_commit, jobs_run  # noqa: E402
 
 # Every test here also runs under production session configs (AQE and
 # whole-stage codegen on) in scripts/precommit.sh.
@@ -386,6 +386,7 @@ def test_dml_journal_crash_rolls_forward_on_load(spark, emb, qv, monkeypatch):
     rename (the IVF-rebalance protocol). A crash right after the journal
     — before any rename — must be repaired by load(): swapped graph,
     applied tombstone action, meta consistent with the committed state."""
+    from neurondb_spark import data_management as dm
     from neurondb_spark.index.hnsw import HNSWIndex
 
     sub = emb.where(F.col("vec_id") < 300)
@@ -396,20 +397,13 @@ def test_dml_journal_crash_rolls_forward_on_load(spark, emb, qv, monkeypatch):
     )
     idx.delete(spark, [4, 8])  # tombstones exist; insert of 4 untombstones
 
-    real = HNSWIndex._apply_dml_commit
-
-    def crash(p):
-        if os.path.exists(os.path.join(p, "dml_commit.json")):
-            raise RuntimeError("simulated crash at commit point")
-        return real(p)
-
-    monkeypatch.setattr(HNSWIndex, "_apply_dml_commit", staticmethod(crash))
+    real = crash_at_commit(monkeypatch)
     with pytest.raises(RuntimeError, match="simulated crash"):
         idx.insert(sub.where(F.col("vec_id") % 2 == 1).unionByName(
             sub.where(F.col("vec_id") == 4)
         ))
     assert os.path.exists(os.path.join(path, "dml_commit.json"))
-    monkeypatch.setattr(HNSWIndex, "_apply_dml_commit", staticmethod(real))
+    monkeypatch.setattr(dm, "apply_dml_commit", real)
 
     re = HNSWIndex.load(path, spark)  # roll-forward happens here
     assert not os.path.exists(os.path.join(path, "dml_commit.json"))
@@ -432,13 +426,51 @@ def test_dml_journal_crash_rolls_forward_on_load(spark, emb, qv, monkeypatch):
     assert got == _brute_ids(sub, qv, 5, exclude=[8])
 
 
-def test_scoped_insert_touches_only_new_ids_shards(spark, emb, qv):
+def test_upsert_crash_installs_final_tomb_sig(spark, emb, qv, monkeypatch):
+    """An upsert of a tombstoned id replaces the tombstone set, so the
+    journaled meta must already sign the directory the roll-forward
+    installs: after a crash at the commit point, load() (without the
+    legacy recount) yields a tomb_sig equal to the signature of the
+    final tombstones/ and per-shard counts equal to a recount."""
+    from neurondb_spark import data_management as dm
+    from neurondb_spark.index.hnsw import HNSWIndex, _tomb_dir_sig
+
+    sub = emb.where(F.col("vec_id") < 200)
+    path = os.path.join(tempfile.mkdtemp(prefix="hnsw_sigcrash_"), "idx")
+    idx = HNSWIndex.build(
+        sub.where(F.col("vec_id") % 2 == 0), "embedding", "vec_id", path,
+        num_shards=2, m=8, ef_construction=48, seed=7,
+    )
+    idx.delete(spark, [4, 8, 12])
+
+    real = crash_at_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        idx.insert(sub.where(F.col("vec_id").isin([4, 7])))
+    monkeypatch.setattr(dm, "apply_dml_commit", real)
+
+    re = HNSWIndex.load(path)  # no spark: no recount can mask the meta
+    tomb_path = os.path.join(path, "tombstones")
+    assert re.meta["tomb_sig"] == _tomb_dir_sig(tomb_path)
+    assert re.meta["n_tombstones"] == 2  # 4 untombstoned; 8 and 12 remain
+    staged = re.meta["tomb_by_shard"]
+    re._refresh_tomb_meta(spark)
+    assert re.meta["tomb_by_shard"] == staged
+    live = sub.where(F.col("vec_id") % 2 == 0).unionByName(
+        sub.where(F.col("vec_id") == 7)
+    )
+    got = [r["vec_id"] for r in re.search(
+        spark, qv, k=5, ef_search=live.count()).collect()]
+    assert got == _brute_ids(live, qv, 5, exclude=[8, 12])
+
+
+def test_scoped_insert_touches_only_new_ids_shards(spark, emb, qv, monkeypatch):
     """r10: an insert batch rebuilds and swaps ONLY the shards its new
     ids hash to — untouched shard directories are byte-identical after
     the commit (the partition-scoped journal, the rebalance guarantee
     generalized), and search over the updated index is still exact."""
     import hashlib
 
+    from neurondb_spark import data_management as dm
     from neurondb_spark.index.hnsw import HNSWIndex
 
     path = os.path.join(tempfile.mkdtemp(prefix="hnsw_scoped_"), "idx")
@@ -480,21 +512,10 @@ def test_scoped_insert_touches_only_new_ids_shards(spark, emb, qv):
     # written, roll-forward not run — load() must finish it
     more_ids = [v for v in shard_of
                 if v % 2 == 1 and shard_of[v] == 1][:10]
-    real = HNSWIndex._apply_dml_commit
-
-    def crash(p):
-        if os.path.exists(os.path.join(p, "dml_commit.json")):
-            raise RuntimeError("simulated crash at commit point")
-        return real(p)
-
-    import pytest as _pytest
-    orig = HNSWIndex._apply_dml_commit
-    HNSWIndex._apply_dml_commit = staticmethod(crash)
-    try:
-        with _pytest.raises(RuntimeError, match="simulated crash"):
-            idx.insert(emb.where(F.col("vec_id").isin(more_ids)))
-    finally:
-        HNSWIndex._apply_dml_commit = orig
+    real = crash_at_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        idx.insert(emb.where(F.col("vec_id").isin(more_ids)))
+    monkeypatch.setattr(dm, "apply_dml_commit", real)
     assert os.path.exists(os.path.join(path, "dml_commit.json"))
     idx2 = HNSWIndex.load(path)
     assert not os.path.exists(os.path.join(path, "dml_commit.json"))

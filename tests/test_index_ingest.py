@@ -23,7 +23,7 @@ from neurondb_spark.streaming.index_ingest import (  # noqa: E402
     index_cdc_batch,
     index_cdc_drain,
 )
-from tests.conftest import SF_DIR  # noqa: E402
+from tests.conftest import SF_DIR, crash_at_commit  # noqa: E402
 
 DIM = 64
 
@@ -303,12 +303,37 @@ def test_insert_plans_no_layout_count_job(cdc_env):
         assert loader.load(idx.path).meta["total_rows"] == want_total
 
 
-@pytest.mark.parametrize("am", ["ivf", "lsh"])
-def test_vacuum_journal_crash_rolls_forward_on_load(cdc_env, monkeypatch, am):
-    """r9 verdict #6: IVF and LSH vacuum now commit through the shared
-    journal protocol — a crash AT the commit point (journal written,
-    roll-forward not run) is repaired by load(): tombstoned rows gone,
-    tombstones cleared, total_rows exact, journal dropped."""
+def _crash_at_meta_write(monkeypatch):
+    """Make the first meta.json write raise: the state a crash leaves
+    after a commit has swapped the layout in but before it wrote meta.
+    Returns the real writer, to restore before recovery."""
+    from neurondb_spark import data_management as dm
+
+    real = dm.atomic_write_json
+
+    def crash(path, obj):
+        if os.path.basename(path) == "meta.json":
+            raise RuntimeError("simulated crash before the meta write")
+        return real(path, obj)
+
+    monkeypatch.setattr(dm, "atomic_write_json", crash)
+    return real
+
+
+@pytest.mark.prodconf
+@pytest.mark.parametrize(
+    "am,op",
+    [("ivf", "vacuum"), ("lsh", "vacuum"), ("ivf", "compact"), ("lsh", "compact")],
+    ids=["ivf", "lsh", "ivf-compact", "lsh-compact"],
+)
+def test_vacuum_journal_crash_rolls_forward_on_load(cdc_env, monkeypatch, am, op):
+    """IVF and LSH vacuum and compact commit through the shared journal.
+    A crash after the layout swap but before meta.json is written is
+    finished by load(): journal dropped, meta describing the swapped
+    layout (row count, tombstone state, LSH bucket manifest) and the
+    full-probe top-k equal to brute force. A compact that swapped its
+    layout and then wrote meta as a separate step left an LSH manifest
+    naming deleted files, so every probe failed."""
     from neurondb_spark import data_management as dm
 
     spark, emb, td, src = cdc_env
@@ -322,31 +347,37 @@ def test_vacuum_journal_crash_rolls_forward_on_load(cdc_env, monkeypatch, am):
     dead = [5, 17, 42]
     idx.delete(spark, dead)
 
-    real_apply = dm.apply_dml_commit
-
-    def crash(p):
-        if os.path.exists(os.path.join(p, "dml_commit.json")):
-            raise RuntimeError("simulated crash at commit point")
-        return real_apply(p)
-
-    monkeypatch.setattr(dm, "apply_dml_commit", crash)
+    real_write = _crash_at_meta_write(monkeypatch)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        idx.vacuum(spark)
-    monkeypatch.setattr(dm, "apply_dml_commit", real_apply)
-    assert os.path.exists(os.path.join(idx.path, "dml_commit.json"))
+        getattr(idx, op)(spark)
+    monkeypatch.setattr(dm, "atomic_write_json", real_write)
 
     loader = IVFIndex if am == "ivf" else LSHIndex
     idx2 = loader.load(idx.path)
     assert not os.path.exists(os.path.join(idx.path, "dml_commit.json"))
-    assert not os.path.isdir(os.path.join(idx.path, "tombstones"))
-    assert idx2.meta.get("tombstone_id_col") is None
-    assert idx2.meta["total_rows"] == base.count() - len(dead)
+    assert not os.path.exists(os.path.join(idx.path, "data_tmp"))
+    if op == "vacuum":
+        assert not os.path.isdir(os.path.join(idx.path, "tombstones"))
+        assert idx2.meta.get("tombstone_id_col") is None
+        assert idx2.meta["total_rows"] == base.count() - len(dead)
+    else:
+        assert idx2.meta["tombstone_id_col"] == "vec_id"
+        assert idx2.meta["total_rows"] == base.count()
     kw = {"nprobe": 4} if am == "ivf" else {"probe_hamming": 4}
-    got = {
+    q = _query(spark)
+    got = [
         r["vec_id"]
-        for r in idx2.search(spark, _query(spark), k=300, **kw).collect()
-    }
-    assert not (got & set(dead))
+        for r in idx2.search(spark, q, k=10, tiebreak=["vec_id"], **kw).collect()
+    ]
+    want = [
+        r["vec_id"]
+        for r in base.where(~F.col("vec_id").isin(dead))
+        .select("vec_id", l2_distance("embedding", q).alias("d"))
+        .orderBy(F.col("d").asc(), F.col("vec_id").asc())
+        .limit(10)
+        .collect()
+    ]
+    assert got == want
 
 
 @pytest.mark.slow  # lifecycle/long-loop e2e; extended lane (r16)
@@ -402,6 +433,7 @@ def _pq_files(root):
     ]
 
 
+@pytest.mark.prodconf
 def test_compact_after_cdc_shrinks_files_preserves_topk(cdc_env):
     """CDC appends leave one file per batch per touched list; compact
     merges to one file per list without changing search results or
@@ -521,38 +553,46 @@ def test_cdc_cadence_constant_metadata_and_bounded_journal(
     assert got == _brute_ids(spark, emb, q)
 
 
-def test_drain_retry_recovers_crashed_compaction(cdc_env):
-    """r10 ADVICE #3: a crash between compact's two swap renames leaves
-    the layout at data.old; a drain retry whose batches are all
-    marker-replays must restore it at drain start (nothing else on the
-    replay path touches the layout)."""
+@pytest.mark.prodconf
+def test_drain_retry_recovers_crashed_compaction(cdc_env, monkeypatch):
+    """A compact that crashes at its commit point leaves its journal
+    behind; a drain retry whose batches are all marker-replays must roll
+    it forward at drain start (nothing else on the replay path touches
+    the layout) and refresh the handle it was given, whose meta still
+    names the pre-compact files."""
+    from neurondb_spark import data_management as dm
+
     spark, emb, td, src = cdc_env
-    idx = IVFIndex.build(
+    idx = LSHIndex.build(
         emb.where(F.col("vec_id") % 2 == 0), "embedding",
-        os.path.join(td, "ivf_rec"), nlists=4, metric="l2", dim=DIM,
+        os.path.join(td, "lsh_rec"), dim=DIM, nbits=4, metric="l2",
     )
     index_cdc_drain(
         spark, src, _ops_schema(emb), idx, os.path.join(td, "work_rec"),
         compact_every=1,
     )
-    data = os.path.join(idx.path, "data")
-    # simulate the crash window: data renamed away, new data not yet in
-    os.rename(data, data + ".old")
+    real_apply = crash_at_commit(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        idx.compact(spark)
+    monkeypatch.setattr(dm, "apply_dml_commit", real_apply)
+    assert os.path.exists(os.path.join(idx.path, "dml_commit.json"))
     # retry with the SAME checkpoint: availableNow replays nothing new,
-    # so only the drain-start recover() can restore the layout
+    # so only the drain-start roll-forward can finish the commit
     index_cdc_drain(
         spark, src, _ops_schema(emb), idx, os.path.join(td, "work_rec"),
         compact_every=1,
     )
-    assert os.path.isdir(data) and not os.path.isdir(data + ".old")
+    assert not os.path.exists(os.path.join(idx.path, "dml_commit.json"))
+    assert not os.path.exists(os.path.join(idx.path, "data_tmp"))
     q = _query(spark)
-    got = [
-        r["vec_id"]
-        for r in IVFIndex.load(idx.path).search(
-            spark, q, k=10, nprobe=4, tiebreak=["vec_id"]
-        ).collect()
-    ]
-    assert got == _brute_ids(spark, emb, q)
+    for handle in (idx, LSHIndex.load(idx.path)):
+        got = [
+            r["vec_id"]
+            for r in handle.search(
+                spark, q, k=10, probe_hamming=4, tiebreak=["vec_id"]
+            ).collect()
+        ]
+        assert got == _brute_ids(spark, emb, q)
 
 
 @pytest.mark.slow  # lifecycle/long-loop e2e; extended lane (r16)

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.conftest import SF_DIR  # noqa: E402
+from tests.conftest import SF_DIR, crash_at_commit  # noqa: E402
 
 NLISTS = 8
 
@@ -27,6 +27,17 @@ def emb(spark):
 def qv(emb):
     row = emb.where(F.col("vec_id") == 3).head()
     return [float(x) for x in row["embedding"]]
+
+
+def _skewed_index(emb, prefix):
+    """Two lists holding half the corpus each (cluster = vec_id % 2)."""
+    from neurondb_spark.index.ivf import IVFIndex
+
+    path = os.path.join(tempfile.mkdtemp(prefix=prefix), "idx")
+    layout = emb.withColumn("cluster_id", (F.col("vec_id") % 2).cast("int"))
+    c0 = [float(x) for x in emb.where(F.col("vec_id") == 1).head()["embedding"]]
+    c1 = [float(x) for x in emb.where(F.col("vec_id") == 2).head()["embedding"]]
+    return IVFIndex.from_assignment(layout, "embedding", path, [c0, c1])
 
 
 def _brute_ids(emb, qv, k, exclude=()):
@@ -180,17 +191,15 @@ def test_from_assignment_layout_and_probe_override(spark, emb, qv):
     assert set(only) == routed
 
 
+@pytest.mark.prodconf
 def test_rebalance_splits_oversized_lists(spark, emb, qv):
     """rebalance(): oversized lists split into sub-lists, routing
     centroids update atomically with the layout, full-probe stays exact,
     and the centroid commit survives a reload."""
     from neurondb_spark.index.ivf import IVFIndex
 
-    path = os.path.join(tempfile.mkdtemp(prefix="ivf_reb_"), "idx")
-    layout = emb.withColumn("cluster_id", (F.col("vec_id") % 2).cast("int"))
-    c0 = [float(x) for x in emb.where(F.col("vec_id") == 1).head()["embedding"]]
-    c1 = [float(x) for x in emb.where(F.col("vec_id") == 2).head()["embedding"]]
-    idx = IVFIndex.from_assignment(layout, "embedding", path, [c0, c1])
+    idx = _skewed_index(emb, "ivf_reb_")
+    path = idx.path
     n = emb.count()
     before = idx.statistics(spark)
     assert before["max_list_size"] > n // 3
@@ -211,7 +220,7 @@ def test_rebalance_splits_oversized_lists(spark, emb, qv):
     ]
     assert got == _brute_ids(emb, qv, 10)
 
-    # the centroid list committed inside the data dir wins on reload
+    # the centroid list committed with the journaled meta survives a reload
     re = IVFIndex.load(path)
     assert re.centroids == idx.centroids
     assert re.meta["nlists"] == idx.meta["nlists"]
@@ -222,6 +231,7 @@ def test_rebalance_splits_oversized_lists(spark, emb, qv):
     assert idx.statistics(spark)["populated_lists"] == after["populated_lists"]
 
 
+@pytest.mark.prodconf
 def test_rebalance_is_partition_scoped(spark, emb):
     """r6 verdict #2: splitting one oversized list must NOT rewrite the
     untouched lists — their cluster_id= directories stay byte-identical
@@ -255,38 +265,30 @@ def test_rebalance_is_partition_scoped(spark, emb):
     after = {cid: _listing(cid) for cid in (1, 2, 3)}
     assert before == after, "untouched list dirs were rewritten"
     assert idx.statistics(spark)["total_rows"] == n0
-    assert not os.path.exists(os.path.join(path, "rebalance_commit.json"))
+    assert not os.path.exists(os.path.join(path, "dml_commit.json"))
     assert not os.path.exists(os.path.join(path, "data_tmp"))
 
 
+@pytest.mark.prodconf
 def test_rebalance_crash_after_journal_rolls_forward_on_load(spark, emb, qv, monkeypatch):
     """The journal rename is the commit point: a crash right after it
     (before any directory move) is repaired by load()'s idempotent
     roll-forward — the reloaded index is fully consistent."""
+    from neurondb_spark import data_management as dm
     from neurondb_spark.index.ivf import IVFIndex
 
-    path = os.path.join(tempfile.mkdtemp(prefix="ivf_rebc_"), "idx")
-    layout = emb.withColumn("cluster_id", (F.col("vec_id") % 2).cast("int"))
-    c0 = [float(x) for x in emb.where(F.col("vec_id") == 1).head()["embedding"]]
-    c1 = [float(x) for x in emb.where(F.col("vec_id") == 2).head()["embedding"]]
-    idx = IVFIndex.from_assignment(layout, "embedding", path, [c0, c1])
+    idx = _skewed_index(emb, "ivf_rebc_")
+    path = idx.path
     n = emb.count()
 
-    real = IVFIndex._apply_rebalance_commit
-
-    def crash(p):
-        if os.path.exists(os.path.join(p, "rebalance_commit.json")):
-            raise RuntimeError("simulated crash at commit point")
-        return real(p)
-
-    monkeypatch.setattr(IVFIndex, "_apply_rebalance_commit", staticmethod(crash))
+    real = crash_at_commit(monkeypatch)
     with pytest.raises(RuntimeError, match="simulated crash"):
         idx.rebalance(spark, max_list_size=n // 3)
-    assert os.path.exists(os.path.join(path, "rebalance_commit.json"))
-    monkeypatch.setattr(IVFIndex, "_apply_rebalance_commit", staticmethod(real))
+    assert os.path.exists(os.path.join(path, "dml_commit.json"))
+    monkeypatch.setattr(dm, "apply_dml_commit", real)
 
     re = IVFIndex.load(path)  # roll-forward happens here
-    assert not os.path.exists(os.path.join(path, "rebalance_commit.json"))
+    assert not os.path.exists(os.path.join(path, "dml_commit.json"))
     assert not os.path.exists(os.path.join(path, "data_tmp"))
     assert re.meta["nlists"] == len(re.centroids) > 2
     got = [
@@ -319,40 +321,33 @@ def test_ivf_search_construction_runs_no_spark_job(spark, emb, qv):
     assert got == _brute_ids(emb, qv, 5)
 
 
+@pytest.mark.prodconf
 def test_rebalance_crash_mid_move_rolls_forward(spark, emb, qv, monkeypatch):
     """Crash AFTER the journal and after only PART of the directory
     moves: the roll-forward's existence checks must finish the commit
     from any intermediate state."""
     import shutil
 
+    from neurondb_spark import data_management as dm
     from neurondb_spark.index.ivf import IVFIndex
 
-    path = os.path.join(tempfile.mkdtemp(prefix="ivf_rebm_"), "idx")
-    layout = emb.withColumn("cluster_id", (F.col("vec_id") % 2).cast("int"))
-    c0 = [float(x) for x in emb.where(F.col("vec_id") == 1).head()["embedding"]]
-    c1 = [float(x) for x in emb.where(F.col("vec_id") == 2).head()["embedding"]]
-    idx = IVFIndex.from_assignment(layout, "embedding", path, [c0, c1])
+    idx = _skewed_index(emb, "ivf_rebm_")
+    path = idx.path
     n = emb.count()
 
-    real = IVFIndex._apply_rebalance_commit
-
-    def crash(p):
-        if os.path.exists(os.path.join(p, "rebalance_commit.json")):
-            raise RuntimeError("simulated crash")
-        return real(p)
-
-    monkeypatch.setattr(IVFIndex, "_apply_rebalance_commit", staticmethod(crash))
+    real = crash_at_commit(monkeypatch)
     with pytest.raises(RuntimeError):
         idx.rebalance(spark, max_list_size=n // 3)
-    monkeypatch.setattr(IVFIndex, "_apply_rebalance_commit", staticmethod(real))
+    monkeypatch.setattr(dm, "apply_dml_commit", real)
 
     # hand-apply PART of the commit: stage parent 0 away and move its
-    # replacement in, leaving the new-id dir and centroids unapplied —
+    # replacement in, leaving the new-id dirs and meta unapplied —
     # exactly the state a crash between renames leaves behind
-    with open(os.path.join(path, "rebalance_commit.json")) as f:
-        splits = json.load(f)["splits"]
-    cid, _new_id = splits[0]
-    trash = os.path.join(path, "rebalance_trash")
+    with open(os.path.join(path, "dml_commit.json")) as f:
+        journal = json.load(f)
+    assert journal["part_col"] == "cluster_id"
+    cid = journal["partitions"][0]
+    trash = os.path.join(path, "dml_trash")
     os.makedirs(trash, exist_ok=True)
     os.rename(os.path.join(path, "data", f"cluster_id={cid}"),
               os.path.join(trash, f"cluster_id={cid}"))
@@ -360,7 +355,7 @@ def test_rebalance_crash_mid_move_rolls_forward(spark, emb, qv, monkeypatch):
               os.path.join(path, "data", f"cluster_id={cid}"))
 
     re = IVFIndex.load(path)  # finishes the remaining moves
-    assert not os.path.exists(os.path.join(path, "rebalance_commit.json"))
+    assert not os.path.exists(os.path.join(path, "dml_commit.json"))
     assert re.meta["nlists"] == len(re.centroids) > 2
     got = [
         r["vec_id"]
@@ -374,16 +369,11 @@ def test_rebalance_crash_mid_move_rolls_forward(spark, emb, qv, monkeypatch):
     shutil.rmtree(path, ignore_errors=True)
 
 
+@pytest.mark.prodconf
 def test_rebalance_splits_multiple_lists_at_once(spark, emb, qv):
     """Two oversized lists in one rebalance: both split, both new
     centroids appended, full probe exact."""
-    from neurondb_spark.index.ivf import IVFIndex
-
-    path = os.path.join(tempfile.mkdtemp(prefix="ivf_reb2_"), "idx")
-    layout = emb.withColumn("cluster_id", (F.col("vec_id") % 2).cast("int"))
-    c0 = [float(x) for x in emb.where(F.col("vec_id") == 1).head()["embedding"]]
-    c1 = [float(x) for x in emb.where(F.col("vec_id") == 2).head()["embedding"]]
-    idx = IVFIndex.from_assignment(layout, "embedding", path, [c0, c1])
+    idx = _skewed_index(emb, "ivf_reb2_")
     n = emb.count()
     idx.rebalance(spark, max_list_size=n // 4)  # both halves oversized
     assert idx.meta["nlists"] >= 4
@@ -396,28 +386,24 @@ def test_rebalance_splits_multiple_lists_at_once(spark, emb, qv):
     assert got == _brute_ids(emb, qv, 10)
 
 
+@pytest.mark.prodconf
 def test_rebalance_crash_during_cleanup_leaks_nothing(spark, emb, qv, monkeypatch):
-    """r8 verdict #4: staging cleanup runs BEFORE the journal drop, so a
-    crash mid-cleanup keeps the journal alive and the next load()
-    finishes the sweep — rebalance_trash / data_tmp can never be leaked
-    permanently (the old ordering removed the journal first, making the
-    roll-forward a no-op that never swept)."""
+    """Staging cleanup runs BEFORE the journal drop, so a crash
+    mid-cleanup keeps the journal alive and the next load() finishes
+    the sweep — dml_trash / data_tmp can never be leaked permanently."""
     import shutil
 
     from neurondb_spark.index.ivf import IVFIndex
 
-    path = os.path.join(tempfile.mkdtemp(prefix="ivf_rebclean_"), "idx")
-    layout = emb.withColumn("cluster_id", (F.col("vec_id") % 2).cast("int"))
-    c0 = [float(x) for x in emb.where(F.col("vec_id") == 1).head()["embedding"]]
-    c1 = [float(x) for x in emb.where(F.col("vec_id") == 2).head()["embedding"]]
-    idx = IVFIndex.from_assignment(layout, "embedding", path, [c0, c1])
+    idx = _skewed_index(emb, "ivf_rebclean_")
+    path = idx.path
     n = emb.count()
 
     real_rmtree = shutil.rmtree
     state = {"crashed": False}
 
     def crash_once(p, *a, **kw):
-        if not state["crashed"] and os.path.basename(str(p)) == "rebalance_trash":
+        if not state["crashed"] and os.path.basename(str(p)) == "dml_trash":
             state["crashed"] = True
             raise RuntimeError("simulated crash during cleanup")
         return real_rmtree(p, *a, **kw)
@@ -427,11 +413,12 @@ def test_rebalance_crash_during_cleanup_leaks_nothing(spark, emb, qv, monkeypatc
         idx.rebalance(spark, max_list_size=n // 3)
     # the journal outlives the cleanup steps — that's what makes the
     # sweep re-runnable after the crash
-    assert os.path.exists(os.path.join(path, "rebalance_commit.json"))
+    assert os.path.exists(os.path.join(path, "dml_commit.json"))
+    assert os.path.isdir(os.path.join(path, "dml_trash"))
 
     re = IVFIndex.load(path)  # roll-forward completes the cleanup
-    assert not os.path.exists(os.path.join(path, "rebalance_commit.json"))
-    assert not os.path.exists(os.path.join(path, "rebalance_trash"))
+    assert not os.path.exists(os.path.join(path, "dml_commit.json"))
+    assert not os.path.exists(os.path.join(path, "dml_trash"))
     assert not os.path.exists(os.path.join(path, "data_tmp"))
     assert re.meta["nlists"] == len(re.centroids) > 2
     got = [
@@ -441,19 +428,3 @@ def test_rebalance_crash_during_cleanup_leaks_nothing(spark, emb, qv, monkeypatc
         ).collect()
     ]
     assert got == _brute_ids(emb, qv, 10)
-
-
-def test_stale_rebalance_trash_swept_on_load(spark, emb):
-    """Journal-absent rebalance_trash (the pre-r9 crash window's leak) is
-    provably garbage — load() sweeps it."""
-    from neurondb_spark.index.ivf import IVFIndex
-
-    path = os.path.join(tempfile.mkdtemp(prefix="ivf_trash_"), "idx")
-    idx = IVFIndex.build(
-        emb.select("vec_id", "embedding"), "embedding", path, nlists=4,
-    )
-    trash = os.path.join(path, "rebalance_trash")
-    os.makedirs(os.path.join(trash, "cluster_id=0"))
-    re = IVFIndex.load(path)
-    assert not os.path.exists(trash)
-    assert re.meta["nlists"] == idx.meta["nlists"]
