@@ -278,7 +278,7 @@ def kmeans_lloyd_exact(
     feeds every round's distance join AND every round's centroid rebuild
     (2·iters+1 references); the localCheckpoint computes it once instead
     of re-deriving the parquet scan + posexplode per reference. It is
-    EAGER, as ``bpe_train``'s are: a lazy checkpoint materialized inside
+    EAGER: a lazy checkpoint materialized inside
     the caller's action can be computed by a broadcast-exchange thread
     while the DAG scheduler computes the same RDD's partitions, and
     that pair was seen to deadlock on the RDD and the checkpoint lock

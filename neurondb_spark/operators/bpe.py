@@ -1,6 +1,5 @@
-"""Distributed BPE tokenizer training — the fixed-K-merges byte-pair
--encoding loop over a corpus word-frequency table, plus re-tokenization
-with the learned merge table.
+"""BPE tokenizer training over a corpus word-frequency table, and
+tokenization with the learned merge table.
 
 Reference analog: the HF tokenizer surface (neurondb--1.0.sql:5117-5157,
 NeuronDB/src/onnx/neurondb_tokenizer.c) APPLIES a pretrained tokenizer;
@@ -9,54 +8,45 @@ vocabulary count stage already exists (registry vocab_top_tokens), and
 this module adds the merge loop on top of it.
 
 Algorithm (Sennrich et al. 2016, "Neural Machine Translation of Rare
-Words with Subword Units" — the public BPE formulation):
+Words with Subword Units" — the public BPE formulation, also how HF
+tokenizers train):
 
-1. word table: distinct word → corpus count, word split into character
-   symbols. One corpus-scale explode + combiner groupBy; the table is
-   Heaps-law-bounded (millions of rows at 100 TB, never corpus-sized).
-2. K times: count adjacent symbol pairs weighted by word count (one
-   groupBy over the WORD table, not the corpus), pick the argmax pair
-   with a deterministic tie-break (max count, then lexicographic), and
-   apply the merge to every word as a greedy left-to-right fold.
-3. tokenization with the learned table = the same char-split + K folds
-   as a pure Column expression over any text.
+1. word table: distinct word → corpus count. One corpus-scale explode
+   + combiner groupBy; the table is Heaps-law-bounded (millions of rows
+   at 100 TB, never corpus-sized), so it is collected to the driver.
+2. K merge rounds on the driver, each word split into its characters:
+   pick the adjacent symbol pair with the largest corpus-weighted count
+   (ties to the lexicographically smallest (left, right)) and apply it
+   to every word as a greedy left-to-right fold (:func:`_merge_word`).
+   Pair counts are kept incrementally (see :func:`_train_table`), so a
+   round costs the words that contain its pair, not the whole table.
+3. tokenization: the same character split and K folds over each word
+   of a text, in one Arrow-batched UDF (:func:`bpe_tokenize`).
 
 Determinism: every step is integer counts, string compares and argmax
 with total-order tie-breaks — no floats, no RNG — so the merge table and
 the re-tokenized counts sit under the driver's value-hash gate exactly
 like kmeans_fixed_lloyd, and a chained-CTE DuckDB oracle replays the
-whole loop (registry/text_pipeline.py builds it).
-
-Scale: each merge round is one small shuffle (pair counts over the word
-table), one 1-row argmax to the driver, and one pure-map fold — K rounds
-total, independent of corpus size after the initial count. The word
-table is localCheckpoint'd per round so round N's job does not replay
-rounds 1..N-1's folds (the connected-components playbook). Word-final
-markers are omitted: words here are the engine's alnum-run tokens, so
-merges never cross a whitespace boundary by construction.
+whole loop (registry/tokenizer_queries._bpe_ctes). Word-final markers
+are omitted: words here are the engine's alnum-run tokens, so merges
+never cross a whitespace boundary by construction.
 """
 
 from __future__ import annotations
 
+import heapq
+from collections import defaultdict
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def char_symbols(word: Column | str) -> Column:
-    """Split a word into single-character symbols (expression-only; the
-    oracle replays it as list_transform(range(...), substr))."""
-    c = F.col(word) if isinstance(word, str) else word
-    return F.transform(
-        F.sequence(F.lit(1), F.length(c)),
-        lambda i: F.substr(c, i, F.lit(1)),
-    )
 
 
 def bpe_word_table(
     df: DataFrame, text_col: str, max_words: int | None = None
 ) -> DataFrame:
-    """(word, cnt, symbols) — the frequency table the merge loop trains
-    on. ``max_words`` caps it to the most frequent words (ties to word
+    """(word, cnt) — the frequency table the merge loop trains on.
+    ``max_words`` caps it to the most frequent words (ties to word
     order), the standard frequency-truncated training vocabulary; None
     trains on every distinct word. The corpus-scale work is exactly the
     vocab_top_tokens aggregate."""
@@ -71,165 +61,187 @@ def bpe_word_table(
         words = words.orderBy(
             F.col("cnt").desc(), F.col("word").asc()
         ).limit(int(max_words))
-    return words.withColumn("symbols", char_symbols("word"))
+    return words
 
 
-def merge_pair_expr(symbols: Column, left: str, right: str) -> Column:
+def _merge_word(symbols: list[str], left: str, right: str) -> list[str]:
     """Greedy left-to-right merge of adjacent (left, right) symbols into
-    one — e.g. (a,a) turns [a,a,a,a] into [aa,aa], matching the classic
-    BPE replacement scan. Pure fold: seed with the first symbol, then
-    per symbol either extend the merged tail or append."""
-    merged = F.lit(left + right)
-    init = F.slice(symbols, 1, 1)
-    rest = F.slice(
-        symbols, 2, F.greatest(F.size(symbols) - 1, F.lit(0))
-    )
-    return F.aggregate(
-        rest,
-        init,
-        lambda acc, s: F.when(
-            (F.element_at(acc, -1) == F.lit(left)) & (s == F.lit(right)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(merged)
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
+    one — e.g. (a,a) turns [a,a,a,a] into [aa,aa], the classic BPE
+    replacement scan: seed with the first symbol, then per symbol either
+    extend the merged tail or append. ``symbols`` is non-empty: callers
+    fold only words that contain the pair."""
+    acc = [symbols[0]]
+    merged = left + right
+    for s in symbols[1:]:
+        if acc[-1] == left and s == right:
+            acc[-1] = merged
+        else:
+            acc.append(s)
+    return acc
 
 
-def _pair_counts(words: DataFrame) -> DataFrame:
-    """(l, r, pair_count): adjacent-position pair counts weighted by word
-    count. Overlapping positions both count ("aaa" counts (a,a) twice) —
-    the classic Sennrich counting. Single-symbol words contribute none."""
-    multi = words.where(F.size("symbols") >= 2)
-    pairs = multi.select(
-        "cnt",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("symbols") - 1),
-                lambda i: F.struct(
-                    F.element_at("symbols", i).alias("l"),
-                    F.element_at("symbols", i + 1).alias("r"),
-                ),
-            )
-        ).alias("z"),
-    )
-    return pairs.groupBy(F.col("z.l").alias("l"), F.col("z.r").alias("r")).agg(
-        F.sum("cnt").alias("pair_count")
-    )
+def _train_table(
+    words: DataFrame, num_merges: int
+) -> tuple[list[tuple[str, str, int]], list[list]]:
+    """The merge loop: returns (merges, driver-side table of [word, cnt,
+    post-merge symbols]). Collects the word table once (one job), then
+    runs the rounds driver-side with incrementally maintained pair
+    statistics:
+
+    - ``stats``: pair -> corpus-weighted adjacent count (overlapping
+      positions both count: "aaa" counts (a,a) twice);
+    - a lazy-invalidation heap keyed (-count, l, r), the argmax order
+      (count desc, l asc, r asc); every count change pushes a fresh
+      entry, and stale entries are dropped when popped against ``stats``;
+    - an inverted index pair -> word ids, so each merge touches only the
+      words that contain it (membership re-checked on use: entries go
+      stale as words evolve).
+
+    Driver work is O(sum over merges of words touched × word length),
+    independent of corpus size and of Spark job latency."""
+    if num_merges < 1:
+        raise ValueError(
+            f"neurondb: bpe num_merges must be >= 1, got {num_merges}"
+        )
+    table: list[list] = [
+        [r["word"], int(r["cnt"]), list(r["word"])]
+        for r in words.select("word", "cnt").collect()
+    ]
+
+    stats: dict[tuple[str, str], int] = defaultdict(int)
+    index: dict[tuple[str, str], set[int]] = defaultdict(set)
+    for wid, (_w, cnt, syms) in enumerate(table):
+        for p in zip(syms, syms[1:]):
+            stats[p] += cnt
+            index[p].add(wid)
+    heap: list[tuple[int, str, str]] = [
+        (-c, l, r) for (l, r), c in stats.items()
+    ]
+    heapq.heapify(heap)
+
+    merges: list[tuple[str, str, int]] = []
+    for _ in range(int(num_merges)):
+        top = None
+        while heap:
+            negc, l, r = heapq.heappop(heap)
+            if stats.get((l, r)) == -negc:
+                top = (l, r, -negc)
+                break
+        if top is None:
+            break  # every word is one symbol
+        left, right, pc = top
+        merges.append((left, right, pc))
+        merged = left + right
+        delta: dict[tuple[str, str], int] = defaultdict(int)
+        for wid in sorted(index.get((left, right), ())):
+            _w, cnt, syms = table[wid]
+            old_pairs = list(zip(syms, syms[1:]))
+            if (left, right) not in old_pairs:
+                continue  # stale index entry: the word evolved past it
+            for p in old_pairs:
+                delta[p] -= cnt
+            new_syms = _merge_word(syms, left, right)
+            for p in zip(new_syms, new_syms[1:]):
+                delta[p] += cnt
+                # only pairs touching the merged symbol can be new
+                # adjacencies; wid is already indexed under the others
+                if p[0] == merged or p[1] == merged:
+                    index[p].add(wid)
+            table[wid][2] = new_syms
+        for p, d in delta.items():
+            if d == 0:
+                continue
+            c = stats[p] + d
+            if c <= 0:
+                stats.pop(p, None)
+                index.pop(p, None)
+            else:
+                stats[p] = c
+                heapq.heappush(heap, (-c, *p))
+
+    return merges, table
 
 
 def bpe_train(
     words: DataFrame, num_merges: int
 ) -> tuple[list[tuple[str, str, int]], DataFrame]:
-    """Run ``num_merges`` merge rounds over a :func:`bpe_word_table`
+    """Run up to ``num_merges`` merge rounds over a :func:`bpe_word_table`
     frame. Returns (merges, final_words): merges is the ordered list of
     (left, right, pair_count) — the tokenizer's merge table — and
-    final_words is the word table with post-merge ``symbols`` (its
-    exploded, cnt-weighted symbols ARE the re-tokenized corpus counts).
+    final_words is (word, cnt, symbols) with the post-merge symbols (its
+    exploded, cnt-weighted symbols ARE the re-tokenized corpus counts,
+    :func:`bpe_token_counts`). final_words is built from the driver-side
+    table, vocabulary-sized.
 
-    Stops early if no adjacent pair remains (every word is one symbol).
-
-    Each round: one word-table groupBy + a ONE-ROW argmax collect + a
-    pure-map fold, materialized via localCheckpoint so the next round's
-    pair count does not replay the fold chain (and so the K-deep
-    expression never outgrows codegen).
-
-    Job structure (optimization round 15, guide §1.2): the input word
-    table is checkpointed BEFORE the loop, so the corpus-scale word
-    count runs exactly ONCE — the previous shape re-derived it twice
-    (once for round 1's argmax, once again inside round 1's fold
-    checkpoint). Round checkpoints stay EAGER: the loop interleaves
-    driver-side argmax collects, where lazy checkpoints were measured
-    to race between consumer stages and spam dead-accumulator errors
-    (see OPTIMIZATION_r15.md)."""
-    if num_merges < 1:
-        raise ValueError(
-            f"neurondb: bpe num_merges must be >= 1, got {num_merges}"
-        )
-    merges: list[tuple[str, str, int]] = []
-    cur = words.localCheckpoint()
-    for _ in range(int(num_merges)):
-        top = (
-            _pair_counts(cur)
-            .orderBy(
-                F.col("pair_count").desc(),
-                F.col("l").asc(),
-                F.col("r").asc(),
-            )
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        left, right, pc = top[0]["l"], top[0]["r"], int(top[0]["pair_count"])
-        merges.append((left, right, pc))
-        cur = cur.withColumn(
-            "symbols", merge_pair_expr(F.col("symbols"), left, right)
-        ).localCheckpoint(eager=True)
-    return merges, cur
+    Stops early if no adjacent pair remains (every word is one symbol)."""
+    merges, table = _train_table(words, num_merges)
+    final = words.sparkSession.createDataFrame(
+        table, "word string, cnt long, symbols array<string>"
+    )
+    return merges, final
 
 
-# Largest merge table the pure-expression tokenizer compiles. The limit
-# was set when each nested fold inlined its input ~3 times and the
-# expression grew exponentially in K (plan analysis hung around K≈10,
-# see PLANS.md); apply_merges now binds each fold's input once, so the
-# expression is linear in K and the limit awaits a re-measurement.
-MAX_EXPR_MERGES = 8
-
-
-def apply_merges(symbols: Column, merges: list[tuple[str, str, int]]) -> Column:
-    """Apply a learned merge table (in training order) to a symbol
-    array — the tokenizer's encode step as one Column expression.
-
-    Each fold's input is bound once (``functions.text.let``):
-    :func:`merge_pair_expr` reads its input three times, so inlining
-    the previous fold would triple the expression per merge. Bound, the
-    expression grows linearly in K. The folds still run per word
-    OCCURRENCE; corpus-wide, ``bpe_local.bpe_tokenize_via_vocab`` folds
-    each distinct word once (``bpe_local.word_symbols_udf`` is the
-    bit-equal Arrow-batched fold)."""
-    from neurondb_spark.functions.text import let
-
-    def _fold(left: str, right: str):
-        # one-argument closure: pyspark reads the lambda's arity
-        return lambda s: merge_pair_expr(s, left, right)
-
-    out = symbols
-    for left, right, _ in merges:
-        out = let(out, _fold(left, right))
-    return out
+def bpe_train_summary(
+    words: DataFrame, num_merges: int
+) -> tuple[int, int, int | None]:
+    """Train exactly like :func:`bpe_train` but return only the scalar
+    vocabulary summary ``(n_merges, n_tokens, total_occurrences)`` —
+    n_tokens = distinct post-merge symbols, total_occurrences =
+    Σ cnt·len(symbols), i.e. the two aggregates of
+    ``bpe_token_counts(final_words)``, computed over the driver-side
+    table instead of shipping it back to the cluster.
+    ``total_occurrences`` is None on an empty table, mirroring SQL
+    SUM-over-empty."""
+    merges, table = _train_table(words, num_merges)
+    tokens: set[str] = set()
+    total = 0
+    for _w, cnt, syms in table:
+        tokens.update(syms)
+        total += cnt * len(syms)
+    return len(merges), len(tokens), (total if table else None)
 
 
 def bpe_tokenize(
     text: Column | str, merges: list[tuple[str, str, int]]
 ) -> Column:
-    """Tokenize text with a learned BPE table: alnum-run word split, each
-    word char-split then merged, flattened to one subword-token array.
-    Expression-only — usable in any pipeline stage, no UDF. Merge
-    tables longer than :data:`MAX_EXPR_MERGES` are REFUSED: the limit
-    dates from an expression that grew exponentially in K and hung
-    plan analysis past it (the expression is linear in K now, see
-    :func:`apply_merges`; the limit has not been re-measured). Larger K
-    routes through
-    ``bpe_local.bpe_tokenize_via_vocab`` (each DISTINCT word folds once
-    in an Arrow UDF; ``engine.tokenize_with`` does this automatically)."""
+    """Tokenize text with a learned BPE table: alnum-run word split
+    (``functions.text.tokenize``), each word char-split then merged in
+    table order, flattened to one subword-token array. Null, empty and
+    token-less text give ``[]``.
+
+    One Arrow-batched pandas UDF: each distinct word of a batch is
+    folded once (a dict memo; Zipf makes that a small share of the
+    words), and a merge runs on a word only when its merged string
+    occurs in the word — a merge keeps the symbols' concatenation equal
+    to the word, so no other merge can apply. No join, no row id and no
+    limit on the table size."""
     from neurondb_spark.functions.text import tokenize
 
-    if len(merges) > MAX_EXPR_MERGES:
-        raise ValueError(
-            f"neurondb: bpe_tokenize compiles one nested fold per merge "
-            f"and accepts at most K={MAX_EXPR_MERGES} "
-            f"(got {len(merges)} merges). Use "
-            "bpe_local.bpe_tokenize_via_vocab (or "
-            "engine.tokenize_with, which routes there) for trained-size "
-            "merge tables."
-        )
+    pairs = [(left, right, left + right) for left, right, _ in merges]
+
+    def _fold(word: str) -> list[str]:
+        syms = list(word)
+        for left, right, merged in pairs:
+            if merged in word:
+                syms = _merge_word(syms, left, right)
+        return syms
+
+    @F.pandas_udf("array<string>")
+    def _apply(docs: pd.Series) -> pd.Series:
+        memo: dict[str, list[str]] = {}
+        out = []
+        for doc in docs:
+            toks: list[str] = []
+            for w in () if doc is None else doc:
+                sub = memo.get(w)
+                if sub is None:
+                    sub = memo[w] = _fold(w)
+                toks.extend(sub)
+            out.append(toks)
+        return pd.Series(out)
+
     c = F.col(text) if isinstance(text, str) else text
-    return F.flatten(
-        F.transform(
-            tokenize(c), lambda w: apply_merges(char_symbols(w), merges)
-        )
-    )
+    return _apply(tokenize(c))
 
 
 def bpe_token_counts(final_words: DataFrame) -> DataFrame:

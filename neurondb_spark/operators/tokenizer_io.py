@@ -4,14 +4,14 @@ The reference ships pretrained tokenizer files and loads them by path
 (neurondb--1.0.sql:5117-5157 tokenizer surface;
 NeuronDB/src/onnx/neurondb_tokenizer.c reads vocab/merges from disk).
 This module is the training-side counterpart: the merge table
-``bpe_train`` / ``bpe_train_hybrid`` learns is serialized as one
+``bpe.bpe_train`` learns is serialized as one
 versioned JSON artifact (atomic tmp+rename write), so a tokenizer
 trained once on the cluster is a deployment file any job — or an
 external HF-tokenizers consumer via the merges list — can load.
 
 Driver-side file I/O only (the artifact is KBs even at 32k merges);
-applying a loaded tokenizer is the existing ``bpe_tokenize`` Column
-expression, no UDF.
+applying a loaded tokenizer is ``bpe.bpe_tokenize``, one per-row
+Arrow-batched UDF.
 """
 
 from __future__ import annotations

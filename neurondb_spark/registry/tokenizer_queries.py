@@ -1,6 +1,6 @@
-"""Tokenizer-training + loader-order gate rows (round 12): the
-distributed BPE merge loop (operators/bpe.py) and the deterministic
-epoch shuffle (operators/corpus.epoch_shuffle).
+"""Tokenizer-training + loader-order gate rows (round 12): the BPE
+trainer and tokenizer (operators/bpe.py) and the deterministic epoch
+shuffle (operators/corpus.epoch_shuffle).
 
 Reference analog: the HF tokenizer surface applies a pretrained
 tokenizer (neurondb--1.0.sql:5117-5157, src/onnx/neurondb_tokenizer.c);
@@ -34,6 +34,10 @@ def _q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     merges, _ = bpe_train(bpe_word_table(docs, "text"), _BPE_MERGES)
+    return _merge_table(spark, merges)
+
+
+def _merge_table(spark: SparkSession, merges) -> DataFrame:
     return spark.createDataFrame(
         [(i + 1, l, r, c) for i, (l, r, c) in enumerate(merges)],
         "rank int, pair_left string, pair_right string, pair_count long",
@@ -64,7 +68,8 @@ def _bpe_ctes() -> str:
     both count), m{i} = deterministic argmax, w{i+1} = the greedy
     left-to-right fold (list-of-lists list_reduce — seeds with the first
     symbol, then per symbol extends the merged tail or appends, exactly
-    operators/bpe.merge_pair_expr)."""
+    operators/bpe._merge_word). The oracle is written independently of
+    the trainer: it recounts every pair each round."""
     toks = sql_tokenize("text")
     parts = [
         f"""w0 AS (
@@ -120,55 +125,47 @@ LIMIT {_BPE_TOP}"""
 
 
 def _q_bpe_hybrid_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The HYBRID trainer's merge table (operators/bpe_local.py —
-    distributed word count + driver-side heap merge loop) under the SAME
-    chained-CTE oracle as bpe_merges_topk: the driver gate itself proves
-    the production-scale path is bit-equal to the distributed loop."""
-    from neurondb_spark.operators.bpe import bpe_word_table
-    from neurondb_spark.operators.bpe_local import bpe_train_hybrid
+    """The merge table as ``engine.train_tokenizer`` saved it (the
+    ``gate_bpe`` catalog artifact, loaded back) under the SAME
+    chained-CTE oracle as bpe_merges_topk: the facade's training run and
+    the artifact's save/load keep every pair, its rank and its count."""
+    from neurondb_spark.engine import NeuronSparkEngine
+    from neurondb_spark.operators.tokenizer_io import load_tokenizer
 
-    docs = t(spark, sf_dir, "documents")
-    merges, _ = bpe_train_hybrid(bpe_word_table(docs, "text"), _BPE_MERGES)
-    return spark.createDataFrame(
-        [(i + 1, l, r, c) for i, (l, r, c) in enumerate(merges)],
-        "rank int, pair_left string, pair_right string, pair_count long",
+    eng = NeuronSparkEngine(spark, _tokenizer_catalog(spark, sf_dir))
+    merges, _meta = load_tokenizer(
+        eng.catalog.get("tokenizers", "gate_bpe")["path"]
     )
+    return _merge_table(spark, merges)
 
 
 _BPE_PROD_K = 2000
 
 
 def _q_bpe_hybrid_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-vocab training run (K=2000) through the hybrid loop —
-    the bench row proving tokenizer training no longer pays one Spark
-    job per merge (the distributed loop would be 2000 sequential jobs).
-    The synthetic documents corpus's natural-language vocabulary
-    exhausts after <100 merges (early-stop, hash-gated elsewhere), so
-    this row trains on a symbol-rich DETERMINISTIC word table derived
-    from the corpus — md5 hex of each doc id (32 symbols over a 16-char
-    alphabet, all counts tied → the total-order argmax is exercised
-    every round). No oracle by design: the K=10 replay IS hash-gated
-    twice (bpe_merges_topk distributed / bpe_hybrid_merges hybrid, same
-    chained-CTE oracle); a 2000-round CTE chain is the same construction
-    at a size DuckDB cannot plan. Output: one summary row, deterministic
-    (integer counts, total-order argmax)."""
-    from neurondb_spark.operators.bpe import char_symbols
-    from neurondb_spark.operators.bpe_local import bpe_train_hybrid_summary
+    """Production-vocab training run (K=2000): the bench row for a
+    trained-size merge table (one word-table collect, then 2000
+    driver-side rounds). The synthetic documents corpus's
+    natural-language vocabulary exhausts after <100 merges (early-stop,
+    hash-gated elsewhere), so this row trains on a symbol-rich
+    DETERMINISTIC word table derived from the corpus — md5 hex of each
+    doc id (32 symbols over a 16-char alphabet, all counts tied → the
+    total-order argmax is exercised every round). No oracle by design:
+    the K=10 replay IS hash-gated (bpe_merges_topk / bpe_hybrid_merges,
+    same chained-CTE oracle); a 2000-round CTE chain is the same
+    construction at a size DuckDB cannot plan. Output: one summary row,
+    deterministic (integer counts, total-order argmax)."""
+    from neurondb_spark.operators.bpe import bpe_train_summary
 
     docs = t(spark, sf_dir, "documents")
     words = (
         docs.select(F.md5(F.col("doc_id").cast("string")).alias("word"))
         .groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("symbols", char_symbols("word"))
     )
-    # (r16) summary variant: same training loop, same three values, but
-    # the vocabulary aggregate is computed over the trainer's own
-    # driver-resident table instead of round-tripping it back into a
-    # LocalTableScan → explode → groupBy job (guide §5; the table is
-    # Heaps-bounded BY the hybrid trainer's design — it was already
-    # collected). Values proven equal to the old bpe_token_counts(final)
-    # aggregate in tests/test_bpe_hybrid.py.
-    n_merges, n_tokens, total = bpe_train_hybrid_summary(words, _BPE_PROD_K)
+    # the summary is aggregated over the trainer's driver-side table,
+    # not shipped back into a LocalTableScan → explode → groupBy job;
+    # tests/test_bpe_hybrid.py proves it equal to that aggregate
+    n_merges, n_tokens, total = bpe_train_summary(words, _BPE_PROD_K)
     return spark.createDataFrame(
         [(int(n_merges), int(n_tokens),
           None if total is None else int(total))],
@@ -226,18 +223,19 @@ def _tokenizer_catalog(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 def _q_bpe_saved_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer PERSISTENCE round-trip under the hash gate: train K=10
-    through the engine facade (hybrid loop), save the artifact to the
-    catalog (operators/tokenizer_io), load it back, and re-tokenize the
-    corpus AT VOCABULARY COST (the loaded merges fold once per distinct
-    word via word_symbols_udf — the same Zipf trick
-    bpe_tokenize_via_vocab uses corpus-wide; nesting the expression form
-    K=10 deep is an O(4^K) expression tree that hangs analysis). Must
-    hash-equal the same chained-CTE replay as bpe_tokenize_counts: a
-    drifted save/load — a dropped merge, reordered table, lossy
-    roundtrip — breaks the hash."""
+    through the engine facade, save the artifact to the catalog
+    (operators/tokenizer_io), load it back, and re-tokenize the corpus
+    AT VOCABULARY COST (bpe_tokenize over the word table's words, each
+    distinct word once, weighted by its count). Must hash-equal the
+    same chained-CTE replay as bpe_tokenize_counts: a drifted
+    save/load — a dropped merge, reordered table, lossy roundtrip —
+    breaks the hash."""
     from neurondb_spark.engine import NeuronSparkEngine
-    from neurondb_spark.operators.bpe import bpe_token_counts, bpe_word_table
-    from neurondb_spark.operators.bpe_local import word_symbols_udf
+    from neurondb_spark.operators.bpe import (
+        bpe_token_counts,
+        bpe_tokenize,
+        bpe_word_table,
+    )
     from neurondb_spark.operators.tokenizer_io import load_tokenizer
 
     eng = NeuronSparkEngine(spark, _tokenizer_catalog(spark, sf_dir))
@@ -247,7 +245,7 @@ def _q_bpe_saved_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     words = bpe_word_table(docs, "text")
     final = words.withColumn(
-        "symbols", word_symbols_udf(F.col("word"), merges)
+        "symbols", bpe_tokenize(F.col("word"), merges)
     )
     return (
         bpe_token_counts(final)
@@ -270,8 +268,11 @@ def _q_bpe_hf_import_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from neurondb_spark.engine import NeuronSparkEngine
-    from neurondb_spark.operators.bpe import bpe_token_counts, bpe_word_table
-    from neurondb_spark.operators.bpe_local import word_symbols_udf
+    from neurondb_spark.operators.bpe import (
+        bpe_token_counts,
+        bpe_tokenize,
+        bpe_word_table,
+    )
     from neurondb_spark.operators.tokenizer_io import (
         export_hf_tokenizer,
         load_hf_merges,
@@ -291,7 +292,7 @@ def _q_bpe_hf_import_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert [m[:2] for m in imported] == [m[:2] for m in merges]
     words = bpe_word_table(docs, "text")
     final = words.withColumn(
-        "symbols", word_symbols_udf(F.col("word"), imported)
+        "symbols", bpe_tokenize(F.col("word"), imported)
     )
     return (
         bpe_token_counts(final)
@@ -301,22 +302,16 @@ def _q_bpe_hf_import_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_bpe_facade_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """engine.tokenize_with END-TO-END under the hash gate, including
-    the corpus-scale auto-route id (round-15): apply the saved gate
-    tokenizer to the documents SCAN through the facade with NO id_col —
-    K=10 > MAX_EXPR_MERGES routes through the vocabulary join, and
-    because the frame is one file scan the reassembly id is the
-    deterministic ``_metadata`` file_path#row_index (no localCheckpoint
-    materialization, the 100 TB path) — then explode the per-document
-    token arrays to corpus counts. Must hash-equal the same chained-CTE
-    replay as bpe_tokenize_counts: a wrong/unstable row id would scramble
-    token-to-document reassembly and break the hash."""
+    """engine.tokenize_with END-TO-END under the hash gate: apply the
+    saved gate tokenizer to every document through the facade (one
+    per-row UDF, bpe.bpe_tokenize), then explode the per-document token
+    arrays to corpus counts. Must hash-equal the same chained-CTE replay
+    as bpe_tokenize_counts: a dropped or wrongly split word breaks the
+    hash."""
     from neurondb_spark.engine import NeuronSparkEngine
 
     eng = NeuronSparkEngine(spark, _tokenizer_catalog(spark, sf_dir))
-    docs = t(spark, sf_dir, "documents")  # plain scan — NOT tp(); the
-    # row exists to drive the metadata-id route, which needs one
-    # file-source leaf under row-identity nodes
+    docs = t(spark, sf_dir, "documents")
     toks = eng.tokenize_with("gate_bpe", docs, "text", out_col="toks")
     return (
         toks.select(F.explode("toks").alias("token"))

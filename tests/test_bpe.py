@@ -1,5 +1,5 @@
-"""Distributed BPE tokenizer training (operators/bpe.py) and the
-deterministic epoch shuffle (operators/corpus.epoch_shuffle)."""
+"""BPE tokenizer training (operators/bpe.py) and the deterministic
+epoch shuffle (operators/corpus.epoch_shuffle)."""
 
 from __future__ import annotations
 
@@ -11,14 +11,19 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.conftest import SF_DIR  # noqa: E402
+from tests.conftest import SF_DIR, jobs_run  # noqa: E402
+
+# Jobs of one bpe_train call on a parquet-scanned corpus: the word-table
+# collect (plus, under AQE, its shuffle map stage). A merge round that
+# goes back to the cluster goes over budget.
+BPE_TRAIN_JOB_BUDGET = {"false": 1, "true": 2}
 
 
 def test_bpe_train_hand_computed_merges(spark):
     """Pair counting (overlapping positions both count), deterministic
     argmax tie-break, and greedy left-to-right application, checked
     against a hand-computed two-round run."""
-    from neurondb_spark.operators.bpe import bpe_train, char_symbols
+    from neurondb_spark.operators.bpe import bpe_train
 
     # corpus: 'aaab' x3, 'ab' x2  ->  round 1 pairs:
     #   (a,a): 2 per 'aaab' x3 = 6;  (a,b): 3 + 2 = 5  -> merge (a,a)
@@ -26,7 +31,7 @@ def test_bpe_train_hand_computed_merges(spark):
     # round 2 pairs: (aa,a): 3; (a,b): 3 + 2 = 5 -> merge (a,b)
     words = spark.createDataFrame(
         [("aaab", 3), ("ab", 2)], "word string, cnt long"
-    ).withColumn("symbols", char_symbols("word"))
+    )
     merges, final = bpe_train(words, 2)
     assert merges == [("a", "a", 6), ("a", "b", 5)]
     got = {r["word"]: r["symbols"] for r in final.collect()}
@@ -36,11 +41,11 @@ def test_bpe_train_hand_computed_merges(spark):
 def test_bpe_greedy_overlap_and_tiebreak(spark):
     """Overlapping runs merge greedily left-to-right ('aaaa' -> [aa,aa],
     'aaa' -> [aa,a]), and equal-count pairs break lexicographically."""
-    from neurondb_spark.operators.bpe import bpe_train, char_symbols
+    from neurondb_spark.operators.bpe import bpe_train
 
     words = spark.createDataFrame(
         [("aaaa", 1), ("aaa", 1)], "word string, cnt long"
-    ).withColumn("symbols", char_symbols("word"))
+    )
     # pairs: (a,a) = 3 + 2 = 5 -> merge (a,a)
     merges, final = bpe_train(words, 1)
     assert merges == [("a", "a", 5)]
@@ -50,7 +55,7 @@ def test_bpe_greedy_overlap_and_tiebreak(spark):
     # tie-break: 'xy' and 'xz' both count 1 -> lexicographic picks (x,y)
     words2 = spark.createDataFrame(
         [("xy", 1), ("xz", 1)], "word string, cnt long"
-    ).withColumn("symbols", char_symbols("word"))
+    )
     merges2, _ = bpe_train(words2, 1)
     assert merges2 == [("x", "y", 1)]
 
@@ -58,11 +63,11 @@ def test_bpe_greedy_overlap_and_tiebreak(spark):
 def test_bpe_train_stops_when_exhausted(spark):
     """Asking for more merges than exist stops early once every word is
     a single symbol."""
-    from neurondb_spark.operators.bpe import bpe_train, char_symbols
+    from neurondb_spark.operators.bpe import bpe_train
 
     words = spark.createDataFrame(
         [("ab", 1)], "word string, cnt long"
-    ).withColumn("symbols", char_symbols("word"))
+    )
     merges, final = bpe_train(words, 10)
     assert merges == [("a", "b", 1)]
     assert final.collect()[0]["symbols"] == ["ab"]
@@ -88,8 +93,7 @@ def test_bpe_tokenize_roundtrip_and_count_consistency(spark):
     merges, final = bpe_train(words, 6)
     assert len(merges) == 6
 
-    # (1) per-word round trip via apply_merges inside bpe_word_table's
-    # final symbols: join('', symbols) == word
+    # (1) per-word round trip: join('', final symbols) == word
     bad = final.where(
         F.concat_ws("", F.col("symbols")) != F.col("word")
     ).count()
@@ -143,36 +147,38 @@ def test_epoch_shuffle_replayable_and_epoch_distinct(spark):
         assert sorted(pos) == list(range(1, len(pos) + 1)), shard
 
 
-@pytest.mark.prodconf
-def test_apply_merges_plan_grows_linearly(spark):
-    """apply_merges binds each fold's input once, so its expression grows
-    linearly in the number of merges K. Inlining the previous fold (which
-    merge_pair_expr reads three times) tripled the analyzed plan per
-    merge: 845 → 760,922 characters for K = 1…7. Plan-only: no job; the
-    values are checked against the Python fold."""
-    from neurondb_spark.operators.bpe import apply_merges, char_symbols
-    from neurondb_spark.operators.bpe_local import _merge_word
-
-    merges = [("a", "b", 0), ("ab", "c", 0), ("c", "d", 0), ("abc", "cd", 0),
-              ("e", "e", 0), ("ee", "e", 0), ("x", "y", 0)]
-    df = spark.createDataFrame(
-        [("abcdabcd",), ("eeeee",), ("xyxyab",), ("q",)], "text string"
+def test_bpe_train_empty_word_yields_no_empty_symbol(spark):
+    """An empty word splits into no symbols, as in the tokenizer: it
+    trains, contributes no pair and no '' token."""
+    from neurondb_spark.operators.bpe import (
+        bpe_token_counts,
+        bpe_train,
+        bpe_train_summary,
     )
-    sizes = []
-    for k in range(1, len(merges) + 1):
-        out = df.select(
-            apply_merges(char_symbols("text"), merges[:k]).alias("s")
-        )
-        sizes.append(len(out._jdf.queryExecution().analyzed().toString()))
-    steps = [b - a for a, b in zip(sizes, sizes[1:])]
-    assert max(steps) <= 2 * min(steps), sizes
 
-    got = [r["s"] for r in out.collect()]
-    want = []
-    for (text,) in df.collect():
-        syms = list(text)
-        for left, right, _ in merges:
-            if len(syms) > 1:
-                syms = _merge_word(syms, left, right)
-        want.append(syms)
-    assert got == want
+    words = spark.createDataFrame(
+        [("", 2), ("ab", 1)], "word string, cnt long"
+    )
+    merges, final = bpe_train(words, 3)
+    assert merges == [("a", "b", 1)]
+    got = {r["word"]: r["symbols"] for r in final.collect()}
+    assert got == {"": [], "ab": ["ab"]}
+    tokens = {r["token"] for r in bpe_token_counts(final).collect()}
+    assert tokens == {"ab"}
+    assert bpe_train_summary(words, 3) == (1, 1, 1)
+
+
+@pytest.mark.prodconf
+def test_bpe_train_job_budget(spark):
+    """bpe_train runs its merge rounds on the driver: the jobs of a call
+    do not grow with the number of merges."""
+    from neurondb_spark.operators.bpe import bpe_train, bpe_word_table
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    for k in (1, 10):
+        (merges, _), jobs = jobs_run(
+            spark, lambda: bpe_train(bpe_word_table(docs, "text"), k)
+        )
+        assert len(merges) == k
+        assert jobs <= BPE_TRAIN_JOB_BUDGET[aqe], (k, jobs)

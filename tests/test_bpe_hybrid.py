@@ -1,8 +1,11 @@
-"""Hybrid (driver-side) BPE trainer — bit-equality with the distributed
-oracle-gated loop (operators/bpe_local.py vs operators/bpe.py)."""
+"""The driver-side BPE trainer (operators/bpe.py ``bpe_train``, with its
+incremental pair statistics) against a naive pure-Python reference that
+recounts every adjacent pair each round."""
 
 import os
+import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -10,101 +13,137 @@ import pytest  # noqa: E402
 
 from tests.conftest import SF_DIR  # noqa: E402
 
+pytestmark = pytest.mark.prodconf
+
+
+def _greedy(symbols, left, right):
+    """Scan left to right; merge each (left, right) occurrence and skip
+    past it, so overlapping runs merge from the left ("aaa" → [aa, a])."""
+    out, i = [], 0
+    while i < len(symbols):
+        if (i + 1 < len(symbols) and symbols[i] == left
+                and symbols[i + 1] == right):
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(symbols[i])
+            i += 1
+    return out
+
+
+def naive_bpe(counts: dict[str, int], num_merges: int):
+    """(merges, {word: (cnt, symbols)}): each round recounts every
+    adjacent pair (weighted by word count, overlapping positions both
+    count), takes the argmax by count desc, l asc, r asc, and folds it
+    into every word."""
+    syms = {w: list(w) for w in counts}
+    merges = []
+    for _ in range(num_merges):
+        pairs = Counter()
+        for w, s in syms.items():
+            for p in zip(s, s[1:]):
+                pairs[p] += counts[w]
+        if not pairs:
+            break
+        (left, right), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((left, right, c))
+        syms = {w: _greedy(s, left, right) for w, s in syms.items()}
+    return merges, {w: (counts[w], tuple(s)) for w, s in syms.items()}
+
 
 def _word_map(df):
     return {r["word"]: (r["cnt"], tuple(r["symbols"])) for r in df.collect()}
 
 
-def test_hybrid_equals_distributed_k10(spark):
-    """Same merges (order, pairs, counts) and same final word symbols as
-    bpe_train at the gate's K=10 over the documents corpus."""
-    from neurondb_spark.operators.bpe import bpe_train, bpe_word_table
-    from neurondb_spark.operators.bpe_local import bpe_train_hybrid
+def _words(spark, counts):
+    return spark.createDataFrame(
+        sorted(counts.items()), "word string, cnt long"
+    )
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    """The documents' word counts, tokenized in Python, and the same
+    table through bpe_word_table (checkpointed once for the K sweep)."""
+    from neurondb_spark.operators.bpe import bpe_word_table
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    counts = Counter(
+        tok for (text,) in docs.select("text").collect() if text
+        for tok in re.findall("[a-z0-9]+", text.lower())
+    )
     words = bpe_word_table(docs, "text").localCheckpoint(eager=True)
-    m_dist, f_dist = bpe_train(words, 10)
-    m_hyb, f_hyb = bpe_train_hybrid(words, 10)
-    assert m_hyb == m_dist
-    assert _word_map(f_hyb) == _word_map(f_dist)
+    assert {r["word"]: r["cnt"] for r in words.collect()} == counts
+    return dict(counts), words
 
 
-def test_hybrid_token_counts_compose(spark):
-    """bpe_token_counts over the hybrid final_words equals the
-    distributed path's — the tokenize-counts gate row's shape."""
+def test_hybrid_equals_naive_reference(spark, corpus):
+    """Same merges (order, pairs, counts) and same final word symbols as
+    the naive reference for K = 1…12 over the documents corpus."""
+    from neurondb_spark.operators.bpe import bpe_train
+
+    counts, words = corpus
+    for k in range(1, 13):
+        merges, final = bpe_train(words, k)
+        want_merges, want_words = naive_bpe(counts, k)
+        assert merges == want_merges, k
+        assert _word_map(final) == want_words, k
+
+
+def test_hybrid_token_counts_compose(spark, corpus):
+    """bpe_token_counts over bpe_train's final_words equals the naive
+    reference's count-weighted symbols — the tokenize-counts gate row's
+    shape."""
+    from neurondb_spark.operators.bpe import bpe_token_counts, bpe_train
+
+    counts, words = corpus
+    _, final = bpe_train(words, 5)
+    want = Counter()
+    for cnt, syms in naive_bpe(counts, 5)[1].values():
+        for s in syms:
+            want[s] += cnt
+    got = {r["token"]: r["occurrences"]
+           for r in bpe_token_counts(final).collect()}
+    assert got == want
+
+
+def test_hybrid_early_stop_and_contracts(spark):
+    """Merging past exhaustion stops early (every word one symbol), and
+    num_merges < 1 raises."""
+    from neurondb_spark.operators.bpe import bpe_train, bpe_train_summary
+
+    words = _words(spark, {"ab": 3, "b": 5})
+    merges, final = bpe_train(words, 50)
+    assert merges == naive_bpe({"ab": 3, "b": 5}, 50)[0] == [("a", "b", 3)]
+    assert _word_map(final) == {"ab": (3, ("ab",)), "b": (5, ("b",))}
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="num_merges"):
+            bpe_train(words, bad)
+        with pytest.raises(ValueError, match="num_merges"):
+            bpe_train_summary(words, bad)
+
+
+def test_hybrid_summary_equals_dataframe_aggregate(spark, corpus):
+    """bpe_train_summary (the vocabulary summary computed over the
+    driver-side table) returns exactly the values of the count()/sum()
+    aggregate over bpe_token_counts(final_words) — the
+    bpe_hybrid_train_k2000 row's contract."""
     from pyspark.sql import functions as F
 
     from neurondb_spark.operators.bpe import (
         bpe_token_counts,
         bpe_train,
-        bpe_word_table,
-    )
-    from neurondb_spark.operators.bpe_local import bpe_train_hybrid
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    words = bpe_word_table(docs, "text").localCheckpoint(eager=True)
-    _, f_dist = bpe_train(words, 5)
-    _, f_hyb = bpe_train_hybrid(words, 5)
-
-    def top(f):
-        return bpe_token_counts(f).orderBy(
-            F.col("occurrences").desc(), F.col("token").asc()
-        ).limit(50).collect()
-
-    assert [tuple(r) for r in top(f_hyb)] == [tuple(r) for r in top(f_dist)]
-
-
-def test_hybrid_early_stop_and_contracts(spark):
-    """Merging past exhaustion stops early (every word one symbol), and
-    num_merges < 1 raises like the distributed loop."""
-    from neurondb_spark.operators.bpe_local import bpe_train_hybrid
-
-    words = spark.createDataFrame(
-        [("ab", 3, ["a", "b"]), ("b", 5, ["b"])],
-        "word string, cnt long, symbols array<string>",
-    )
-    merges, final = bpe_train_hybrid(words, 50)
-    assert merges == [("a", "b", 3)]
-    assert _word_map(final) == {"ab": (3, ("ab",)), "b": (5, ("b",))}
-    with pytest.raises(ValueError, match="num_merges"):
-        bpe_train_hybrid(words, 0)
-
-
-def test_hybrid_summary_equals_dataframe_aggregate(spark):
-    """bpe_train_hybrid_summary (r16: driver-side vocabulary summary, no
-    final_words round-trip) returns exactly the values of the old
-    count()/sum() aggregate over bpe_token_counts(final_words) — the
-    bpe_hybrid_train_k2000 row's contract."""
-    from pyspark.sql import functions as F
-
-    from neurondb_spark.operators.bpe import bpe_token_counts, bpe_word_table
-    from neurondb_spark.operators.bpe_local import (
-        bpe_train_hybrid,
-        bpe_train_hybrid_summary,
+        bpe_train_summary,
     )
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    words = bpe_word_table(docs, "text").localCheckpoint(eager=True)
-    merges, final = bpe_train_hybrid(words, 7)
-    old = bpe_token_counts(final).agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum("occurrences").alias("total_occurrences"),
-    ).collect()[0]
-    got = bpe_train_hybrid_summary(words, 7)
-    assert got == (len(merges), old["n_tokens"], old["total_occurrences"])
-
-    # tricky shapes: overlapping self-pairs and multi-word tables
-    tricky = spark.createDataFrame(
-        [("aaaa", 2, list("aaaa")), ("aab", 4, list("aab"))],
-        "word string, cnt long, symbols array<string>",
-    )
-    m2, f2 = bpe_train_hybrid(tricky, 3)
-    old2 = bpe_token_counts(f2).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("occurrences").alias("t")
-    ).collect()[0]
-    assert bpe_train_hybrid_summary(tricky, 3) == (
-        len(m2), old2["n"], old2["t"]
-    )
+    _, words = corpus
+    tricky = _words(spark, {"aaaa": 2, "aab": 4})
+    for table, k in ((words, 7), (tricky, 3)):
+        merges, final = bpe_train(table, k)
+        old = bpe_token_counts(final).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("occurrences").alias("t")
+        ).collect()[0]
+        assert bpe_train_summary(table, k) == (len(merges), old["n"], old["t"])
 
 
 def test_hybrid_overlapping_and_stale_index(spark):
@@ -112,15 +151,11 @@ def test_hybrid_overlapping_and_stale_index(spark):
     pair counting ("aaaa"), repeated merges of self-pairs, and words
     whose indexed pair disappeared before the merge reached it."""
     from neurondb_spark.operators.bpe import bpe_train
-    from neurondb_spark.operators.bpe_local import bpe_train_hybrid
 
-    words = spark.createDataFrame(
-        [("aaaa", 2, list("aaaa")), ("aab", 4, list("aab")),
-         ("baaa", 1, list("baaa")), ("abab", 3, list("abab"))],
-        "word string, cnt long, symbols array<string>",
-    )
-    for k in (1, 2, 3, 6):
-        m_d, f_d = bpe_train(words, k)
-        m_h, f_h = bpe_train_hybrid(words, k)
-        assert m_h == m_d, f"k={k}"
-        assert _word_map(f_h) == _word_map(f_d), f"k={k}"
+    counts = {"aaaa": 2, "aab": 4, "baaa": 1, "abab": 3}
+    words = _words(spark, counts)
+    for k in (1, 2, 3, 6, 12):
+        merges, final = bpe_train(words, k)
+        want_merges, want_words = naive_bpe(counts, k)
+        assert merges == want_merges, k
+        assert _word_map(final) == want_words, k

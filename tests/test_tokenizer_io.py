@@ -10,7 +10,36 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pytest  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from tests.conftest import SF_DIR  # noqa: E402
+from tests.conftest import SF_DIR, jobs_run  # noqa: E402
+
+pytestmark = pytest.mark.prodconf
+
+# Jobs of collecting tokenize_with over a parquet scan: the collect.
+TOKENIZE_WITH_JOB_BUDGET = {"false": 1, "true": 1}
+
+# two real merges, then no-op padding out to K=2000 (the pairs never
+# occur adjacently, so expected tokenization stays hand-checkable)
+_PADDED = [("a", "b", 5), ("ab", "c", 3)] + [
+    (f"x{i}", f"y{i}", 1) for i in range(1998)
+]
+
+
+def _engine_with(spark, prefix, *tables):
+    """An engine whose catalog holds each merge table as
+    ``<prefix><K>``."""
+    from neurondb_spark.engine import NeuronSparkEngine
+    from neurondb_spark.operators.tokenizer_io import save_tokenizer
+
+    eng = NeuronSparkEngine(spark, tempfile.mkdtemp(prefix=f"tok_{prefix}_"))
+    for merges in tables:
+        name = f"{prefix}{len(merges)}"
+        path = os.path.join(
+            eng.catalog.artifact_dir("tokenizers", name), "tokenizer.json"
+        )
+        save_tokenizer(path, merges, {})
+        eng.catalog.register("tokenizers", name,
+                             {"path": path, "num_merges": len(merges)})
+    return eng
 
 
 def test_save_load_roundtrip(tmp_path):
@@ -46,19 +75,13 @@ def test_engine_train_and_tokenize_with(spark):
 
     eng = NeuronSparkEngine(spark, tempfile.mkdtemp(prefix="tok_cat_"))
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    # K=4 (r16): K=6 took 162s — the expression-route tokenizer compiles
-    # an O(4^K) nested-fold tree, so plan analysis dominates; every
-    # property here (persistence, hybrid/distributed parity, saved-apply
-    # re-tokenization identity) is K-independent and K=4 still routes
-    # through the same expression path (K <= MAX_EXPR_MERGES).
-    merges = eng.train_tokenizer("doc_bpe", docs, "text", num_merges=4)
-    assert len(merges) == 4
+    merges = eng.train_tokenizer("doc_bpe", docs, "text", num_merges=6)
+    assert len(merges) == 6
     meta = eng.catalog.get("tokenizers", "doc_bpe")
-    assert meta and meta["num_merges"] == 4
-    # distributed-loop parity (hybrid trainer bit-equality, re-proven
-    # through the persistence path)
-    m_dist, final = bpe_train(bpe_word_table(docs, "text"), 4)
-    assert merges == m_dist
+    assert meta and meta["num_merges"] == 6
+    # the saved table is the trainer's, counts included
+    m_direct, final = bpe_train(bpe_word_table(docs, "text"), 6)
+    assert merges == m_direct
     # applying the SAVED tokenizer re-tokenizes the corpus to exactly
     # the training run's token counts
     toks = eng.tokenize_with("doc_bpe", docs, "text", out_col="toks")
@@ -74,39 +97,21 @@ def test_engine_train_and_tokenize_with(spark):
         eng.tokenize_with("nope", docs, "text")
 
 
-def test_vocab_apply_equals_expression_apply(spark):
-    """The corpus-scale vocabulary-join apply produces the SAME per-row
-    token arrays as the per-occurrence expression form — including empty
-    texts and repeated words (position reassembly)."""
-    from neurondb_spark.engine import NeuronSparkEngine
-
-    eng = NeuronSparkEngine(spark, tempfile.mkdtemp(prefix="tok_vcat_"))
-    rows = [(1, "aa ab aa"), (2, ""), (3, "b aab aa b"), (4, None),
-            (5, "zzz")]
-    df = spark.createDataFrame(rows, "rid long, txt string")
-    train = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    eng.train_tokenizer("vtok", train, "text", num_merges=4)
-    via_expr = {r["rid"]: list(r["toks"] or [])
-                for r in eng.tokenize_with("vtok", df, "txt",
-                                           out_col="toks").collect()}
-    via_vocab = {r["rid"]: list(r["toks"])
-                 for r in eng.tokenize_with("vtok", df, "txt",
-                                            out_col="toks",
-                                            id_col="rid").collect()}
-    # expression form yields NULL for NULL text; vocab form normalizes
-    # to [] — compare on the defined rows and pin the null behavior
-    assert via_vocab[4] == []
-    for rid in (1, 2, 3, 5):
-        assert via_vocab[rid] == via_expr[rid], rid
-    # and corpus-wide on real documents at test SF
-    docs = train.limit(50)
-    e = {r["doc_id"]: list(r["toks"] or [])
-         for r in eng.tokenize_with("vtok", docs, "text",
-                                    out_col="toks").collect()}
-    v = {r["doc_id"]: list(r["toks"])
-         for r in eng.tokenize_with("vtok", docs, "text", out_col="toks",
-                                    id_col="doc_id").collect()}
-    assert v == e
+def test_tokenize_with_edge_texts_same_at_k2_and_k2000(spark):
+    """Null, empty and punctuation-only text give [] and repeated words
+    keep their positions — the same arrays for a two-merge table and for
+    the same table padded to K=2000 with merges that never apply."""
+    eng = _engine_with(spark, "edge", _PADDED[:2], _PADDED)
+    df = spark.createDataFrame(
+        [(1, "ab cab ab"), (2, ""), (3, "!!! ..."), (4, None),
+         (5, "abc, ABC abc"), (6, "c ba c")],
+        "rid long, txt string",
+    )
+    want = {1: ["ab", "c", "ab", "ab"], 2: [], 3: [], 4: [],
+            5: ["abc", "abc", "abc"], 6: ["c", "b", "a", "c"]}
+    for name in ("edge2", "edge2000"):
+        out = eng.tokenize_with(name, df, "txt", out_col="toks")
+        assert {r["rid"]: r["toks"] for r in out.collect()} == want, name
 
 
 def test_hf_interop_export_roundtrip(tmp_path):
@@ -134,85 +139,38 @@ def test_hf_interop_export_roundtrip(tmp_path):
         export_hf_tokenizer(str(tmp_path / "hf2"), [("a b", "c", 1)])
 
 
-def test_expression_tokenize_refuses_trained_size_tables():
-    """bpe_tokenize compiles one nested fold per merge — an O(4^K)
-    expression tree that hangs plan analysis past K≈10 (measured,
-    PLANS.md). A trained-size table must ERROR with a pointer at the
-    vocabulary-join path, not wedge the driver (VERDICT r13 #2)."""
-    from neurondb_spark.operators.bpe import MAX_EXPR_MERGES, bpe_tokenize
-
-    merges = [(f"x{i}", f"y{i}", 1) for i in range(MAX_EXPR_MERGES + 1)]
-    with pytest.raises(ValueError, match="bpe_tokenize_via_vocab"):
-        bpe_tokenize("txt", merges)
-
-
 def test_tokenize_with_auto_routes_large_merge_tables(spark):
-    """engine.tokenize_with without id_col must complete on a
-    production-K merge table (the round-13 hybrid trainer makes K=2000
-    trainable — applying its own artifact through the facade's default
-    path used to build the O(4^K) expression and hang): it auto-routes
-    through the vocabulary-join path on a synthesized pinned row id,
-    and the output keeps the caller's columns."""
-    from neurondb_spark.engine import NeuronSparkEngine
-    from neurondb_spark.operators.tokenizer_io import save_tokenizer
-
-    eng = NeuronSparkEngine(spark, tempfile.mkdtemp(prefix="tok_big_"))
-    # two real merges + no-op padding out to K=2000 (the pairs never
-    # occur adjacently, so expected tokenization stays hand-checkable)
-    merges = [("a", "b", 5), ("ab", "c", 3)]
-    merges += [(f"x{i}", f"y{i}", 1) for i in range(1998)]
-    path = os.path.join(
-        eng.catalog.artifact_dir("tokenizers", "big"), "tokenizer.json"
-    )
-    save_tokenizer(path, merges, {})
-    eng.catalog.register("tokenizers", "big",
-                         {"path": path, "num_merges": len(merges)})
+    """engine.tokenize_with completes on a production-K merge table
+    (K=2000) and keeps the caller's columns, adding only ``out_col``.
+    Rows are tokenized one by one: both copies of a duplicated row keep
+    their own tokens."""
+    eng = _engine_with(spark, "big", _PADDED)
     df = spark.createDataFrame(
         [(1, "ab cab"), (2, "ba"), (3, None)], "rid long, txt string"
     )
-    out = eng.tokenize_with("big", df, "txt", out_col="toks")
-    assert set(out.columns) == {"rid", "txt", "toks"}  # no leaked temp id
+    out = eng.tokenize_with("big2000", df, "txt", out_col="toks")
+    assert out.columns == ["rid", "txt", "toks"]
     got = {r["rid"]: list(r["toks"]) for r in out.collect()}
     assert got == {1: ["ab", "c", "ab"], 2: ["b", "a"], 3: []}
+    dup = eng.tokenize_with("big2000", df.unionByName(df), "txt",
+                            out_col="toks")
+    rows = dup.where(F.col("rid") == 1).collect()
+    assert [list(r["toks"]) for r in rows] == [["ab", "c", "ab"]] * 2
 
 
-def test_auto_route_pin_warns_above_threshold(spark, monkeypatch):
-    """VERDICT r14 "What's wrong" #2: the auto-route's localCheckpoint
-    materializes the whole frame just to stabilize a synthesized row id —
-    above TOKENIZE_PIN_WARN_ROWS it must warn (pointing at id_col=), and
-    the warning must not change the output. Below the threshold: silent."""
-    import warnings as _w
-
-    import neurondb_spark.engine as engmod
-    from neurondb_spark.engine import NeuronSparkEngine
-    from neurondb_spark.operators.tokenizer_io import save_tokenizer
-
-    eng = NeuronSparkEngine(spark, tempfile.mkdtemp(prefix="tok_warn_"))
-    merges = [("a", "b", 5), ("ab", "c", 3)]
-    merges += [(f"x{i}", f"y{i}", 1) for i in range(20)]  # > MAX_EXPR_MERGES
-    path = os.path.join(
-        eng.catalog.artifact_dir("tokenizers", "warn"), "tokenizer.json"
-    )
-    save_tokenizer(path, merges, {})
-    eng.catalog.register("tokenizers", "warn",
-                         {"path": path, "num_merges": len(merges)})
-    df = spark.createDataFrame(
-        [(1, "ab cab"), (2, "ba")], "rid long, txt string"
-    )
-    monkeypatch.setattr(engmod, "TOKENIZE_PIN_WARN_ROWS", 1)
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        out = eng.tokenize_with("warn", df, "txt", out_col="toks")
-        got = {r["rid"]: list(r["toks"]) for r in out.collect()}
-    assert got == {1: ["ab", "c", "ab"], 2: ["b", "a"]}  # output unchanged
-    hits = [w for w in rec if "id_col=" in str(w.message)]
-    assert len(hits) == 1 and "localCheckpoint" in str(hits[0].message)
-    # below the threshold: no warning
-    monkeypatch.setattr(engmod, "TOKENIZE_PIN_WARN_ROWS", 1_000_000)
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        eng.tokenize_with("warn", df, "txt", out_col="toks").collect()
-    assert not [w for w in rec if "id_col=" in str(w.message)]
+def test_tokenize_with_job_budget(spark):
+    """Applying a tokenizer is one per-row UDF over the scan: its jobs
+    are the action's own, and the executed plan has no Exchange (no
+    join, no regroup by a row id)."""
+    eng = _engine_with(spark, "budget", _PADDED)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    out = eng.tokenize_with("budget2000", docs, "text", out_col="toks")
+    rows, jobs = jobs_run(spark, out.collect)
+    assert len(rows) == docs.count()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    assert jobs <= TOKENIZE_WITH_JOB_BUDGET[aqe], jobs
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
 
 
 def test_hf_export_explicit_alphabet(tmp_path):
@@ -234,69 +192,3 @@ def test_hf_export_explicit_alphabet(tmp_path):
         export_hf_tokenizer(str(tmp_path / "h2"), merges, alphabet={"ab"})
     with pytest.raises(ValueError, match="whitespace"):
         export_hf_tokenizer(str(tmp_path / "h3"), merges, alphabet={" "})
-
-
-def test_auto_route_uses_deterministic_metadata_id_on_scans(
-        spark, monkeypatch, tmp_path):
-    """Corpus-scale auto-route (VERDICT r14 "What's wrong" #2, closed
-    form): a frame that is ONE file scan under row-identity nodes gets a
-    deterministic file_path#row_index id from the hidden _metadata
-    column — NO localCheckpoint pin, no warning, zero materialization —
-    and produces exactly the id_col path's tokens. Non-scan frames still
-    take the pin fallback."""
-    import warnings as _w
-
-    import neurondb_spark.engine as engmod
-    from neurondb_spark.engine import NeuronSparkEngine
-    from neurondb_spark.operators.tokenizer_io import save_tokenizer
-
-    eng = NeuronSparkEngine(spark, tempfile.mkdtemp(prefix="tok_meta_"))
-    merges = [("a", "b", 5), ("ab", "c", 3)]
-    merges += [(f"x{i}", f"y{i}", 1) for i in range(20)]
-    path = os.path.join(
-        eng.catalog.artifact_dir("tokenizers", "meta"), "tokenizer.json"
-    )
-    save_tokenizer(path, merges, {})
-    eng.catalog.register("tokenizers", "meta",
-                         {"path": path, "num_merges": len(merges)})
-    src = str(tmp_path / "corpus")
-    spark.createDataFrame(
-        [(1, "ab cab"), (2, "ba"), (3, "abc"), (4, None)],
-        "rid long, txt string",
-    ).coalesce(2).write.parquet(src)
-    docs = spark.read.parquet(src)
-    _DF = type(docs)
-    pins = []
-    orig_ckpt = _DF.localCheckpoint
-    monkeypatch.setattr(
-        _DF, "localCheckpoint",
-        lambda self, *a, **k: (pins.append(1), orig_ckpt(self, *a, **k))[1],
-    )
-    monkeypatch.setattr(engmod, "TOKENIZE_PIN_WARN_ROWS", 1)
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        # scan + filter + projection: still row-identity → metadata id
-        out = eng.tokenize_with(
-            "meta", docs.where(F.col("rid") != 3).select("rid", "txt"),
-            "txt", out_col="toks",
-        )
-        got = {r["rid"]: list(r["toks"]) for r in out.collect()}
-    assert pins == []  # no localCheckpoint on the scan path
-    assert not [w for w in rec if "id_col=" in str(w.message)]
-    assert set(out.columns) == {"rid", "txt", "toks"}
-    want = {r["rid"]: list(r["toks"]) for r in eng.tokenize_with(
-        "meta", docs.where(F.col("rid") != 3), "txt",
-        out_col="toks", id_col="rid").select("rid", "toks").collect()}
-    assert got == want == {1: ["ab", "c", "ab"], 2: ["b", "a"], 4: []}
-    # a union (row identity broken: duplicate file offsets) must NOT use
-    # the metadata id — it falls back to the pin (and warns at this
-    # threshold), and every duplicate row keeps its own tokens
-    with _w.catch_warnings(record=True) as rec:
-        _w.simplefilter("always")
-        dup = eng.tokenize_with(
-            "meta", docs.unionByName(docs), "txt", out_col="toks",
-        )
-        rows = dup.where(F.col("rid") == 1).collect()
-    assert pins == [1]
-    assert [w for w in rec if "id_col=" in str(w.message)]
-    assert [list(r["toks"]) for r in rows] == [["ab", "c", "ab"]] * 2
