@@ -144,8 +144,12 @@ def layout_schema(path: str, part_col: str) -> str:
 
 def read_tombstones(spark: SparkSession, path: str, key_col: str,
                     am: str) -> DataFrame | None:
-    """An index's distinct tombstone keys, or None when ``path`` does not
-    exist. Read with a known single-column schema (tombstones are always
+    """An index's tombstone keys, or None when ``path`` does not exist.
+    A key deleted twice appears twice: every consumer is a ``left_anti``
+    or ``left_semi`` join, which ignores duplicate keys, so a
+    ``distinct`` would only add a shuffle (a job of its own under AQE) to
+    each filtered read; a consumer that counts matches dedups itself.
+    Read with a known single-column schema (tombstones are always
     written as long keys, :func:`as_tombstone_frame`), so no
     schema-inference job runs. Files that lack ``key_col`` raise: read
     with the known schema they would yield nulls, and the anti-join would
@@ -161,7 +165,7 @@ def read_tombstones(spark: SparkSession, path: str, key_col: str,
             f"recorded key column {key_col!r} (have {cols})"
         )
     schema = T.StructType([T.StructField(key_col, T.LongType())])
-    return spark.read.schema(schema).parquet(path).distinct()
+    return spark.read.schema(schema).parquet(path)
 
 
 def as_tombstone_frame(spark: SparkSession, ids, id_col: str) -> DataFrame:

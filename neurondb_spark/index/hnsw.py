@@ -667,6 +667,9 @@ class HNSWIndex:
         tomb = self._tombstones(spark)
         keys = new.select("shard", "vec_id")
         if tomb is not None:
+            # the overlap count joins tombstones as a left join, which
+            # counts a key deleted twice twice: dedup them first
+            tomb = tomb.distinct()
             keys = keys.join(
                 tomb.withColumn("_dead", F.lit(1)), "vec_id", "left"
             )

@@ -98,6 +98,17 @@ def bayesian_optimize(
     return {"results": results, "best": best}
 
 
+def cv_pool_size(cores: int, n_candidates: int) -> int:
+    """Candidates :func:`auto_train` cross-validates at once. Each is a
+    CrossValidator with parallelism=4, so the pool bounds the fits in
+    flight: sequential below 8 cores, else about one candidate per 8
+    cores with a floor of 2 and a cap of 3 (``cores // 8`` alone left
+    every host under 16 cores sequential)."""
+    if cores < 8:
+        return 1
+    return max(1, min(3, n_candidates, max(2, cores // 8)))
+
+
 def auto_train(
     df: DataFrame, features: list[str], target: str, task: str,
     candidates: list[str] | None = None, folds: int = 3,
@@ -128,13 +139,7 @@ def auto_train(
         except Exception as e:  # a candidate failing must not sink the rest
             return {"algorithm": algo, "error": str(e)[:200]}
 
-    # Bound COMBINED concurrency (r16 ADVICE): each pooled candidate is a
-    # CrossValidator with parallelism=4, so pool_size × 4 fits can be in
-    # flight at once; size the pool from the cluster's parallelism
-    # (~one candidate per 8 cores, max 3) so small deployments degrade to
-    # a sequential loop instead of 12 concurrent fits fighting for memory.
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    workers = max(1, min(3, len(candidates), cores // 8))
+    workers = cv_pool_size(df.sparkSession.sparkContext.defaultParallelism, len(candidates))
     with ThreadPoolExecutor(max_workers=workers) as pool:
         board = list(pool.map(_cv_one, candidates))
     scored = [b for b in board if "best_score" in b]

@@ -1,27 +1,93 @@
 """DBSCAN over vector columns (SURVEY §2.8; reference
-NeuronDB/src/ml/ml_dbscan.c:184 — single-node, 200k cap).
+NeuronDB/src/ml/ml_dbscan.c:184 — one in-memory pass on a single node).
 
-Spark-first, no MLlib native:
-1. eps-neighborhood pairs via the blocked similarity join (vec_join
-   machinery — block key required at scale; cluster-prune blocks from a
-   coarse KMeans routing, or LSH buckets + neighbor probing).
-2. core points = points with ≥ min_samples neighbors (incl. self).
-3. clusters = connected components over the core-core edge graph
-   (self-pairs included, so an isolated core is a cluster of its own).
-4. border points attach to any core neighbor's cluster; the rest = noise
-   (cluster −1).
+With a block key, no eps-pair crosses a block, so DBSCAN is the
+reference's single-node pass run once per block: one
+``groupBy(*on).applyInPandas`` over :func:`_block_labels`, one shuffle,
+no driver loop. Per block:
 
-Every step is joins + aggregations — distributes to any size; the
-reference's RAM matrix is the thing this design removes.
+1. candidate pairs from one GEMM (``joins.gemm_candidates``) at
+   eps + ``EPS_MARGIN``; the GEMM differs from the elementwise distance by
+   about 1e-15 relative, so no true pair is dropped;
+2. every candidate rechecked exactly: float64, left-associative
+   Σ (x − y)², then sqrt, then ≤ eps — the distance fold's IEEE op order
+   (functions/distance.py), so a pair right at eps is decided as the
+   Spark kernel and the DuckDB oracle decide it;
+3. degree counts the self-pair; a core point has degree ≥ min_samples;
+4. union-find over the core–core pairs; a cluster is labelled by its
+   minimum core id (an isolated core is a cluster of its own);
+5. a border point (non-core with a core neighbour) takes the minimum
+   label among its core neighbours; every other point is noise, −1.
+
+Rows with a null id, a null vector or a null block key are noise: they
+meet no other row. ``on=None`` (with ``allow_cross=True``) makes the whole
+frame one block, as the reference does. Peak memory per task is one
+block's n² distance matrix, the bound the GEMM similarity join in
+``operators/joins.py`` has too, so at scale the block key must be
+selective (a label, an LSH band, an IVF list).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neurondb_spark.operators.graph import connected_components
-from neurondb_spark.operators.joins import vec_join
+from neurondb_spark.operators.joins import gemm_candidates, require_block_key
+
+# GEMM prefilter slack on eps; the exact recheck decides every survivor
+EPS_MARGIN = 1e-6
+
+_INT_TYPES = ("tinyint", "smallint", "int", "bigint")
+
+
+def _block_labels(ids, X, eps: float, min_samples: int) -> np.ndarray:
+    """DBSCAN labels for one block: ``ids`` (n,) integers, ``X`` (n, d)
+    float64 rows. Returns (n,) int64: the minimum core id of the point's
+    cluster, or −1 for noise."""
+    ids = np.asarray(ids, dtype=np.int64)
+    n = len(ids)
+    labels = np.full(n, -1, dtype=np.int64)
+    if n == 0:
+        return labels
+    X = np.asarray(X, dtype=np.float64)
+    ii, jj = gemm_candidates(X, X, float(eps) + EPS_MARGIN)
+    s = np.zeros(len(ii))
+    for col in X.T:  # left-associative, one dimension at a time
+        t = col[ii] - col[jj]
+        s = s + t * t
+    keep = np.sqrt(s) <= eps
+    ii, jj = ii[keep], jj[keep]
+    core = np.bincount(ii, minlength=n) >= min_samples
+
+    # union-find over core-core pairs: hook the larger root under the
+    # smaller, then jump pointers until every pair shares a root
+    cc = core[ii] & core[jj]
+    a, b = ii[cc], jj[cc]
+    parent = np.arange(n)
+    while True:
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
+        if not split.any():
+            break
+        np.minimum.at(parent, np.maximum(ra, rb)[split], np.minimum(ra, rb)[split])
+        while True:
+            nxt = parent[parent]
+            if np.array_equal(nxt, parent):
+                break
+            parent = nxt
+    none = np.iinfo(np.int64).max
+    cid = np.full(n, none)
+    np.minimum.at(cid, parent[core], ids[core])
+    labels[core] = cid[parent[core]]
+
+    # a non-core point takes the min label among its core neighbours
+    to_core = core[jj]
+    near = np.full(n, none)
+    np.minimum.at(near, ii[to_core], labels[jj[to_core]])
+    border = ~core & (near != none)
+    labels[border] = near[border]
+    return labels
 
 
 def dbscan(
@@ -34,59 +100,46 @@ def dbscan(
     dim: int | None = None,
     allow_cross: bool = False,
 ) -> DataFrame:
-    """Returns (id, cluster) with cluster = min core-point id of the
-    cluster, or −1 for noise."""
-    right = df.select(F.col(id_col).alias("_rid"), F.col(vec_col).alias("_rvec"),
-                      *[F.col(c) for c in (on or [])])
-    left = df.select(F.col(id_col), F.col(vec_col), *[F.col(c) for c in (on or [])])
-    if isinstance(on, list) and len(on) == 1:
-        # per-block BLAS path: same exact-fold distances on survivors
-        # (vec_join_gemm recomputes + re-filters), ~5× the HOF join's
-        # throughput at sf0.1 — the eps-join dominates DBSCAN's cost
-        from neurondb_spark.operators.joins import vec_join_gemm
+    """Returns (id, cluster), both of ``id_col``'s integer type, with
+    cluster = min core-point id of the cluster, or −1 for noise. ``on``
+    is the block key; ``dim``, when given, must equal every vector's
+    length."""
+    require_block_key(on, allow_cross)
+    id_t = dict(df.dtypes)[id_col]
+    if id_t not in _INT_TYPES:
+        raise TypeError(f"neurondb: dbscan needs an integer id column, got {id_t}")
+    keys = [F.col(c) for c in on] if on else [F.lit(0)]
+    ok = F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
+    for c in on or []:
+        ok = ok & F.col(c).isNotNull()
+    # ids go to pandas null-free (an integer column with a null arrives
+    # as float64, which rounds ids past 2**53); _nid restores the nulls
+    rows = df.select(
+        *[k.alias(f"_k{i}") for i, k in enumerate(keys)],
+        F.coalesce(F.col(id_col), F.lit(0)).alias("_id"),
+        F.col(id_col).isNull().alias("_nid"),
+        F.col(vec_col).alias("_vec"),
+        ok.alias("_ok"),
+    )
 
-        pairs = vec_join_gemm(
-            left, right, vec_col, "_rvec", id_col, "_rid",
-            threshold=eps, on=on[0], dim=dim,
-        ).select(F.col(id_col).alias("a"), F.col("_rid").alias("b"))
-    else:
-        pairs = vec_join(
-            left, right, vec_col, "_rvec", threshold=eps, on=on, dim=dim,
-            allow_cross=allow_cross,
-        ).select(F.col(id_col).alias("a"), F.col("_rid").alias("b"))
-    # The eps-join is the expensive stage and every later step consumes
-    # it (degrees, both ends of the core-core edges, border attach) — the
-    # unchecked plan re-evaluated the GEMM cogroup subtree 10x in one
-    # action (plans/r15/dbscan_clusters_before.txt: 10 FlatMapCoGroups-
-    # InPandas nodes, 42 parquet scans). Lazy localCheckpoint: computed
-    # once inside the first consuming job, lineage truncated (guide §5
-    # persist-on-reuse).
-    pairs = pairs.localCheckpoint(eager=False)
-    # neighbor counts include self-pair (distance 0)
-    degrees = pairs.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-    core = degrees.where(F.col("deg") >= min_samples).select(F.col("a").alias("id"))
-    # core is consumed 3x (both ends of core_edges, border)
-    core = core.localCheckpoint(eager=False)
-    # every point's eps-pairs include its self-pair, so every core point
-    # is an endpoint of the core-core edges and connected_components
-    # (which adds a self-loop per endpoint) labels isolated cores too
-    core_edges = (
-        pairs.join(core.withColumnRenamed("id", "a"), "a")
-        .join(core.withColumnRenamed("id", "b"), "b")
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    core_labels = connected_components(core_edges)  # (node, comp) per core
-    # border: non-core with a core neighbor → min core neighbor's cluster
-    border = (
-        pairs.join(core.withColumnRenamed("id", "b"), "b")
-        .join(core.withColumnRenamed("id", "a"), "a", "left_anti")
-        .join(core_labels.withColumnRenamed("node", "b"), "b")
-        .groupBy(F.col("a").alias("id"))
-        .agg(F.min("comp").alias("cluster"))
-    )
-    labeled = core_labels.select(F.col("node").alias("id"), F.col("comp").alias("cluster")).unionByName(border)
-    return (
-        df.select(F.col(id_col).alias("id"))
-        .join(labeled, "id", "left")
-        .select("id", F.coalesce(F.col("cluster"), F.lit(-1)).alias("cluster"))
+    def _labels(pdf):
+        import pandas as pd
+
+        okm = pdf["_ok"].to_numpy(dtype=bool)
+        vecs = pdf["_vec"][okm].tolist()
+        lens = {len(v) for v in vecs}
+        if len(lens) > 1 or (dim is not None and lens - {dim}):
+            raise ValueError(
+                f"neurondb: vector dimension mismatch (lengths {sorted(lens)}, dim={dim})"
+            )
+        ids = pdf["_id"].to_numpy(dtype=np.int64)
+        cluster = np.full(len(pdf), -1, dtype=np.int64)
+        cluster[okm] = _block_labels(
+            ids[okm], np.array(vecs, dtype=np.float64), float(eps), int(min_samples)
+        )
+        out_id = pd.Series(ids, dtype="Int64").mask(pdf["_nid"].to_numpy(dtype=bool))
+        return pd.DataFrame({"id": out_id, "cluster": cluster})
+
+    return rows.groupBy(*[f"_k{i}" for i in range(len(keys))]).applyInPandas(
+        _labels, f"id {id_t}, cluster {id_t}"
     )

@@ -21,6 +21,16 @@ from pyspark.sql import functions as F
 from neurondb_spark.functions.distance import distance
 
 
+def require_block_key(on, allow_cross: bool) -> None:
+    """Refuse an all-pairs pass without a block key unless the caller
+    allows it (see knn_join_gemm for the scale path)."""
+    if on is None and not allow_cross:
+        raise ValueError(
+            "neurondb: vec_join without a block key is O(n^2); pass "
+            "on=[...] (block key) or allow_cross=True"
+        )
+
+
 def vec_join(
     left: DataFrame,
     right: DataFrame,
@@ -41,11 +51,7 @@ def vec_join(
     arbitrary join Column. None → cross join (refused unless allow_cross;
     quadratic — only for small candidate sets).
     """
-    if on is None and not allow_cross:  # see knn_join_gemm for the scale path
-        raise ValueError(
-            "neurondb: vec_join without a block key is O(n^2); pass "
-            "on=[...] (block key) or allow_cross=True"
-        )
+    require_block_key(on, allow_cross)
     lcols = set(left.columns)
     rcols = set(right.columns)
     overlap = (lcols & rcols) - set(on if isinstance(on, list) else [])
@@ -215,6 +221,19 @@ def knn_join_gemm(
     )
 
 
+def gemm_candidates(X, R, thr: float):
+    """Index pairs (i, j) with squared L2 ≤ ``thr``² between the rows of
+    float64 matrices X and R, from one GEMM: ‖x‖² + ‖r‖² − 2x·r, clamped
+    at 0. It differs from the elementwise fold by about 1e-15 relative,
+    so a caller that passes its threshold plus a margin and rechecks the
+    survivors exactly never loses a true pair."""
+    import numpy as np
+
+    D = (X * X).sum(1)[:, None] + (R * R).sum(1)[None, :] - 2.0 * (X @ R.T)
+    np.maximum(D, 0.0, out=D)
+    return np.nonzero(D <= thr * thr)
+
+
 def vec_join_gemm(
     left: DataFrame,
     right: DataFrame,
@@ -268,9 +287,7 @@ def vec_join_gemm(
             return pd.DataFrame({left_id: [], right_id: []})
         X = np.array(lpdf[left_vec].tolist(), dtype=np.float64)
         R = np.array(rpdf[right_vec].tolist(), dtype=np.float64)
-        D = (X * X).sum(1)[:, None] + (R * R).sum(1)[None, :] - 2.0 * (X @ R.T)
-        np.maximum(D, 0.0, out=D)
-        ii, jj = np.nonzero(D <= thr * thr)
+        ii, jj = gemm_candidates(X, R, thr)
         return pd.DataFrame({
             left_id: lpdf[left_id].to_numpy()[ii],
             right_id: rpdf[right_id].to_numpy()[jj],

@@ -665,12 +665,15 @@ def _q_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DBSCAN over the embeddings table, label-blocked neighborhoods
-    (ml_dbscan.c:184 — the reference's single-node RAM matrix becomes
-    blocked vec_join + degree agg + min-label connected components; every
-    step is a shuffle-keyed join, no driver state). Output (vec_id,
-    cluster) with cluster = min core id of the component, −1 = noise —
-    all integers, so the oracle hash is exact by construction."""
+    """DBSCAN over the embeddings table, blocked by label
+    (ml_dbscan.c:184). No eps-pair crosses a label, so the reference's
+    single-node pass runs once per label block in one grouped pandas
+    pass: GEMM candidates, each rechecked with the distance fold's exact
+    op order (so a pair at eps is decided as the oracle's l2 decides it),
+    degree with the self-pair, union-find over core pairs, border = min
+    label of its core neighbours. Output (vec_id, cluster) with cluster =
+    min core id of the cluster, −1 = noise — all integers, so the oracle
+    hash is exact by construction."""
     from neurondb_spark.ml.dbscan import dbscan
 
     emb = t(spark, sf_dir, "embeddings")

@@ -18,8 +18,8 @@ SF=${SPARK_GRAFT_SF_DIR_SMALL:-/root/testdata/sf0.01}
 # Seconds, no Spark: a broken fixture key or completion marker, a
 # correctness rotation that misreads the records, or a stream fallback
 # that stops raising under strict mode fails here instead of minutes into
-# a sim.
-python -m pytest tests/test_fixtures.py tests/test_rotation.py tests/test_stream_or_batch.py -q
+# a sim; so does a DBSCAN block kernel that disagrees with the reference.
+python -m pytest tests/test_fixtures.py tests/test_rotation.py tests/test_stream_or_batch.py tests/test_dbscan_kernel.py -q
 # Graph, DBSCAN, kmeans, distance-kernel, LSH/IVF search, index DML
 # (HNSW insert/vacuum, IVF rebalance, IVF/LSH compact and their crash
 # roll-forwards), MinHash/shingle, BPE trainer and tokenizer tests under

@@ -100,6 +100,26 @@ def union_find_components(edges):
     return {x: find(x) for x in parent}
 
 
+def dbscan_reference(rows, eps, min_samples):
+    """Brute-force DBSCAN over (id, vector) rows with the operator's
+    labelling: a cluster is named by its min core id, a border point
+    takes the min cluster of its core neighbours, noise is -1."""
+    import math
+
+    nbrs = {
+        i: [j for j, w in rows if math.dist(v, w) <= eps] for i, v in rows
+    }
+    core = {i for i, ns in nbrs.items() if len(ns) >= min_samples}
+    comp = union_find_components(
+        [(i, j) for i in core for j in nbrs[i] if j in core]
+    )
+    return {
+        i: comp[i] if i in core
+        else min((comp[j] for j in ns if j in core), default=-1)
+        for i, ns in nbrs.items()
+    }
+
+
 def jobs_run(spark, fn):
     """(fn(), number of Spark jobs fn ran), counted through a job group."""
     import uuid

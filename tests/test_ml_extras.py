@@ -10,7 +10,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from tests.conftest import SF_DIR, jobs_run, union_find_components  # noqa: E402
+from tests.conftest import SF_DIR, dbscan_reference, jobs_run  # noqa: E402
 
 
 def _planted_points():
@@ -24,26 +24,6 @@ def _planted_points():
     return rows
 
 
-def _dbscan_reference(rows, eps, min_samples):
-    """Brute-force DBSCAN with the operator's labelling: a cluster is
-    named by its min core id, a border point takes the min cluster of its
-    core neighbours, noise is -1."""
-    import math
-
-    nbrs = {
-        i: [j for j, w in rows if math.dist(v, w) <= eps] for i, v in rows
-    }
-    core = {i for i, ns in nbrs.items() if len(ns) >= min_samples}
-    comp = union_find_components(
-        [(i, j) for i in core for j in nbrs[i] if j in core]
-    )
-    return {
-        i: comp[i] if i in core
-        else min((comp[j] for j in ns if j in core), default=-1)
-        for i, ns in nbrs.items()
-    }
-
-
 def _dbscan(spark, rows, eps, min_samples):
     from neurondb_spark.ml.dbscan import dbscan
 
@@ -53,15 +33,28 @@ def _dbscan(spark, rows, eps, min_samples):
     return {r["id"]: r["cluster"] for r in out.collect()}
 
 
+# Spark jobs one dbscan call runs (collect included), keyed by
+# spark.sql.adaptive.enabled. Measured: the grouped pass is one job with
+# AQE off; AQE runs its shuffle map stage as a job of its own.
+DBSCAN_JOB_BUDGET = {"false": 1, "true": 2}
+
+
+def _dbscan_jobs(spark, rows, eps, min_samples):
+    got, jobs = jobs_run(spark, lambda: _dbscan(spark, rows, eps, min_samples))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    assert jobs <= DBSCAN_JOB_BUDGET[aqe], jobs
+    return got
+
+
 @pytest.mark.prodconf
 def test_dbscan_finds_planted_clusters(spark):
     rows = _planted_points()
-    got = _dbscan(spark, rows, eps=0.5, min_samples=3)
+    got = _dbscan_jobs(spark, rows, eps=0.5, min_samples=3)
     c0 = {got[i] for i in range(20)}
     c1 = {got[i] for i in range(20, 40)}
     assert len(c0) == 1 and len(c1) == 1 and c0 != c1
     assert got[100] == -1 and got[101] == -1
-    assert got == _dbscan_reference(rows, eps=0.5, min_samples=3)
+    assert got == dbscan_reference(rows, eps=0.5, min_samples=3)
 
 
 @pytest.mark.prodconf
@@ -72,29 +65,56 @@ def test_dbscan_isolated_core_labels_itself_and_its_borders(spark):
     rows += [(10 + k, [5.0 + 0.1 * k, 5.0]) for k in range(5)]
     rows += [(99, [50.0, 50.0])]
     got = _dbscan(spark, rows, eps=0.5, min_samples=3)
-    assert got == _dbscan_reference(rows, eps=0.5, min_samples=3)
+    assert got == dbscan_reference(rows, eps=0.5, min_samples=3)
     assert got[0] == got[1] == got[2] == 0 and got[99] == -1
-
-
-# Spark jobs an all-noise dbscan call may run (collect included), keyed by
-# spark.sql.adaptive.enabled. With no core point the core-core edge frame
-# is empty, and connected_components must stop after one round instead of
-# running all max_iter rounds (over 130 jobs). Under AQE it measured 9;
-# which stage first materializes dbscan's lazy checkpoints varies from run
-# to run and can add one job.
-DBSCAN_ALL_NOISE_JOB_BUDGET = {"false": 2, "true": 10}
 
 
 @pytest.mark.prodconf
 def test_dbscan_all_noise(spark):
     rows = _planted_points()
-    got, jobs = jobs_run(
-        spark, lambda: _dbscan(spark, rows, eps=0.5, min_samples=50)
-    )
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    got = _dbscan_jobs(spark, rows, eps=0.5, min_samples=50)
     assert got == {i: -1 for i, _v in rows}
-    assert got == _dbscan_reference(rows, eps=0.5, min_samples=50)
-    assert jobs <= DBSCAN_ALL_NOISE_JOB_BUDGET[aqe], jobs
+    assert got == dbscan_reference(rows, eps=0.5, min_samples=50)
+
+
+@pytest.mark.prodconf
+def test_dbscan_blocks_nulls_and_schema(spark):
+    """Three label blocks whose points would cluster across blocks if the
+    key were ignored, plus a null-label, a null-vector and a null-id row
+    (inside a cluster): each block equals the reference on its own rows,
+    the null rows are noise and join no cluster, and (id, cluster) keep
+    the id column's type."""
+    from neurondb_spark.ml.dbscan import dbscan
+
+    pts = _planted_points()
+    rows = [(i, lab, v) for lab in range(3) for i, v in
+            ((i + 1000 * lab, v) for i, v in pts[lab::3])]
+    rows += [(5000, None, [0.0, 0.0]), (5001, 0, None), (None, 1, [0.0, 0.0])]
+    df = spark.createDataFrame(rows, "id long, label int, v array<double>")
+    out = dbscan(df, "v", "id", eps=0.5, min_samples=2, on=["label"], dim=2)
+    assert dict(out.dtypes) == {"id": "bigint", "cluster": "bigint"}
+    got = {r["id"]: r["cluster"] for r in out.collect()}
+    want = {5000: -1, 5001: -1, None: -1}
+    for lab in range(3):
+        want.update(dbscan_reference(
+            [(i, v) for i, la, v in rows if la == lab and None not in (i, v)],
+            eps=0.5, min_samples=2,
+        ))
+    assert got == want
+    assert len({c for c in got.values() if c != -1}) >= 4  # clusters in 3 blocks
+    with pytest.raises(ValueError, match="block key"):
+        dbscan(df, "v", "id", eps=0.5)
+    with pytest.raises(Exception, match="dimension mismatch"):
+        dbscan(df, "v", "id", eps=0.5, on=["label"], dim=3).collect()
+
+
+def test_cv_pool_size():
+    from neurondb_spark.ml.automl import cv_pool_size
+
+    # sequential below 8 cores, a floor of 2 from 8, a cap of 3
+    assert [cv_pool_size(c, 4) for c in (1, 4, 7, 8, 12, 15, 16, 24, 64)] == [
+        1, 1, 1, 2, 2, 2, 2, 3, 3]
+    assert cv_pool_size(64, 2) == 2 and cv_pool_size(8, 1) == 1
 
 
 def test_auto_train_leaderboard(spark):
