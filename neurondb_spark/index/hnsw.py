@@ -363,7 +363,7 @@ class HNSWIndex:
             "version": 1, "method": "hnsw", "vec_col": vec_col,
             "id_col": id_col, "metric": metric, "dim": dim, "m": m,
             "ef_construction": ef_construction, "num_shards": num_shards,
-            "seed": seed, "total_rows": total, "built_at": time.time(),
+            "seed": seed, "total_rows": total, "built_at": int(time.time()),
         }
         os.makedirs(path, exist_ok=True)
         atomic_write_json(os.path.join(path, "meta.json"), meta)

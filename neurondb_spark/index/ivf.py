@@ -101,7 +101,7 @@ class IVFIndex:
             "nlists": nlists,
             "dim": dim,
             "total_rows": total,
-            "built_at": time.time(),
+            "built_at": int(time.time()),
             # cached layout schema: search reads with an explicit schema,
             # skipping the per-query parquet footer/inference job; taken
             # from a written footer, so the build runs no inference job
@@ -142,7 +142,7 @@ class IVFIndex:
             "nlists": len(centroids),
             "dim": dim,
             "total_rows": total,
-            "built_at": time.time(),
+            "built_at": int(time.time()),
             "data_schema": layout_schema(os.path.join(path, "data"), "cluster_id"),
         }
         atomic_write_json(

@@ -89,7 +89,7 @@ class IVFPQIndex:
             "version": 1, "method": "ivfpq", "vec_col": vec_col,
             "id_col": id_col, "metric": metric, "dim": dim,
             "nlists": nlists, "m": m, "k": k, "seed": seed,
-            "total_rows": total, "built_at": time.time(),
+            "total_rows": total, "built_at": int(time.time()),
             # cached layout schema — search reads with it (no per-query
             # footer/inference job), same discipline as IVF/HNSW
             "data_schema": layout_schema(os.path.join(path, "data"), "cluster_id"),

@@ -108,7 +108,7 @@ class LSHIndex:
             # footers: the build runs no count or inference job, and
             # search reads with an explicit schema (IVF discipline)
             "total_rows": footer_rows(os.path.join(path, "data")),
-            "built_at": time.time(),
+            "built_at": int(time.time()),
             "data_schema": layout_schema(os.path.join(path, "data"), "bucket"),
             # bucket -> data-file manifest: probes read only the named
             # files of their probed buckets (no per-query listing)

@@ -99,7 +99,7 @@ class TenantIndex:
         meta = {
             "kind": "tenant", "vec_col": vec_col, "tenant_col": tenant_col,
             "metric": metric, "dim": dim, "quota_rows": quota_rows,
-            "built_at": time.time(),
+            "built_at": int(time.time()),
         }
         _write_meta(path, meta)
         return TenantIndex(path, meta)
@@ -195,7 +195,7 @@ class TemporalIndex:
         meta = {
             "kind": "temporal", "vec_col": vec_col, "ts_col": ts_col,
             "bucket": bucket, "metric": metric, "dim": dim,
-            "built_at": time.time(),
+            "built_at": int(time.time()),
         }
         _write_meta(path, meta)
         return TemporalIndex(path, meta)
@@ -293,7 +293,7 @@ class ConsistentIndex:
     ) -> "ConsistentIndex":
         meta = {
             "kind": "consistent", "vec_col": vec_col, "id_col": id_col,
-            "metric": metric, "dim": dim, "built_at": time.time(),
+            "metric": metric, "dim": dim, "built_at": int(time.time()),
         }
         _write_meta(path, meta)
         idx = ConsistentIndex(path, meta, 0)
@@ -391,7 +391,7 @@ class HybridIndex:
         meta = {
             "kind": "hybrid", "vec_col": vec_col, "text_col": text_col,
             "id_col": id_col, "metric": metric, "dim": dim,
-            "built_at": time.time(),
+            "built_at": int(time.time()),
         }
         _write_meta(path, meta)
         return HybridIndex(path, meta)
@@ -462,7 +462,7 @@ class RerankIndex:
     @staticmethod
     def create(base, path: str, id_col: str) -> "RerankIndex":
         meta = {"kind": "rerank", "id_col": id_col, "base": base.path,
-                "built_at": time.time()}
+                "built_at": int(time.time())}
         _write_meta(path, meta)
         return RerankIndex(path, base, meta)
 

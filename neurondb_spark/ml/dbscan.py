@@ -33,6 +33,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from neurondb_spark.operators.graph import union_find
 from neurondb_spark.operators.joins import gemm_candidates, require_block_key
 
 # GEMM prefilter slack on eps; the exact recheck decides every survivor
@@ -60,22 +61,9 @@ def _block_labels(ids, X, eps: float, min_samples: int) -> np.ndarray:
     ii, jj = ii[keep], jj[keep]
     core = np.bincount(ii, minlength=n) >= min_samples
 
-    # union-find over core-core pairs: hook the larger root under the
-    # smaller, then jump pointers until every pair shares a root
+    # clusters: union-find over the core-core pairs
     cc = core[ii] & core[jj]
-    a, b = ii[cc], jj[cc]
-    parent = np.arange(n)
-    while True:
-        ra, rb = parent[a], parent[b]
-        split = ra != rb
-        if not split.any():
-            break
-        np.minimum.at(parent, np.maximum(ra, rb)[split], np.minimum(ra, rb)[split])
-        while True:
-            nxt = parent[parent]
-            if np.array_equal(nxt, parent):
-                break
-            parent = nxt
+    parent = union_find(n, ii[cc], jj[cc])
     none = np.iinfo(np.int64).max
     cid = np.full(n, none)
     np.minimum.at(cid, parent[core], ids[core])

@@ -162,10 +162,14 @@ def neardup_resolve(
     stays the min-id label either way (it is a cluster NAME, not the
     survivor).
 
-    Scale: components of a near-dup graph are small and numerous —
-    min-label propagation converges in O(max component diameter)
-    join+min rounds (operators/graph.connected_components), each one
-    shuffle keyed by node."""
+    Scale: components of a near-dup graph are small and numerous, and
+    :func:`~neurondb_spark.operators.graph.connected_components` finds
+    them with one union-find pass per partition of the pair graph
+    (hash-partitioned by node). A component that crosses partitions adds
+    min-propagation rounds, O(its diameter), each one shuffle keyed by
+    node; under AQE the coalesced read of a curation-sized pair graph
+    leaves one partition and no rounds. The labels then meet the rows in
+    one left join (plus one window for ``rank_col``)."""
     from neurondb_spark.operators.graph import connected_components
 
     comp = connected_components(pairs, "id_a", "id_b").withColumnRenamed(

@@ -4,7 +4,8 @@ Reference: vgraph BFS/DFS/PageRank/community over single graph *values*
 (NeuronDB/src/vector/vector_graph_ops.c:176-701) and build_knn_graph
 (src/ml/analytics.c:1286). Here the graph is an edge DataFrame (src, dst) —
 the scale-out representation: every algorithm below is iterative joins +
-aggregations, shuffling only on node keys, so a 100 TB edge list
+aggregations (connected components first contracts each partition with a
+numpy union-find), shuffling only on node keys, so a 100 TB edge list
 distributes naturally (the reference's graphs must fit in one varlena).
 
 Determinism: PageRank contributions are summed through DECIMAL so ranks
@@ -14,10 +15,16 @@ DuckDB-oracle gate and a good idea generally (reproducible ranks).
 
 from __future__ import annotations
 
+import logging
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from neurondb_spark.functions.aggregates import bsum
+
+_log = logging.getLogger("neurondb_spark")
 
 
 def parse_vgraph(s: str) -> tuple[int, list[tuple[int, int]]]:
@@ -324,55 +331,131 @@ def pagerank(
     return ranks
 
 
+def union_find(n: int, a, b) -> np.ndarray:
+    """Roots of ``n`` nodes joined by the index pairs ``(a[i], b[i])``:
+    ``root[x]`` is the smallest index in x's component. Hooks the larger
+    root of every split pair under the smaller, then jumps pointers until
+    every pair shares a root."""
+    parent = np.arange(n)
+    while True:
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
+        if not split.any():
+            return parent
+        np.minimum.at(parent, np.maximum(ra, rb)[split], np.minimum(ra, rb)[split])
+        while True:
+            nxt = parent[parent]
+            if np.array_equal(nxt, parent):
+                break
+            parent = nxt
+
+
+def _local_components(src, dst):
+    """Union-find over one partition's (src, dst) rows → (node, comp,
+    final), one entry per distinct node: comp is the min id of the node's
+    component in this partition, and final says every node of that
+    component appears here as ``src``. All of a node's edges share the
+    partition its ``src`` rows hash to, so a final component is a whole
+    component of the graph and its comp is exact."""
+    m = len(src)
+    nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    root = union_find(len(nodes), inv[:m], inv[m:])
+    is_src = np.zeros(len(nodes), dtype=bool)
+    is_src[inv[:m]] = True
+    open_root = np.zeros(len(nodes), dtype=bool)
+    open_root[root[~is_src]] = True
+    return nodes, nodes[root], ~open_root[root]
+
+
+def _cc_kernel(batches):
+    """mapInPandas body: every batch of the partition at once through
+    :func:`_local_components`."""
+    import pandas as pd
+
+    pdfs = [b for b in batches if len(b)]
+    if not pdfs:
+        return
+    pdf = pd.concat(pdfs, ignore_index=True)
+    node, comp, final = _local_components(
+        pdf.iloc[:, 0].to_numpy(), pdf.iloc[:, 1].to_numpy()
+    )
+    yield pd.DataFrame({"node": node, "comp": comp, "final": final})
+
+
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 20,
 ) -> DataFrame:
-    """Min-label propagation to fixpoint → (node, comp) where comp = min
-    node id reachable (vgraph_community analog; exact CC). Converges in
-    O(diameter) steps.
+    """Connected components → (node, comp), comp = min node id of the
+    node's component, both of the id column's type (vgraph_community
+    analog; exact CC). An edge with a null endpoint joins nothing: its
+    other endpoint is still a node, and null is never one.
 
-    Self-loops: the edge frame gets both directions of every edge plus a
-    self-loop on every endpoint, all from ONE scan of the input. With the
-    closed neighbourhood in the edge frame, one step is one
-    ``labels ⋈ e → groupBy(dst).min(comp)`` that already covers the node's
-    own label, so the step reads its input once and two steps chain
-    lazily without recompute. The initial labels are that same aggregate
-    over the ids themselves, ``e.groupBy(src).min(dst)`` — the first step
-    comes free, with no node-list pass.
+    One pass: the edges in both directions plus a self-loop on every
+    endpoint, from ONE scan of the input, hash-repartitioned by ``src``,
+    then a numpy union-find per partition (:func:`_local_components`,
+    the standard local contraction of distributed CC, Kiveris et al.,
+    SoCC 2014). All of a node's edges hash to its partition, so a local
+    component whose every node appears there as ``src`` is whole, and
+    its min id is exact; such rows are ``final``. The pass ends in one
+    eager ``localCheckpoint`` whose ``observe`` counts the rows that are
+    not final, read off the checkpoint job's own query execution with no
+    extra action. A count of 0 makes the checkpoint the answer. AQE only
+    merges the ``repartition(col)`` buckets, never splits them, and its
+    coalesced read puts a small graph in one partition: the curation and
+    registry graphs end here, and under AQE the pass is two jobs (the
+    edge shuffle and the checkpoint) before the caller's action.
+    (A ``pyspark.sql.Observation`` would carry the same counts, but
+    registering one gives the session an ObservationManager that is not
+    serializable, and MLlib models that capture the session then fail to
+    ship their UDFs.)
 
-    Rounds: each round applies TWO steps and ends in one eager
-    ``localCheckpoint`` — one Spark action per round (lazy checkpoints
-    were measured worse here, OPTIMIZATION_r15.md). ``max_iter`` counts
-    these double-step rounds, so at most 1 + 2·max_iter steps run; every
-    in-repo caller converges well inside that. Convergence is folded into
-    the second step's aggregate: each node's label before the step comes
-    off its self-loop (``was``), and an ``observe`` on the checkpointed
-    frame counts the nodes whose label changed, read off the checkpoint
-    job's own query execution with no extra action. Labels only ever
-    decrease, so a count of 0 means the first step already reached the
-    fixpoint, and the loop stops there. An empty edge frame counts 0
-    and stops after one round. (A ``pyspark.sql.Observation`` would
-    carry the same count, but registering one gives the session an
-    ObservationManager that is not serializable, and MLlib models that
-    capture the session then fail to ship their UDFs.)
+    Fallback, when a component spans partitions (AQE off, or a graph big
+    enough to keep many partitions): min-label propagation to fixpoint,
+    seeded with each node's least kernel label. The seed is never above
+    the node's closed-neighbourhood minimum (that neighbourhood lies in
+    the node's own partition), so the loop needs no more rounds than a
+    plain propagation would. One step is one ``labels ⋈ e →
+    groupBy(dst).min(comp)`` over the closed neighbourhood, so the node's
+    own label is covered. Each round applies TWO steps and ends in one
+    eager ``localCheckpoint`` (lazy checkpoints were measured worse here,
+    OPTIMIZATION_r15.md); the second step's aggregate also takes each
+    node's label before the step off its self-loop (``was``), and the
+    same ``observe`` read counts the labels that changed. Labels only
+    decrease, so 0 means the fixpoint, and the loop stops. After
+    ``max_iter`` rounds without one, the labels are returned as they are
+    (each is an id from the node's own component, not yet its minimum)
+    and one warning on the ``neurondb_spark`` logger gives the rounds run
+    and the last count.
 
-    The edge frame is pinned co-partitioned on the join key:
+    The fallback's edge frame is pinned co-partitioned on the join key:
     ``repartition(src).distinct().sortWithinPartitions(src).persist()``
     (hashpartitioning(src) already clusters each (src, dst) pair, so the
-    dedup needs no shuffle of its own). The cached relation keeps
-    hashpartitioning(src) + src ordering, and the step join is hinted
+    dedup needs no shuffle of its own), and the step join is hinted
     ``merge`` so it reads the edges in place, with no Exchange and no
     Sort. Unhinted, the planner broadcasts the small cached frame
     instead, rebuilding a hash table of the unchanged edges at every step
-    (one job each under AQE). The returned labels are an eager
-    checkpoint, so the pin is released before returning."""
-    e = (
-        _both_ways(edges, src, dst, self_loops=True)
-        .repartition(F.col(src))
-        .distinct()
-        .sortWithinPartitions(src)
-        .persist()
+    (one job each under AQE). Under AQE each of the frame's references
+    builds its own cache stage, and each step's checkpointed labels are
+    shuffled again. The returned labels are an eager checkpoint, so the
+    pin is released before returning."""
+    both = _both_ways(edges, src, dst, self_loops=True).where(
+        F.col(src).isNotNull() & F.col(dst).isNotNull()
     )
+    id_t = both.schema[src].dataType
+    kernel = StructType([
+        StructField("node", id_t), StructField("comp", id_t),
+        StructField("final", BooleanType()),
+    ])
+    parts = both.repartition(F.col(src))
+    local = parts.mapInPandas(_cc_kernel, kernel).observe(
+        "open", F.count_if(~F.col("final"))
+    )
+    labels = local.localCheckpoint()
+    changed = _observed(local, "open")
+    if changed == 0:
+        return labels.select("node", "comp")
+
+    e = parts.distinct().sortWithinPartitions(src).persist()
 
     def _step(lab):
         return (
@@ -386,7 +469,7 @@ def connected_components(
         )
 
     try:
-        labels = e.groupBy(F.col(src).alias("node")).agg(F.min(dst).alias("comp"))
+        labels = labels.groupBy("node").agg(F.min("comp").alias("comp"))
         for _ in range(max_iter):
             rnd = (
                 _step(_step(labels))
@@ -394,12 +477,23 @@ def connected_components(
                 .select("node", "comp")
             )
             labels = rnd.localCheckpoint()
-            metrics = rnd._jdf.queryExecution().observedMetrics()
-            if metrics.get("changed").get().getLong(0) == 0:
+            changed = _observed(rnd, "changed")
+            if changed == 0:
                 break
+        else:
+            _log.warning(
+                "neurondb: connected_components ran max_iter=%d rounds "
+                "without a fixpoint (%d labels changed in the last); the "
+                "labels are not final", max_iter, changed,
+            )
     finally:
         e.unpersist()
     return labels
+
+
+def _observed(df: DataFrame, name: str) -> int:
+    """The count ``df.observe(name, ...)`` recorded in df's last run."""
+    return df._jdf.queryExecution().observedMetrics().get(name).get().getLong(0)
 
 
 def build_knn_graph(

@@ -46,8 +46,9 @@ REWRITTEN: dict[str, int] = {
     "recommend_content_based": 17, "recommend_hybrid": 17,
     "quality_classifier_scores": 17, "stream_ivf_cdc_knn": 17,
     "merge_rebalance_rows": 17,
-    # connected_components in one input scan per round; DBSCAN's isolated
-    # cores folded into it.
+    # connected_components as one union-find pass per partition (the
+    # propagation loop only for components that cross partitions);
+    # DBSCAN as one grouped kernel pass.
     "graph_connected_components": 17, "dbscan_clusters": 17,
     "neardup_resolve_survivors": 17, "neardup_resolve_quality": 17,
     # Distance kernels, centroid routes and LSH signatures rendered as one

@@ -261,8 +261,9 @@ UNION ALL SELECT node, 2 FROM d2"""
 
 
 def _q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via min-label propagation to fixpoint
-    (vgraph_community/CC analog, vector_graph_ops.c) over a sparsified
+    """Connected components, one union-find pass per edge partition
+    with min-label propagation for components that cross partitions
+    (vgraph_community/CC analog, vector_graph_ops.c), over a sparsified
     part↔supplier graph (quantity≤1 edges, partkey≤200 — 37 components at
     sf0.01, so the label fixpoint is non-trivial). Output (node, comp) =
     min node id reachable — integers, exact hash."""

@@ -1,6 +1,8 @@
 """M5 surface tests: streaming job queue, multimodal plumbing, graph
 algorithms, quantization codecs."""
 
+import contextlib
+import logging
 import os
 import sys
 import tempfile
@@ -241,31 +243,126 @@ def _cc(spark, edges, **kw):
     return out
 
 
-@pytest.mark.prodconf
-def test_cc_long_path_counts_double_step_rounds(spark):
-    """A 40-node path with shuffled ids, its minimum at one end: the
-    minimum needs 39 steps to reach the far end, so convergence takes
-    more than 10 rounds. ``max_iter`` counts double-step rounds after one
-    free initial step, so max_iter=k leaves each node the minimum over
-    the 1+2k nearest path positions on either side."""
+def _long_path(seed=7, n=40):
+    """An n-node path with shuffled ids and its minimum at one end, as
+    (ids in path order, edges in random order and direction)."""
     import random
 
-    rng = random.Random(7)
-    ids = rng.sample(range(1000), 40)
+    rng = random.Random(seed)
+    ids = rng.sample(range(1000), n)
     i_min = ids.index(min(ids))
     ids[0], ids[i_min] = ids[i_min], ids[0]
     edges = [
         (a, b) if rng.random() < 0.5 else (b, a) for a, b in zip(ids, ids[1:])
     ]
     rng.shuffle(edges)
+    return ids, edges
+
+
+@pytest.mark.prodconf
+def test_cc_long_path_exact_and_truncated_labels_bounded(spark):
+    """A 40-node path whose minimum needs 39 propagation steps to reach
+    the far end. Under AQE the coalesced read puts the path in one
+    partition, so the union-find pass is exact at any ``max_iter``. With
+    AQE off the path spans the 8 partitions and the propagation loop
+    finishes it: at ``max_iter=k`` every label is an id of the path and
+    no larger than plain propagation's 1 + 2k steps leave (the loop
+    starts from the kernel's labels, which are never higher)."""
+    ids, edges = _long_path()
+    exact = union_find_components(edges)
+    assert _cc(spark, edges) == exact
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    for k in (0, 1, 5):
+        reach = 1 + 2 * k
+        old = {
+            x: min(ids[max(0, i - reach):i + reach + 1]) for i, x in enumerate(ids)
+        }
+        got = _cc(spark, edges, max_iter=k)
+        if aqe == "true":
+            assert got == exact, k
+        else:
+            assert got.keys() == old.keys()
+            assert all(got[x] in old and got[x] <= old[x] for x in got), k
+
+
+@contextlib.contextmanager
+def _spread_partitions(spark):
+    """Keep every shuffle partition in both lanes (no AQE coalescing), so
+    a component crossing partitions takes the propagation loop."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, was)
+
+
+def _cc_warnings(caplog):
+    return [r for r in caplog.records
+            if r.name == "neurondb_spark" and r.levelno == logging.WARNING]
+
+
+@pytest.mark.prodconf
+def test_cc_unconverged_logs_one_warning(spark, caplog):
+    _ids, edges = _long_path()
+    with _spread_partitions(spark), caplog.at_level(logging.WARNING, logger="neurondb_spark"):
+        got = _cc(spark, edges, max_iter=1)
+        (w,) = _cc_warnings(caplog)
+        assert got != union_find_components(edges)
+        msg = w.getMessage()
+        assert "max_iter=1 rounds" in msg and "labels changed in the last" in msg
+        caplog.clear()
+        assert _cc(spark, edges) == union_find_components(edges)
+        assert not _cc_warnings(caplog)
+
+
+@pytest.mark.prodconf
+@pytest.mark.parametrize("seed", range(3))
+def test_cc_random_graphs_equal_union_find(spark, seed):
+    """Random multigraphs with several components and a long path: the
+    AQE-off lane's 8 partitions split components and drive the
+    propagation loop; under AQE the one-pass kernel answers."""
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(1, 5000), 120)
+    edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(70)]
+    edges += list(zip(ids[:25], ids[1:25]))
     assert _cc(spark, edges) == union_find_components(edges)
-    k = 5
-    reach = 1 + 2 * k
-    want = {
-        x: min(ids[max(0, i - reach):i + reach + 1]) for i, x in enumerate(ids)
-    }
-    got = _cc(spark, edges, max_iter=k)
-    assert got == want and len(set(got.values())) > 1
+
+
+@pytest.mark.prodconf
+@pytest.mark.parametrize("id_t,ids", [
+    ("int", [4, 2, 9, 7, 3]),
+    ("bigint", [2**40 + 4, 2**40 + 2, 2**40 + 9, 2**40 + 7, 2**40 + 3]),
+    ("string", ["d", "b", "i", "g", "c"]),
+])
+def test_cc_output_types_follow_input(spark, id_t, ids):
+    from neurondb_spark.operators.graph import connected_components
+
+    a, b, c, d, e = ids
+    edges = [(a, b), (c, d), (d, e)]
+    df = spark.createDataFrame(edges, f"src {id_t}, dst {id_t}")
+    out = connected_components(df)
+    assert out.dtypes == [("node", id_t), ("comp", id_t)]
+    got = {r["node"]: r["comp"] for r in out.collect()}
+    assert got == union_find_components(edges)
+
+
+@pytest.mark.prodconf
+def test_cc_null_endpoints_join_nothing(spark):
+    """A null endpoint never joins two components, and null is never a
+    node: the other endpoint of a null edge is a node of its own."""
+    from neurondb_spark.operators.graph import connected_components
+
+    df = spark.createDataFrame(
+        [(1, None), (None, 2), (None, None), (3, 4), (5, None), (5, 6)],
+        "src long, dst long",
+    )
+    rows = connected_components(df).collect()
+    assert {r["node"]: r["comp"] for r in rows} == {1: 1, 2: 2, 3: 3, 4: 3, 5: 5, 6: 5}
+    assert len(rows) == 6
 
 
 @pytest.mark.prodconf
@@ -283,11 +380,13 @@ def test_cc_duplicate_reversed_and_self_loop_edges(spark):
 # Spark jobs one connected_components call may run, collect included,
 # counted through a job group; keyed by spark.sql.adaptive.enabled (the
 # default lane runs AQE off, the prodconf lane on, where every shuffle is
-# a job of its own). The operator runs one action per double-step round:
-# another action, or a per-step shuffle or broadcast of the edge frame,
-# goes over budget.
-CC_JOB_BUDGET = {"false": 3, "true": 12}  # two components, 2 rounds
-CC_EMPTY_JOB_BUDGET = {"false": 2, "true": 3}  # 1 round
+# a job of its own). Measured. Under AQE the union-find pass answers:
+# the edge shuffle, the checkpoint and the collect. With AQE off the
+# path 1-5 spans the 8 partitions, so one propagation round follows the
+# pass. Another action, or a per-step shuffle or broadcast of the edge
+# frame, goes over budget.
+CC_JOB_BUDGET = {"false": 4, "true": 3}
+CC_EMPTY_JOB_BUDGET = {"false": 2, "true": 3}  # the pass counts 0 open rows
 
 
 @pytest.mark.prodconf
